@@ -771,11 +771,14 @@ def hamming_pairs_from_bands(
             + "))"
         ),
     )
+    # selectExpr parses SQL: backtick-quote the caller's key names so a
+    # reserved word (`order`) or a punctuated name stays a column
+    quoted = ["`" + k.replace("`", "``") + "`" for k in keys]
     a = banded.selectExpr(
-        "id AS id_a", *keys, *[f"{c} AS a{i}" for i, c in enumerate(bands)], "bi", "bv"
+        "id AS id_a", *quoted, *[f"{c} AS a{i}" for i, c in enumerate(bands)], "bi", "bv"
     )
     b = banded.selectExpr(
-        "id AS id_b", *keys, *[f"{c} AS b{i}" for i, c in enumerate(bands)], "bi", "bv"
+        "id AS id_b", *quoted, *[f"{c} AS b{i}" for i, c in enumerate(bands)], "bi", "bv"
     )
     cands = (
         a.join(b, ["bi", "bv", *keys])

@@ -124,12 +124,10 @@ def keyed_compact_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nothing, updated keys return the latest value whether the
     update was compacted (2, 4) or still pending (6).
 
-    Round 12: this query runs on a ``commit="marker"`` table — the
-    object-store protocol (versioned bucket dirs behind
-    ``_commits/commit-N.json`` manifests, ``_COMMITTED`` delta
-    markers, no rename on any committed path) — so the marker
-    lifecycle is driver-visible, not pytest-only; the sibling
-    ``keyed_upsert_mor_read`` covers the rename protocol.
+    Keyed tables commit through versioned bucket dirs behind
+    ``_commits/commit-N.json`` manifests and ``_COMMITTED`` delta
+    markers, with no rename on any committed path — so the whole
+    commit lifecycle is driver-visible, not pytest-only.
 
     100 TB: the lookup's plan touches O(distinct key buckets)
     directories, never the table; compaction cost tracks the touched
@@ -145,7 +143,7 @@ def keyed_compact_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     path = scratch_dir(prefix="keyed_pl_q_") + "/tab"
     write_keyed_table(
-        cust, path, ["c_custkey"], num_buckets=8, assume_unique=True, commit="marker"
+        cust, path, ["c_custkey"], num_buckets=8, assume_unique=True
     )
     k = F.col("c_custkey")
     upd = (
@@ -334,11 +332,11 @@ def keyed_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive schema evolution under the oracle gate (round 12): a
     MOR batch carries a NEW column (``tier``) with
     ``evolve_schema=True`` — the schema evolves atomically before the
-    delta commits (marker tables: one manifest PUT; rename tables: the
-    meta rewrite), rows never rewritten read the column as NULL via the
-    explicit-schema readers, and compaction folds the evolved schema
-    into the touched buckets. The oracle recomputes the end state: the
-    evolved column is NULL everywhere except the evolved batch's keys.
+    delta commits (one manifest PUT), rows never rewritten read the
+    column as NULL via the explicit-schema readers, and compaction
+    folds the evolved schema into the touched buckets. The oracle
+    recomputes the end state: the evolved column is NULL everywhere
+    except the evolved batch's keys.
 
     100 TB: evolution is a metadata PUT + one O(batch) delta — zero
     data files rewritten up front; the base converges to the new
@@ -378,7 +376,7 @@ def keyed_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     brief #6): the table loads ``qty`` as a 32-bit int; a MOR batch
     arrives with ``qty`` as bigint carrying values past int range and
     ``evolve_schema=True`` widens the column as a METADATA-ONLY commit
-    (marker/rename: one atomic control-file PUT — zero base files
+    (one atomic manifest PUT — zero base files
     rewritten; Spark's vectorized parquet reader upcasts the old int32
     pages at scan time). ``compact_keyed_table(rewrite_all=True)`` then
     converges the physical file type (pinned int64-only in
@@ -456,7 +454,7 @@ def keyed_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir(prefix="keyed_tt_q_") + "/tab"
     write_keyed_table(
         cust, path, ["c_custkey"], num_buckets=8, assume_unique=True,
-        commit="marker", gc_generations=4,
+        gc_generations=4,
     )
     k = F.col("c_custkey")
     upd = cust.filter(k % 10 == 3).withColumn(
@@ -512,7 +510,7 @@ def keyed_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir(prefix="keyed_rb_q_") + "/tab"
     write_keyed_table(
         sup, path, ["s_suppkey"], num_buckets=4, assume_unique=True,
-        commit="marker", gc_generations=4,
+        gc_generations=4,
     )
     k = F.col("s_suppkey")
     good = sup.filter(k % 10 == 3).withColumn(

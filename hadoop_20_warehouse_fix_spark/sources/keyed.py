@@ -36,46 +36,44 @@ This is the publicly documented Hudi/Iceberg COW-vs-MOR trade
 re-expressed on plain parquet directories; the delta/compact lifecycle
 mirrors this repo's ``minhash_state_append``/``_compact`` discipline.
 
-Crash story (same honesty as ``dedup.minhash_state_compact``): the COW
-swap is per-bucket rename-aside — merged data lands in a hidden
-``_staging`` dir, then per bucket: live dir → ``_old.kb.<b>``, staged
-dir → live, delete old. No multi-bucket transaction exists on a plain
-filesystem: a crash mid-swap leaves SOME buckets new and some old
-(readers never see a half-bucket — renames are atomic per directory on
-HDFS/local — but cross-bucket consistency needs the recovery sweep:
-``_staging``/``_old.*`` present ⇒ finish or roll back by rename). A
-MOR append is one rename of the staged seq dir — atomic per batch.
-Engines that need multi-writer transactions layer a log on top
-(Delta/Iceberg); this is the bucket-granular storage those logs commit.
+Crash story: every commit is ONE single-file PUT. Bucket data lives in
+immutable versioned hidden dirs (``_b<b>.v<n>``) resolved through the
+highest-numbered ``_commits/commit-<n>.json`` manifest; a COW batch,
+compaction, re-load, evolution or rollback stages its new bucket dirs
+out of sight and then PUTs the next manifest — that PUT is the commit,
+and it flips every touched bucket (and the table metadata riding
+inside it) at once. A MOR delta dir counts only once its
+``_COMMITTED`` marker lands, written last. A crash anywhere leaves
+either the old manifest state or unreferenced garbage (moved-but-
+unpublished bucket dirs, unmarked seq dirs, ``_staging``) that the
+recovery sweep GCs — never a wrong answer and never a half-visible
+batch. Superseded dirs survive ``gc_generations`` further commits, so
+a reader that resolved a manifest an instant before a flip still finds
+every dir it lists. Engines that need multi-writer transactions layer
+a log on top (Delta/Iceberg); this is the bucket-granular storage
+those logs commit.
 
-Object stores (round 12): every commit point above assumes ATOMIC
-directory rename — true on HDFS and local filesystems, false on
-S3-class stores where rename is copy+delete. ``commit="marker"``
-replaces every rename on the committed path with single-file PUTs:
-bucket data lives in immutable versioned hidden dirs (``_b<b>.v<n>``)
-resolved through the highest-numbered ``_commits/commit-<n>.json``
-manifest (the PUT of that file IS the commit — readers never observe a
-half-copied dir because they never resolve through dir presence), and
-MOR delta dirs count only once their ``_COMMITTED`` marker lands
-(written last; the rename protocol writes the same marker into the
-staged dir pre-rename, so "marker present ⇒ batch complete" holds in
-both protocols). Crash anywhere leaves either the old manifest state
-or unreferenced garbage the recovery sweep GCs — never a wrong
-answer. ``commit="rename"`` on an object-store scheme is refused at
-load time with the reason. The stats-manifest module resolves marker
-tables through the commit manifest (live-dir listing, grace-retained
-old versions excluded), so pruned reads compose with both protocols.
-Residual marker-mode caveat, stated honestly: the writer lease's
-create-exclusive is advisory on stores without atomic create —
-single-writer must then be enforced externally.
+Object stores: no directory rename sits on a committed path — readers
+never resolve through dir presence, so S3-class stores, where rename
+is copy+delete, need nothing extra. The stats-manifest module resolves
+tables through the same commit manifest (live-dir listing,
+grace-retained old versions excluded). Residual caveat, stated
+honestly: the writer lease's create-exclusive is advisory on stores
+without atomic create — single-writer must then be enforced
+externally.
+
+``_keyed_meta.json`` carries ``"commit": "marker"`` as the on-disk
+format tag. Tables written by the retired per-bucket rename protocol
+(tag missing or ``"rename"``) are refused by :func:`read_keyed_meta`;
+rebuild them with :func:`write_keyed_table` into a new path.
 
 Single-writer, enforced (round 12): every mutation (initial load,
 COW/MOR batch, compaction) holds a ``_writer.lock`` lease taken by
 create-exclusive — atomic on HDFS and local filesystems. A second
 concurrent writer raises :class:`KeyedTableLockedError` instead of
-silently interleaving with a swap; a lease older than the TTL is
+silently interleaving with a publish; a lease older than the TTL is
 presumed crashed and broken by the next writer (whose recovery sweep
-then repairs any half-finished swap). Object stores without atomic
+then GCs the crashed writer's garbage). Object stores without atomic
 create-exclusive need an external lock service — the same posture
 Hudi/Delta document for S3 multi-writer.
 
@@ -111,13 +109,6 @@ _WRITER_LOCK = "_writer.lock"
 _COMMITS_DIR = "_commits"
 _COMMITTED_MARK = "_COMMITTED"
 
-#: Filesystem schemes whose rename is copy+delete (non-atomic) — the
-#: rename commit protocol is refused on them; use commit="marker".
-_OBJECT_STORE_SCHEMES = {
-    "s3", "s3a", "s3n", "gs", "oss", "cos", "swift",
-    "wasb", "wasbs", "abfs", "abfss",
-}
-
 #: A writer lease older than this is presumed crashed and may be
 #: broken by the next writer (the lease is renewed only by acquiring
 #: anew per batch — batches longer than the TTL should raise it).
@@ -126,7 +117,7 @@ DEFAULT_LOCK_TTL_SEC = 3600.0
 
 class KeyedTableLockedError(IOError):
     """Another writer holds the table's lease (round-12: keyed tables
-    are single-writer by construction — two interleaved COW swaps or a
+    are single-writer by construction — two interleaved COW publishes or a
     compact racing an append corrupt silently, so concurrent writers
     must refuse, not interleave)."""
 
@@ -214,11 +205,15 @@ def _put_json_atomic(spark: SparkSession, dest: str, doc: dict, overwrite: bool)
 
 
 def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    _fence_lease(spark, path)  # meta PUT is rename-mode's evolution commit
+    _fence_lease(spark, path)
     _put_json_atomic(spark, f"{path}/{_META}", _strip_private(meta), overwrite=True)
 
 
 def read_keyed_meta(spark: SparkSession, path: str) -> dict:
+    """The table's metadata, resolved through its current commit
+    manifest. Every entry point passes through here, so this is where
+    tables of the retired rename protocol are refused — before any
+    read plans or any write touches a file."""
     fs, hpath, jvm = _fs(spark, f"{path}/{_META}")
     if not fs.exists(hpath):
         # one bounded retry pass: an atomic meta overwrite has a
@@ -233,20 +228,28 @@ def read_keyed_meta(spark: SparkSession, path: str) -> dict:
                 f"{path!r}: {_META} is unreadable (empty/corrupt after "
                 "retries) — the table metadata file is damaged"
             )
-    if meta.get("commit") == "marker":
-        # The CURRENT commit manifest is the marker table's source of
-        # truth for metadata (embedded since round 12 so a re-load
-        # flips buckets + meta atomically); the root file is a cache
-        # that can lag one crashed re-load behind. The manifest rides
-        # along as a PRIVATE snapshot so the bucket-dir resolution uses
-        # the SAME commit that supplied the metadata — re-resolving in
-        # _base_df could straddle a concurrent re-load and list commit
-        # N+1's dirs under commit N's bucketing math (second review).
-        cm = _current_commit(spark, path)
-        if cm is not None:
-            if cm.get("meta"):
-                meta = dict(cm["meta"])
-            meta["_commit"] = cm
+    if meta.get("commit") != "marker":
+        raise ValueError(
+            f"{path!r} was written by the retired per-bucket rename commit "
+            f"protocol ({_META} has commit={meta.get('commit')!r}); keyed "
+            "tables now commit only through _commits/ manifests and "
+            "_COMMITTED markers. Rebuild it with write_keyed_table into a "
+            "new path (its base rows are the kb=<b> parquet dirs; fold any "
+            "pending _delta batches first with the release that wrote it)"
+        )
+    # The CURRENT commit manifest is the source of truth for metadata
+    # (embedded since round 12 so a re-load flips buckets + meta
+    # atomically); the root file is a cache that can lag one crashed
+    # re-load behind. The manifest rides along as a PRIVATE snapshot so
+    # the bucket-dir resolution uses the SAME commit that supplied the
+    # metadata — re-resolving in _base_df could straddle a concurrent
+    # re-load and list commit N+1's dirs under commit N's bucketing
+    # math (second review).
+    cm = _current_commit(spark, path)
+    if cm is not None:
+        if cm.get("meta"):
+            meta = dict(cm["meta"])
+        meta["_commit"] = cm
     return meta
 
 
@@ -403,7 +406,7 @@ def _lease_key(path: str) -> tuple[str, int]:
 def _fence_lease(spark: SparkSession, path: str) -> None:
     """Commit-point fencing (round-12 ADVICE, medium): a writer that
     outlived ``lock_ttl_sec`` has had its lease broken and re-issued —
-    its in-flight ``_swap_buckets`` / ``_marker_publish`` / delta commit
+    its in-flight ``_marker_publish`` / delta commit
     would otherwise interleave with the successor's and corrupt the
     table. Called immediately before each commit point: re-read
     ``_writer.lock`` and ABORT (loudly, before mutating shared state)
@@ -485,24 +488,6 @@ class _writer_lease:
                 _ACTIVE_LEASES.pop(key, None)
             _release_writer_lock(self.spark, self.path, self.token)
         return False
-
-
-def _commit_mode(meta: dict) -> str:
-    return meta.get("commit", "rename")
-
-
-def _check_commit_scheme(scheme: str, commit: str) -> None:
-    """Refuse the rename protocol on object stores (round-12 brief #6):
-    directory rename there is copy+delete — a reader can observe a
-    half-copied bucket as committed state, and the crash story the
-    rename-aside swap depends on no longer holds."""
-    if commit == "rename" and (scheme or "file").lower() in _OBJECT_STORE_SCHEMES:
-        raise ValueError(
-            f"commit='rename' depends on atomic directory rename, which "
-            f"{scheme!r} does not provide (rename is copy+delete there) — "
-            "create the table with commit='marker' (commit-manifest "
-            "protocol; no rename on the committed path)"
-        )
 
 
 def _current_commit(spark: SparkSession, path: str) -> dict | None:
@@ -589,13 +574,11 @@ def _base_df(
 ) -> DataFrame:
     """The base scan, surviving a fully-emptied table: with zero bucket
     dirs left, reconstruct an empty frame (data cols + bucket col) from
-    the schema recorded at load time. ``buckets`` (marker mode only)
-    restricts the scan to those buckets' dirs at the PATH-LIST level —
-    the marker layout's analog of the rename layout's ``kb=`` partition
-    pruning; rename-mode callers keep their ``isin`` filter, which
-    Spark turns into directory pruning."""
-    from pyspark.errors import AnalysisException
-
+    the schema recorded at load time. The bucket dirs come from the
+    commit manifest ``meta`` was resolved with (see
+    :func:`read_keyed_meta`); ``buckets`` restricts the scan to those
+    buckets' dirs at the PATH-LIST level — directory pruning without
+    any partition discovery."""
     sj = meta.get("schema_json")
     if not sj:
         raise ValueError(f"{path!r}: keyed table without schema_json")
@@ -612,83 +595,22 @@ def _base_df(
     # (schema picked from an old file) or need a mergeSchema footer
     # pass over every file; the explicit schema reads evolved columns
     # where present and NULLs them where absent, and skips schema
-    # inference entirely (probe-verified incl. the kb partition parse).
-    if _commit_mode(meta) == "marker":
-        cm = meta.get("_commit") or _current_commit(spark, path)
-        want = None if buckets is None else {int(b) for b in buckets}
-        dirs = [
-            f"{path}/{d}"
-            for b, d in ((cm or {}).get("buckets") or {}).items()
-            if want is None or int(b) in want
-        ]
-        if not dirs:
-            return empty()
-        # kb is RECOMPUTED from the key columns (deterministic by
-        # construction) — the versioned dirs are not kb= partition dirs,
-        # so the column does not ride in from the path.
-        return spark.read.schema(data_schema).parquet(*sorted(dirs)).withColumn(
-            BUCKET_COL, _bucket_expr(meta)
-        )
-    # Rename protocol. Snapshot probe (round 13, verdict #5): a reader
-    # planning BETWEEN _swap_buckets' two renames (live→_old aside,
-    # staged→live in) would miss that bucket entirely — silent row
-    # loss, not a crash. One listStatus detects the window: any
-    # ``_old.kb.<b>`` WITHOUT a live ``kb=<b>`` means a swap (or crash)
-    # is in flight — fall back to an explicit-dir read that takes the
-    # aside dir as that bucket's consistent pre-swap contents. The
-    # normal path (no asides) stays the plain partition-discovery read
-    # with kb= directory pruning. Residual exposure, documented: a
-    # reader whose FILE list was planned before a swap can still hit
-    # deleted paths at task time (rename changes paths; no grace period
-    # can preserve them) — deployments with concurrent readers during
-    # writes should use commit='marker', whose manifest resolution +
-    # one-generation GC grace gives real snapshot isolation.
-    fs, root, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    # ONE globStatus for asides first (round-14 ADVICE low): the probe
-    # runs on EVERY base read, and iterating all bucket-dir statuses
-    # through py4j costs hundreds of driver round trips on a 256-bucket
-    # table when the normal answer is "no swap in flight" — the same
-    # fixed-cost audit that converted _recover_unlocked. The full
-    # listing runs only inside the rare mid-swap/crash window.
-    try:
-        asides = fs.globStatus(Path(f"{path}/_old.{BUCKET_COL}.*")) or []
-    except Exception:  # noqa: BLE001 — path itself gone
+    # inference entirely.
+    cm = meta.get("_commit") or _current_commit(spark, path)
+    want = None if buckets is None else {int(b) for b in buckets}
+    dirs = [
+        f"{path}/{d}"
+        for b, d in ((cm or {}).get("buckets") or {}).items()
+        if want is None or int(b) in want
+    ]
+    if not dirs:
         return empty()
-    if asides:
-        live_b: dict[int, str] = {}
-        old_b: dict[int, str] = {}
-        try:
-            listing = fs.listStatus(root)
-        except Exception:  # noqa: BLE001 — path itself gone
-            return empty()
-        for st in listing or []:
-            name = st.getPath().getName()
-            if name.startswith(f"{BUCKET_COL}="):
-                live_b[int(name.split("=", 1)[1])] = name
-            elif name.startswith(f"_old.{BUCKET_COL}."):
-                old_b[int(name.rsplit(".", 1)[1])] = name
-        stranded = {b: d for b, d in old_b.items() if b not in live_b}
-        if stranded:
-            dirs = sorted(
-                [f"{path}/{d}" for d in live_b.values()]
-                + [f"{path}/{d}" for d in stranded.values()]
-            )
-            # _old dirs are not kb= partition dirs — recompute the bucket
-            # id from the key columns (deterministic by construction),
-            # same as the marker-mode read
-            return spark.read.schema(data_schema).parquet(*dirs).withColumn(
-                BUCKET_COL, _bucket_expr(meta)
-            )
-        if not live_b:
-            return empty()
-    full = T.StructType(data_schema.fields).add(BUCKET_COL, T.IntegerType())
-    try:
-        df = spark.read.schema(full).parquet(path)
-        df.schema  # force the (explicit, listing-only) resolution
-        return df
-    except AnalysisException:
-        return empty()
+    # kb is RECOMPUTED from the key columns (deterministic by
+    # construction) — the versioned dirs are not kb= partition dirs,
+    # so the column does not ride in from the path.
+    return spark.read.schema(data_schema).parquet(*sorted(dirs)).withColumn(
+        BUCKET_COL, _bucket_expr(meta)
+    )
 
 
 def _bucket_expr(meta: dict):
@@ -747,25 +669,18 @@ def write_keyed_table(
     range_step: int | None = None,
     sort_cols: Sequence[str] | None = None,
     lock_ttl_sec: float = DEFAULT_LOCK_TTL_SEC,
-    commit: str | None = None,
     gc_generations: int = 1,
 ) -> None:
-    """Initial load of a keyed table: bucket directory layout + layout
-    metadata, so every later batch derives the same bucketing.
-    ``commit`` defaults to ``"marker"`` for NEW tables (round 14): the
-    manifest protocol works on every store, gives concurrent readers
-    snapshot isolation, and is what time travel / rollback / gc grace
-    require; pass ``commit="rename"`` for plain ``kb=<b>`` partition
-    dirs when no reader ever overlaps a writer. A RE-LOAD of an
-    existing table inherits the table's protocol unless the caller
-    names one explicitly (naming a DIFFERENT one still refuses — a
-    half-switched table would leave readers resolving by the wrong
-    protocol mid-crash).
-    ``gc_generations`` (marker protocol; round-12 ADVICE) is how many
-    PREDECESSOR commit manifests each publish retains — a reader that
-    resolved commit n keeps finding its dirs until ``gc_generations``
-    further commits land (Delta/Hudi-style retention; default 1 = the
-    prior behavior).
+    """Initial load (or full re-load) of a keyed table: bucket
+    directory layout + layout metadata, so every later batch derives
+    the same bucketing. The load is published like every other write —
+    staged bucket dirs, then one commit-manifest PUT carrying the new
+    metadata — so a re-load flips the whole table atomically.
+    ``gc_generations`` (round-12 ADVICE) is how many PREDECESSOR
+    commit manifests each publish retains — a reader that resolved
+    commit n keeps finding its dirs until ``gc_generations`` further
+    commits land (Delta/Hudi-style retention; default 1 = the prior
+    behavior).
     ``layout="range"`` buckets by ``leading_key div range_step`` —
     pick it when update batches are key-local (time-series backfills),
     so COW touches few directories (SCALING.md r11 quadrant study).
@@ -787,11 +702,9 @@ def write_keyed_table(
         raise ValueError(f"{sorted(clash)} are reserved column names in keyed tables")
     if layout not in ("hash", "range"):
         raise ValueError(f"layout must be 'hash' or 'range', got {layout!r}")
-    if commit not in (None, "rename", "marker"):
-        raise ValueError(f"commit must be 'rename' or 'marker', got {commit!r}")
     if layout == "hash" and int(num_buckets) < 1:
         # pmod(xxhash64(...), 0) is NULL — every row would land in a
-        # __HIVE_DEFAULT_PARTITION__ dir the touched-bucket/swap
+        # __HIVE_DEFAULT_PARTITION__ dir the touched-bucket/publish
         # machinery never addresses (round-11 ADVICE #1: the same
         # failure mode the range-layout string-key guard prevents).
         raise ValueError(f"layout='hash' needs num_buckets >= 1, got {num_buckets}")
@@ -802,7 +715,7 @@ def write_keyed_table(
         if not isinstance(ltype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
             # CAST(<string> AS BIGINT) silently NULLs in non-ANSI Spark,
             # sending rows to a __HIVE_DEFAULT_PARTITION__ bucket the
-            # swap machinery never touches — fail at write time instead.
+            # publish machinery never touches — fail at write time instead.
             raise ValueError(
                 f"layout='range' needs an integral leading key, got "
                 f"{ltype.simpleString()} for {key_cols[0]!r} — derive an epoch "
@@ -815,23 +728,10 @@ def write_keyed_table(
     if not assume_unique:
         _check_unique(df, key_cols, "initial load")
     spark = df.sparkSession
-    fs, root, jvm = _fs(spark, path)
+    fs, _, jvm = _fs(spark, path)
     existing: dict | None = None
     if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/{_META}")):
         existing = read_keyed_meta(spark, path)
-    if commit is None:
-        # marker for new tables (round 14); re-loads inherit — a
-        # default-parameter re-load must not read as a protocol switch
-        commit = _commit_mode(existing) if existing is not None else "marker"
-    elif existing is not None and _commit_mode(existing) != commit:
-        # a half-switched table would leave readers resolving by
-        # the wrong protocol mid-crash; a new path costs nothing
-        raise ValueError(
-            f"cannot change commit protocol on an existing keyed table "
-            f"({_commit_mode(existing)!r} -> {commit!r}) — write to a "
-            "new path instead"
-        )
-    _check_commit_scheme(fs.getUri().getScheme(), commit)
     meta = {
         "key_cols": key_cols,
         "num_buckets": num_buckets,
@@ -846,17 +746,10 @@ def write_keyed_table(
         # bucket file give parquet row-group min/max pruning on the sort
         # key — COW rewrites and compaction preserve the order.
         "sort_cols": list(sort_cols) if sort_cols else [],
-        # Commit protocol. DEFAULT IS "marker" since round 14 (verdict
-        # #7): commit-manifest PUTs work on every store AND give
-        # concurrent readers real snapshot isolation (manifest
-        # resolution + graced GC), where "rename" (atomic dir rename —
-        # HDFS/local only) exposes a task-time window during swaps and
-        # keeps no history (no time travel/rollback). Rename remains
-        # available for single-writer single-reader pipelines that want
-        # plain kb=<b> partition dirs on disk; wall-clock is within
-        # noise between the two (SCALING.md r12 quadrant, re-pinned r14).
-        "commit": commit,
-        # marker-protocol GC grace in manifest generations
+        # On-disk format tag: commit-manifest PUTs + _COMMITTED markers
+        # (read_keyed_meta refuses any other value)
+        "commit": "marker",
+        # GC grace in manifest generations
         "gc_generations": max(1, int(gc_generations)),
     }
     out = df.withColumn(BUCKET_COL, _bucket_expr(meta))
@@ -873,14 +766,14 @@ def write_keyed_table(
             # delta_floor — physically deleting them first lost
             # committed writes when the flip crashed, deleting them
             # after let them override the NEW table's rows.
-            _recover_unlocked(spark, path, existing)
+            _recover_unlocked(spark, path)
             floor = max(
                 [s_ for s_, _ in _delta_seq_dirs(spark, path, existing)]
                 + [_read_seq_hwm(spark, path), existing.get("delta_floor", 0)]
             )
             meta["delta_floor"] = floor
-        # The load lands in _staging and bucket dirs rename into the
-        # root (round 12): the root — and the writer lease inside it —
+        # The load lands in _staging and is published like any batch
+        # (round 12): the root — and the writer lease inside it —
         # survives, where the old overwrite-to-root write deleted the
         # whole dir (lease included) mid-write, leaving a window for a
         # second writer to interleave with table (re)creation.
@@ -888,79 +781,31 @@ def write_keyed_table(
         Path = jvm.org.apache.hadoop.fs.Path
         fs.delete(Path(staging), True)
         _write_layout(out, staging, num_buckets, meta)
-        if commit == "marker":
-            # Table (re)creation commit point is the meta write (a
-            # single PUT — no meta, not a keyed table); the bucket
-            # publish is the same manifest flip every batch uses, with
-            # `touched` covering staged AND previously-live buckets so
-            # a re-load fully replaces the old set.
-            staged_ids = {
-                int(st.getPath().getName().split("=", 1)[1])
-                for st in fs.listStatus(Path(staging))
-                if st.getPath().getName().startswith(f"{BUCKET_COL}=")
-            }
-            cm = _current_commit(spark, path)
-            prior = {int(b) for b in ((cm or {}).get("buckets") or {})}
-            # buckets + meta (incl. delta_floor) flip in ONE manifest
-            # PUT; the old generation's deltas/hwm are only TOUCHED
-            # after the flip (floor already hides the deltas) — a crash
-            # on either side leaves a consistent generation
-            _marker_publish(
-                spark, path, staging, sorted(staged_ids | prior), meta=meta
-            )
-            _write_meta(spark, path, meta)
-            fs.delete(Path(f"{path}/{_DELTA_DIR}"), True)
-            # the archive is the OLD generation's feed history — a
-            # checkpointed consumer must resync after a re-load, not
-            # page through rows the new base never contained
-            fs.delete(Path(f"{path}/{_FEED_ARCHIVE}"), True)
-            if meta.get("delta_floor"):
-                _write_seq_hwm(spark, path, meta["delta_floor"])
-            return
-        # Rename-mode re-load is OVERWRITE semantics and is NOT atomic
-        # for concurrent readers: a reader planning mid-re-load can see
-        # a mix of generations (steer concurrent-read deployments to
-        # commit='marker', whose manifest flip IS atomic). What round 13
-        # restores is the CRASH invariant (round-12 ADVICE): the prior
-        # generation is renamed aside to ``_retired.kb.<b>`` — never
-        # deleted — until the new generation is fully in place, so a
-        # crash anywhere in this loop leaves every byte of the old table
-        # salvageable on disk. ``_retired.*`` dirs are underscore-hidden
-        # from every reader, are NOT auto-restored by recovery (a
-        # partially-landed NEW generation must win a retry, not be mixed
-        # with restored OLD buckets), and are GC'd by the next successful
-        # re-load or by this one's completion.
-        retired_prefix = f"_retired.{BUCKET_COL}."
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith(retired_prefix):  # stale salvage from a crash
-                fs.delete(st.getPath(), True)
-        retired = []
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            # NOT _delta (deleted after the meta lands — delta_floor in
-            # the new meta hides it logically first) and NOT _seq.hwm
-            # (seq numbering stays monotonic across re-loads so change-
-            # feed checkpoints never alias — second review pass)
-            if name.startswith(f"_old.{BUCKET_COL}."):
-                fs.delete(st.getPath(), True)  # superseded crash residue
-            elif name.startswith(f"{BUCKET_COL}="):
-                b = name.split("=", 1)[1]
-                aside = Path(f"{path}/{retired_prefix}{b}")
-                if not fs.rename(st.getPath(), aside):
-                    raise IOError(f"re-load retire failed for bucket {b}")
-                retired.append(aside)
-        for st in fs.listStatus(Path(staging)):
-            name = st.getPath().getName()
-            if name.startswith(f"{BUCKET_COL}="):
-                if not fs.rename(st.getPath(), Path(f"{path}/{name}")):
-                    raise IOError(f"initial-load rename failed for {name}")
-        fs.delete(Path(staging), True)
+        # Table (re)creation commit point is the meta write (a single
+        # PUT — no meta, not a keyed table); the bucket publish is the
+        # same manifest flip every batch uses, with `touched` covering
+        # staged AND previously-live buckets so a re-load fully
+        # replaces the old set.
+        staged_ids = {
+            int(st.getPath().getName().split("=", 1)[1])
+            for st in fs.listStatus(Path(staging))
+            if st.getPath().getName().startswith(f"{BUCKET_COL}=")
+        }
+        cm = _current_commit(spark, path)
+        prior = {int(b) for b in ((cm or {}).get("buckets") or {})}
+        # buckets + meta (incl. delta_floor) flip in ONE manifest PUT;
+        # the old generation's deltas/hwm are only TOUCHED after the
+        # flip (floor already hides the deltas) — a crash on either
+        # side leaves a consistent generation
+        _marker_publish(
+            spark, path, staging, sorted(staged_ids | prior), meta=meta
+        )
         _write_meta(spark, path, meta)
-        for aside in retired:  # new generation fully landed — GC salvage
-            fs.delete(aside, True)
         fs.delete(Path(f"{path}/{_DELTA_DIR}"), True)
-        fs.delete(Path(f"{path}/{_FEED_ARCHIVE}"), True)  # old-gen feed history
+        # the archive is the OLD generation's feed history — a
+        # checkpointed consumer must resync after a re-load, not page
+        # through rows the new base never contained
+        fs.delete(Path(f"{path}/{_FEED_ARCHIVE}"), True)
         if meta.get("delta_floor"):
             _write_seq_hwm(spark, path, meta["delta_floor"])
 
@@ -969,7 +814,7 @@ def _write_layout(df: DataFrame, dest: str, n_parts: int, meta: dict) -> None:
     """The single choke point for base-layout writes (initial load, COW
     staging, compaction staging): bucket-aligned repartition, the
     table's within-bucket sort order, partitioned parquet. Always
-    overwrite — appends must go through the delta/swap machinery, never
+    overwrite — appends must go through the delta/publish machinery, never
     around it."""
     out = df.repartition(max(1, n_parts), BUCKET_COL)
     if meta.get("sort_cols"):
@@ -980,42 +825,30 @@ def _write_layout(df: DataFrame, dest: str, n_parts: int, meta: dict) -> None:
 def _delta_seq_dirs(
     spark: SparkSession, path: str, meta: dict | None = None
 ) -> list[tuple[int, str]]:
-    """Sorted (seq, dir) of COMMITTED MOR delta batches. Commit test by
-    protocol (round 12): under ``rename`` a seq dir's PRESENCE is the
-    commit (the dir arrived whole via atomic rename — this also keeps
-    pre-round-12 tables readable, whose dirs carry no marker); under
-    ``marker`` the ``_COMMITTED`` file written last is the commit, and
-    an unmarked dir is a crashed batch. New rename-protocol batches
-    also carry the marker (written into the staged dir pre-rename) —
-    informational there, load-bearing under marker."""
+    """Sorted (seq, dir) of COMMITTED MOR delta batches: a seq dir
+    counts only once its ``_COMMITTED`` marker (written last) exists —
+    an unmarked dir is a crashed or refused batch, invisible to every
+    reader and GC'd by the recovery sweep."""
     if meta is None:
         meta = read_keyed_meta(spark, path)
     floor = int(meta.get("delta_floor") or 0)
     fs, root, jvm = _fs(spark, f"{path}/{_DELTA_DIR}")
     Path = jvm.org.apache.hadoop.fs.Path
     out = []
-    if _commit_mode(meta) == "marker":
-        # ONE glob for the markers themselves (their parent dirs are
-        # the committed seq dirs) — a listStatus + per-dir exists probe
-        # costs O(pending) py4j round trips on every append/read plan
-        # (round-12 fixed-cost audit); globStatus answers in one.
-        arr = fs.globStatus(Path(f"{path}/{_DELTA_DIR}/seq=*/{_COMMITTED_MARK}"))
-        for st in arr or []:
-            seq_dir = st.getPath().getParent()
-            seq = int(seq_dir.getName().split("=", 1)[1])
-            # delta_floor (round-12 second review): a re-load retires
-            # the old generation's deltas LOGICALLY in the same atomic
-            # flip that replaces the buckets — dirs at or below the
-            # floor are the old table's, whatever their physical state
-            if seq > floor:
-                out.append((seq, seq_dir.toUri().getPath()))
-        return sorted(out)
-    for st in fs.globStatus(Path(f"{path}/{_DELTA_DIR}/seq=*")) or []:
-        if st.isDirectory():
-            p = st.getPath()
-            seq = int(p.getName().split("=", 1)[1])
-            if seq > floor:
-                out.append((seq, p.toUri().getPath()))
+    # ONE glob for the markers themselves (their parent dirs are the
+    # committed seq dirs) — a listStatus + per-dir exists probe costs
+    # O(pending) py4j round trips on every append/read plan (round-12
+    # fixed-cost audit); globStatus answers in one.
+    arr = fs.globStatus(Path(f"{path}/{_DELTA_DIR}/seq=*/{_COMMITTED_MARK}"))
+    for st in arr or []:
+        seq_dir = st.getPath().getParent()
+        seq = int(seq_dir.getName().split("=", 1)[1])
+        # delta_floor (round-12 second review): a re-load retires the
+        # old generation's deltas LOGICALLY in the same atomic flip that
+        # replaces the buckets — dirs at or below the floor are the old
+        # table's, whatever their physical state
+        if seq > floor:
+            out.append((seq, seq_dir.toUri().getPath()))
     return sorted(out)
 
 
@@ -1104,7 +937,7 @@ def read_keyed_table(
     :data:`DELTA_BROADCAST_BYTES` — :func:`compact_keyed_table` clears
     it entirely.
 
-    ``at_commit=n`` (round 13 — TIME TRAVEL, marker protocol only):
+    ``at_commit=n`` (round 13 — TIME TRAVEL):
     reconstruct the table exactly as it stood at commit ``n``: the base
     is resolved through that commit's manifest (immutable versioned
     bucket dirs), and the MOR deltas pending at publish time — recorded
@@ -1114,8 +947,7 @@ def read_keyed_table(
     ``gc_generations`` (how many predecessor manifests + their bucket
     dirs survive) and compact's ``retain_generations`` (how many folded
     delta generations stay readable); a read past either raises with
-    the knob named. Rename-protocol tables keep no history — overwrite
-    semantics — and refuse. The Delta/Iceberg ``VERSION AS OF``
+    the knob named. The Delta/Iceberg ``VERSION AS OF``
     re-expressed on plain directories."""
     meta = read_keyed_meta(spark, path)
     if at_commit is not None:
@@ -1132,11 +964,6 @@ def read_keyed_table(
 def _read_at_commit(
     spark: SparkSession, path: str, meta: dict, n: int
 ) -> DataFrame:
-    if _commit_mode(meta) != "marker":
-        raise ValueError(
-            f"{path!r}: time travel needs commit='marker' (rename-protocol "
-            "tables overwrite in place and keep no history)"
-        )
     cm = _read_commit_manifest(spark, path, n)
     if cm is None:
         cur = _current_commit(spark, path) or {"n": 0}
@@ -1147,7 +974,6 @@ def _read_at_commit(
             "more history"
         )
     meta_n = dict(cm.get("meta") or meta)
-    meta_n["commit"] = "marker"
     meta_n["_commit"] = cm  # _base_df resolves through THIS manifest
     data_cols = meta_n["data_cols"]
     base = _base_df(spark, path, meta_n)
@@ -1211,46 +1037,6 @@ def _read_at_commit(
     ).select(*data_cols)
 
 
-def _swap_buckets(spark: SparkSession, path: str, staging: str, buckets: list[int]) -> None:
-    _fence_lease(spark, path)  # abort if our lease was broken mid-job
-    fs, root, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    for b in buckets:
-        live = Path(f"{path}/{BUCKET_COL}={b}")
-        staged = Path(f"{staging}/{BUCKET_COL}={b}")
-        old = Path(f"{path}/_old.{BUCKET_COL}.{b}")
-        if fs.exists(old):
-            # Leftover from a crashed prior swap. Which side of the
-            # crash matters (round-11 review — the unconditional delete
-            # here could destroy the ONLY copy of a bucket): live
-            # missing ⇒ _old IS the bucket — restore it, but the merged
-            # data about to swap in was computed from a read that did
-            # NOT see these rows (found live in the pin test: swapping
-            # anyway replaces the bucket with batch-only rows), so
-            # abort and make the caller re-apply. Writers run
-            # recover_keyed_table up front, so reaching this means the
-            # crash happened DURING this very run. live present ⇒ _old
-            # is a superseded copy — drop it.
-            if not fs.exists(live):
-                if not fs.rename(old, live):
-                    raise IOError(f"crash-recovery restore failed for bucket {b}")
-                raise IOError(
-                    f"bucket {b} was restored from a crashed swap AFTER this "
-                    "batch's merge plan was built — re-apply the batch"
-                )
-            fs.delete(old, True)
-        had_live = fs.exists(live)
-        if had_live:
-            if not fs.rename(live, old):
-                raise IOError(f"rename-aside failed for bucket {b}")
-        if fs.exists(staged):  # a bucket can be all-deletes → no staged dir
-            if not fs.rename(staged, live):
-                raise IOError(f"staging swap-in failed for bucket {b}")
-        if had_live:
-            fs.delete(old, True)
-    fs.delete(Path(staging), True)
-
-
 def _marker_publish(
     spark: SparkSession,
     path: str,
@@ -1259,7 +1045,7 @@ def _marker_publish(
     meta: dict | None = None,
     folds_deltas: bool = False,
 ) -> dict:
-    """Marker-protocol bucket publish: move each staged ``kb=<b>`` dir
+    """Bucket publish: move each staged ``kb=<b>`` dir
     to an immutable versioned dir ``_b<b>.v<n>``, then PUT the next
     commit manifest referencing the new set — the single-file PUT is
     the commit point; the moves before it are invisible (readers
@@ -1343,9 +1129,9 @@ def _marker_publish(
     }
 
 
-def _recover_marker(spark: SparkSession, path: str) -> dict:
-    """Marker-protocol recovery = garbage collection only (the commit
-    manifest means crashes never leave ambiguous state): drop versioned
+def _recover_unlocked(spark: SparkSession, path: str) -> dict:
+    """Recovery = garbage collection only (the commit manifest means
+    crashes never leave ambiguous state): drop versioned
     bucket dirs NO retained manifest references (the GC grace keeps the
     previous manifest's dirs alive — the sweep honors the same rule),
     delta seq dirs without a ``_COMMITTED`` marker (crashed batches —
@@ -1417,8 +1203,8 @@ def rollback_keyed_table(
     to_commit: int,
     lock_ttl_sec: float = DEFAULT_LOCK_TTL_SEC,
 ) -> dict:
-    """Roll the table back to a prior commit (round 13; marker protocol
-    only) — bad-batch recovery WITHOUT a restore-from-backup: publish a
+    """Roll the table back to a prior commit (round 13) — bad-batch
+    recovery WITHOUT a restore-from-backup: publish a
     NEW commit whose bucket set is commit ``to_commit``'s (the
     immutable versioned dirs are shared, nothing is copied) and retire
     every delta committed since (``delta_floor`` hides them logically
@@ -1438,11 +1224,6 @@ def rollback_keyed_table(
     O(metadata), independent of table size."""
     with _writer_lease(spark, path, lock_ttl_sec):
         meta = read_keyed_meta(spark, path)
-        if _commit_mode(meta) != "marker":
-            raise ValueError(
-                f"{path!r}: rollback needs commit='marker' (rename-protocol "
-                "tables overwrite in place and keep no history)"
-            )
         target = _read_commit_manifest(spark, path, to_commit)
         if target is None:
             cur = _current_commit(spark, path) or {"n": 0}
@@ -1494,9 +1275,8 @@ def rollback_keyed_table(
 
 def keyed_table_history(spark: SparkSession, path: str) -> DataFrame:
     """The table's retained commit history as a DataFrame — the
-    Delta ``DESCRIBE HISTORY`` analog on plain directories (round 14;
-    marker protocol only: rename tables overwrite in place and keep no
-    history). One row per retained manifest, oldest first:
+    Delta ``DESCRIBE HISTORY`` analog on plain directories (round 14).
+    One row per retained manifest, oldest first:
 
     - ``commit_n``       — the commit number (``at_commit=`` target);
     - ``ts_unix``        — informational publish timestamp (NULL for
@@ -1513,11 +1293,6 @@ def keyed_table_history(spark: SparkSession, path: str) -> DataFrame:
     target. Driver-side cost is O(retained manifests): tiny by
     construction, independent of table size."""
     meta = read_keyed_meta(spark, path)
-    if _commit_mode(meta) != "marker":
-        raise ValueError(
-            f"{path!r}: history needs commit='marker' (rename-protocol "
-            "tables overwrite in place and keep no history)"
-        )
     fs, root, jvm = _fs(spark, f"{path}/{_COMMITS_DIR}")
     rows: list[tuple] = []
     if fs.exists(root):
@@ -1555,55 +1330,17 @@ def keyed_table_history(spark: SparkSession, path: str) -> DataFrame:
 def recover_keyed_table(
     spark: SparkSession, path: str, lock_ttl_sec: float = DEFAULT_LOCK_TTL_SEC
 ) -> dict:
-    """Finish/roll back a crashed write NOW instead of at the next one.
-    Rename protocol: every ``_old.kb.<b>`` whose live dir is missing is
-    restored (it is the bucket's only copy — readers were silently
-    missing it), every one whose live dir exists is dropped, and the
-    ``_staging`` dir is cleared. Marker protocol: pure GC — see
-    :func:`_recover_marker`. Run after an unclean shutdown; reads never
-    mutate state, so the sweep is explicit. HOLDS THE WRITER LEASE
-    (round-12 review): a sweep racing a live writer would GC the
-    version dirs that writer has moved but not yet committed — the
-    manifest PUT would then reference deleted dirs. Writers run the
-    unlocked form inside their own lease. Returns
-    ``{restored: [...], dropped: [...], staging_cleared: bool}`` (or
-    the marker GC dict)."""
-    meta = read_keyed_meta(spark, path)
+    """Collect a crashed write's garbage NOW instead of at the next
+    write — see :func:`_recover_unlocked`. Run after an unclean
+    shutdown; reads never mutate state, so the sweep is explicit. HOLDS
+    THE WRITER LEASE (round-12 review): a sweep racing a live writer
+    would GC the version dirs that writer has moved but not yet
+    committed — the manifest PUT would then reference deleted dirs.
+    Writers run the unlocked form inside their own lease. Returns
+    ``{gc_buckets: [...], gc_deltas: [...], staging_cleared: bool}``."""
+    read_keyed_meta(spark, path)  # not a keyed table / legacy → refuse
     with _writer_lease(spark, path, lock_ttl_sec):
-        return _recover_unlocked(spark, path, meta)
-
-
-def _recover_unlocked(spark: SparkSession, path: str, meta: dict) -> dict:
-    if _commit_mode(meta) == "marker":
-        return _recover_marker(spark, path)
-    fs, root, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    restored, dropped = [], []
-    prefix = f"_old.{BUCKET_COL}."
-    # glob, not listStatus: the sweep runs before EVERY write, and
-    # iterating all bucket-dir statuses through py4j costs hundreds of
-    # round trips on a 256-bucket table when the normal answer is
-    # "no remnants" (round-12 fixed-cost audit).
-    for st in fs.globStatus(Path(f"{path}/{prefix}*")) or []:
-        name = st.getPath().getName()
-        if not st.isDirectory():
-            continue
-        b = int(name[len(prefix):])
-        live = Path(f"{path}/{BUCKET_COL}={b}")
-        if not fs.exists(live):
-            if not fs.rename(st.getPath(), live):
-                raise IOError(f"crash-recovery restore failed for bucket {b}")
-            restored.append(b)
-        else:
-            fs.delete(st.getPath(), True)
-            dropped.append(b)
-    for st in fs.globStatus(Path(f"{path}/.*.tmp")) or []:
-        fs.delete(st.getPath(), False)  # orphaned atomic-PUT remnants
-    staging = Path(f"{path}/_staging")
-    had_staging = fs.exists(staging)
-    if had_staging:
-        fs.delete(staging, True)
-    return {"restored": sorted(restored), "dropped": sorted(dropped), "staging_cleared": had_staging}
+        return _recover_unlocked(spark, path)
 
 
 def _evolve_schema(
@@ -1630,10 +1367,9 @@ def _evolve_schema(
     refused on the hash layout — ``xxhash64`` hashes int 5 and long 5
     to DIFFERENT values (probe-verified), so the widened key would
     re-bucket every row out from under its directory; the range layout
-    buckets through ``CAST AS BIGINT`` and is type-stable. Marker
-    tables publish the evolved meta as a new commit manifest (atomic
-    single PUT, buckets unchanged); rename tables rewrite the root meta
-    file (atomic temp-then-rename PUT)."""
+    buckets through ``CAST AS BIGINT`` and is type-stable. The evolved
+    meta publishes as a new commit manifest (atomic single PUT, buckets
+    unchanged)."""
     widen = widen or {}
     reserved = {BUCKET_COL, _DEL_COL, "seq", "_seq"}
     bad = [c for c in extra if c in reserved or c.startswith("_")]
@@ -1675,12 +1411,9 @@ def _evolve_schema(
     evolved = {k: v for k, v in meta.items() if not k.startswith("_")}
     evolved["data_cols"] = list(meta["data_cols"]) + list(extra)
     evolved["schema_json"] = full.json()
-    if _commit_mode(meta) == "marker":
-        # meta-only publish: same buckets, next commit number — the
-        # PUT is the atomic evolution point
-        _marker_publish(spark, path, f"{path}/_staging", [], meta=evolved)
-    else:
-        _write_meta(spark, path, evolved)
+    # meta-only publish: same buckets, next commit number — the PUT is
+    # the atomic evolution point
+    _marker_publish(spark, path, f"{path}/_staging", [], meta=evolved)
     return evolved
 
 
@@ -1737,10 +1470,7 @@ def drop_keyed_columns(
         evolved["dropped_cols"] = sorted(
             set(meta.get("dropped_cols") or []) | set(cols)
         )
-        if _commit_mode(meta) == "marker":
-            _marker_publish(spark, path, f"{path}/_staging", [], meta=evolved)
-        else:
-            _write_meta(spark, path, evolved)
+        _marker_publish(spark, path, f"{path}/_staging", [], meta=evolved)
         return {"dropped": cols, "data_cols": evolved["data_cols"]}
 
 
@@ -1988,10 +1718,10 @@ def _apply_batch(
             "then apply COW batches (mixing modes would let older deltas "
             "override this newer write at read time)"
         )
-    # Finish/roll back any crashed prior swap BEFORE planning reads —
-    # the merge below must see every bucket's true contents (a bucket
-    # stranded at _old.kb.<b> is invisible to the base scan).
-    _recover_unlocked(spark, path, meta)
+    # GC any crashed writer's garbage BEFORE staging: a moved-but-
+    # unpublished _b<b>.v<n> dir from a crash would collide with this
+    # batch's publish of the same commit number.
+    _recover_unlocked(spark, path)
     batch = _validated_batch(meta, batch, delete, assume_unique=True)  # columns only
     batch = batch.withColumn(BUCKET_COL, _bucket_expr(meta)).persist()
     try:
@@ -2005,7 +1735,7 @@ def _apply_batch(
                 # collect_set silently DROPS a NULL bucket id (range
                 # layout + NULL leading key under assume_unique slipped
                 # past the key checks) — such a row would land in a
-                # hive-default staging dir the swap never moves, i.e.
+                # hive-default staging dir the publish never moves, i.e.
                 # silent row loss (second review pass); detect and
                 # refuse loudly whatever the assume_unique setting.
                 "null_kb": (F.col(BUCKET_COL).isNull(), F.max, F.max),
@@ -2021,9 +1751,8 @@ def _apply_batch(
         batch_rows = int(st.n or 0)
         if not touched:
             return {"touched_buckets": [], "batch_rows": 0, "survivor_rows": 0}
-        # Partition-pruned read of ONLY the touched bucket dirs (the
-        # isin filter is a directory filter in the rename layout — plan
-        # pytest-pinned; the marker layout prunes at the path list).
+        # Read of ONLY the touched bucket dirs, pruned at the path list
+        # (plan pytest-pinned).
         old = _base_df(spark, path, meta, buckets=touched).filter(
             F.col(BUCKET_COL).isin([int(b) for b in touched])
         )
@@ -2042,25 +1771,12 @@ def _apply_batch(
         fs, _, jvm = _fs(spark, staging)
         fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
         _write_layout(merged, staging, len(touched), meta)
-        if _commit_mode(meta) == "marker":
-            pub = _marker_publish(
-                spark, path, staging, [int(b) for b in touched], meta=meta
-            )
-            live = pub["live_buckets"]
-        else:
-            _swap_buckets(spark, path, staging, [int(b) for b in touched])
-            # Count untouched from the DIRECTORIES present: range
-            # layouts have data-dependent bucket ids, so meta
-            # num_buckets is only the hash layout's denominator.
-            # (globStatus: one round trip, counted driver-side.)
-            fs2, _, jvm2 = _fs(spark, path)
-            arr = fs2.globStatus(
-                jvm2.org.apache.hadoop.fs.Path(f"{path}/{BUCKET_COL}=*")
-            )
-            live = len(arr) if arr is not None else 0
+        pub = _marker_publish(
+            spark, path, staging, [int(b) for b in touched], meta=meta
+        )
         return {
             "touched_buckets": [int(b) for b in touched],
-            "untouched_buckets": live - len(touched),
+            "untouched_buckets": pub["live_buckets"] - len(touched),
             "batch_rows": batch_rows,
         }
     finally:
@@ -2186,19 +1902,15 @@ def _mor_append(
 ) -> dict:
     """Append the batch as the next ``_delta/seq=N`` file set —
     O(batch) whatever the key spread. Deletes ride as tombstone rows
-    (non-key columns NULLed, ``_del`` true). The staged dir is renamed
-    into place as the LAST step, so a crash mid-write leaves no
-    half-visible batch. ``idempotency_key`` (written INTO the staged
-    dir, so it commits atomically with the data) makes a replayed
-    append a no-op — the streaming-ingest contract."""
+    (non-key columns NULLed, ``_del`` true). The ``_COMMITTED`` marker
+    is written as the LAST step, so a crash mid-write leaves no
+    half-visible batch. ``idempotency_key`` (written INTO the seq dir
+    before the marker, so it commits atomically with the data) makes a
+    replayed append a no-op — the streaming-ingest contract."""
     meta = read_keyed_meta(spark, path)
     # Same pre-write sweep as _apply_batch/compact (round-11 ADVICE #2):
-    # after a crashed COW swap a bucket can be stranded at _old.kb.<b>;
-    # the append itself never reads the base, but every SUBSEQUENT read
-    # of base ∪ deltas would silently miss that bucket until something
-    # ran the sweep — make MOR appends honor the "writers recover up
-    # front" contract the swap's crash handling already assumes.
-    _recover_unlocked(spark, path, meta)
+    # every writer collects crashed writers' garbage up front.
+    _recover_unlocked(spark, path)
     if evolve_schema and not delete:
         extra = [c for c in batch.columns if c not in meta["data_cols"]]
         # round 14: a batch column STRICTLY WIDER than the table's
@@ -2276,23 +1988,21 @@ def _commit_delta(
 ) -> dict:
     """Shared MOR commit tail: write ``staged`` (data cols + ``_del`` +
     ``kb``) as the next ``seq=N`` batch, the idempotency marker riding
-    with it. Commit point by protocol: ``rename`` writes into
-    ``_delta/_staging_seq`` (data + markers + ``_COMMITTED``) and
-    renames the dir — atomic on HDFS/local; ``marker`` writes straight
-    into the final seq dir and PUTs ``_COMMITTED`` LAST — the marker
-    is the commit on stores without atomic rename, and an uncommitted
-    dir from a crash is simply overwritten when its seq is reused.
+    with it. The data lands straight in the final seq dir and
+    ``_COMMITTED`` is PUT LAST — the marker is the commit, and an
+    uncommitted dir from a crash is simply overwritten when its seq is
+    reused.
     Numbering is monotonic across compactions (the ``_seq.hwm`` file),
     so change-feed checkpoints never alias.
 
     ``post_write_check`` (round 15): optional callable run after the
     data write but BEFORE the commit point — the hook where write-fused
     validation (observed metrics) gets to refuse the batch while the
-    seq dir is still uncommitted (invisible to every reader by the
-    marker/rename protocol, exactly like a crashed writer's leftovers).
-    It may raise (the uncommitted dir is deleted, the error propagates)
-    or return False (empty batch: dir deleted, ``seq=None`` returned —
-    nothing committed). Returning True proceeds to the marker/rename."""
+    seq dir is still uncommitted (invisible to every reader, exactly
+    like a crashed writer's leftovers). It may raise (the uncommitted
+    dir is deleted, the error propagates) or return False (empty batch:
+    dir deleted, ``seq=None`` returned — nothing committed). Returning
+    True proceeds to the marker."""
     seqs = _delta_seq_dirs(spark, path, meta)
     next_seq = (
         max(
@@ -2304,9 +2014,7 @@ def _commit_delta(
     )
     fs, _, jvm = _fs(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
-    final = f"{path}/{_DELTA_DIR}/seq={next_seq}"
-    marker_mode = _commit_mode(meta) == "marker"
-    dest = final if marker_mode else f"{path}/{_DELTA_DIR}/_staging_seq"
+    dest = f"{path}/{_DELTA_DIR}/seq={next_seq}"
     fs.delete(Path(dest), True)
     # kb rides as a REGULAR column: partitionBy(kb) here exploded a
     # scattered 1k-row batch into ~one tiny file per touched bucket
@@ -2330,14 +2038,11 @@ def _commit_delta(
             Path(f"{dest}/{_INGEST_KEY}.{_key_digest(idempotency_key)}"), True
         )
         marker.close()
-    # the _COMMITTED PUT (marker mode) / the dir rename (rename mode)
-    # is THE commit point — fence the lease immediately before it
+    # the _COMMITTED PUT is THE commit point — fence the lease
+    # immediately before it
     _fence_lease(spark, path)
     mark = fs.create(Path(f"{dest}/{_COMMITTED_MARK}"), True)
     mark.close()
-    if not marker_mode:
-        if not fs.rename(Path(dest), Path(final)):
-            raise IOError(f"delta commit rename failed for seq={next_seq}")
     return {"mode": "mor", "seq": next_seq, "delete": delete}
 
 
@@ -2396,18 +2101,9 @@ def _archive_and_gc_deltas(
 
 
 def _live_buckets(spark: SparkSession, path: str, meta: dict) -> set[int]:
-    """Bucket ids with live data, O(metadata): manifest keys (marker)
-    or one ``kb=*`` glob (rename)."""
-    fs, _, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if _commit_mode(meta) == "marker":
-        cm = meta.get("_commit") or _current_commit(spark, path) or {}
-        return {int(b) for b in (cm.get("buckets") or {})}
-    return {
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.globStatus(Path(f"{path}/{BUCKET_COL}=*")) or []
-        if st.isDirectory()
-    }
+    """Bucket ids with live data, O(metadata): the manifest's keys."""
+    cm = meta.get("_commit") or _current_commit(spark, path) or {}
+    return {int(b) for b in (cm.get("buckets") or {})}
 
 
 def compact_keyed_table(
@@ -2419,15 +2115,16 @@ def compact_keyed_table(
     rewrite_all: bool = False,
 ) -> dict:
     """Fold pending MOR deltas into the base: resolve latest-seq-wins
-    over (base ∪ deltas) for ONLY the buckets the deltas touch, COW-swap
-    those bucket dirs, then drop the delta dirs. Idempotent across a
-    crash between swap and delta removal — re-applying the same deltas
-    reproduces the same rows (overrides are absolute values, tombstones
-    delete already-absent keys). ``refresh_manifest=True`` additionally
-    runs the incremental stats-manifest refresh over the swapped files
-    when the table carries a ``_stats_manifest`` (compaction is THE
-    file-churn point of the MOR lifecycle; the refresh cost tracks the
-    swapped buckets — see ``sources.manifest``).
+    over (base ∪ deltas) for ONLY the buckets the deltas touch, publish
+    those bucket dirs in one manifest PUT, then retire the delta dirs.
+    Idempotent across a crash between publish and delta removal —
+    re-applying the same deltas reproduces the same rows (overrides are
+    absolute values, tombstones delete already-absent keys).
+    ``refresh_manifest=True`` additionally runs the incremental
+    stats-manifest refresh over the rewritten files when the table
+    carries a ``_stats_manifest`` (compaction is THE file-churn point
+    of the MOR lifecycle; the refresh cost tracks the rewritten buckets
+    — see ``sources.manifest``).
 
     ``retain_generations`` (round 13, Delta/Hudi-style retention): the
     folded seq dirs are kept feed-readable under
@@ -2461,7 +2158,7 @@ def _compact_locked(
     retain_generations: int = 1,
     rewrite_all: bool = False,
 ) -> dict:
-    _recover_unlocked(spark, path, meta)  # same pre-read sweep as _apply_batch
+    _recover_unlocked(spark, path)  # same pre-read sweep as _apply_batch
     deltas = _read_deltas(spark, path, meta)
     if deltas is None and not rewrite_all:
         # nothing to fold, but still honor the retention setting: a
@@ -2508,30 +2205,21 @@ def _compact_locked(
         # clear the re-add guard in the same commit (round 14,
         # drop_keyed_columns). With retention, archived deltas may
         # still carry the bytes, so the guard stays.
-        cleared_dropped = False
         if rewrite_all and retain_generations <= 0 and meta.get("dropped_cols"):
             meta = {k: v for k, v in meta.items() if k != "dropped_cols"}
-            cleared_dropped = True
         staging = f"{path}/_staging"
         fs, _, jvm = _fs(spark, staging)
         Path = jvm.org.apache.hadoop.fs.Path
         fs.delete(Path(staging), True)
         _write_layout(merged, staging, len(touched), meta)
-        if _commit_mode(meta) == "marker":
-            # Deltas are dropped AFTER the manifest flip: a crash
-            # between the two re-applies the folded deltas on read,
-            # which is value-idempotent (overrides are absolute,
-            # tombstones delete already-absent keys) — the same
-            # documented seam as the rename protocol's swap/delete gap.
-            pub = _marker_publish(
-                spark, path, staging, touched, meta=meta, folds_deltas=True
-            )
-            churned = [f"{path}/{d}" for d in pub["changed_dirs"]]
-        else:
-            _swap_buckets(spark, path, staging, touched)
-            churned = [f"{path}/{BUCKET_COL}={b}" for b in touched]
-            if cleared_dropped:  # marker carries it in the manifest PUT
-                _write_meta(spark, path, meta)
+        # Deltas are dropped AFTER the manifest flip: a crash between
+        # the two re-applies the folded deltas on read, which is
+        # value-idempotent (overrides are absolute, tombstones delete
+        # already-absent keys) — the documented seam.
+        pub = _marker_publish(
+            spark, path, staging, touched, meta=meta, folds_deltas=True
+        )
+        churned = [f"{path}/{d}" for d in pub["changed_dirs"]]
         # hwm BEFORE retiring the dirs: a crash between the two leaves
         # the dirs present and the hwm high — next commit skips a few
         # seq numbers, which is harmless (monotonicity is the contract).
@@ -2550,9 +2238,8 @@ def _compact_locked(
             )
 
             if fs.exists(Path(f"{path}/{MANIFEST_DIR}")):
-                # The compact KNOWS its churn: exactly the swapped
-                # bucket dirs (rename layout) or the superseded + new
-                # versioned dirs (marker layout). Declaring them keeps
+                # The compact KNOWS its churn: exactly the superseded +
+                # new versioned dirs. Declaring them keeps
                 # the refresh O(touched files), independent of table
                 # file count (round-12 brief #4).
                 out["manifest"] = refresh_file_stats_manifest(
@@ -2780,6 +2467,18 @@ def apply_changes_keyed_table(
     error, not an order-dependent answer — same contract as the
     streaming ingest always had. Empty batches commit nothing.
 
+    Validation rides the delta write (round 15): the key checks and
+    counts come from an ``Observation`` read after the data lands in
+    the still-uncommitted seq dir and before its ``_COMMITTED`` marker.
+    Two consequences. A REFUSED batch pays one discarded write — the
+    uncommitted dir is deleted, never visible, but its bytes were
+    written. And the observed SUM counts (``n``, ``n_del`` → the
+    returned ``rows``/``deletes``/``upserts``) can over-count when
+    speculative execution or task retries run a partition twice; the
+    refusal checks read only ``max`` aggregates (``max_dup``,
+    ``has_null``), which are retry-safe, so a retry can inflate a
+    reported count but never wrongly accept or refuse a batch.
+
     Callers that feed ``changes`` from a non-deterministic source
     should persist it first (the validation pass and the delta write
     each evaluate the frame once)."""
@@ -2841,7 +2540,7 @@ def _apply_changes_locked(
         isdel.alias(_DEL_COL),
     ).select(*data_cols, _DEL_COL)
     staged = staged.withColumn(BUCKET_COL, _bucket_expr(meta))
-    _recover_unlocked(spark, path, meta)
+    _recover_unlocked(spark, path)
     if idempotency_key is not None:
         seen = _delta_ingest_keys(spark, path, meta)
         digest = _key_digest(idempotency_key)

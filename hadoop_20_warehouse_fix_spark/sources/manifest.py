@@ -63,26 +63,25 @@ def _fs_for(spark: SparkSession, path: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
 
 
-def _marker_keyed_meta(spark: SparkSession, table_path: str) -> dict | None:
-    """The keyed-table meta when ``table_path`` is a marker-commit
-    keyed table, else None. Marker tables keep their data in HIDDEN
-    versioned dirs resolved through a commit manifest, so every
-    listing in this module must go through that manifest instead of
-    the directory tree (round 12 — and old version dirs are retained
-    one generation for in-flight readers, so a tree walk would count
-    superseded files as live)."""
+def _keyed_table_meta(spark: SparkSession, table_path: str) -> dict | None:
+    """The keyed-table meta when ``table_path`` is a keyed table, else
+    None. Keyed tables keep their data in HIDDEN versioned dirs
+    resolved through a commit manifest, so every listing in this
+    module must go through that manifest instead of the directory tree
+    (round 12 — and old version dirs are retained one generation for
+    in-flight readers, so a tree walk would count superseded files as
+    live)."""
     from hadoop_20_warehouse_fix_spark.sources import keyed as K
 
     fs, _, jvm = _fs_for(spark, table_path)
     root = table_path.rstrip("/")
     if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{root}/{K._META}")):
         return None
-    meta = K.read_keyed_meta(spark, root)
-    return meta if meta.get("commit") == "marker" else None
+    return K.read_keyed_meta(spark, root)
 
 
-def _marker_live_dirs(spark: SparkSession, table_path: str) -> list[str]:
-    """Absolute dirs of the CURRENT commit of a marker keyed table."""
+def _keyed_live_dirs(spark: SparkSession, table_path: str) -> list[str]:
+    """Absolute dirs of the CURRENT commit of a keyed table."""
     from hadoop_20_warehouse_fix_spark.sources import keyed as K
 
     root = table_path.rstrip("/")
@@ -136,7 +135,7 @@ def write_file_stats_manifest(
     ``<table_path>/_stats_manifest``). Rebuild after every batch write;
     for append-only ingest, manifest the new files and append.
     """
-    mk = _marker_keyed_meta(spark, table_path)
+    mk = _keyed_table_meta(spark, table_path)
     if mk is not None:
         schema = T.StructType.fromJson(json.loads(mk["schema_json"]))
     else:
@@ -156,7 +155,7 @@ def write_file_stats_manifest(
     if mk is not None:
         files = sorted(
             f
-            for d in _marker_live_dirs(spark, table_path)
+            for d in _keyed_live_dirs(spark, table_path)
             for f in _list_data_files(spark, d)
         )
     else:
@@ -288,13 +287,13 @@ def refresh_file_stats_manifest(
             spark, table_path, manifest_path=manifest_path
         )
         # count what the build actually manifested — a root tree walk
-        # sees zero files on marker keyed tables (hidden versioned
+        # sees zero files on keyed tables (hidden versioned
         # dirs; second review pass)
         n = _read_manifest(spark, mpath).count()
         return {"added": n, "removed": 0, "kept": 0, "total": n}
     old = _read_manifest(spark, dest)
-    mk = _marker_keyed_meta(spark, table_path)
-    live_dirs = set(_marker_live_dirs(spark, table_path)) if mk is not None else None
+    mk = _keyed_table_meta(spark, table_path)
+    live_dirs = set(_keyed_live_dirs(spark, table_path)) if mk is not None else None
     if changed_dirs is not None:
         # Reconcile only inside the writer-declared dirs: rows outside
         # them are untouched by construction, so neither the table walk
@@ -319,7 +318,7 @@ def refresh_file_stats_manifest(
             if fs2.exists(dp):  # a dir can vanish entirely (all-deletes)
                 current |= set(_list_data_files(spark, ds))
         if live_dirs is not None:
-            # marker keyed table: superseded version dirs linger one
+            # keyed table: superseded version dirs linger one
             # generation for in-flight readers — only files under the
             # CURRENT commit's dirs are live
             current = {
@@ -482,7 +481,7 @@ def read_pruned(
         )
     kept, _ = manifest_kept_files(spark, mpath, predicates)
     preds = _normalize(predicates)
-    mk = _marker_keyed_meta(spark, table_path)
+    mk = _keyed_table_meta(spark, table_path)
     if not kept:
         if mk is not None:
             base = spark.createDataFrame(
@@ -491,7 +490,7 @@ def read_pruned(
         else:
             base = spark.read.parquet(table_path).limit(0)
     elif mk is not None:
-        # marker layout: no directory-derived columns to preserve (the
+        # keyed layout: no directory-derived columns to preserve (the
         # versioned dirs carry no k=v segments), and basePath over
         # hidden dirs trips Spark's ignored-path machinery
         base = spark.read.parquet(*kept)

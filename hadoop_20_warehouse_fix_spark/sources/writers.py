@@ -150,17 +150,28 @@ def ensure_managed_creatable(spark: SparkSession, table_name: str) -> None:
     directory. If the catalog has no table under this name, the
     directory is an orphan by definition: delete it so the create can
     proceed. No-op when the table exists (its location is live, and the
-    caller's own DROP/overwrite handles it) or the directory is absent.
-    Names may be ``db.table``-qualified; the default database maps to
-    ``<warehouse>/<table>``, others to ``<warehouse>/<db>.db/<table>``."""
-    if spark.catalog.tableExists(table_name):
-        return
+    caller's own DROP/overwrite handles it), the database does not
+    exist, or the directory is absent.
+
+    An unqualified name resolves in the CURRENT database, exactly as
+    the create that follows will, and the directory deleted is the one
+    the catalog reports for that database (``locationUri``) — never a
+    path guessed from the warehouse root, which under a non-default
+    current database would be ``default.<table>``'s live data."""
+    from pyspark.errors import AnalysisException
+
     parts = table_name.split(".")
+    db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
+    name = parts[-1]
+    try:
+        if spark.catalog.tableExists(name, db):
+            return
+        db_uri = spark.catalog.getDatabase(db).locationUri
+    except AnalysisException:
+        return  # no such database: the create itself will refuse
     jvm = spark._jvm
-    base = jvm.org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    if len(parts) > 1 and parts[-2].lower() != "default":
-        base = jvm.org.apache.hadoop.fs.Path(base, parts[-2].lower() + ".db")
-    hpath = jvm.org.apache.hadoop.fs.Path(base, parts[-1].lower())
+    Path = jvm.org.apache.hadoop.fs.Path
+    hpath = Path(Path(db_uri), name.lower())
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     fs.delete(hpath, True)
 

@@ -339,8 +339,9 @@ def stream_keyed_upsert_ingest(
 
     Exactly-once: the append carries an ``idempotency_key`` derived
     from the Structured Streaming batch id, committed atomically with
-    the delta (the marker rides inside the staged dir through the
-    rename) — a replayed batch after a checkpoint crash is a no-op.
+    the delta (the marker lands in the seq dir before its
+    ``_COMMITTED`` marker) — a replayed batch after a checkpoint crash
+    is a no-op.
     ``compact_every=N``
     folds deltas into the base whenever ≥N are pending AFTER a batch,
     bounding the readers' merge tax in an always-on ingest; the

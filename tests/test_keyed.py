@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from hadoop_20_warehouse_fix_spark.sources.keyed import (
     BUCKET_COL,
+    _current_commit,
     compact_keyed_table,
     delete_from_keyed_table,
     read_keyed_meta,
@@ -21,40 +22,39 @@ from hadoop_20_warehouse_fix_spark.sources.keyed import (
 )
 
 
-def _bucket_files(path: str) -> dict[str, set[tuple[str, float, int]]]:
-    """bucket dir -> {(file, mtime, size)} — physical identity probe."""
-    out: dict[str, set] = {}
-    for d in os.listdir(path):
-        if not d.startswith(f"{BUCKET_COL}="):
-            continue
-        full = os.path.join(path, d)
-        out[d] = {
-            (f, os.path.getmtime(os.path.join(full, f)), os.path.getsize(os.path.join(full, f)))
-            for f in os.listdir(full)
+def _base_dirs(spark, path: str) -> dict[int, str]:
+    """bucket id -> its live ``_b<b>.v<n>`` dir, as the current commit
+    manifest resolves it (the only way a reader finds base data)."""
+    cm = _current_commit(spark, path) or {}
+    return {int(b): os.path.join(path, d) for b, d in (cm.get("buckets") or {}).items()}
+
+
+def _bucket_files(spark, path: str) -> dict[int, set[tuple[str, str, float, int]]]:
+    """bucket id -> {(dir, file, mtime, size)} — physical identity probe."""
+    return {
+        b: {
+            (d, f, os.path.getmtime(os.path.join(d, f)), os.path.getsize(os.path.join(d, f)))
+            for f in os.listdir(d)
             if not f.startswith((".", "_"))
         }
-    return out
+        for b, d in _base_dirs(spark, path).items()
+    }
 
 
 @pytest.fixture()
 def keyed(spark):
-    # PINNED to the rename protocol: this file is the rename-era pin
-    # set — kb=<b> partition dirs on disk, plain-parquet base interop,
-    # _old.kb swap physics. The default flipped to commit='marker' in
-    # round 14 (verdict #7); the marker twin pins live in
-    # test_keyed_marker.py / test_keyed_atomic.py / test_keyed_snapshot.py.
     tmp = tempfile.mkdtemp(prefix="keyed_")
     path = f"{tmp}/tab"
     base = spark.range(10_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
     )
-    write_keyed_table(base, path, ["k"], num_buckets=16, commit="rename")
+    write_keyed_table(base, path, ["k"], num_buckets=16)
     yield path
     shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_upsert_override_semantics_and_cow(spark, keyed):
-    before = _bucket_files(keyed)
+    before = _bucket_files(spark, keyed)
     updates = spark.range(100).select(
         (F.col("id") * 101).alias("k"),  # 0..9999 hits existing, >9999 inserts
         F.lit(-1).cast("long").alias("v"),
@@ -67,12 +67,12 @@ def test_upsert_override_semantics_and_cow(spark, keyed):
     }
     assert got == want
     # COW: every untouched bucket's files are physically identical
-    after = _bucket_files(keyed)
-    touched = {f"{BUCKET_COL}={b}" for b in diag["touched_buckets"]}
+    after = _bucket_files(spark, keyed)
+    touched = set(diag["touched_buckets"])
     assert 0 < len(touched) <= 16 and diag["batch_rows"] == 100
-    for d, files in before.items():
-        if d not in touched:
-            assert after[d] == files, f"untouched bucket {d} was rewritten"
+    for b, files in before.items():
+        if b not in touched:
+            assert after[b] == files, f"untouched bucket {b} was rewritten"
 
 
 def test_delete_and_new_bucket_insert(spark, keyed):
@@ -128,20 +128,23 @@ def test_composite_keys_and_meta(spark):
 
 
 def test_touched_read_prunes_directories(spark, keyed):
-    """Behavioral partition-pruning proof: a kb.isin filter only ever
-    opens files under the matching bucket dirs."""
+    """Behavioral directory-pruning proof: a bucket-restricted base
+    read only ever opens files under the matching buckets' dirs of the
+    current commit."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import _base_df
+
     few = [0, 3]
     files = {
         r.f
-        for r in spark.read.parquet(keyed)
-        .filter(F.col(BUCKET_COL).isin(few))
+        for r in _base_df(spark, keyed, read_keyed_meta(spark, keyed), buckets=few)
         .select(F.input_file_name().alias("f"))
         .distinct()
         .collect()
     }
     assert files
+    dirs = _base_dirs(spark, keyed)
     for f in files:
-        assert any(f"{BUCKET_COL}={b}/" in f for b in few), f
+        assert any(f"/{os.path.basename(dirs[b])}/" in f for b in few), f
 
 
 def _ups(spark, pairs):
@@ -149,19 +152,20 @@ def _ups(spark, pairs):
 
 
 def test_mor_upsert_is_append_only_and_resolves(spark, keyed):
-    before = _bucket_files(keyed)
+    before = _bucket_files(spark, keyed)
     d1 = upsert_keyed_table(spark, keyed, _ups(spark, [(5, -5, "m1"), (20_001, 1, "m1")]), mode="mor")
     d2 = upsert_keyed_table(spark, keyed, _ups(spark, [(5, -55, "m2")]), mode="mor")
     assert (d1["seq"], d2["seq"]) == (1, 2)
     # base files byte-identical: MOR writes never touch them
-    assert _bucket_files(keyed) == before
+    assert _bucket_files(spark, keyed) == before
     assert os.path.isdir(f"{keyed}/_delta/seq=1") and os.path.isdir(f"{keyed}/_delta/seq=2")
     tab = read_keyed_table(spark, keyed)
     assert tab.count() == 10_001  # one insert
     got = {(r.k, r.v, r.tag) for r in tab.filter(F.col("k").isin(5, 20_001, 7)).collect()}
     assert got == {(5, -55, "m2"), (20_001, 1, "m1"), (7, 14, "base")}  # latest seq wins
-    # a plain parquet read sees only the base — the documented contract
-    assert spark.read.parquet(keyed).count() == 10_000
+    # a plain parquet read of the base dirs sees only the base — the
+    # documented contract
+    assert spark.read.parquet(*_base_dirs(spark, keyed).values()).count() == 10_000
 
 
 def test_mor_delete_tombstone_then_compact_physical(spark, keyed):
@@ -173,20 +177,21 @@ def test_mor_delete_tombstone_then_compact_physical(spark, keyed):
     assert tab.count() == 9_998  # 3 (overridden then tombstoned) and 8 gone
     assert tab.filter(F.col("k").isin(3, 8)).count() == 0
     want_rows = {tuple(r) for r in tab.collect()}  # BEFORE compact drops the delta files
-    before = _bucket_files(keyed)
+    before = _bucket_files(spark, keyed)
     diag = compact_keyed_table(spark, keyed)
     assert diag["deltas_folded"] == 2 and diag["touched_buckets"]
     assert not os.path.exists(f"{keyed}/_delta")
     after_tab = read_keyed_table(spark, keyed)
     assert {tuple(r) for r in after_tab.collect()} == want_rows
     # tombstoned keys physically gone from the base scan
-    assert spark.read.parquet(keyed).filter(F.col("k").isin(3, 8)).count() == 0
+    base = spark.read.parquet(*_base_dirs(spark, keyed).values())
+    assert base.filter(F.col("k").isin(3, 8)).count() == 0
     # compaction itself is COW: untouched buckets keep their files
-    after = _bucket_files(keyed)
-    touched = {f"{BUCKET_COL}={b}" for b in diag["touched_buckets"]}
-    for d, files in before.items():
-        if d not in touched:
-            assert after[d] == files, f"untouched bucket {d} rewritten by compact"
+    after = _bucket_files(spark, keyed)
+    touched = set(diag["touched_buckets"])
+    for b, files in before.items():
+        if b not in touched:
+            assert after[b] == files, f"untouched bucket {b} rewritten by compact"
     # idempotence of the fold: a second compact is a no-op
     assert compact_keyed_table(spark, keyed) == {"touched_buckets": [], "deltas_folded": 0}
 
@@ -321,7 +326,7 @@ def test_cdc_compact_manifest_pruned_read_composition(spark, tmp_path):
     assert not os.path.exists(f"{path}/_delta")  # compacted in-stream
 
     diag = refresh_file_stats_manifest(spark, path)
-    # only the one swapped bucket dir (kb=3) changed files
+    # only bucket 3's dir was republished, so few files changed
     assert diag["removed"] >= 1 and diag["added"] >= 1 and diag["added"] <= 4
 
     got = read_pruned(spark, path, {"k": (34_990, 35_010)})
@@ -384,36 +389,6 @@ def test_mor_idempotency_key_replay(spark, keyed):
     d4 = upsert_keyed_table(spark, keyed, ups, mode="mor", idempotency_key="batch-7")
     assert "replayed" not in d4
     assert read_keyed_table(spark, keyed).filter("k = 10").first().v == -10
-
-
-def test_swap_crash_recovery_never_loses_a_bucket(spark, keyed):
-    """Round-11 review (most severe): a crash between rename-aside and
-    swap-in leaves _old.kb.<b> as the bucket's ONLY copy; both the
-    explicit recovery sweep and the next write must RESTORE it, never
-    delete it as leftover."""
-    from hadoop_20_warehouse_fix_spark.sources.keyed import recover_keyed_table
-
-    want = {tuple(r) for r in read_keyed_table(spark, keyed).collect()}
-    # simulate the crash window: live dir renamed aside, swap-in never
-    # happened (pick any populated bucket)
-    b = next(int(d.split("=")[1]) for d in os.listdir(keyed) if d.startswith("kb="))
-    os.rename(f"{keyed}/kb={b}", f"{keyed}/_old.kb.{b}")
-    assert spark.read.parquet(keyed).count() < 10_000  # reads silently miss it
-    diag = recover_keyed_table(spark, keyed)
-    assert diag["restored"] == [b] and diag["dropped"] == []
-    assert {tuple(r) for r in read_keyed_table(spark, keyed).collect()} == want
-    # and the in-write recovery path: crash again, then upsert INTO the
-    # crashed bucket — _swap_buckets must restore before swapping
-    os.rename(f"{keyed}/kb={b}", f"{keyed}/_old.kb.{b}")
-    victim_key = spark.read.parquet(f"{keyed}/_old.kb.{b}").first().k
-    ups = _ups(spark, [(int(victim_key), -77, "fixed")])
-    upsert_keyed_table(spark, keyed, ups)
-    got = {tuple(r) for r in read_keyed_table(spark, keyed).collect()}
-    assert (victim_key, -77, "fixed") in got and len(got) == 10_000
-    # a superseded leftover (live present) is dropped, not restored
-    os.makedirs(f"{keyed}/_old.kb.{b}")
-    diag = recover_keyed_table(spark, keyed)
-    assert diag["dropped"] == [b] and not os.path.exists(f"{keyed}/_old.kb.{b}")
 
 
 def test_delete_everything_keeps_table_readable(spark):
@@ -493,13 +468,13 @@ def test_sort_cols_preserved_through_cow_and_compact(spark, tmp_path):
     write_keyed_table(df, path, ["k"], num_buckets=4, sort_cols=["ts"])
 
     def assert_sorted_files():
-        for d in os.listdir(path):
-            if not d.startswith(f"{BUCKET_COL}="):
-                continue
-            for f in os.listdir(os.path.join(path, d)):
+        dirs = _base_dirs(spark, path)
+        assert dirs
+        for d in dirs.values():
+            for f in os.listdir(d):
                 if not f.endswith(".parquet"):
                     continue
-                ts = pq.read_table(os.path.join(path, d, f), columns=["ts"])["ts"].to_pylist()
+                ts = pq.read_table(os.path.join(d, f), columns=["ts"])["ts"].to_pylist()
                 assert ts == sorted(ts), f"{d}/{f} not ts-sorted"
 
     assert_sorted_files()
@@ -554,16 +529,15 @@ def test_lookup_keys_prunes_directories_range_layout(spark, tmp_path):
     df = spark.range(-5_000, 45_000).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("v")
     )
-    # rename protocol: the kb=<b> path assertion below is its layout
-    write_keyed_table(
-        df, path, ["k"], layout="range", range_step=10_000, commit="rename"
-    )
+    write_keyed_table(df, path, ["k"], layout="range", range_step=10_000)
     out = lookup_keys(spark, path, [-4_999, 12_345])
     assert {(r.k, r.v) for r in out.collect()} == {(-4_999, -14_997), (12_345, 37_035)}
     files = {
         r.f for r in out.select(F.input_file_name().alias("f")).distinct().collect()
     }
-    assert files and all("/kb=0/" in f or "/kb=1/" in f for f in files), files
+    dirs = _base_dirs(spark, path)
+    want = {f"/{os.path.basename(dirs[b])}/" for b in (0, 1)}
+    assert files and all(any(w in f for w in want) for f in files), files
     # composite-key literal form on a hash layout
     path2 = str(tmp_path / "tab2")
     df2 = spark.range(1_000).select(
@@ -680,24 +654,6 @@ def test_hash_layout_refuses_nonpositive_buckets(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_mor_append_recovers_crashed_cow_swap_first(spark, keyed):
-    # Round-11 ADVICE #2: a bucket stranded at _old.kb.<b> by a crashed
-    # COW swap must be restored by the NEXT writer, whichever kind. A
-    # MOR append that skipped the sweep would leave base∪delta reads
-    # silently missing the bucket until a COW batch or compaction ran.
-    some = os.path.join(keyed, f"{BUCKET_COL}=3")
-    stranded = os.path.join(keyed, f"_old.{BUCKET_COL}.3")
-    os.rename(some, stranded)  # simulate the crash window
-    # round 13: READERS now fall back to the stranded aside (snapshot
-    # probe in _base_df) — the crash window no longer loses rows even
-    # before a writer sweeps
-    assert read_keyed_table(spark, keyed).count() == 10_000
-    batch = spark.createDataFrame([(20_001, 42, "new")], "k long, v long, tag string")
-    upsert_keyed_table(spark, keyed, batch, mode="mor")
-    assert not os.path.exists(stranded)  # the WRITER still sweeps it
-    assert read_keyed_table(spark, keyed).count() == 10_001
-
-
 def test_registered_storage_queries_plan_shapes(spark):
     """The round-12 registered storage queries keep the storage layer's
     plan discipline at the registered scale: the MOR-resolved read
@@ -765,9 +721,9 @@ def test_writer_lease_refuses_second_writer_and_recovers_stale(spark, keyed):
 
 
 def test_initial_load_keeps_root_and_replaces_state(spark, keyed):
-    """Round-12: the initial load writes via _staging + rename-in, so a
-    re-load of an existing table replaces buckets/deltas/meta without
-    deleting the root dir (where the writer lease lives)."""
+    """Round-12: the initial load writes via _staging + a manifest
+    publish, so a re-load of an existing table replaces buckets/deltas/
+    meta without deleting the root dir (where the writer lease lives)."""
     batch = spark.createDataFrame([(7, 0, "d")], "k long, v long, tag string")
     upsert_keyed_table(spark, keyed, batch, mode="mor")  # pending delta
     fresh = spark.range(100).select(
@@ -896,24 +852,6 @@ def test_read_keyed_changes_feed(spark, keyed):
         read_keyed_changes(spark, keyed, since_seq=1)
 
 
-def test_legacy_unmarked_delta_dirs_stay_visible(spark, keyed):
-    """Round-12 review: pre-round-12 rename-protocol tables carry no
-    _COMMITTED markers (the rename WAS the commit) — their pending
-    deltas must stay visible, and the next append must take a fresh
-    seq instead of renaming onto the legacy dir."""
-    from hadoop_20_warehouse_fix_spark.sources.keyed import _COMMITTED_MARK
-
-    upsert_keyed_table(spark, keyed, _ups(spark, [(1, -1, "legacy")]), mode="mor")
-    marker = os.path.join(keyed, "_delta", "seq=1", _COMMITTED_MARK)
-    os.remove(marker)  # simulate the old on-disk format
-    assert read_keyed_table(spark, keyed).filter("k = 1").first().v == -1
-    out = upsert_keyed_table(spark, keyed, _ups(spark, [(2, -2, "new")]), mode="mor")
-    assert out["seq"] == 2, "legacy dir counted; its seq not reused"
-    got = read_keyed_table(spark, keyed)
-    assert got.filter("k = 1").first().v == -1 and got.filter("k = 2").first().v == -2
-    assert compact_keyed_table(spark, keyed)["deltas_folded"] == 2
-
-
 def test_change_feed_empty_window_column_order(spark, tmp_path):
     """The empty-window frame must match the non-empty frame's column
     order (round-12 review: a positional union across feed polls would
@@ -951,10 +889,10 @@ def test_cow_refuses_null_bucket_rows_even_assume_unique(spark, tmp_path):
     assert read_keyed_table(spark, path).count() == 100
 
 
-def test_rename_reload_keeps_hwm_and_feed_contract(spark, keyed):
-    """A rename-protocol re-load keeps seq numbering monotonic (hwm
-    survives, delta_floor retires the old generation's pending deltas)
-    so change-feed checkpoints from before the re-load raise toward
+def test_reload_keeps_hwm_and_feed_contract(spark, keyed):
+    """A re-load keeps seq numbering monotonic (hwm survives,
+    delta_floor retires the old generation's pending deltas) so
+    change-feed checkpoints from before the re-load raise toward
     re-sync instead of aliasing."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import read_keyed_changes
 

@@ -35,14 +35,14 @@ from pyspark.sql import functions as F
 import hadoop_20_warehouse_fix_spark.sources.keyed as K
 
 
-def _mk(spark, commit="marker", rows=200, buckets=4, **kw):
-    tmp = tempfile.mkdtemp(prefix=f"keyed_atomic_{commit}_")
+def _mk(spark, rows=200, buckets=4, **kw):
+    tmp = tempfile.mkdtemp(prefix="keyed_atomic_")
     path = f"{tmp}/tab"
     base = spark.range(rows).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
         F.lit("base").alias("tag"),
     )
-    K.write_keyed_table(base, path, ["k"], num_buckets=buckets, commit=commit, **kw)
+    K.write_keyed_table(base, path, ["k"], num_buckets=buckets, **kw)
     return path
 
 
@@ -139,7 +139,7 @@ def test_heartbeat_keeps_long_writer_alive(spark):
             F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
             F.lit("b").alias("tag"),
         )
-        K.write_keyed_table(base, path, ["k"], num_buckets=2, commit="marker")
+        K.write_keyed_table(base, path, ["k"], num_buckets=2)
         with K._writer_lease(spark, path, ttl_sec=1.5) as lease:
             time.sleep(4.0)  # well past the TTL — heartbeat must renew
             # still owned: the fence passes and a contender is refused
@@ -264,11 +264,10 @@ def test_time_travel_of_rollback_skipped_commit_survives_next_write(spark):
         _cleanup(path)
 
 
-def test_history_lists_rollback_and_refuses_rename(spark):
+def test_history_lists_rollback(spark):
     """keyed_table_history (round 14): each publish is one row; a
     rollback is itself a commit (forward-moving history) with
-    pending_deltas=0; the highest commit is current; rename tables
-    refuse (no history by protocol)."""
+    pending_deltas=0; the highest commit is current."""
     path = _mk(spark, rows=50, buckets=2, gc_generations=8)
     try:
         K.upsert_keyed_table(
@@ -287,10 +286,3 @@ def test_history_lists_rollback_and_refuses_rename(spark):
         ).first().v == -1
     finally:
         _cleanup(path)
-
-    rn = _mk(spark, commit="rename", rows=10, buckets=2)
-    try:
-        with pytest.raises(ValueError, match="keep no history"):
-            K.keyed_table_history(spark, rn)
-    finally:
-        _cleanup(rn)

@@ -25,15 +25,14 @@ from pyspark.sql import functions as F
 import hadoop_20_warehouse_fix_spark.sources.keyed as K
 
 
-def _mk(spark, commit=None, rows=300, buckets=4):
+def _mk(spark, rows=300, buckets=4):
     tmp = tempfile.mkdtemp(prefix="keyed_drop_")
     path = f"{tmp}/tab"
     base = spark.range(rows).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
         F.lit("base").alias("tag"),
     )
-    kw = {} if commit is None else {"commit": commit}
-    K.write_keyed_table(base, path, ["k"], num_buckets=buckets, **kw)
+    K.write_keyed_table(base, path, ["k"], num_buckets=buckets)
     return path
 
 
@@ -54,9 +53,8 @@ def _base_parquets(path):
     return sorted(out)
 
 
-@pytest.mark.parametrize("commit", ["rename", "marker"])
-def test_drop_is_metadata_only_and_batches_slim_down(spark, commit):
-    path = _mk(spark, commit)
+def test_drop_is_metadata_only_and_batches_slim_down(spark):
+    path = _mk(spark)
     try:
         before = _base_parquets(path)
         out = K.drop_keyed_columns(spark, path, ["tag"])
@@ -99,7 +97,7 @@ def test_drop_refusals(spark):
 
 
 def test_readd_guard_until_purged(spark):
-    path = _mk(spark)  # marker default
+    path = _mk(spark)
     try:
         K.drop_keyed_columns(spark, path, ["tag"])
         # re-adding the name (even same-typed) refuses while old bytes remain

@@ -30,28 +30,28 @@ from hadoop_20_warehouse_fix_spark.sources.keyed import (
 )
 
 
-def _table(spark, commit: str) -> str:
-    tmp = tempfile.mkdtemp(prefix=f"keyed_dt_{commit}_")
+def _table(spark) -> str:
+    tmp = tempfile.mkdtemp(prefix="keyed_dt_")
     path = f"{tmp}/tab"
     base = spark.range(1_000).select(
         F.col("id").alias("k"),
         (F.col("id") * 2).alias("v"),  # v: bigint
         F.lit("base").alias("tag"),
     )
-    write_keyed_table(base, path, ["k"], num_buckets=4, commit=commit)
+    write_keyed_table(base, path, ["k"], num_buckets=4)
     return path
 
 
-def _int_table(spark, commit: str) -> str:
+def _int_table(spark) -> str:
     """Table whose k and v are 32-bit ints."""
-    tmp = tempfile.mkdtemp(prefix=f"keyed_dt_int_{commit}_")
+    tmp = tempfile.mkdtemp(prefix="keyed_dt_int_")
     path = f"{tmp}/tab"
     base = spark.range(1_000).select(
         F.col("id").cast("int").alias("k"),
         (F.col("id") * 2).cast("int").alias("v"),
         F.lit("base").alias("tag"),
     )
-    write_keyed_table(base, path, ["k"], num_buckets=4, commit=commit)
+    write_keyed_table(base, path, ["k"], num_buckets=4)
     return path
 
 
@@ -59,12 +59,11 @@ def _cleanup(path: str) -> None:
     shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
 
 
-@pytest.mark.parametrize("commit", ["rename", "marker"])
 @pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_int_batch_on_long_table_coerces(spark, commit, mode):
+def test_int_batch_on_long_table_coerces(spark, mode):
     """Lossless widening (int→long): the upsert succeeds, the stored
     value is correct, and EVERY explicit-schema read path survives."""
-    path = _table(spark, commit)
+    path = _table(spark)
     try:
         batch = spark.createDataFrame(
             [(5, 555, "n"), (2_000, 7, "ins")], "k int, v int, tag string"
@@ -81,10 +80,9 @@ def test_int_batch_on_long_table_coerces(spark, commit, mode):
         _cleanup(path)
 
 
-@pytest.mark.parametrize("commit", ["rename", "marker"])
 @pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_long_batch_on_int_table_in_range_coerces(spark, commit, mode):
-    path = _int_table(spark, commit)
+def test_long_batch_on_int_table_in_range_coerces(spark, mode):
+    path = _int_table(spark)
     try:
         batch = spark.createDataFrame(
             [(5, 555, "n")], "k long, v long, tag string"
@@ -97,14 +95,11 @@ def test_long_batch_on_int_table_in_range_coerces(spark, commit, mode):
         _cleanup(path)
 
 
-@pytest.mark.parametrize("commit", ["rename", "marker"])
 @pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_long_batch_out_of_range_refuses_and_table_stays_readable(
-    spark, commit, mode
-):
+def test_long_batch_out_of_range_refuses_and_table_stays_readable(spark, mode):
     """The verdict's pin: a lossy batch REFUSES loudly (per-column
     counts in the message) and a crashed-read table is never produced."""
-    path = _int_table(spark, commit)
+    path = _int_table(spark)
     try:
         batch = spark.createDataFrame(
             [(5, 2**40, "boom"), (6, 7, "ok")], "k long, v long, tag string"
@@ -123,7 +118,7 @@ def test_long_batch_out_of_range_refuses_and_table_stays_readable(
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])
 def test_double_with_fraction_refuses_whole_batch(spark, mode):
-    path = _table(spark, "rename")
+    path = _table(spark)
     try:
         batch = spark.createDataFrame(
             [(5, 5.0, "ok"), (6, 6.5, "frac")], "k long, v double, tag string"
@@ -144,7 +139,7 @@ def test_double_with_fraction_refuses_whole_batch(spark, mode):
 def test_string_batch_coerces_by_value_not_format(spark):
     """'007' onto a bigint column is VALUE-losslessly 7 (the
     _lossy_cast_count discipline from operators/dedup.py); 'x7' refuses."""
-    path = _table(spark, "rename")
+    path = _table(spark)
     try:
         ok = spark.createDataFrame(
             [("007", 70, "pad")], "k string, v long, tag string"
@@ -165,7 +160,7 @@ def test_delete_batch_keys_coerced(spark, mode):
     """Delete batches carry only keys — those get the same contract: a
     mismatched-but-lossless key type deletes the right row; a lossy one
     refuses instead of tombstoning the wrong row / crashing readers."""
-    path = _table(spark, "rename")
+    path = _table(spark)
     try:
         keys = spark.createDataFrame([(7,)], "k int")  # int keys, long table
         delete_from_keyed_table(spark, path, keys, mode=mode)
@@ -182,7 +177,7 @@ def test_delete_batch_keys_coerced(spark, mode):
 
 def test_apply_changes_coerces_and_refuses(spark):
     """The CDC mixed-batch path shares the contract."""
-    path = _int_table(spark, "rename")
+    path = _int_table(spark)
     try:
         ch = spark.createDataFrame(
             [(5, 555, "u", "upsert"), (6, 0, "", "delete")],
@@ -208,7 +203,7 @@ def test_reload_then_retyped_upsert_round12_repro(spark):
     """The exact judge repro: re-load writes a gen-2 schema with v:int
     (F.lit(0)), then a v:long batch upserts — formerly wrote an INT64
     delta the explicit-schema readers crashed on; now coerces."""
-    path = _table(spark, "rename")
+    path = _table(spark)
     try:
         upsert_keyed_table(
             spark, path,

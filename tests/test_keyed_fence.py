@@ -3,7 +3,7 @@
 A writer that legitimately outlives ``lock_ttl_sec`` (large COW
 backfill, slow compaction) has its lease broken and re-issued to a
 successor. Before this round the zombie's in-flight commit
-(``_swap_buckets`` / ``_marker_publish`` / delta rename) proceeded
+(``_marker_publish`` / delta ``_COMMITTED`` marker) proceeded
 anyway — exactly the interleaved-write corruption the lock exists to
 prevent. Now every commit point re-verifies the lock token immediately
 before mutating shared state and aborts loudly on mismatch.
@@ -25,16 +25,12 @@ import hadoop_20_warehouse_fix_spark.sources.keyed as K
 
 @pytest.fixture()
 def table(spark):
-    # rename protocol: these pins assert rename-era commit points (the
-    # delta-dir rename IS the commit, so an aborted batch leaves NO seq
-    # dir). Marker fencing — where the _COMMITTED/manifest PUT commits
-    # — is pinned separately below.
     tmp = tempfile.mkdtemp(prefix="keyed_fence_")
     path = f"{tmp}/tab"
     base = spark.range(1_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
     )
-    K.write_keyed_table(base, path, ["k"], num_buckets=4, commit="rename")
+    K.write_keyed_table(base, path, ["k"], num_buckets=4)
     yield path
     shutil.rmtree(tmp, ignore_errors=True)
 
@@ -51,49 +47,6 @@ def _usurp(path: str) -> None:
         )
 
 
-def test_mor_commit_aborts_when_lease_lost(spark, table, monkeypatch):
-    """The delta commit fences: lease usurped mid-job → abort BEFORE
-    the _COMMITTED/rename, no delta lands, feed stays empty."""
-    real = K._read_seq_hwm
-
-    def usurp_then(spark_, path_):
-        _usurp(table)
-        return real(spark_, path_)
-
-    monkeypatch.setattr(K, "_read_seq_hwm", usurp_then)
-    batch = spark.createDataFrame([(1, -9, "z")], "k long, v long, tag string")
-    with pytest.raises(K.KeyedTableLockedError, match="lease lost before commit"):
-        K.upsert_keyed_table(spark, table, batch, mode="mor")
-    monkeypatch.undo()
-    os.remove(os.path.join(table, K._WRITER_LOCK))  # clear the usurper
-    assert not os.path.exists(os.path.join(table, K._DELTA_DIR, "seq=1")), \
-        "zombie's delta must not commit"
-    tab = K.read_keyed_table(spark, table)
-    assert tab.filter(F.col("k") == 1).first().v == 2, "old value intact"
-    assert K.read_keyed_changes(spark, table).count() == 0
-
-
-def test_cow_swap_aborts_when_lease_lost(spark, table, monkeypatch):
-    """The bucket swap fences at entry: the staged merge never swaps in
-    and every bucket keeps its pre-batch contents."""
-    real = K._write_layout
-
-    def usurp_then(df, dest, n_parts, meta):
-        out = real(df, dest, n_parts, meta)
-        _usurp(table)
-        return out
-
-    monkeypatch.setattr(K, "_write_layout", usurp_then)
-    batch = spark.createDataFrame([(1, -9, "z")], "k long, v long, tag string")
-    with pytest.raises(K.KeyedTableLockedError, match="lease lost before commit"):
-        K.upsert_keyed_table(spark, table, batch, mode="cow")
-    monkeypatch.undo()
-    os.remove(os.path.join(table, K._WRITER_LOCK))
-    tab = K.read_keyed_table(spark, table)
-    assert tab.count() == 1_000
-    assert tab.filter(F.col("k") == 1).first().v == 2
-
-
 def test_fence_noop_without_registered_lease(spark, table):
     """A process that never took the lease (fresh path, recovery
     helpers) is not fenced — and a NORMAL write still succeeds and
@@ -106,15 +59,16 @@ def test_fence_noop_without_registered_lease(spark, table):
 
 
 def test_marker_publish_fences_manifest_put(spark, monkeypatch):
-    """Marker protocol: the manifest PUT is the commit — a usurped
-    lease aborts before it, so readers keep resolving the old commit."""
+    """The manifest PUT is the commit — a usurped lease aborts before
+    it, so readers keep resolving the old commit and every bucket keeps
+    its pre-batch contents."""
     tmp = tempfile.mkdtemp(prefix="keyed_fence_mk_")
     path = f"{tmp}/tab"
     try:
         base = spark.range(100).select(
             F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("m").alias("tag")
         )
-        K.write_keyed_table(base, path, ["k"], num_buckets=2, commit="marker")
+        K.write_keyed_table(base, path, ["k"], num_buckets=2)
         cm_before = K._current_commit(spark, path)
 
         real = K._write_layout
@@ -131,16 +85,18 @@ def test_marker_publish_fences_manifest_put(spark, monkeypatch):
         monkeypatch.undo()
         os.remove(os.path.join(path, K._WRITER_LOCK))
         assert K._current_commit(spark, path)["n"] == cm_before["n"]
-        assert K.read_keyed_table(spark, path).filter(F.col("k") == 1).first().v == 0
+        tab = K.read_keyed_table(spark, path)
+        assert tab.count() == 100
+        assert tab.filter(F.col("k") == 1).first().v == 0
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_marker_mor_commit_fences_before_committed_mark(spark, monkeypatch):
-    """Marker protocol (the round-14 default): the MOR commit point is
-    the _COMMITTED marker write. A usurped lease aborts before it — the
-    staged seq dir may remain on disk but carries no marker, readers
-    and the change feed ignore it, and the recovery sweep GCs it."""
+    """The MOR commit point is the _COMMITTED marker write. A usurped
+    lease aborts before it — the staged seq dir may remain on disk but
+    carries no marker, so no delta lands: readers and the change feed
+    ignore it, and the recovery sweep GCs it."""
     tmp = tempfile.mkdtemp(prefix="keyed_fence_mm_")
     path = f"{tmp}/tab"
     try:
@@ -148,8 +104,7 @@ def test_marker_mor_commit_fences_before_committed_mark(spark, monkeypatch):
             F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
             F.lit("base").alias("tag"),
         )
-        K.write_keyed_table(base, path, ["k"], num_buckets=4)  # marker default
-        assert K.read_keyed_meta(spark, path)["commit"] == "marker"
+        K.write_keyed_table(base, path, ["k"], num_buckets=4)
         real = K._read_seq_hwm
 
         def usurp_then(spark_, path_):

@@ -1,5 +1,6 @@
-"""Marker-commit keyed tables (round 12, brief #6): the object-store
-protocol — no rename on any committed path. Readers resolve bucket data
+"""Keyed-table commit protocol (round 12, brief #6; the only protocol
+since the per-bucket rename protocol was retired) — no rename on any
+committed path. Readers resolve bucket data
 through the highest ``_commits/commit-<n>.json`` manifest and count a
 delta seq dir only once its ``_COMMITTED`` marker exists, so the crash
 matrix is: kill BEFORE the manifest/marker PUT → old state, garbage
@@ -38,7 +39,7 @@ def marker(spark):
     base = spark.range(2_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
     )
-    write_keyed_table(base, path, ["k"], num_buckets=8, commit="marker")
+    write_keyed_table(base, path, ["k"], num_buckets=8)
     yield path
     shutil.rmtree(tmp, ignore_errors=True)
 
@@ -47,53 +48,36 @@ def _ups(spark, rows):
     return spark.createDataFrame(rows, "k long, v long, tag string")
 
 
-def test_scheme_guard():
-    for scheme in ("s3a", "s3", "gs", "abfss", "oss"):
-        with pytest.raises(ValueError, match="atomic directory rename"):
-            K._check_commit_scheme(scheme, "rename")
-        K._check_commit_scheme(scheme, "marker")  # allowed
-    for scheme in ("hdfs", "file", None, "viewfs"):
-        K._check_commit_scheme(scheme, "rename")
-
-
-def test_marker_lifecycle_matches_rename_twin(spark, marker):
-    """The full lifecycle produces identical answers on a rename twin:
-    COW upsert, MOR upsert + tombstone, resolved read, compaction,
-    point lookup. The marker table keeps NO kb= dirs at the root (all
-    data in hidden versioned dirs + manifest)."""
-    tmp = tempfile.mkdtemp(prefix="keyed_twin_")
-    try:
-        twin = f"{tmp}/tab"
-        base = spark.range(2_000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
-        )
-        write_keyed_table(base, twin, ["k"], num_buckets=8)  # rename twin
-        for path in (marker, twin):
-            upsert_keyed_table(
-                spark, path, _ups(spark, [(3, 33, "cow"), (4_000, 1, "ins")]), mode="cow"
-            )
-            upsert_keyed_table(spark, path, _ups(spark, [(5, 55, "mor")]), mode="mor")
-            delete_from_keyed_table(
-                spark, path, spark.createDataFrame([(7,)], "k long"), mode="mor"
-            )
-        got_m, got_r = read_keyed_table(spark, marker), read_keyed_table(spark, twin)
-        assert _rows(got_m) == _rows(got_r)
-        assert got_m.count() == 2_000  # +1 insert -1 delete
-        for path in (marker, twin):
-            out = compact_keyed_table(spark, path)
-            assert out["deltas_folded"] == 2
-        assert _rows(read_keyed_table(spark, marker)) == _rows(read_keyed_table(spark, twin))
-        look_m = lookup_keys(spark, marker, [3, 5, 7, 4_000, 999_999])
-        look_r = lookup_keys(spark, twin, [3, 5, 7, 4_000, 999_999])
-        assert _rows(look_m) == _rows(look_r)
-        assert look_m.count() == 3  # 7 deleted, 999999 absent
-        # layout: nothing at the marker root resolves by dir presence
-        names = set(os.listdir(marker))
-        assert not any(n.startswith("kb=") for n in names)
-        assert "_commits" in names
-        assert any(n.startswith("_b") and ".v" in n for n in names)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+def test_marker_lifecycle_matches_python_fold(spark, marker):
+    """The full lifecycle — COW upsert, MOR upsert + tombstone,
+    resolved read, compaction, point lookup — answers exactly what a
+    plain dict fold of the same operations does. The table keeps NO
+    kb= dirs at the root (all data in hidden versioned dirs +
+    manifest)."""
+    want = {k: (2 * k, "base") for k in range(2_000)}
+    upsert_keyed_table(
+        spark, marker, _ups(spark, [(3, 33, "cow"), (4_000, 1, "ins")]), mode="cow"
+    )
+    want.update({3: (33, "cow"), 4_000: (1, "ins")})
+    upsert_keyed_table(spark, marker, _ups(spark, [(5, 55, "mor")]), mode="mor")
+    want[5] = (55, "mor")
+    delete_from_keyed_table(
+        spark, marker, spark.createDataFrame([(7,)], "k long"), mode="mor"
+    )
+    del want[7]
+    rows = {(k, v, tag) for k, (v, tag) in want.items()}
+    assert _rows(read_keyed_table(spark, marker)) == rows
+    assert len(rows) == 2_000  # +1 insert -1 delete
+    assert compact_keyed_table(spark, marker)["deltas_folded"] == 2
+    assert _rows(read_keyed_table(spark, marker)) == rows
+    look = lookup_keys(spark, marker, [3, 5, 7, 4_000, 999_999])
+    assert _rows(look) == {r for r in rows if r[0] in (3, 5, 7, 4_000, 999_999)}
+    assert look.count() == 3  # 7 deleted, 999999 absent
+    # layout: nothing at the root resolves by dir presence
+    names = set(os.listdir(marker))
+    assert not any(n.startswith("kb=") for n in names)
+    assert "_commits" in names
+    assert any(n.startswith("_b") and ".v" in n for n in names)
 
 
 def test_marker_mor_crash_matrix(spark, marker):
@@ -186,7 +170,7 @@ def test_marker_reload_replaces_table(spark, marker):
     the new load touches fewer buckets."""
     upsert_keyed_table(spark, marker, _ups(spark, [(1, -1, "m")]), mode="mor")
     fresh = spark.range(10).select(F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("n").alias("tag"))
-    write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+    write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     got = read_keyed_table(spark, marker)
     assert got.count() == 10
     assert not os.path.exists(f"{marker}/_delta")
@@ -288,7 +272,7 @@ def test_marker_reload_meta_flips_atomically(spark, marker, monkeypatch):
 
     monkeypatch.setattr(K, "_write_meta", boom)
     with pytest.raises(RuntimeError, match="root-meta"):
-        write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+        write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     monkeypatch.setattr(K, "_write_meta", real)
     meta = K.read_keyed_meta(spark, marker)
     assert meta["num_buckets"] == 2, "embedded meta wins over the stale root cache"
@@ -298,14 +282,56 @@ def test_marker_reload_meta_flips_atomically(spark, marker, monkeypatch):
     assert {r.k for r in found.collect()} == {7, 49}  # old keys gone
 
 
-def test_commit_protocol_change_refused(spark, marker):
-    df = spark.range(5).select(F.col("id").alias("k"), F.lit(0).alias("v"))
-    with pytest.raises(ValueError, match="cannot change commit protocol"):
-        # EXPLICIT rename over marker refuses; a default-parameter
-        # re-load INHERITS the table's protocol instead (round 14)
-        write_keyed_table(df, marker, ["k"], num_buckets=2, commit="rename")
-    write_keyed_table(df, marker, ["k"], num_buckets=2)  # inherits marker
-    assert K.read_keyed_meta(spark, marker)["commit"] == "marker"
+@pytest.mark.parametrize("legacy", [None, "rename"])
+def test_legacy_rename_table_refused_untouched(spark, tmp_path, legacy):
+    """A table in the retired rename protocol's on-disk form (plain
+    kb=<b> partition dirs, meta without a commit tag or tagged
+    "rename") is refused at read_keyed_meta with a message naming the
+    protocol and the conversion — by reads, upserts and compactions
+    alike — and nothing on disk changes."""
+    path = str(tmp_path / "legacy")
+    df = spark.range(200).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("old").alias("tag")
+    )
+    df.withColumn(K.BUCKET_COL, F.pmod(F.xxhash64("k"), F.lit(4)).cast("int")).write.partitionBy(
+        K.BUCKET_COL
+    ).parquet(path)
+    meta = {
+        "key_cols": ["k"], "num_buckets": 4, "data_cols": df.columns,
+        "schema_json": df.schema.json(), "layout": "hash", "range_step": None,
+        "sort_cols": [],
+    }
+    if legacy is not None:
+        meta["commit"] = legacy
+    with open(os.path.join(path, K._META), "w") as f:
+        json.dump(meta, f)
+
+    def snapshot():
+        out = {}
+        for root, _dirs, files in os.walk(path):
+            for name in files:
+                if name.endswith(".parquet") or name == K._META:
+                    full = os.path.join(root, name)
+                    with open(full, "rb") as f:
+                        out[full] = f.read()
+        return out
+
+    before = snapshot()
+    assert sum(p.endswith(".parquet") for p in before) >= 4
+    refusal = "retired per-bucket rename commit protocol.*write_keyed_table into a new path"
+    with pytest.raises(ValueError, match=refusal):
+        read_keyed_table(spark, path)
+    for mode in ("cow", "mor"):
+        with pytest.raises(ValueError, match=refusal):
+            upsert_keyed_table(spark, path, _ups(spark, [(1, -1, "x")]), mode=mode)
+    with pytest.raises(ValueError, match=refusal):
+        compact_keyed_table(spark, path)
+    assert snapshot() == before
+    # no lease, staging, delta or commit dir left behind either
+    assert not [
+        n for n in os.listdir(path)
+        if n.startswith(("_writer", "_staging", "_delta", "_commits", "_b"))
+    ]
 
 
 def test_reload_retires_old_deltas_atomically(spark, marker, monkeypatch):
@@ -327,11 +353,11 @@ def test_reload_retires_old_deltas_atomically(spark, marker, monkeypatch):
 
     monkeypatch.setattr(K, "_write_commit", boom)
     with pytest.raises(RuntimeError):
-        write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+        write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     # old generation intact INCLUDING its pending delta
     assert read_keyed_table(spark, marker).filter("k = 1").first().v == -1
     monkeypatch.setattr(K, "_write_commit", real)
-    write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+    write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     got = read_keyed_table(spark, marker)
     assert got.count() == 10 and got.filter("k = 1").first().v == 0, \
         "old delta retired by the flip, not resurrected over the new table"
@@ -357,7 +383,7 @@ def test_reader_meta_and_buckets_from_one_commit(spark, marker):
     fresh = spark.range(7).select(
         F.col("id").alias("k"), F.lit(9).alias("v"), F.lit("g2").alias("tag")
     )
-    write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+    write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     old_view = K._base_df(spark, marker, meta)
     assert old_view.count() == 2_000, "snapshot reads stay on their generation"
     assert K.read_keyed_table(spark, marker).count() == 7

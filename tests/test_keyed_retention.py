@@ -23,14 +23,14 @@ from pyspark.sql import functions as F
 import hadoop_20_warehouse_fix_spark.sources.keyed as K
 
 
-def _mk(spark, commit: str = "rename") -> str:
-    tmp = tempfile.mkdtemp(prefix=f"keyed_ret_{commit}_")
+def _mk(spark) -> str:
+    tmp = tempfile.mkdtemp(prefix="keyed_ret_")
     path = f"{tmp}/tab"
     base = spark.range(100).select(
         F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
         F.lit("base").alias("tag"),
     )
-    K.write_keyed_table(base, path, ["k"], num_buckets=2, commit=commit)
+    K.write_keyed_table(base, path, ["k"], num_buckets=2)
     return path
 
 
@@ -42,12 +42,11 @@ def _cleanup(path):
     shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
 
 
-@pytest.mark.parametrize("commit", ["rename", "marker"])
-def test_slow_consumer_drains_archived_batches(spark, commit):
+def test_slow_consumer_drains_archived_batches(spark):
     """The verdict's done-gate: a consumer checkpointed BEFORE the last
     compaction still drains exactly the missed batches — folded and
     pending alike — with correct ops and seqs."""
-    path = _mk(spark, commit)
+    path = _mk(spark)
     try:
         K.upsert_keyed_table(spark, path, _ups(spark, 1, 11), mode="mor")   # seq 1
         K.upsert_keyed_table(spark, path, _ups(spark, 2, 22), mode="mor")   # seq 2
@@ -71,12 +70,11 @@ def test_slow_consumer_drains_archived_batches(spark, commit):
         _cleanup(path)
 
 
-@pytest.mark.parametrize("commit", ["rename", "marker"])
-def test_archive_gc_after_n_generations(spark, commit):
+def test_archive_gc_after_n_generations(spark):
     """Generations age out: with the default retain_generations=1 only
     the newest fold is readable; older checkpoints raise toward
     re-sync with the retention knob named."""
-    path = _mk(spark, commit)
+    path = _mk(spark)
     try:
         K.upsert_keyed_table(spark, path, _ups(spark, 1, 11), mode="mor")  # seq 1
         K.compact_keyed_table(spark, path)                                 # gen 1
@@ -193,10 +191,7 @@ def test_marker_gc_generations_knob(spark):
             F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
             F.lit("m").alias("tag"),
         )
-        K.write_keyed_table(
-            base, path, ["k"], num_buckets=2, commit="marker",
-            gc_generations=3,
-        )
+        K.write_keyed_table(base, path, ["k"], num_buckets=2, gc_generations=3)
         snapshots = {}
         for gen in range(1, 6):
             snapshots[gen] = K._current_commit(spark, path)
@@ -235,7 +230,7 @@ def test_time_travel_marker_reads_history(spark):
             F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
             F.lit("g0").alias("tag"),
         )
-        K.write_keyed_table(base, path, ["k"], num_buckets=2, commit="marker",
+        K.write_keyed_table(base, path, ["k"], num_buckets=2,
                             gc_generations=10)                      # commit 1
         snaps = {}
 
@@ -290,14 +285,8 @@ def test_time_travel_marker_reads_history(spark):
 
 
 def test_time_travel_refusals(spark):
-    """Rename tables keep no history; deltas aged past retention and
-    GC'd manifests refuse with the responsible knob named."""
-    path = _mk(spark)  # rename protocol
-    try:
-        with pytest.raises(ValueError, match="marker"):
-            K.read_keyed_table(spark, path, at_commit=1)
-    finally:
-        _cleanup(path)
+    """Deltas aged past retention and GC'd manifests refuse with the
+    responsible knob named."""
     tmp = tempfile.mkdtemp(prefix="keyed_tt_ref_")
     mpath = f"{tmp}/tab"
     try:
@@ -305,7 +294,7 @@ def test_time_travel_refusals(spark):
             F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
             F.lit("m").alias("tag"),
         )
-        K.write_keyed_table(base, mpath, ["k"], num_buckets=2, commit="marker",
+        K.write_keyed_table(base, mpath, ["k"], num_buckets=2,
                             gc_generations=10)
         # pending delta recorded in an evolution commit, then folded
         # with retention OFF: the time-travel overlay is gone
@@ -340,7 +329,7 @@ def test_rollback_marker_table(spark):
             F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
             F.lit("g0").alias("tag"),
         )
-        K.write_keyed_table(base, path, ["k"], num_buckets=2, commit="marker",
+        K.write_keyed_table(base, path, ["k"], num_buckets=2,
                             gc_generations=10)                      # commit 1
         K.upsert_keyed_table(
             spark, path,
@@ -381,12 +370,6 @@ def test_rollback_marker_table(spark):
 
 
 def test_rollback_refusals(spark):
-    path = _mk(spark)  # rename
-    try:
-        with pytest.raises(ValueError, match="marker"):
-            K.rollback_keyed_table(spark, path, to_commit=1)
-    finally:
-        _cleanup(path)
     tmp = tempfile.mkdtemp(prefix="keyed_rb_ref_")
     mpath = f"{tmp}/tab"
     try:
@@ -394,7 +377,7 @@ def test_rollback_refusals(spark):
             F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
             F.lit("m").alias("tag"),
         )
-        K.write_keyed_table(base, mpath, ["k"], num_buckets=2, commit="marker",
+        K.write_keyed_table(base, mpath, ["k"], num_buckets=2,
                             gc_generations=10)
         # a pending MOR delta, then an evolution commit that records it
         K.upsert_keyed_table(spark, mpath, _ups(spark, 1, 11), mode="mor")

@@ -1,75 +1,25 @@
-"""Reader snapshot safety during swaps and re-loads (round 13, #5).
+"""Reader snapshot safety during writes (round 13, #5).
 
-Rename protocol: ``_swap_buckets`` renames the live dir aside before
-moving the staged dir in — a reader LISTING between the two renames
-used to miss that bucket entirely (silent row loss). ``_base_df`` now
-probes for stranded ``_old.kb.<b>`` asides and falls back to them as
-that bucket's consistent pre-swap contents. The residual task-time
-exposure (files planned before a swap, read after) is a rename-protocol
-limit — the marker protocol's manifest resolution + one-generation GC
-grace is the real snapshot answer, pinned here with a threaded
-reader-during-COW storm.
-
-Re-loads: the prior generation now retires to ``_retired.kb.<b>``
-(crash-salvageable, reader-hidden, never auto-restored) instead of
-being deleted before the new generation lands.
+Readers resolve bucket dirs only through the commit manifest, and a
+superseded generation's dirs survive ``gc_generations`` further
+commits — so a reader never observes a half-published batch or a
+mix of generations. Pinned here with a threaded reader-during-COW
+storm.
 """
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 import threading
 
-import pytest
 from pyspark.sql import functions as F
 
 import hadoop_20_warehouse_fix_spark.sources.keyed as K
 
 
-def _mk(spark, commit="rename", rows=1_000, buckets=8):
-    tmp = tempfile.mkdtemp(prefix=f"keyed_snap_{commit}_")
-    path = f"{tmp}/tab"
-    base = spark.range(rows).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
-        F.lit("base").alias("tag"),
-    )
-    K.write_keyed_table(base, path, ["k"], num_buckets=buckets, commit=commit)
-    return path
-
-
 def _cleanup(path):
     shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
-
-
-def test_reader_falls_back_to_stranded_aside(spark):
-    """The verdict's named window, frozen deterministically: a bucket
-    renamed aside with no live replacement (mid-swap / crashed swap)
-    is still read — full row count, correct values."""
-    path = _mk(spark)
-    try:
-        live = [d for d in os.listdir(path) if d.startswith(f"{K.BUCKET_COL}=")]
-        b = live[0].split("=", 1)[1]
-        os.rename(
-            os.path.join(path, live[0]),
-            os.path.join(path, f"_old.{K.BUCKET_COL}.{b}"),
-        )
-        tab = K.read_keyed_table(spark, path)
-        assert tab.count() == 1_000, "stranded bucket must still be read"
-        assert tab.filter(F.col("k") == 1).first().v == 2
-        # superseded aside (live present again) is ignored, not double-read
-        os.rename(
-            os.path.join(path, f"_old.{K.BUCKET_COL}.{b}"),
-            os.path.join(path, live[0]),
-        )
-        shutil.copytree(
-            os.path.join(path, live[0]),
-            os.path.join(path, f"_old.{K.BUCKET_COL}.{b}"),
-        )
-        assert K.read_keyed_table(spark, path).count() == 1_000
-    finally:
-        _cleanup(path)
 
 
 def test_marker_readers_never_torn_during_cow_storm(spark):
@@ -84,7 +34,7 @@ def test_marker_readers_never_torn_during_cow_storm(spark):
         F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
         F.lit("base").alias("tag"),
     )
-    K.write_keyed_table(base, path, ["k"], num_buckets=4, commit="marker")
+    K.write_keyed_table(base, path, ["k"], num_buckets=4)
     try:
         errors: list[str] = []
         stop = threading.Event()
@@ -118,51 +68,5 @@ def test_marker_readers_never_torn_during_cow_storm(spark):
             for t in threads:
                 t.join()
         assert not errors, errors[:5]
-    finally:
-        _cleanup(path)
-
-
-def test_reload_crash_leaves_old_generation_salvageable(spark, monkeypatch):
-    """A re-load that dies after retiring the old generation leaves it
-    intact under _retired.kb.* (never zero copies on disk); a retry
-    completes and GCs the salvage."""
-    path = _mk(spark, rows=100, buckets=2)
-    try:
-        boom = RuntimeError("simulated crash before meta landed")
-        real = K._write_meta
-
-        def dies(spark_, path_, meta_):
-            raise boom
-
-        monkeypatch.setattr(K, "_write_meta", dies)
-        fresh = spark.range(10).select(
-            F.col("id").alias("k"), F.lit(7).cast("long").alias("v"),
-            F.lit("g2").alias("tag"),
-        )
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            K.write_keyed_table(fresh, path, ["k"], num_buckets=2)
-        monkeypatch.setattr(K, "_write_meta", real)
-        retired = [d for d in os.listdir(path) if d.startswith("_retired.")]
-        assert retired, "old generation must survive the crash on disk"
-        # retry completes, table correct, salvage GC'd
-        K.write_keyed_table(fresh, path, ["k"], num_buckets=2)
-        tab = K.read_keyed_table(spark, path)
-        assert tab.count() == 10
-        assert tab.filter(F.col("k") == 3).first().v == 7
-        assert not [d for d in os.listdir(path) if d.startswith("_retired.")]
-    finally:
-        _cleanup(path)
-
-
-def test_retired_dirs_hidden_from_readers(spark):
-    path = _mk(spark, rows=100, buckets=2)
-    try:
-        # plant a fake retired dir with decoy rows
-        live = [d for d in os.listdir(path) if d.startswith(f"{K.BUCKET_COL}=")][0]
-        shutil.copytree(
-            os.path.join(path, live),
-            os.path.join(path, f"_retired.{K.BUCKET_COL}.99"),
-        )
-        assert K.read_keyed_table(spark, path).count() == 100
     finally:
         _cleanup(path)

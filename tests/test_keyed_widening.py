@@ -3,8 +3,8 @@
 ``evolve_schema=True`` batches could only ADD columns; widening an
 existing column (int→bigint — the first evolution Delta/Iceberg users
 hit) was refused by the dtype contract. Widening along ``_WIDENS`` is
-now a METADATA-ONLY commit: the table schema flips atomically (marker:
-one manifest PUT; rename: the meta PUT), files never rewrite up front —
+now a METADATA-ONLY commit: the table schema flips atomically (one
+manifest PUT), files never rewrite up front —
 Spark's vectorized parquet reader performs the widening promotions at
 scan time (int32→int64, float→double, decimal growth; probe-verified
 here) — and compaction converges the physical type as buckets rewrite.
@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 import hadoop_20_warehouse_fix_spark.sources.keyed as K
 
 
-def _int_table(spark, commit="rename", layout="hash", **kw):
-    tmp = tempfile.mkdtemp(prefix=f"keyed_widen_{commit}_")
+def _int_table(spark, layout="hash", **kw):
+    tmp = tempfile.mkdtemp(prefix="keyed_widen_")
     path = f"{tmp}/tab"
     base = spark.range(500).select(
         F.col("id").cast("int").alias("k"),
@@ -38,9 +38,7 @@ def _int_table(spark, commit="rename", layout="hash", **kw):
     )
     if layout == "range":
         kw.setdefault("range_step", 100)
-    K.write_keyed_table(
-        base, path, ["k"], num_buckets=4, commit=commit, layout=layout, **kw
-    )
+    K.write_keyed_table(base, path, ["k"], num_buckets=4, layout=layout, **kw)
     return path
 
 
@@ -48,12 +46,11 @@ def _cleanup(path):
     shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
 
 
-@pytest.mark.parametrize("commit", ["rename", "marker"])
-def test_widen_int_to_bigint_metadata_only(spark, commit):
+def test_widen_int_to_bigint_metadata_only(spark):
     """A bigint batch with values past int range widens v — old rows
     (physically int32) and new rows read exactly through the evolved
     schema, with ZERO base files rewritten by the evolution itself."""
-    path = _int_table(spark, commit)
+    path = _int_table(spark)
     try:
         import os
 
@@ -92,7 +89,7 @@ def test_widen_int_to_bigint_metadata_only(spark, commit):
 
 
 def test_compaction_converges_physical_type(spark):
-    path = _int_table(spark, "marker")
+    path = _int_table(spark)
     try:
         big = spark.createDataFrame(
             [(5, 5_000_000_000, "wide")], "k int, v bigint, tag string"
@@ -120,7 +117,7 @@ def test_compaction_converges_physical_type(spark):
 
 
 def test_widen_key_refused_on_hash_layout(spark):
-    path = _int_table(spark, "rename")
+    path = _int_table(spark)
     try:
         big = spark.createDataFrame(
             [(5_000_000_000, 1, "k64")], "k bigint, v int, tag string"
@@ -137,7 +134,7 @@ def test_widen_key_allowed_on_range_layout(spark):
     """Range bucketing goes through CAST AS BIGINT — type-stable, so
     the leading key may widen; a key past int range lands in a fresh
     bucket and reads back exactly."""
-    path = _int_table(spark, "rename", layout="range")
+    path = _int_table(spark, layout="range")
     try:
         big = spark.createDataFrame(
             [(5_000_000_000, 1, "k64"), (3, 333, "upd")],
@@ -160,7 +157,7 @@ def test_widen_key_allowed_on_range_layout(spark):
 def test_without_evolve_flag_lossy_bigint_still_refused(spark):
     """The dtype contract is unchanged when evolve_schema is off: a
     bigint batch with out-of-int-range values refuses the whole batch."""
-    path = _int_table(spark, "rename")
+    path = _int_table(spark)
     try:
         big = spark.createDataFrame(
             [(5, 5_000_000_000, "wide")], "k int, v bigint, tag string"

@@ -303,7 +303,7 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
     # produce the byte-identical manifest a full reconciliation does,
     # while never listing outside the declared dirs.
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
-        BUCKET_COL,
+        _current_commit,
         upsert_keyed_table,
         write_keyed_table,
     )
@@ -318,11 +318,9 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
             F.col("id").alias("k"), (F.col("id") * 7 % 997).alias("v")
         )
         for path in (a, b):
-            # rename protocol: the declared dirs below are kb=<b> names
-            # (marker compactions declare their own _b<b>.v<n> churn via
-            # _marker_publish's changed_dirs — pinned in test_keyed_marker)
-            write_keyed_table(df, path, ["k"], num_buckets=8, commit="rename")
+            write_keyed_table(df, path, ["k"], num_buckets=8)
             write_file_stats_manifest(spark, path, cols=["k", "v"])
+        dirs_before = _current_commit(spark, b)["buckets"]
         batch = spark.range(40).select(
             (F.col("id") * 100).alias("k"), F.lit(-1).alias("v")
         )
@@ -331,10 +329,15 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
             outs[path] = upsert_keyed_table(spark, path, batch, mode="cow")
         touched = outs[a]["touched_buckets"]
         assert touched == outs[b]["touched_buckets"]
-        r_full = refresh_file_stats_manifest(spark, a)
-        r_dirs = refresh_file_stats_manifest(
-            spark, b, changed_dirs=[f"{b}/{BUCKET_COL}={t}" for t in touched]
+        dirs_after = _current_commit(spark, b)["buckets"]
+        # the churn a COW batch declares: each touched bucket's
+        # superseded versioned dir and its newly published one
+        churn = sorted(
+            {f"{b}/{dirs_before[str(t)]}" for t in touched}
+            | {f"{b}/{dirs_after[str(t)]}" for t in touched if str(t) in dirs_after}
         )
+        r_full = refresh_file_stats_manifest(spark, a)
+        r_dirs = refresh_file_stats_manifest(spark, b, changed_dirs=churn)
         assert r_full == r_dirs
         assert r_full["added"] > 0 and r_full["removed"] > 0
 
@@ -357,7 +360,7 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
             refresh_file_stats_manifest(spark, b, changed_dirs=[tmp])
         # declaring an untouched dir is harmless (no-op rows kept)
         r_noop = refresh_file_stats_manifest(
-            spark, b, changed_dirs=[f"{b}/{BUCKET_COL}={touched[0]}"]
+            spark, b, changed_dirs=[f"{b}/{dirs_after[str(touched[0])]}"]
         )
         assert r_noop["added"] == 0 and r_noop["removed"] == 0
     finally:
@@ -419,7 +422,7 @@ def test_manifest_on_marker_commit_keyed_table(spark):
             F.col("id").alias("k"), (F.col("id") % 97).alias("v")
         )
         write_keyed_table(
-            df, path, ["k"], num_buckets=8, commit="marker", sort_cols=["k"]
+            df, path, ["k"], num_buckets=8, sort_cols=["k"]
         )
         mpath = write_file_stats_manifest(spark, path, cols=["k", "v"])
         m = spark.read.parquet(mpath)

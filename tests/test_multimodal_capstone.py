@@ -134,6 +134,16 @@ def test_hamming_band_key_cols_isolate_modalities(spark):
         for r in hamming_pairs_from_bands(bands.drop("modality"), 3).collect()
     }
     assert (1, 2) in plain
+    # key names reach a SQL parser: a reserved word and a punctuated
+    # name must still name the column
+    for name in ("order", "media-kind"):
+        renamed = {
+            (r.id_a, r.id_b): r.hamming
+            for r in hamming_pairs_from_bands(
+                bands.withColumnRenamed("modality", name), 3, key_cols=[name]
+            ).collect()
+        }
+        assert renamed == {(1, 3): 1}, name
 
 
 def test_corpus_prepare_media_training_set_end_to_end(spark):

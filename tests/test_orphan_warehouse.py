@@ -114,3 +114,51 @@ def test_bpe_save_merges_survives_orphaned_location(spark):
         assert bpe_load_merges(spark, t) == [("a", "b"), ("ab", "c")]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_unqualified_create_in_other_database_spares_default_table(spark):
+    """With a non-default current database, an unqualified name means
+    <current db>.<table>: the orphan clear must delete THAT database's
+    directory (taken from the catalog), never <warehouse>/<table> —
+    the live data of default.<table>, byte-identical afterwards."""
+    from hadoop_20_warehouse_fix_spark.sources.writers import (
+        ensure_managed_creatable,
+    )
+
+    t, db = "orphan_dbq_tbl", "orphan_dbq_db"
+    prev = spark.catalog.currentDatabase()
+
+    def snapshot(d):
+        out = {}
+        for root, _dirs, files in os.walk(d):
+            for name in files:
+                with open(os.path.join(root, name), "rb") as f:
+                    out[os.path.join(root, name)] = f.read()
+        return out
+
+    try:
+        spark.sql(f"DROP TABLE IF EXISTS default.{t}")
+        spark.createDataFrame([(1,), (2,)], ["x"]).write.format("parquet").saveAsTable(
+            f"default.{t}"
+        )
+        live = os.path.join(_warehouse_dir(spark), t)
+        before = snapshot(live)
+        assert any(p.endswith(".parquet") for p in before)
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+        db_dir = spark.catalog.getDatabase(db).locationUri
+        db_dir = db_dir[len("file:") :] if db_dir.startswith("file:") else db_dir
+        orphan = os.path.join(db_dir, t)
+        os.makedirs(orphan, exist_ok=True)
+        with open(os.path.join(orphan, "orphan-part-00000.parquet"), "w") as f:
+            f.write("stale")
+        spark.catalog.setCurrentDatabase(db)
+        ensure_managed_creatable(spark, t)
+        assert not os.path.exists(orphan), "the current database's orphan is cleared"
+        assert snapshot(live) == before, "default.<table> must be untouched"
+        spark.createDataFrame([(9,)], ["x"]).write.format("parquet").saveAsTable(t)
+        assert spark.table(f"{db}.{t}").count() == 1
+        assert spark.table(f"default.{t}").count() == 2
+    finally:
+        spark.catalog.setCurrentDatabase(prev)
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        spark.sql(f"DROP TABLE IF EXISTS default.{t}")
