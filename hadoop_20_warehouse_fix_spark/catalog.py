@@ -157,6 +157,13 @@ def _table_fingerprint(local_path: str) -> tuple:
     return (mtime_ns, count, total)
 
 
+def _fingerprint_or_none(path: str) -> tuple | None:
+    try:
+        return _table_fingerprint(path.removeprefix("file:"))
+    except OSError:
+        return None  # non-local path: skip the memo, never the read
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one catalog table. Columnar Parquet scan: Catalyst prunes
     columns and pushes predicates down to the reader for free.
@@ -168,20 +175,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     confs, so a memoized schema is session-independent.)"""
     ensure_events_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        token = _table_fingerprint(path.removeprefix("file:"))
-    except OSError:
-        token = None  # non-local path: skip the memo, never the read
-    schema = None
-    if token is not None:
-        hit = _SCHEMA_CACHE.get(path)
-        if hit is not None and hit[0] == token:
-            schema = hit[1]
-    if schema is not None:
-        df = spark.read.schema(schema).parquet(path)
+    token = _fingerprint_or_none(path)
+    hit = _SCHEMA_CACHE.get(path) if token is not None else None
+    if hit is not None and hit[0] == token:
+        df = spark.read.schema(hit[1]).parquet(path)
     else:
         df = spark.read.parquet(path)
-        if token is not None:
+        # Fingerprint again after inference: a rewrite landing between
+        # the two must not memoize its schema under the older token.
+        if token is not None and _fingerprint_or_none(path) == token:
             _SCHEMA_CACHE[path] = (token, df.schema)
     if name == "events":
         df = normalize_event_ts(df)

@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoop_20_warehouse_fix_spark.plans.cache import persisted
+
 
 def normalize_text(col: Column) -> Column:
     """Lowercase, collapse whitespace, trim — the canonical form fed to
@@ -411,7 +413,6 @@ def measured_strategy(
     small: str,
     large: str,
     cap: int = BROADCAST_PROBE_ROW_CAP,
-    handles: list | None = None,
 ) -> tuple[str, DataFrame, int]:
     """Measure-then-pick over a RELATION (the probe idiom shared by
     ``repeated_spans``, ``remove_boilerplate_lines`` and — via
@@ -421,13 +422,10 @@ def measured_strategy(
     count it (ONE scalar to the driver — never the rows), and pick
     ``small`` vs ``large`` by ``cap``.
 
-    Returns ``(strategy, persisted_rel, n)``; the persisted relation is
-    appended to ``handles`` (when given) for targeted unpersist —
-    callers must consume the RETURNED relation so the downstream plan
-    reads the cache the probe paid for."""
-    rel = rel.persist()
-    if handles is not None:
-        handles.append(rel)
+    Returns ``(strategy, persisted_rel, n)``; callers must consume the
+    RETURNED relation so the downstream plan reads the cache the probe
+    paid for. Cache lifetime: :func:`~..plans.cache.cache_scope`."""
+    rel = persisted(rel)
     n = rel.count()
     return pick_by_scalar(n, cap, small, large), rel, n
 
@@ -588,7 +586,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 60,
     bands: int = 20,
     threshold: float = 0.5,
-    handles: list | None = None,
 ) -> DataFrame:
     """Approximate near-dup pairs: MinHash signatures → LSH banding →
     candidate pairs → EXACT Jaccard verification (so precision is 1.0;
@@ -610,16 +607,10 @@ def minhash_lsh_pairs(
     than recomputing both verify sides at this scale (docs-persisted
     variants 0.998/0.883 s); a 100 TB run that cannot afford two
     shingle passes materializes them to Parquet between stages — the
-    corpus_clean JobControl note. Cache lifetime: pass ``handles`` (a
-    list) to receive the persisted intermediate for targeted
-    ``.unpersist()`` after the returned plan materializes (the
-    streaming ingest loop does); otherwise
-    ``spark.catalog.clearCache()`` — corpus_clean's documented
-    contract."""
-    banded = banded_signature_rows(df, id_col, text_col, n, num_hashes, bands).persist()
+    corpus_clean JobControl note. Cache lifetime:
+    :func:`~..plans.cache.cache_scope`."""
+    banded = persisted(banded_signature_rows(df, id_col, text_col, n, num_hashes, bands))
     docs = doc_shingle_sets(df, id_col, text_col, n).withColumnRenamed("shs", "sh")
-    if handles is not None:
-        handles.append(banded)
     cand = (
         banded.alias("a")
         .join(
@@ -708,7 +699,6 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 3,
     token_hash: str = "md5",
-    handles: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance <= max_hamming (<= 3):
     by pigeonhole, such pairs agree on >= 1 of the 4 16-bit bands.
@@ -723,11 +713,8 @@ def simhash_pairs(
     aggregation ran twice per call (measured: the two duplicate
     32-task agg stages collapse to one; the media paths already
     persist their bands before calling — this gives the text path the
-    same physics). Cache lifetime: ``handles`` or
-    ``spark.catalog.clearCache()``, as :func:`minhash_lsh_pairs`."""
-    bands = simhash_bands(df, id_col, text_col, token_hash=token_hash).persist()
-    if handles is not None:
-        handles.append(bands)
+    same physics). Cache lifetime: :func:`~..plans.cache.cache_scope`."""
+    bands = persisted(simhash_bands(df, id_col, text_col, token_hash=token_hash))
     return hamming_pairs_from_bands(bands, max_hamming)
 
 
@@ -1618,20 +1605,18 @@ def _connected_components_star(
     here documents and accepts)."""
     from pyspark.sql import Window
 
-    E = (
+    E = persisted(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("u"),
             F.least(F.col(src), F.col(dst)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
-    nodes = (
+    nodes = persisted(
         E.select(F.col("u").alias("id"))
         .unionByName(E.select(F.col("v").alias("id")))
         .distinct()
-        .persist()
     )
 
     def checksum(e: DataFrame) -> tuple[int, int]:
@@ -1663,12 +1648,13 @@ def _connected_components_star(
         # small-star over the (big, small) orientation.
         ws = Window.partitionBy("u")
         with_min = ls.withColumn("m", F.min("v").over(ws))
-        new_e = (
+        # persisted: the last round's edge list escapes in the result;
+        # earlier rounds are released below as they are superseded.
+        new_e = persisted(
             with_min.filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(with_min.select("u", F.col("m").alias("v")))
             .distinct()
-            .persist()
         )
         # Lineage hygiene: same iterative-plan truncation as min-label.
         if (it + 1) % 5 == 0:
@@ -1697,8 +1683,7 @@ def _connected_components_star(
     final = E.groupBy("u").agg(F.min("v").alias("label"))
     # E and nodes stay persisted: the returned LAZY plan reads both, and
     # dropping E's cache here would force a recompute through every
-    # round's lineage. Same cache-lifetime contract as the min-label
-    # rule (caller unpersists / clearCache after materializing).
+    # round's lineage. The caller's cache_scope releases them.
     return (
         nodes.join(final, nodes["id"] == final["u"], "left")
         .select(nodes["id"], F.coalesce(F.col("label"), nodes["id"]).alias("cluster_id"))
@@ -1747,9 +1732,9 @@ def connected_components(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
     sym = sym.persist()
-    labels = sym.select(F.col("a").alias("id")).distinct().withColumn(
-        "label", F.col("id")
-    ).persist()
+    labels = persisted(
+        sym.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
+    )
     converged = False
     for it in range(max_iter):
         nbr_min = (
@@ -1760,14 +1745,15 @@ def connected_components(
         new_label = F.least(
             labels["label"], F.coalesce(F.col("nbr_label"), labels["label"])
         )
-        new_labels = (
+        # persisted: the last round's labels escape in the result;
+        # earlier rounds are released below as they are superseded.
+        new_labels = persisted(
             labels.join(nbr_min, labels["id"] == nbr_min["a"], "left")
             .select(
                 labels["id"],
                 new_label.alias("label"),
                 (new_label < labels["label"]).cast("int").alias("_chg"),
             )
-            .persist()
         )
         n_changed = new_labels.agg(F.sum("_chg")).collect()[0][0] or 0
         labels.unpersist()
@@ -1840,18 +1826,12 @@ def remove_boilerplate_lines(
     out_name: str = "text",
     strategy: str = "auto",
     broadcast_max_lines: int = BROADCAST_PROBE_ROW_CAP,
-    handles: list | None = None,
 ) -> DataFrame:
     """Cross-document boilerplate removal: a line that appears in >=
     ``min_docs`` DISTINCT documents is boilerplate (headers, footers,
     cookie banners) and is dropped from every document; line order
-    otherwise preserved.
-
-    ``handles``: when ``strategy="auto"`` persists the boilerplate
-    relation for its probe count, the persisted DataFrame is appended
-    here for targeted ``.unpersist()`` after the result materializes —
-    the repo-wide cache-lifetime convention (round-6 review: without
-    it the probe's cache leaked for the session).
+    otherwise preserved. Cache lifetime of the ``strategy="auto"``
+    probe's persisted relation: :func:`~..plans.cache.cache_scope`.
 
     Two physical forms, identical semantics (equality pytest-pinned):
 
@@ -1891,10 +1871,9 @@ def remove_boilerplate_lines(
     if strategy == "auto":
         # The shared measure-then-pick probe: one scalar to the driver;
         # the boilerplate relation is consumed again by whichever branch
-        # wins, so the helper pins it across both actions and hands the
-        # persist back for targeted unpersist.
+        # wins, so the helper pins it across both actions.
         strategy, boiler, _ = measured_strategy(
-            boiler, "broadcast", "anti", cap=broadcast_max_lines, handles=handles
+            boiler, "broadcast", "anti", cap=broadcast_max_lines
         )
     if strategy == "broadcast":
         boiler_arr = boiler.agg(F.sort_array(F.collect_list("line")).alias("bl"))
@@ -2077,7 +2056,6 @@ def repeated_spans(
     window: int = 50,
     stride: int = 1,
     min_docs: int = 2,
-    handles: list | None = None,
     hash_impl: str = "rolling",
     verify: bool = True,
     broadcast_max_fps: int = BROADCAST_PROBE_ROW_CAP,
@@ -2135,11 +2113,7 @@ def repeated_spans(
     ``hash_impl='expr'`` on non-adversarial corpora).
     NOTE: the detected-window relation is consumed twice downstream
     (hot-count + join) and is therefore persisted inside this
-    function. Pass ``handles`` (a list) to receive the persisted
-    DataFrame for a TARGETED ``.unpersist()`` once the result has
-    materialized — long-running sessions should prefer that over the
-    ``spark.catalog.clearCache()`` fallback, which nukes every cache
-    in the session (same contract now offered by the capstone)."""
+    function. Cache lifetime: :func:`~..plans.cache.cache_scope`."""
     if window < 1 or stride < 1:
         raise ValueError(f"window and stride must be >= 1, got {window}, {stride}")
     if min_docs < 2:
@@ -2204,14 +2178,11 @@ def repeated_spans(
     # exchange anyway (groupBy fp), so moving it ahead of the persist
     # adds ZERO net shuffles — it just caches the relation already
     # bucket-aligned and right-sized for both the agg and the join.
-    wins = (
+    wins = persisted(
         hashed.select("id", F.explode(sel).alias("s"))
         .select("id", F.col("s.p").alias("start"), F.col("s.h").alias("fp"))
         .repartition("fp")
-        .persist()
     )
-    if handles is not None:
-        handles.append(wins)
     # hot is persisted BEFORE the probe count: it feeds the count AND
     # the join below, and the count_distinct expand over the full wins
     # relation is the single most expensive aggregation here — measured
@@ -2237,7 +2208,6 @@ def repeated_spans(
         "broadcast",
         "merge",
         cap=broadcast_max_fps,
-        handles=handles,
     )
     if strategy == "broadcast":
         cand = wins.join(F.broadcast(hot), "fp")
@@ -2282,7 +2252,6 @@ def remove_repeated_spans(
     stride: int = 1,
     min_docs: int = 2,
     out_name: str | None = None,
-    handles: list | None = None,
     hash_impl: str = "rolling",
     verify: bool = True,
 ) -> DataFrame:
@@ -2321,7 +2290,7 @@ def remove_repeated_spans(
     spans = (
         repeated_spans(
             df, id_col, text_col, window, stride, min_docs,
-            handles=handles, hash_impl=hash_impl, verify=verify,
+            hash_impl=hash_impl, verify=verify,
         )
         .groupBy(id_col)
         .agg(F.sort_array(F.collect_list(F.struct("start", "end"))).alias("_spans"))

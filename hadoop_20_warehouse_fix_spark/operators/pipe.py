@@ -43,6 +43,8 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_20_warehouse_fix_spark.plans.cache import persisted
+
 
 def _to_lines(df: DataFrame, sep: str) -> "DataFrame":
     cols = [F.col(c).cast("string") for c in df.columns]
@@ -191,7 +193,6 @@ def pipe_skip_bad(
     group_key_cols: list[str] | None = None,
     key_name: str = "key",
     value_name: str = "value",
-    handles: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Script pipe with the reference's skip-bad-records mode
     (``X/mapred/org/apache/hadoop/mapred/SkipBadRecords.java:29-50`` —
@@ -221,8 +222,8 @@ def pipe_skip_bad(
     why the reference skips reduce GROUPS, not records.
 
     Both returned DataFrames read one persisted pass (the subprocess
-    runs once per chunk, not once per consumer); unpersist via
-    ``handles``."""
+    runs once per chunk, not once per consumer). Cache lifetime:
+    :func:`~..plans.cache.cache_scope`."""
     if max_skip_records < 1:
         raise ValueError(f"max_skip_records must be >= 1, got {max_skip_records}")
     argv = shlex.split(cmd)
@@ -280,12 +281,12 @@ def pipe_skip_bad(
             yield from flush(units)
 
     spark = df.sparkSession
-    tagged = spark.createDataFrame(
-        lines.mapPartitions(run_partition),
-        schema="kind string, k string, v string",
-    ).persist()
-    if handles is not None:
-        handles.append(tagged)
+    tagged = persisted(
+        spark.createDataFrame(
+            lines.mapPartitions(run_partition),
+            schema="kind string, k string, v string",
+        )
+    )
     out_df = (
         tagged.filter(F.col("kind") == "o")
         .select(F.col("k").alias(key_name), F.col("v").alias(value_name))

@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoop_20_warehouse_fix_spark.plans.cache import persisted
+
 
 def total_order_sort(df: DataFrame, cols: Sequence[Column | str], num_partitions: int | None = None) -> DataFrame:
     """Globally ordered output across partitions. ``orderBy`` range
@@ -141,7 +143,6 @@ def with_global_rank(
     form: str = "auto",
     crossover_rows: int = GLOBAL_RANK_CROSSOVER_ROWS,
     known_count: int | None = None,
-    handles: list | None = None,
 ) -> DataFrame:
     """Attach a 1-based global rank in sort order — turns ordering into
     checkable data (the SortValidator idea: prove global order by
@@ -168,10 +169,8 @@ def with_global_rank(
       move (``M/lib/InputSampler.java:101``): sample cheaply, then
       partition.
 
-    ``handles``: when auto falls back to persist+count, the persisted
-    DataFrame is appended here for targeted ``.unpersist()`` after the
-    result materializes (the repo-wide cache-lifetime convention);
-    without it, ``spark.catalog.clearCache()`` remains the fallback.
+    Cache lifetime of the persisted input and of the distributed form's
+    range-partitioned frame: :func:`~..plans.cache.cache_scope`.
 
     Output is IDENTICAL across forms (asserted in tests): ``cols`` must
     order rows uniquely for a deterministic rank (true for every
@@ -183,15 +182,13 @@ def with_global_rank(
         n = known_count if known_count is not None else _plan_row_count(df)
         if n is None:
             if _count_reruns_real_work(df):
-                df = df.persist()
-                if handles is not None:
-                    handles.append(df)
+                df = persisted(df)
             n = df.count()
         form = "single" if n < crossover_rows else "distributed"
     if form == "single":
         w = Window.orderBy(*cols)
         return df.withColumn(rank_name, F.row_number().over(w))
-    part = df.repartitionByRange(*cols).withColumn("_pid", F.spark_partition_id()).persist()
+    part = persisted(df.repartitionByRange(*cols).withColumn("_pid", F.spark_partition_id()))
     w = Window.partitionBy("_pid").orderBy(*cols)
     local = part.withColumn("_rn", F.row_number().over(w))
     counts = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).orderBy("_pid").collect()
@@ -284,8 +281,9 @@ def prefix_sum(
     # repartitionByRange, whose sampled split points are not guaranteed
     # identical across executions — a row landing in a different _pid
     # the second time would get the wrong offset. The persist pins one
-    # partitioning for both consumers (and halves the work).
-    local = part.withColumn("_local_sum", F.sum(value_col).over(w)).persist()
+    # partitioning for both consumers (and halves the work), so it must
+    # outlive the caller's action: the caller's cache_scope releases it.
+    local = persisted(part.withColumn("_local_sum", F.sum(value_col).over(w)))
     # Partition total = sum of values, NOT max of the running sum: with
     # negative values the running sum peaks mid-partition and max()
     # would inflate every later partition's offset.

@@ -29,6 +29,7 @@ from hadoop_20_warehouse_fix_spark.operators.dedup import (
     ngram_jaccard_pairs,
     words_of,
 )
+from hadoop_20_warehouse_fix_spark.plans.cache import persisted
 from hadoop_20_warehouse_fix_spark.queries import query
 
 _ORACLE = """
@@ -122,10 +123,8 @@ def corpus_clean(
     cleaned corpus to Parquet between stages, as the reference's
     JobControl DAG did by necessity.
 
-    Cache lifetime: the persist outlives the returned (lazy) plan, so a
-    long-lived session running many queries should
-    ``spark.catalog.clearCache()`` between them (bench.py does); the
-    Parquet-materialization form has no such residue.
+    Cache lifetime: the persist outlives the returned (lazy) plan; run
+    the action inside :func:`~..plans.cache.cache_scope` to release it.
 
     Physical tuning (round 4, measured at sf0.1, value-identical both
     times): (i) gate scoring runs through ``langscore_struct`` — one
@@ -220,7 +219,7 @@ def corpus_clean(
         )
     # drop() ignores absent columns, so "rep" needs no conditional.
     s1 = enriched.filter(keep).drop("pred", "rep")
-    s2 = exact_dedup_rows(s1, "doc_id", F.col("fp")).drop("fp").persist()
+    s2 = persisted(exact_dedup_rows(s1, "doc_id", F.col("fp")).drop("fp"))
     if near_dup == "auto":
         # Data-driven strategy pick (SCALING.md round 4's operating rule
         # as code): probe the DF distribution of the CLEANED corpus —
@@ -370,7 +369,6 @@ def corpus_prepare_training_set(
     span_window: int = 50,
     span_stride: int = 1,
     tokenizer_merges: list[tuple[str, str]] | None = None,
-    handles: list | None = None,
 ) -> DataFrame:
     """CAPSTONE composition — the full LLM training-data prep flow as
     one engine pipeline (pytest-covered function, intentionally NOT a
@@ -435,10 +433,7 @@ def corpus_prepare_training_set(
     same barrier is Parquet between stages, as the reference's DAGs
     materialized to HDFS by necessity.
 
-    Cache lifetime: pass ``handles`` (a list) to receive every
-    persisted intermediate for targeted ``.unpersist()`` after the
-    returned plan materializes; without it the fallback remains
-    ``spark.catalog.clearCache()``."""
+    Cache lifetime: :func:`~..plans.cache.cache_scope`."""
     from hadoop_20_warehouse_fix_spark.operators.sort import pack_by_budget
     from hadoop_20_warehouse_fix_spark.sources.readers import assign_split
 
@@ -446,11 +441,9 @@ def corpus_prepare_training_set(
         raise ValueError(f"token_budget must be positive, got {token_budget}")
     decontaminated = _text_survivors(
         spark, sf_dir, near_dup, eval_modulus, target_mix,
-        span_dedup, span_window, span_stride, tokenizer_merges, handles,
+        span_dedup, span_window, span_stride, tokenizer_merges,
     )
-    tagged = assign_split(decontaminated, "doc_id").persist()
-    if handles is not None:
-        handles.append(tagged)
+    tagged = persisted(assign_split(decontaminated, "doc_id"))
     train = pack_by_budget(
         tagged.filter(F.col("split") == "train"), "doc_id", "n_tokens",
         budget=token_budget,
@@ -472,14 +465,12 @@ def _text_survivors(
     span_window: int,
     span_stride: int,
     tokenizer_merges: list[tuple[str, str]] | None,
-    handles: list | None,
 ) -> DataFrame:
     """Stages 1-3 of :func:`corpus_prepare_training_set` (clean ->
     optional span dedup -> decontaminate -> optional source mix),
     shared verbatim with :func:`corpus_prepare_unified_training_set`
     so the two entry points cannot diverge on gate semantics. Returns
-    the decontaminated survivor frame (doc_id, n_tokens, quality);
-    persisted seams append to ``handles``."""
+    the decontaminated survivor frame (doc_id, n_tokens, quality)."""
     from hadoop_20_warehouse_fix_spark.operators.dedup import decontaminate
 
     cols = ["doc_id", "text"] + (["source"] if target_mix else [])
@@ -501,20 +492,17 @@ def _text_survivors(
         # re-account n_tokens in real tokenizer tokens (the clean stage
         # counted whitespace tokens; budgets below must match a trainer)
         survivors = survivors.withColumn("n_tokens", n_tokens_of(F.col("text")))
-    survivors = survivors.persist()
-    if handles is not None:
-        handles.append(survivors)
+    survivors = persisted(survivors)
     if span_dedup:
         from hadoop_20_warehouse_fix_spark.operators.dedup import (
             remove_repeated_spans,
         )
 
-        survivors = remove_repeated_spans(
-            survivors, "doc_id", "text",
-            window=span_window, stride=span_stride, handles=handles,
-        ).withColumn("n_tokens", n_tokens_of(F.col("text"))).persist()
-        if handles is not None:
-            handles.append(survivors)
+        survivors = persisted(
+            remove_repeated_spans(
+                survivors, "doc_id", "text", window=span_window, stride=span_stride
+            ).withColumn("n_tokens", n_tokens_of(F.col("text")))
+        )
     decontaminated = decontaminate(
         survivors, evalset, "doc_id", "text", n=4, mode="clean"
     ).drop("text")
@@ -523,9 +511,7 @@ def _text_survivors(
 
         # mix_corpora consumes its input twice (mass aggregation +
         # filter) — barrier first, per its docstring.
-        decontaminated = decontaminated.persist()
-        if handles is not None:
-            handles.append(decontaminated)
+        decontaminated = persisted(decontaminated)
         decontaminated, _rates = mix_corpora(
             decontaminated, "source", "n_tokens", target_mix, "doc_id"
         )
@@ -544,7 +530,6 @@ def corpus_prepare_media_training_set(
     min_flatness: float = 0.0,
     demux_av: bool = False,
     observation=None,
-    handles: list | None = None,
 ) -> DataFrame:
     """MULTIMODAL capstone — the media-column twin of
     :func:`corpus_prepare_training_set`, one engine pipeline over a
@@ -612,8 +597,7 @@ def corpus_prepare_media_training_set(
     is persist-barriered — same JobControl lesson as the text
     capstone's seams, where every integration bug of rounds 4-8 lived.
 
-    Cache lifetime: pass ``handles`` to unpersist after
-    materialization, else ``spark.catalog.clearCache()``."""
+    Cache lifetime: :func:`~..plans.cache.cache_scope`."""
     from hadoop_20_warehouse_fix_spark.operators.sort import pack_by_budget
     from hadoop_20_warehouse_fix_spark.sources.readers import assign_split
 
@@ -623,11 +607,9 @@ def corpus_prepare_media_training_set(
         )
     survivors = _media_survivors(
         spark, media, _media_thresholds(max_hamming), n_frames,
-        target_mix, min_flatness, demux_av, observation, handles,
+        target_mix, min_flatness, demux_av, observation,
     )
-    tagged = assign_split(survivors, "media_id", splits).persist()
-    if handles is not None:
-        handles.append(tagged)
+    tagged = persisted(assign_split(survivors, "media_id", splits))
     train = pack_by_budget(
         tagged.filter(F.col("split") == "train"), "media_id", "n_bytes",
         budget=shard_budget_bytes,
@@ -675,7 +657,6 @@ def _media_survivors(
     min_flatness: float,
     demux_av: bool,
     observation,
-    handles: list | None,
 ) -> DataFrame:
     """Stages 1-3b of :func:`corpus_prepare_media_training_set` (md5
     exact dedup -> decode gate + fingerprint -> near-dup removal ->
@@ -697,15 +678,15 @@ def _media_survivors(
     # separate sizes branch off `deduped` re-executed the exact-dedup
     # shuffle — payload bytes moved twice), so `deduped` has exactly
     # one consumer and needs no barrier of its own.
-    bands = media_fingerprint_bands(
-        deduped,
-        n_frames=n_frames,
-        observation=observation,
-        min_flatness=min_flatness,
-        demux_av=demux_av,
-    ).persist()
-    if handles is not None:
-        handles.append(bands)
+    bands = persisted(
+        media_fingerprint_bands(
+            deduped,
+            n_frames=n_frames,
+            observation=observation,
+            min_flatness=min_flatness,
+            demux_av=demux_av,
+        )
+    )
     if observation is not None:
         # Materialize the gate NOW, exactly once: the pair stage below
         # self-joins `bands`, and two concurrent first-scans of a
@@ -811,7 +792,6 @@ def corpus_prepare_unified_training_set(
     span_stride: int = 1,
     tokenizer_merges: list[tuple[str, str]] | None = None,
     ledger: dict | None = None,
-    handles: list | None = None,
 ) -> DataFrame:
     """UNIFIED capstone (round 10) — ONE training-set build over text
     AND media, where rounds 4-9 grew two parallel pipelines with
@@ -866,7 +846,7 @@ def corpus_prepare_unified_training_set(
     logical update stream (``M/lib/MultipleInputs.java:34``,
     ``X/index/.../main/UpdateIndex.java:66``).
 
-    Cache lifetime: ``handles`` as in both single-modality capstones."""
+    Cache lifetime: :func:`~..plans.cache.cache_scope`."""
     from pyspark.sql import Observation
 
     from hadoop_20_warehouse_fix_spark.operators.sort import pack_by_budget
@@ -882,11 +862,11 @@ def corpus_prepare_unified_training_set(
     obs = Observation("unified_media_gate") if ledger is not None else None
     text = _text_survivors(
         spark, sf_dir, near_dup, eval_modulus, text_mix,
-        span_dedup, span_window, span_stride, tokenizer_merges, handles,
+        span_dedup, span_window, span_stride, tokenizer_merges,
     )
     med = _media_survivors(
         spark, media, thresholds, n_frames, media_mix,
-        min_flatness, demux_av, obs, handles,
+        min_flatness, demux_av, obs,
     )
     unified = text.select(
         F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("item_id"),
@@ -905,9 +885,7 @@ def corpus_prepare_unified_training_set(
             F.lit(None).cast("double").alias("quality"),
         )
     )
-    tagged = assign_split(unified, "item_id", splits).persist()
-    if handles is not None:
-        handles.append(tagged)
+    tagged = persisted(assign_split(unified, "item_id", splits))
     out_cols = ["item_id", "modality", "n_units", "quality", "split", "shard_id"]
     is_text = F.col("modality") == "text"
     train = tagged.filter(F.col("split") == "train")

@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_20_warehouse_fix_spark.plans.cache import cache_scope, persisted
+
 
 def stream_dedup_ingest(
     docs_stream: DataFrame,
@@ -81,60 +83,55 @@ def stream_dedup_ingest(
             and spark.table(log_t).filter(F.col("batch_id") == batch_id).count() > 0
         ):
             return  # fully-processed batch replayed after a checkpoint crash
-        batch = batch_df.select(id_col, text_col).persist()
-        m = spark.table(f"{state_name}_meta").collect()[0]
-        # lsh_handles: minhash_lsh_pairs persists its banded/shingle
-        # intermediates (round 15); a long soak must release them per
-        # batch, not accumulate cache entries until clearCache.
-        lsh_handles: list = []
-        local_pairs = minhash_lsh_pairs(
-            batch, id_col, text_col, m.n, m.num_hashes, m.bands, threshold,
-            handles=lsh_handles,
-        )
-        local_losers = local_pairs.select(F.col("id_b").alias(id_col)).distinct()
-        survivors = batch.join(local_losers, id_col, "left_anti")
-        # Self-pair guard (round-7 ADVICE): on replay after a crash
-        # between state-append (step 4) and ledger-write (step 5), the
-        # batch's own rows are already IN the state, so without this
-        # filter every survivor matches itself at jaccard 1.0 and the
-        # whole batch is mislabeled a "corpus" duplicate.
-        cross = minhash_lsh_pairs_incremental(
-            survivors, id_col, text_col, state_name, threshold
-        ).filter(F.col("id_a") != F.col("id_b"))
-        corpus_dups = cross.select(F.col("id_b").alias(id_col)).distinct()
-        clean = survivors.join(corpus_dups, id_col, "left_anti").persist()
-        (
-            clean.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(output_path)
-        )
-        if dup_path is not None:
-            dropped = batch.join(
-                local_losers.withColumn("reason", F.lit("batch")).unionByName(
-                    corpus_dups.withColumn("reason", F.lit("corpus"))
-                ),
-                id_col,
-            ).select(id_col, "reason")
+        # One scope per micro-batch: every frame this batch persisted
+        # (its own and minhash_lsh_pairs' banded frame) is released when
+        # the batch ends, on success or failure.
+        with cache_scope():
+            batch = persisted(batch_df.select(id_col, text_col))
+            m = spark.table(f"{state_name}_meta").collect()[0]
+            local_pairs = minhash_lsh_pairs(
+                batch, id_col, text_col, m.n, m.num_hashes, m.bands, threshold
+            )
+            local_losers = local_pairs.select(F.col("id_b").alias(id_col)).distinct()
+            survivors = batch.join(local_losers, id_col, "left_anti")
+            # Self-pair guard (round-7 ADVICE): on replay after a crash
+            # between state-append (step 4) and ledger-write (step 5), the
+            # batch's own rows are already IN the state, so without this
+            # filter every survivor matches itself at jaccard 1.0 and the
+            # whole batch is mislabeled a "corpus" duplicate.
+            cross = minhash_lsh_pairs_incremental(
+                survivors, id_col, text_col, state_name, threshold
+            ).filter(F.col("id_a") != F.col("id_b"))
+            corpus_dups = cross.select(F.col("id_b").alias(id_col)).distinct()
+            clean = persisted(survivors.join(corpus_dups, id_col, "left_anti"))
             (
-                dropped.withColumn("_batch_id", F.lit(batch_id))
+                clean.withColumn("_batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("_batch_id")
-                .parquet(dup_path)
+                .parquet(output_path)
             )
-        # fold survivors into the state AFTER the writes above forced
-        # the probe plan (lazy state file listing — append-order caveat)
-        minhash_state_append(clean, id_col, text_col, state_name)
-        ensure_managed_creatable(spark, log_t)
-        spark.createDataFrame([(int(batch_id),)], "batch_id long").write.mode(
-            "append"
-        ).format("parquet").saveAsTable(log_t)
-        batch.unpersist()
-        clean.unpersist()
-        for h in lsh_handles:
-            h.unpersist()
+            if dup_path is not None:
+                dropped = batch.join(
+                    local_losers.withColumn("reason", F.lit("batch")).unionByName(
+                        corpus_dups.withColumn("reason", F.lit("corpus"))
+                    ),
+                    id_col,
+                ).select(id_col, "reason")
+                (
+                    dropped.withColumn("_batch_id", F.lit(batch_id))
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("_batch_id")
+                    .parquet(dup_path)
+                )
+            # fold survivors into the state AFTER the writes above forced
+            # the probe plan (lazy state file listing — append-order caveat)
+            minhash_state_append(clean, id_col, text_col, state_name)
+            ensure_managed_creatable(spark, log_t)
+            spark.createDataFrame([(int(batch_id),)], "batch_id long").write.mode(
+                "append"
+            ).format("parquet").saveAsTable(log_t)
 
     q = (
         docs_stream.writeStream.foreachBatch(write_batch)
@@ -210,94 +207,95 @@ def stream_media_dedup_ingest(
             and spark.table(log_t).filter(F.col("batch_id") == batch_id).count() > 0
         ):
             return  # fully-processed batch replayed after a checkpoint crash
-        batch = batch_df.select("media_id", "payload").persist()
-        m = spark.table(f"{state_name}_meta").collect()[0]
-        bands = media_fingerprint_bands(
-            batch,
-            n_frames=m.n_frames,
-            min_flatness=m.min_flatness,
-            demux_av=m.demux_av,
-        ).persist()
-        payload_bands = bands.filter(
-            F.coalesce(F.col("modality") != "audio_track", F.lit(True))
-        )
-        widest = max(thresholds.values())
-        pairs = hamming_pairs_from_bands(payload_bands, widest, key_cols=["modality"])
-        if len(set(thresholds.values())) > 1:
-            thr = F.create_map(
-                *[F.lit(x) for k in thresholds for x in (k, thresholds[k])]
-            )
-            pairs = (
-                pairs.join(
-                    payload_bands.select(F.col("id").alias("id_a"), "modality"), "id_a"
-                )
-                .filter(F.col("hamming") <= thr[F.col("modality")])
-                .select("id_a", "id_b", "hamming")
-            )
-        local_losers = pairs.select(F.col("id_b").alias("media_id"))
-        if m.demux_av:
-            # in-batch cross-container: the rip and its video arriving
-            # in the SAME batch — the audio side drops regardless of id
-            # order (asymmetric, the capstone rule)
-            audio_union = bands.filter(F.col("modality").isin("audio", "audio_track"))
-            side = audio_union.select("id", "modality")
-            cross_local = (
-                hamming_pairs_from_bands(audio_union, thresholds["audio"])
-                .join(side.select(F.col("id").alias("id_a"), F.col("modality").alias("mod_a")), "id_a")
-                .join(side.select(F.col("id").alias("id_b"), F.col("modality").alias("mod_b")), "id_b")
-                .filter(F.col("mod_a") != F.col("mod_b"))
-                .select(
-                    F.when(F.col("mod_a") == "audio", F.col("id_a"))
-                    .otherwise(F.col("id_b"))
-                    .alias("media_id")
+        # One scope per micro-batch, as in stream_dedup_ingest.
+        with cache_scope():
+            batch = persisted(batch_df.select("media_id", "payload"))
+            m = spark.table(f"{state_name}_meta").collect()[0]
+            bands = persisted(
+                media_fingerprint_bands(
+                    batch,
+                    n_frames=m.n_frames,
+                    min_flatness=m.min_flatness,
+                    demux_av=m.demux_av,
                 )
             )
-            local_losers = local_losers.unionByName(cross_local)
-        local_losers = local_losers.distinct()
-        survivors = batch.join(local_losers, "media_id", "left_anti")
-        # Self-pair guard: replay after the append/ledger crash seam
-        # finds the batch's own rows in the state (same as text ingest).
-        cross = media_state_probe(survivors, state_name, max_hamming).filter(
-            F.col("id_a") != F.col("id_b")
-        )
-        corpus_dups = (
-            cross.filter(
-                (F.col("mod_a") == F.col("mod_b"))
-                | ((F.col("mod_a") == "audio_track") & (F.col("mod_b") == "audio"))
+            payload_bands = bands.filter(
+                F.coalesce(F.col("modality") != "audio_track", F.lit(True))
             )
-            .select(F.col("id_b").alias("media_id"))
-            .distinct()
-        )
-        clean = survivors.join(corpus_dups, "media_id", "left_anti").persist()
-        (
-            clean.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(output_path)
-        )
-        if dup_path is not None:
-            dropped = batch.join(
-                local_losers.withColumn("reason", F.lit("batch")).unionByName(
-                    corpus_dups.withColumn("reason", F.lit("corpus"))
-                ),
-                "media_id",
-            ).select("media_id", "reason")
+            widest = max(thresholds.values())
+            pairs = hamming_pairs_from_bands(payload_bands, widest, key_cols=["modality"])
+            if len(set(thresholds.values())) > 1:
+                thr = F.create_map(
+                    *[F.lit(x) for k in thresholds for x in (k, thresholds[k])]
+                )
+                pairs = (
+                    pairs.join(
+                        payload_bands.select(F.col("id").alias("id_a"), "modality"), "id_a"
+                    )
+                    .filter(F.col("hamming") <= thr[F.col("modality")])
+                    .select("id_a", "id_b", "hamming")
+                )
+            local_losers = pairs.select(F.col("id_b").alias("media_id"))
+            if m.demux_av:
+                # in-batch cross-container: the rip and its video arriving
+                # in the SAME batch — the audio side drops regardless of id
+                # order (asymmetric, the capstone rule)
+                audio_union = bands.filter(F.col("modality").isin("audio", "audio_track"))
+                side = audio_union.select("id", "modality")
+                cross_local = (
+                    hamming_pairs_from_bands(audio_union, thresholds["audio"])
+                    .join(side.select(F.col("id").alias("id_a"), F.col("modality").alias("mod_a")), "id_a")
+                    .join(side.select(F.col("id").alias("id_b"), F.col("modality").alias("mod_b")), "id_b")
+                    .filter(F.col("mod_a") != F.col("mod_b"))
+                    .select(
+                        F.when(F.col("mod_a") == "audio", F.col("id_a"))
+                        .otherwise(F.col("id_b"))
+                        .alias("media_id")
+                    )
+                )
+                local_losers = local_losers.unionByName(cross_local)
+            local_losers = local_losers.distinct()
+            survivors = batch.join(local_losers, "media_id", "left_anti")
+            # Self-pair guard: replay after the append/ledger crash seam
+            # finds the batch's own rows in the state (same as text ingest).
+            cross = media_state_probe(survivors, state_name, max_hamming).filter(
+                F.col("id_a") != F.col("id_b")
+            )
+            corpus_dups = (
+                cross.filter(
+                    (F.col("mod_a") == F.col("mod_b"))
+                    | ((F.col("mod_a") == "audio_track") & (F.col("mod_b") == "audio"))
+                )
+                .select(F.col("id_b").alias("media_id"))
+                .distinct()
+            )
+            clean = persisted(survivors.join(corpus_dups, "media_id", "left_anti"))
             (
-                dropped.withColumn("_batch_id", F.lit(batch_id))
+                clean.withColumn("_batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("_batch_id")
-                .parquet(dup_path)
+                .parquet(output_path)
             )
-        media_state_append(clean, state_name)
-        ensure_managed_creatable(spark, log_t)
-        spark.createDataFrame([(int(batch_id),)], "batch_id long").write.mode(
-            "append"
-        ).format("parquet").saveAsTable(log_t)
-        batch.unpersist()
-        bands.unpersist()
-        clean.unpersist()
+            if dup_path is not None:
+                dropped = batch.join(
+                    local_losers.withColumn("reason", F.lit("batch")).unionByName(
+                        corpus_dups.withColumn("reason", F.lit("corpus"))
+                    ),
+                    "media_id",
+                ).select("media_id", "reason")
+                (
+                    dropped.withColumn("_batch_id", F.lit(batch_id))
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("_batch_id")
+                    .parquet(dup_path)
+                )
+            media_state_append(clean, state_name)
+            ensure_managed_creatable(spark, log_t)
+            spark.createDataFrame([(int(batch_id),)], "batch_id long").write.mode(
+                "append"
+            ).format("parquet").saveAsTable(log_t)
 
     q = (
         media_stream.writeStream.foreachBatch(write_batch)
@@ -431,8 +429,8 @@ def stream_keyed_upsert_ingest(
                     ],
                 )
             )
-        batch = batch_df.persist()
-        try:
+        with cache_scope():
+            batch = persisted(batch_df)
             apply_changes_keyed_table(
                 spark,
                 table_path,
@@ -447,8 +445,6 @@ def stream_keyed_upsert_ingest(
                 and len(_delta_seq_dirs(spark, table_path)) >= compact_every
             ):
                 compact_keyed_table(spark, table_path)
-        finally:
-            batch.unpersist()
 
     q = (
         updates_stream.writeStream.foreachBatch(write_batch)

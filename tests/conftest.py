@@ -25,6 +25,13 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def cache_manager_empty(spark) -> bool:
+    """True when the session's CacheManager holds no cached Dataset.
+    Eager ``localCheckpoint`` RDDs belong to Spark's ContextCleaner and
+    are never listed here."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from hadoop_20_warehouse_fix_spark.session import build_session

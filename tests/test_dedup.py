@@ -13,7 +13,8 @@ from hadoop_20_warehouse_fix_spark.operators.dedup import (
     simhash_bands,
     simhash_pairs,
 )
-from tests.conftest import SF_CORRECT
+from hadoop_20_warehouse_fix_spark.plans.cache import cache_scope
+from tests.conftest import SF_CORRECT, cache_manager_empty
 
 
 def _pairs(df):
@@ -322,7 +323,7 @@ def test_measured_strategy_helper(spark):
     helper — persist, one-scalar count, cap rule — shared by
     repeated_spans / remove_boilerplate_lines / choose_near_dup_strategy.
     The cap is inclusive (<= picks the small side) and the persisted
-    relation comes back via handles."""
+    relation is registered in the open cache_scope."""
     from hadoop_20_warehouse_fix_spark.operators.dedup import (
         measured_strategy,
         pick_by_scalar,
@@ -332,15 +333,16 @@ def test_measured_strategy_helper(spark):
     assert pick_by_scalar(11, 10, "s", "l") == "l"
 
     rel = spark.range(100).select(F.col("id").alias("fp"))
-    handles: list = []
-    strat, out, n = measured_strategy(rel, "broadcast", "merge", cap=100, handles=handles)
-    assert (strat, n) == ("broadcast", 100)
-    assert len(handles) == 1 and handles[0] is out
-    assert out.storageLevel.useMemory  # persisted for the winning branch
-    strat2, out2, n2 = measured_strategy(rel, "broadcast", "merge", cap=99)
-    assert (strat2, n2) == ("merge", 100)
-    for h in (out, out2):
-        h.unpersist()
+    spark.catalog.clearCache()
+    with cache_scope() as held:
+        strat, out, n = measured_strategy(rel, "broadcast", "merge", cap=100)
+        assert (strat, n) == ("broadcast", 100)
+        assert len(held) == 1 and held[0] is out
+        assert out.storageLevel.useMemory  # persisted for the winning branch
+        strat2, out2, n2 = measured_strategy(rel, "broadcast", "merge", cap=99)
+        assert (strat2, n2) == ("merge", 100)
+    assert not out.storageLevel.useMemory  # released with the scope
+    assert cache_manager_empty(spark)
 
 
 def test_remove_boilerplate_lines(spark):
@@ -410,23 +412,23 @@ def test_remove_boilerplate_anti_strategy_equals_broadcast(spark):
     assert bc[3] == ""  # survived, emptied
     assert bc[4] == "free standing doc"
     # auto past the cap -> the anti plan (no collected boilerplate array);
-    # the probe's persisted boiler relation comes back via handles for
-    # targeted unpersist (round-6 review: it used to leak for the session)
-    handles: list = []
-    auto_anti = remove_boilerplate_lines(
-        docs, "doc_id", "text", min_docs=3, strategy="auto",
-        broadcast_max_lines=1, handles=handles,
-    )
-    assert {r.doc_id: r.text for r in auto_anti.collect()} == bc
-    assert len(handles) == 1
-    for h in handles:
-        h.unpersist()
+    # the probe's persisted boiler relation is registered in the open
+    # scope (round-6 review: it used to leak for the session)
+    spark.catalog.clearCache()
+    with cache_scope() as held:
+        auto_anti = remove_boilerplate_lines(
+            docs, "doc_id", "text", min_docs=3, strategy="auto",
+            broadcast_max_lines=1,
+        )
+        assert {r.doc_id: r.text for r in auto_anti.collect()} == bc
+        assert len(held) == 1
+    assert cache_manager_empty(spark)
     # explicit strategies never probe, never persist
-    no_handles: list = []
-    remove_boilerplate_lines(
-        docs, "doc_id", "text", min_docs=3, strategy="anti", handles=no_handles
-    ).collect()
-    assert no_handles == []
+    with cache_scope() as held:
+        remove_boilerplate_lines(
+            docs, "doc_id", "text", min_docs=3, strategy="anti"
+        ).collect()
+    assert held == []
     with _pytest.raises(ValueError):
         remove_boilerplate_lines(docs, "doc_id", "text", strategy="huh")
     spark.catalog.clearCache()
@@ -1028,7 +1030,7 @@ def test_capstone_span_dedup_removes_planted_cross_doc_block(spark, tmp_path):
     cross-doc license block end-to-end — the carriers' n_tokens shrink
     by the block's token mass vs the span_dedup=False run, untouched
     unique docs keep identical n_tokens, and every persisted
-    intermediate is exposed via handles for targeted unpersist."""
+    intermediate is released when the cache_scope exits."""
     from hadoop_20_warehouse_fix_spark.queries.corpus import (
         corpus_prepare_training_set,
     )
@@ -1058,20 +1060,25 @@ def test_capstone_span_dedup_removes_planted_cross_doc_block(spark, tmp_path):
     sf_dir = str(tmp_path)
 
     try:
-        base = {
-            r.doc_id: r.n_tokens
-            for r in corpus_prepare_training_set(
-                spark, sf_dir, token_budget=100, near_dup="ngram"
-            ).collect()
-        }
-        handles: list = []
-        cut = {
-            r.doc_id: r.n_tokens
-            for r in corpus_prepare_training_set(
-                spark, sf_dir, token_budget=100, near_dup="ngram",
-                span_dedup=True, handles=handles,
-            ).collect()
-        }
+        spark.catalog.clearCache()
+        with cache_scope():
+            base = {
+                r.doc_id: r.n_tokens
+                for r in corpus_prepare_training_set(
+                    spark, sf_dir, token_budget=100, near_dup="ngram"
+                ).collect()
+            }
+        with cache_scope() as held:
+            cut = {
+                r.doc_id: r.n_tokens
+                for r in corpus_prepare_training_set(
+                    spark, sf_dir, token_budget=100, near_dup="ngram",
+                    span_dedup=True,
+                ).collect()
+            }
+        assert held, "capstone must register its persisted intermediates"
+        # every persist the plan made, corpus_clean's included, is gone
+        assert cache_manager_empty(spark)
         carriers = {1, 2, 3} & set(base) & set(cut)
         assert carriers, (sorted(base), sorted(cut))
         for i in carriers:
@@ -1080,9 +1087,6 @@ def test_capstone_span_dedup_removes_planted_cross_doc_block(spark, tmp_path):
             assert cut[i] <= base[i] - len(block.split()) + 2, (i, base[i], cut[i])
         for i in set(base) & set(cut) - {1, 2, 3}:
             assert cut[i] == base[i], i  # unique docs untouched
-        assert handles, "capstone must expose its persisted intermediates"
-        for h in handles:
-            h.unpersist()
     finally:
         spark.catalog.clearCache()
 

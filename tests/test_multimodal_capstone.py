@@ -24,9 +24,11 @@ from hadoop_20_warehouse_fix_spark.functions.jpeg import (
     encode_jpeg_progressive,
 )
 from hadoop_20_warehouse_fix_spark.functions.video import encode_avi_mjpeg
+from hadoop_20_warehouse_fix_spark.plans.cache import cache_scope
 from hadoop_20_warehouse_fix_spark.queries.corpus import (
     corpus_prepare_media_training_set,
 )
+from tests.conftest import cache_manager_empty
 
 
 def _clip(seed: int) -> np.ndarray:
@@ -154,47 +156,45 @@ def test_corpus_prepare_media_training_set_end_to_end(spark):
     byte-budget shards."""
     media = _mixed_corpus(spark)
     obs = Observation("media_capstone")
-    handles: list = []
-    out = corpus_prepare_media_training_set(
-        spark, media, shard_budget_bytes=4096, observation=obs, handles=handles
-    )
-    rows = out.collect()
-    try:
-        got = {r.media_id: r for r in rows}
-        # keep-lowest survivors only
-        assert set(got) == {10, 12, 20, 22, 30, 32}
-        assert {r.modality for r in rows} == {"image", "audio", "video"}
-        # ledger: exact dedup ran BEFORE the gate (11 rows enter, not 12)
-        assert obs.get["rows"] == 11
-        assert obs.get["decoded_rows"] == 9
-        assert obs.get["failed_decode_rows"] == 1
-        assert obs.get["unrecognized_rows"] == 1
-        # n_bytes is the payload's true size
-        sizes = {r.media_id: r.n_bytes for r in rows}
-        payloads = {r.media_id: len(r.payload) for r in media.collect()}
-        assert all(sizes[i] == payloads[i] for i in sizes)
-        # split is the shared md5 coin — replayable via assign_split
-        from hadoop_20_warehouse_fix_spark.sources.readers import assign_split
+    spark.catalog.clearCache()
+    with cache_scope() as held:
+        rows = corpus_prepare_media_training_set(
+            spark, media, shard_budget_bytes=4096, observation=obs
+        ).collect()
+    assert held, "capstone must register its persisted intermediates"
+    assert cache_manager_empty(spark)
+    got = {r.media_id: r for r in rows}
+    # keep-lowest survivors only
+    assert set(got) == {10, 12, 20, 22, 30, 32}
+    assert {r.modality for r in rows} == {"image", "audio", "video"}
+    # ledger: exact dedup ran BEFORE the gate (11 rows enter, not 12)
+    assert obs.get["rows"] == 11
+    assert obs.get["decoded_rows"] == 9
+    assert obs.get["failed_decode_rows"] == 1
+    assert obs.get["unrecognized_rows"] == 1
+    # n_bytes is the payload's true size
+    sizes = {r.media_id: r.n_bytes for r in rows}
+    payloads = {r.media_id: len(r.payload) for r in media.collect()}
+    assert all(sizes[i] == payloads[i] for i in sizes)
+    # split is the shared md5 coin — replayable via assign_split
+    from hadoop_20_warehouse_fix_spark.sources.readers import assign_split
 
-        want_split = {
-            r.media_id: r.split
-            for r in assign_split(
-                media.select("media_id"), "media_id"
-            ).collect()
-        }
-        assert all(got[i].split == want_split[i] for i in got)
-        # packing: train shards are monotone non-decreasing in media_id
-        # order and only the train split carries a shard id
-        train = sorted(
-            (r.media_id, r.shard_id) for r in rows if r.split == "train"
-        )
-        assert all(r.shard_id is None for r in rows if r.split != "train")
-        assert [s for _, s in train] == sorted(s for _, s in train)
-        if train:
-            assert train[0][1] == 0
-    finally:
-        for h in handles:
-            h.unpersist()
+    want_split = {
+        r.media_id: r.split
+        for r in assign_split(
+            media.select("media_id"), "media_id"
+        ).collect()
+    }
+    assert all(got[i].split == want_split[i] for i in got)
+    # packing: train shards are monotone non-decreasing in media_id
+    # order and only the train split carries a shard id
+    train = sorted(
+        (r.media_id, r.shard_id) for r in rows if r.split == "train"
+    )
+    assert all(r.shard_id is None for r in rows if r.split != "train")
+    assert [s for _, s in train] == sorted(s for _, s in train)
+    if train:
+        assert train[0][1] == 0
 
 
 def test_media_capstone_validates_budget(spark):
@@ -416,33 +416,36 @@ def test_corpus_prepare_unified_training_set_end_to_end(spark):
 
     media = _mixed_corpus(spark)
     ledger: dict = {}
-    handles: list = []
+    spark.catalog.clearCache()
     try:
-        rows = corpus_prepare_unified_training_set(
-            spark, SF_CORRECT, media,
-            token_budget=500, media_budget_bytes=4096,
-            ledger=ledger, handles=handles,
-        ).collect()
+        with cache_scope() as held:
+            rows = corpus_prepare_unified_training_set(
+                spark, SF_CORRECT, media,
+                token_budget=500, media_budget_bytes=4096,
+                ledger=ledger,
+            ).collect()
         assert rows
+        assert held, "capstone must register its persisted intermediates"
+        assert cache_manager_empty(spark)
         got = {r.item_id: r for r in rows}
         text_ids = {int(i[4:]) for i in got if i.startswith("doc:")}
         media_ids = {int(i[6:]) for i in got if i.startswith("media:")}
 
         # survivor sets == the single-modality capstones' (shared helpers)
-        spark.catalog.clearCache()
-        want_text = {
-            r.doc_id
-            for r in corpus_prepare_training_set(
-                spark, SF_CORRECT, token_budget=500
-            ).collect()
-        }
-        spark.catalog.clearCache()
-        want_media = {
-            r.media_id
-            for r in corpus_prepare_media_training_set(
-                spark, media, shard_budget_bytes=4096
-            ).collect()
-        }
+        with cache_scope():
+            want_text = {
+                r.doc_id
+                for r in corpus_prepare_training_set(
+                    spark, SF_CORRECT, token_budget=500
+                ).collect()
+            }
+        with cache_scope():
+            want_media = {
+                r.media_id
+                for r in corpus_prepare_media_training_set(
+                    spark, media, shard_budget_bytes=4096
+                ).collect()
+            }
         assert text_ids == want_text
         assert media_ids == want_media == {10, 12, 20, 22, 30, 32}
         # eval slice excluded (decontamination exactness is pinned by
@@ -496,8 +499,6 @@ def test_corpus_prepare_unified_training_set_end_to_end(spark):
         assert by_mod["text"] == len(text_ids)
         assert sum(v for k, v in by_mod.items() if k != "text") == len(media_ids)
     finally:
-        for h in handles:
-            h.unpersist()
         spark.catalog.clearCache()
 
 

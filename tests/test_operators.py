@@ -862,6 +862,7 @@ def test_with_global_rank_auto_selects_form_and_forms_agree(spark):
     import pytest as _pytest
 
     from hadoop_20_warehouse_fix_spark.operators.sort import with_global_rank
+    from hadoop_20_warehouse_fix_spark.plans.cache import cache_scope
     from hadoop_20_warehouse_fix_spark.plans.inspect import plan_summary
 
     df = spark.range(0, 5000).select(
@@ -888,15 +889,15 @@ def test_with_global_rank_auto_selects_form_and_forms_agree(spark):
     assert plan_summary(auto_known).num_broadcast_joins == 1
     # round-6 conditional-persist contract, cheap branch: a
     # scan+project plan's probe count is ~free (Catalyst prunes it), so
-    # auto counts WITHOUT persisting and handles stays empty
-    handles: list = []
-    auto_h = with_global_rank(df, ["k", "id"], form="auto", handles=handles)
-    assert plan_summary(auto_h).num_broadcast_joins == 0
-    assert handles == []  # no persist for a count()-is-free plan
+    # auto counts WITHOUT persisting and the scope stays empty
+    with cache_scope() as held:
+        auto_h = with_global_rank(df, ["k", "id"], form="auto")
+        assert plan_summary(auto_h).num_broadcast_joins == 0
+    assert held == []  # no persist for a count()-is-free plan
 
     # expensive branch: an upstream aggregate means re-evaluating the
     # plan for the probe count is real work, so auto persists first and
-    # hands the persisted input back for targeted unpersist
+    # registers the persisted input in the open scope
     from hadoop_20_warehouse_fix_spark.operators.sort import _count_reruns_real_work
 
     heavy = df.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
@@ -906,13 +907,12 @@ def test_with_global_rank_auto_selects_form_and_forms_agree(spark):
     # (round-6 review: the substring matcher persisted for "SortKey")
     aliased = df.select(F.col("k").alias("SortKeyJoinLimit"), "id")
     assert _count_reruns_real_work(aliased) is False
-    heavy_handles: list = []
-    auto_heavy = with_global_rank(heavy, ["n", "k"], form="auto", handles=heavy_handles)
-    assert len(heavy_handles) == 1  # the probe's persisted input
-    assert plan_summary(auto_heavy).num_broadcast_joins == 0  # still below crossover
-    assert auto_heavy.count() == heavy.count()
-    for h in heavy_handles:
-        h.unpersist()
+    with cache_scope() as held:
+        auto_heavy = with_global_rank(heavy, ["n", "k"], form="auto")
+        assert len(held) == 1  # the probe's persisted input
+        assert plan_summary(auto_heavy).num_broadcast_joins == 0  # still below crossover
+        assert auto_heavy.count() == heavy.count()
+    assert not held[0].storageLevel.useMemory  # released with the scope
 
     with _pytest.raises(ValueError):
         with_global_rank(df, ["k", "id"], form="bogus")

@@ -156,3 +156,28 @@ def test_schema_memo_bounded_per_path(spark, tmp_path):
         load_table(spark, str(d), "bounded_tbl")
     hits = [p for p in _SCHEMA_CACHE if p.endswith("bounded_tbl.parquet")]
     assert len(hits) == 1
+
+
+def test_schema_memo_skips_store_when_rewrite_races_inference(spark, tmp_path, monkeypatch):
+    """A rewrite landing between the fingerprint and the schema
+    inference must not memoize the new schema under the old token: on a
+    miss the path is fingerprinted again after inference, and the entry
+    is stored only if the token did not move."""
+    from hadoop_20_warehouse_fix_spark import catalog
+
+    d = tmp_path / "sfdir3"
+    d.mkdir()
+    tbl = d / "race_tbl.parquet"
+    spark.createDataFrame([(1,)], ["x"]).write.parquet(str(tbl))
+    real = catalog._table_fingerprint
+    calls: list[str] = []
+
+    def racing(local_path):
+        calls.append(local_path)
+        token = real(local_path)
+        return token if len(calls) == 1 else token + ("rewritten",)
+
+    monkeypatch.setattr(catalog, "_table_fingerprint", racing)
+    assert catalog.load_table(spark, str(d), "race_tbl").columns == ["x"]
+    assert len(calls) == 2
+    assert not [p for p in catalog._SCHEMA_CACHE if p.endswith("race_tbl.parquet")]

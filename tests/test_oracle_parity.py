@@ -1,12 +1,14 @@
 """Run every registered query against its DuckDB oracle at sf0.01 —
-the same check the driver's correctness gate performs."""
+the same check the driver's correctness gate performs — inside a
+cache_scope, and check that no cached Dataset outlives the scope."""
 
 from __future__ import annotations
 
 import pytest
 
+from hadoop_20_warehouse_fix_spark.plans.cache import cache_scope
 from hadoop_20_warehouse_fix_spark.queries import load_all
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, cache_manager_empty
 from tests.oracle import compare
 
 REGISTRY = load_all()
@@ -23,9 +25,12 @@ def test_every_registered_query_has_oracle():
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_parity(spark, name):
     spec = REGISTRY[name]
-    df = spec.fn(spark, SF_CORRECT)
-    problems = compare(df, spec.oracle, SF_CORRECT)
+    spark.catalog.clearCache()
+    with cache_scope():
+        df = spec.fn(spark, SF_CORRECT)
+        problems = compare(df, spec.oracle, SF_CORRECT)
     assert not problems, f"{name}:\n" + "\n".join(problems)
+    assert cache_manager_empty(spark), f"{name} left a cached Dataset behind"
 
 
 def _unregistered_approx_ops():
@@ -49,6 +54,9 @@ def _unregistered_approx_ops():
 def test_unregistered_approx_op_runs(spark, name):
     fn = _unregistered_approx_ops()[name]
     assert fn.__name__ not in REGISTRY
-    df = fn(spark, SF_CORRECT)
-    assert df.count() >= 0
-    assert len(df.columns) > 0
+    spark.catalog.clearCache()
+    with cache_scope():
+        df = fn(spark, SF_CORRECT)
+        assert df.count() >= 0
+        assert len(df.columns) > 0
+    assert cache_manager_empty(spark), f"{name} left a cached Dataset behind"

@@ -377,3 +377,45 @@ def test_session_window_exact_gap_boundary_merges(spark):
     # user 1 (gap == 600) MERGES into one 2-event session; user 2 (599)
     # merges; user 3 (601) splits into two singletons
     assert sessions == [(1, 2), (2, 2), (3, 1), (3, 1)]
+
+
+def test_stream_dedup_ingest_failed_batch_releases_its_cache(spark, tmp_path, monkeypatch):
+    """A micro-batch that fails after persisting must not leave its
+    cached frames behind: the batch's cache_scope releases them on the
+    way out, and the query fails with the batch's own error."""
+    from hadoop_20_warehouse_fix_spark.catalog import load_table
+    from hadoop_20_warehouse_fix_spark.operators import dedup
+    from hadoop_20_warehouse_fix_spark.streaming import stream_dedup_ingest
+    from tests.conftest import cache_manager_empty
+
+    corpus = load_table(spark, SF, "documents").select("doc_id", "text").filter(
+        F.col("doc_id") < 50
+    )
+    state = "mh_state_fail"
+    d = str(tmp_path / "landing_fail")
+
+    def failing_append(*_args, **_kwargs):
+        raise RuntimeError("planted state-append failure")
+
+    try:
+        dedup.minhash_state_write(
+            corpus, "doc_id", "text", state, num_buckets=4,
+            path=str(tmp_path / "state_fail"),
+        )
+        spark.createDataFrame(
+            [(40000, " ".join(f"failw{i}" for i in range(30)))],
+            "doc_id long, text string",
+        ).coalesce(1).write.parquet(d)
+        monkeypatch.setattr(dedup, "minhash_state_append", failing_append)
+        spark.catalog.clearCache()
+        sdf = spark.readStream.schema("doc_id long, text string").parquet(d)
+        with pytest.raises(Exception, match="planted state-append failure"):
+            stream_dedup_ingest(
+                sdf, "doc_id", "text", state,
+                str(tmp_path / "out_fail"), str(tmp_path / "ckpt_fail"),
+            )
+        assert cache_manager_empty(spark), "failed micro-batch leaked cached frames"
+    finally:
+        for t in ("bands", "shingles", "meta", "tombstones", "ingest_log"):
+            spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
+        spark.catalog.clearCache()
