@@ -3,8 +3,9 @@ unit normalization and int8 quantization — the storage/serving
 preparation steps a 100 TB embedding corpus goes through before ANN
 indexing or shipping to a feature store.
 
-All pure built-in-expression compositions (JVM-side): per-row array
-math with zero Python, zero shuffles — scan-fused at any scale.
+The vector math is pure built-in-expression compositions (JVM-side):
+per-row array math with zero Python, zero shuffles — scan-fused at any
+scale. :func:`hashing_vectorize` is the one Arrow-batched pandas UDF.
 """
 
 from __future__ import annotations
@@ -104,7 +105,6 @@ def hashing_vectorize(
     weighting: str = "log",
     normalize: bool = True,
     out_col: str = "embedding",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Deterministic hashing-trick text vectorizer (round 9): closes
     the raw-text -> vectors -> ANN loop that every ``sim_*`` query
@@ -114,55 +114,32 @@ def hashing_vectorize(
     counts (``weighting="tf"``) or ``ln(1 + tf)`` (``"log"``, the
     sublinear-TF default), optionally unit-normalized.
 
-    ``engine`` (round 10 — a finding from the 500k-doc loop
-    measurement, SCALING.md r10): the original all-JVM-expression form
-    (``engine="expr"``) folds O(tokens * dim) interpreted HOF steps per
-    doc — Spark's codegen refuses the nested lambda tree, and the
-    interpreted evaluator costs ~µs/step, measured 6.9 ms/doc at
-    dim 64. "Zero Python" optimized the wrong constant: the Arrow path
-    (``engine="arrow"``, DEFAULT) computes the same vectors in a
-    pandas UDF — per-batch token->bucket md5 memo (the BPE-encode memo
-    idiom), numpy bincount/log1p/normalize — at ~40 µs/doc, ~170x
-    faster, value-identical (pytest pins engines equal on the shipped
-    corpus and the DuckDB oracle replays the arrow output). Both are
-    row-local with ZERO shuffles; the expr form remains for
-    Python-worker-free deployments. Tokenization is
-    :func:`~.text.words_of` (lowercase whitespace split) with the
-    pinned Java-``\\s`` Python twin on the arrow path, the same
+    Physical form (round 10 — a finding from the 500k-doc loop
+    measurement, SCALING.md r10): a pandas UDF with a per-batch
+    token->bucket md5 memo (the BPE-encode memo idiom) and numpy
+    bincount/log1p/normalize, ~40 µs/doc. An all-JVM higher-order-
+    function fold of the same vectors measured 6.9 ms/doc at dim 64
+    (~170x slower: Spark's codegen refuses the nested lambda tree and
+    the interpreted evaluator costs ~µs/step). Row-local with ZERO
+    shuffles. Tokenization is the pinned Java-``\\s`` Python twin of
+    :func:`~.text.words_of` (lowercase whitespace split), the same
     contract every text oracle replays.
 
-    Empty/whitespace-only docs produce the zero vector, which
-    normalization maps to NULL (the cosine degenerate-input posture:
-    NULL propagates instead of NaN ranking first).
-
-    The bucket fold materializes the bucket array in its OWN
-    projection before the counting fold references it — capturing the
-    md5 expression inside the fold lambda would recompute it per
-    (token, dim) pair (the documented O(d^2) lambda-capture trap).
-
-    Composition seam (measured; ``engine="expr"`` ONLY): feeding the
-    un-materialized expr output straight into a pandas-UDF consumer
-    (``ivf_state_write``'s cell assignment) makes Catalyst inline the
-    whole HOF pipeline into the UDF's argument — the interpreted
-    evaluator then refuses the plan (INTERNAL_ERROR "Cannot evaluate
-    expression: assign_cell(...)"; failure shape pytest-pinned). Write
-    the vectors to parquet first — the realistic artifact boundary
-    anyway (a 100 TB embedding set is built once and indexed from
-    files). The arrow path has no such seam: its output column is a
-    plain UDF result and composes with ``ivf_state_write`` directly
-    (pytest-pinned).
+    NULL text gives a NULL vector. Empty/whitespace-only docs produce
+    the zero vector, which normalization maps to NULL (the cosine
+    degenerate-input posture: NULL propagates instead of NaN ranking
+    first). The output column is a plain UDF result, so it feeds
+    ``ivf_state_write`` directly (pytest-pinned).
 
     Reference analog: the index-contrib term-vector build
     (``/root/reference/X/index/.../main/IndexUpdateMapper.java:39``)
     — terms hashed to a bounded feature space at map time."""
-    from hadoop_20_warehouse_fix_spark.functions.text import words_of
+    from hadoop_20_warehouse_fix_spark.operators.bpe import _WS_RE
 
     if dim <= 0:
         raise ValueError(f"dim must be positive, got {dim}")
     if weighting not in ("tf", "log"):
         raise ValueError(f"weighting must be 'tf' or 'log', got {weighting!r}")
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
     for col in (id_col, text_col):
         if col not in df.columns:
             raise ValueError(
@@ -170,68 +147,36 @@ def hashing_vectorize(
                 f"(have {df.columns}); id_col must name the key the "
                 f"downstream ANN state will address vectors by"
             )
-    if engine == "arrow":
-        from hadoop_20_warehouse_fix_spark.operators.bpe import _WS_RE
+    use_log = weighting == "log"
 
-        use_log = weighting == "log"
-
-        @F.pandas_udf(ArrayType(DoubleType()))
-        def _vec(texts: pd.Series) -> pd.Series:
-            memo: dict[str, int] = {}  # token -> bucket, per batch
-            out = []
-            for t in texts:
-                if t is None or (isinstance(t, float) and pd.isna(t)):
-                    out.append(None)  # NULL in, NULL out (the expr posture)
+    @F.pandas_udf(ArrayType(DoubleType()))
+    def _vec(texts: pd.Series) -> pd.Series:
+        memo: dict[str, int] = {}  # token -> bucket, per batch
+        out = []
+        for t in texts:
+            if t is None or (isinstance(t, float) and pd.isna(t)):
+                out.append(None)  # NULL in, NULL out
+                continue
+            v = np.zeros(dim)
+            for w in _WS_RE.split(t.lower()) if t else ():
+                if not w:
                     continue
-                v = np.zeros(dim)
-                for w in _WS_RE.split(t.lower()) if t else ():
-                    if not w:
-                        continue
-                    b = memo.get(w)
-                    if b is None:
-                        b = memo[w] = (
-                            int(hashlib.md5(w.encode("utf-8")).hexdigest()[:8], 16)
-                            % dim
-                        )
-                    v[b] += 1.0
-                if use_log:
-                    v = np.log1p(v)
-                if normalize:
-                    n = float(np.sqrt(v @ v))
-                    if n == 0.0:
-                        out.append(None)
-                        continue
-                    v = v / n
-                out.append(v.tolist())
-            return pd.Series(out)
+                b = memo.get(w)
+                if b is None:
+                    b = memo[w] = (
+                        int(hashlib.md5(w.encode("utf-8")).hexdigest()[:8], 16)
+                        % dim
+                    )
+                v[b] += 1.0
+            if use_log:
+                v = np.log1p(v)
+            if normalize:
+                n = float(np.sqrt(v @ v))
+                if n == 0.0:
+                    out.append(None)
+                    continue
+                v = v / n
+            out.append(v.tolist())
+        return pd.Series(out)
 
-        return df.select("*", _vec(F.col(text_col)).alias(out_col))
-    bucket_of = lambda w: (  # noqa: E731 — local expression builder
-        F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long") % dim
-    )
-    staged = df.select(
-        "*",
-        F.transform(words_of(F.col(text_col)), bucket_of).alias("_buckets"),
-    )
-    counts = F.aggregate(
-        F.col("_buckets"),
-        F.array_repeat(F.lit(0.0), dim),
-        lambda acc, b: F.transform(
-            acc, lambda x, i: x + F.when(i.cast("long") == b, 1.0).otherwise(0.0)
-        ),
-    )
-    weighted = (
-        counts
-        if weighting == "tf"
-        else F.transform(counts, lambda x: F.log(F.lit(1.0) + x))
-    )
-    vec = staged.select(
-        *df.columns, weighted.alias(out_col)
-    )
-    if not normalize:
-        return vec
-    with_n = with_l2_norm(vec, out_col, "_nrm")
-    return with_n.select(
-        *df.columns,
-        unit_from_norm(F.col(out_col), F.col("_nrm")).alias(out_col),
-    )
+    return df.select("*", _vec(F.col(text_col)).alias(out_col))

@@ -251,32 +251,38 @@ def _contains_pair(syms: tuple[str, ...], a: str, b: str) -> bool:
     return any(syms[i] == a and syms[i + 1] == b for i in range(len(syms) - 1))
 
 
+# Distinct-word cap for the driver-side trainer: up to this many words
+# the word-count table is collected and trained locally, past it the
+# distributed trainer keeps the table on the cluster.
+BPE_MAX_LOCAL_WORDS = 1_000_000
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str,
     num_merges: int,
     min_pair_count: int = 2,
-    strategy: str = "auto",
-    max_local_words: int = 1_000_000,
     min_word_count: int = 1,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merges from a corpus. Returns the merge
     table (list of (a, b) pairs in learned order) — O(vocab) driver
     memory whatever the corpus size.
 
-    Strategy (the ``measured_strategy`` discipline — auto-pick by a
-    cheap probe, identical answers either way, pinned by pytest):
+    Strategy (the ``measured_strategy`` discipline — pick by a cheap
+    probe, identical answers either way, pinned by pytest): count
+    distinct words (cheap — it is the first job's output cardinality)
+    and compare with :data:`BPE_MAX_LOCAL_WORDS`, read at call time
+    (tests reach each side by patching the constant):
 
-    - ``local``: collect the word-count table and run the incremental
-      trainer driver-side. Right whenever distinct words fit the driver
-      — at web scale a ``min_word_count`` pre-filter usually puts the
-      head of the Zipf curve well under ``max_local_words``.
-    - ``distributed``: the words table never leaves the cluster; each
-      iteration is one pair-count aggregation + one merge map (see
-      :func:`_train_distributed`). Right when the vocabulary itself is
-      too big to collect.
-    - ``auto``: count distinct words (cheap — it is the first job's
-      output cardinality) and pick ``local`` iff it fits.
+    - ``local``, up to the cap: collect the word-count table and run
+      the incremental trainer driver-side. Right whenever distinct
+      words fit the driver — at web scale a ``min_word_count``
+      pre-filter usually puts the head of the Zipf curve well under
+      the cap.
+    - ``distributed``, past it: the words table never leaves the
+      cluster; each iteration is one pair-count aggregation + one
+      merge map (see :func:`_train_distributed`). Right when the
+      vocabulary itself is too big to collect.
 
     Early-stops when the best pair's count drops below
     ``min_pair_count`` (default 2: a pair seen once generalizes to
@@ -287,13 +293,11 @@ def bpe_train(
     production BPE trainer): prune words below the threshold from the
     counts table BEFORE the merge loop. Zipf means a small threshold
     removes the vast hapax tail — usually enough to bring distinct
-    words under ``max_local_words`` so the fast local path applies —
+    words under :data:`BPE_MAX_LOCAL_WORDS` so the fast local path applies —
     while barely moving pair statistics (each pruned word contributes
     < threshold to any pair)."""
     if num_merges < 0:
         raise ValueError(f"num_merges must be >= 0, got {num_merges}")
-    if strategy not in ("auto", "local", "distributed"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     wc = bpe_word_counts(df, text_col)
     if min_word_count > 1:
         wc = wc.filter(F.col("count") >= min_word_count)
@@ -303,9 +307,7 @@ def bpe_train(
     # (round-8 review; the "corpus touched exactly once" contract).
     wc = wc.persist()
     try:
-        if strategy == "auto":
-            strategy = "local" if wc.count() <= max_local_words else "distributed"
-        if strategy == "local":
+        if wc.count() <= BPE_MAX_LOCAL_WORDS:
             rows = [(r["word"], r["count"]) for r in wc.collect()]
             return _train_local(rows, num_merges, min_pair_count)
         return _train_distributed(wc, num_merges, min_pair_count)

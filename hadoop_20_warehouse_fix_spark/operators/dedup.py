@@ -28,7 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hadoop_20_warehouse_fix_spark.plans.cache import persisted
+from hadoop_20_warehouse_fix_spark.plans.cache import cache_scope, persisted
 
 
 def normalize_text(col: Column) -> Column:
@@ -409,10 +409,7 @@ def pick_by_scalar(n: float, cap: float, small: str, large: str) -> str:
 
 
 def measured_strategy(
-    rel: DataFrame,
-    small: str,
-    large: str,
-    cap: int = BROADCAST_PROBE_ROW_CAP,
+    rel: DataFrame, small: str, large: str
 ) -> tuple[str, DataFrame, int]:
     """Measure-then-pick over a RELATION (the probe idiom shared by
     ``repeated_spans``, ``remove_boilerplate_lines`` and — via
@@ -420,14 +417,15 @@ def measured_strategy(
     ``rel`` (it feeds the probe count AND the winning branch's plan —
     unpersisted it would be recomputed inside the downstream join),
     count it (ONE scalar to the driver — never the rows), and pick
-    ``small`` vs ``large`` by ``cap``.
+    ``small`` vs ``large`` by :data:`BROADCAST_PROBE_ROW_CAP`, read at
+    call time (tests reach each side by patching the constant).
 
     Returns ``(strategy, persisted_rel, n)``; callers must consume the
     RETURNED relation so the downstream plan reads the cache the probe
     paid for. Cache lifetime: :func:`~..plans.cache.cache_scope`."""
     rel = persisted(rel)
     n = rel.count()
-    return pick_by_scalar(n, cap, small, large), rel, n
+    return pick_by_scalar(n, BROADCAST_PROBE_ROW_CAP, small, large), rel, n
 
 
 def choose_near_dup_strategy(
@@ -465,7 +463,6 @@ def decontaminate(
     text_col: str,
     n: int = 8,
     mode: str = "flag",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: find (``mode="flag"``) or remove
     (``mode="clean"``) training documents sharing at least one word
@@ -486,18 +483,17 @@ def decontaminate(
     broadcasts; the train side's shingle stream then semi-joins
     map-side with NO shuffle of the corpus at all in clean mode
     (flag mode shuffles only the matching (id, shingle) rows, a
-    contamination-sized set). ``broadcast_eval=False`` drops the hint
-    for adversarially large eval sets (falls back to a hashed shuffle
-    join chosen by AQE). Hash-collision caveat as elsewhere in this
-    module: a 2^-64 collision could flag one extra n-gram — acceptable
-    for a removal gate (errs toward removal)."""
-    ev = (
+    contamination-sized set). The eval side must be benchmark-sized:
+    an eval set that is itself a corpus (~10M distinct shingles)
+    measured 1.4x slower broadcast than as a shuffle join (SCALING.md
+    r4). Hash-collision caveat as elsewhere in this module: a 2^-64
+    collision could flag one extra n-gram — acceptable for a removal
+    gate (errs toward removal)."""
+    ev = F.broadcast(
         shingle_rows(evalset, id_col, text_col, n)
         .select(F.xxhash64("sh").alias("shk"))
         .distinct()
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     tr = shingle_rows(train, id_col, text_col, n).select(
         "id", F.xxhash64("sh").alias("shk")
     )
@@ -634,20 +630,16 @@ def minhash_lsh_pairs(
     return verified.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-def simhash_bands(
-    df: DataFrame, id_col: str, text_col: str, token_hash: str = "md5"
-) -> DataFrame:
+def simhash_bands(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash (Charikar) as 4 × 16-bit band values: per token, a
     64-bit hash; per bit, sum(+1/-1); fingerprint bit = sign. Band
     representation avoids signed-64 overflow and is directly the
     pigeonhole blocking key for Hamming <= 3 search.
 
-    ``token_hash="md5"`` (default) builds the 64 bits from two 32-bit
-    md5 chunks — an ENGINE-AGNOSTIC hash, so the whole fingerprint (and
-    every pair decision downstream) is reproducible in any system with
-    md5; the DuckDB oracle for dedup_simhash replays it bit-for-bit.
-    ``"xxhash64"`` is the faster JVM-only variant (same structure,
-    Spark-defined fingerprints).
+    The 64 token-hash bits come from two 32-bit md5 chunks — an
+    ENGINE-AGNOSTIC hash, so the whole fingerprint (and every pair
+    decision downstream) is reproducible in any system with md5; the
+    DuckDB oracle for dedup_simhash replays it bit-for-bit.
 
     Entirely groupBy/sum over exploded tokens — no Python.
 
@@ -659,20 +651,13 @@ def simhash_bands(
     ~ms). The parsed trees are the same Catalyst expressions (CASE
     WHEN == F.when, ``&``/shiftright literals are IntegerType in both
     forms), so fingerprints are bit-identical — pinned in
-    tests/test_optimizations_r15.py against pre-change values for BOTH
-    token hashes."""
+    tests/test_optimizations_r15.py against pre-change values."""
     tok = df.select(F.col(id_col).alias("id"), F.explode(words_of(F.col(text_col))).alias("w"))
-    if token_hash == "md5":
-        lo = "CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT)"
-        hi = "CAST(conv(substring(md5(w), 9, 8), 16, 10) AS BIGINT)"
+    lo = "CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT)"
+    hi = "CAST(conv(substring(md5(w), 9, 8), 16, 10) AS BIGINT)"
 
-        def bit(b: int) -> str:
-            return f"(shiftright({lo if b < 32 else hi}, {b % 32}) & 1)"
-
-    else:
-
-        def bit(b: int) -> str:
-            return f"(shiftright(xxhash64(w), {b}) & 1)"
+    def bit(b: int) -> str:
+        return f"(shiftright({lo if b < 32 else hi}, {b % 32}) & 1)"
 
     bit_sums = [
         F.expr(f"sum(CASE WHEN {bit(b)} = 1 THEN 1 ELSE -1 END) AS _b{b}")
@@ -698,7 +683,6 @@ def simhash_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    token_hash: str = "md5",
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance <= max_hamming (<= 3):
     by pigeonhole, such pairs agree on >= 1 of the 4 16-bit bands.
@@ -714,7 +698,7 @@ def simhash_pairs(
     32-task agg stages collapse to one; the media paths already
     persist their bands before calling — this gives the text path the
     same physics). Cache lifetime: :func:`~..plans.cache.cache_scope`."""
-    bands = persisted(simhash_bands(df, id_col, text_col, token_hash=token_hash))
+    bands = persisted(simhash_bands(df, id_col, text_col))
     return hamming_pairs_from_bands(bands, max_hamming)
 
 
@@ -1017,21 +1001,31 @@ def minhash_state_delete(spark, state_name: str, ids) -> None:
       clears both) — compact first to resurrect an id;
     - the tombstone table is small and transient, so it lives as a
       managed warehouse table regardless of where the state data sits."""
+    id_type = spark.table(f"{state_name}_bands").schema["id"].dataType
+    _write_tombstones(spark, state_name, ids, "minhash_state_delete", id_type)
+
+
+def _write_tombstones(spark, state_name: str, ids, op: str, id_type) -> None:
+    """The one tombstone writer behind every persisted state's delete
+    (:func:`minhash_state_delete`, :func:`media_state_delete`,
+    ``similarity.ivf_state_delete``): append ``ids`` (a DataFrame with
+    an ``id`` column, or a Python list) to ``{state_name}_tombstones``,
+    cast to ``id_type`` — the id type of the state table the probes
+    anti-join. Ids that are NULL or do not cast losslessly raise a
+    ValueError naming ``op``, the public operation the caller called,
+    before anything is written."""
     if not isinstance(ids, DataFrame):
         ids = list(ids)
         if not ids:
             return  # nothing to tombstone (schema inference would fail anyway)
         ids = spark.createDataFrame([(i,) for i in ids], ["id"])
-    bands_id_type = spark.table(f"{state_name}_bands").schema["id"].dataType
-    bad = _lossy_cast_count(ids, bands_id_type)
+    bad = _lossy_cast_count(ids, id_type)
     if bad:
         raise ValueError(
-            f"minhash_state_delete: {bad} id(s) are NULL or do not cast "
-            f"LOSSLESSLY to the state's id type "
-            f"{bands_id_type.simpleString()} — deletion would silently "
-            "miss them or tombstone the wrong row"
+            f"{op}: {bad} id(s) are NULL or do not cast LOSSLESSLY to the "
+            f"state's id type {id_type.simpleString()} — deletion would "
+            "silently miss them or tombstone the wrong row"
         )
-    cast_ids = ids.select(F.col("id").try_cast(bands_id_type).alias("id"))
     # Orphan-proof create: the first delete after an interrupted earlier
     # process may find a stranded warehouse directory under this name
     # (the catalog has no table; saveAsTable would refuse with
@@ -1040,7 +1034,8 @@ def minhash_state_delete(spark, state_name: str, ids) -> None:
 
     ensure_managed_creatable(spark, f"{state_name}_tombstones")
     (
-        cast_ids.distinct()
+        ids.select(F.col("id").try_cast(id_type).alias("id"))
+        .distinct()
         .write.mode("append")
         .format("parquet")
         .saveAsTable(f"{state_name}_tombstones")
@@ -1203,30 +1198,48 @@ def minhash_state_compact(spark, state_name: str) -> dict[str, tuple[int, int]]:
     tables. NOTE: in-flight LAZY probe plans captured before the
     compaction hold references to the old files and must be re-created
     (the same execution-time file-listing caveat as append ordering)."""
-    from hadoop_20_warehouse_fix_spark.sources.writers import write_bucketed
+    return _compact_state(
+        spark,
+        state_name,
+        {f"{state_name}_bands": ["band", "bh"], f"{state_name}_shingles": ["id"]},
+        "id",
+    )
 
-    m = spark.table(f"{state_name}_meta").collect()[0]
-    # Physical deletion point for tombstoned docs: the rewrite is the
-    # one moment every row is touched anyway, so the tombstone filter
-    # is free (MapFile's rewrite-on-update discipline). Snapshot the
-    # tombstone ids to a broadcastable relation BEFORE the loop — the
-    # table itself is dropped after both rewrites succeed.
+
+def _compact_state(
+    spark, state_name: str, tables: dict[str, list[str]], tomb_col: str
+) -> dict[str, tuple[int, int]]:
+    """The one state-compaction sequence behind
+    :func:`minhash_state_compact`, :func:`media_state_compact` and
+    ``similarity.ivf_state_compact``: rewrite each of ``tables``
+    (name -> bucket columns; bucket count from ``{state_name}_meta``)
+    through :func:`compact_bucketed_table`, dropping rows whose
+    ``tomb_col`` is tombstoned. Returns {table: (files_before,
+    files_after)}.
+
+    Physical deletion point for tombstoned ids: the rewrite is the one
+    moment every row is touched anyway, so the tombstone filter is free
+    (MapFile's rewrite-on-update discipline). The tombstone ids are
+    snapshotted to a persisted relation BEFORE the first rewrite, held
+    by a :func:`~..plans.cache.cache_scope` so a failed rewrite releases
+    it too. ``{state_name}_tombstones`` is dropped only after every
+    rewrite succeeded, so a crash mid-compaction leaves them pending
+    (re-applied next run), never half-forgotten."""
+    num_buckets = spark.table(f"{state_name}_meta").collect()[0].num_buckets
     tomb = _state_tombstones(spark, state_name)
-    tomb_ids = tomb.select("id").distinct().persist() if tomb is not None else None
-    if tomb_ids is not None:
-        tomb_ids.count()  # materialize: the source table dies before the lazy plan would run
-    report: dict[str, tuple[int, int]] = {}
-    for suffix, cols in (("bands", ["band", "bh"]), ("shingles", ["id"])):
-        t = f"{state_name}_{suffix}"
-        report[t] = compact_bucketed_table(
-            spark, t, cols, m.num_buckets, tomb_ids=tomb_ids, tomb_col="id"
-        )
-    # Tombstones are now physically applied — clear them LAST so a crash
-    # mid-compaction leaves them pending (re-applied next run), never
-    # half-forgotten.
-    if tomb_ids is not None:
-        spark.sql(f"DROP TABLE IF EXISTS {state_name}_tombstones")
-        tomb_ids.unpersist()
+    with cache_scope():
+        tomb_ids = None
+        if tomb is not None:
+            tomb_ids = persisted(tomb.select("id").distinct())
+            tomb_ids.count()  # materialize: the source table dies before the lazy plan would run
+        report = {
+            t: compact_bucketed_table(
+                spark, t, cols, num_buckets, tomb_ids=tomb_ids, tomb_col=tomb_col
+            )
+            for t, cols in tables.items()
+        }
+        if tomb is not None:
+            spark.sql(f"DROP TABLE IF EXISTS {state_name}_tombstones")
     return report
 
 
@@ -1547,34 +1560,21 @@ def media_state_probe(
 def media_state_delete(spark, state_name: str, ids) -> None:
     """Tombstone media payloads in the persisted fingerprint state —
     takedowns and recrawl churn, same lifecycle as
-    :func:`minhash_state_delete` (whose implementation this reuses
-    verbatim: the tombstone table, the lossless-id-cast guard, the
-    probe anti-join, compaction as the physical-deletion point). A
+    :func:`minhash_state_delete` (the shared :func:`_write_tombstones`:
+    the tombstone table, the lossless-id-cast guard, the probe
+    anti-join, compaction as the physical-deletion point). A
     tombstoned VIDEO's demuxed soundtrack rows share its id, so one
     tombstone suppresses both the video and its shadow track."""
-    minhash_state_delete(spark, state_name, ids)
+    id_type = spark.table(f"{state_name}_bands").schema["id"].dataType
+    _write_tombstones(spark, state_name, ids, "media_state_delete", id_type)
 
 
 def media_state_compact(spark, state_name: str) -> dict[str, tuple[int, int]]:
     """Compact the media state's bands table (one file set per bucket
     per append otherwise), physically dropping tombstoned rows, via
-    the shared rename-aside engine :func:`compact_bucketed_table`.
+    the shared :func:`_compact_state`.
     Returns {table: (files_before, files_after)}."""
-    m = spark.table(f"{state_name}_meta").collect()[0]
-    tomb = _state_tombstones(spark, state_name)
-    tomb_ids = tomb.select("id").distinct().persist() if tomb is not None else None
-    if tomb_ids is not None:
-        tomb_ids.count()  # materialize before the source table drops
-    t = f"{state_name}_bands"
-    report = {
-        t: compact_bucketed_table(
-            spark, t, ["bi", "bv"], m.num_buckets, tomb_ids=tomb_ids, tomb_col="id"
-        )
-    }
-    if tomb_ids is not None:
-        spark.sql(f"DROP TABLE IF EXISTS {state_name}_tombstones")
-        tomb_ids.unpersist()
-    return report
+    return _compact_state(spark, state_name, {f"{state_name}_bands": ["bi", "bv"]}, "id")
 
 
 def _connected_components_star(
@@ -1824,41 +1824,35 @@ def remove_boilerplate_lines(
     text_col: str,
     min_docs: int = 3,
     out_name: str = "text",
-    strategy: str = "auto",
-    broadcast_max_lines: int = BROADCAST_PROBE_ROW_CAP,
 ) -> DataFrame:
     """Cross-document boilerplate removal: a line that appears in >=
     ``min_docs`` DISTINCT documents is boilerplate (headers, footers,
     cookie banners) and is dropped from every document; line order
-    otherwise preserved. Cache lifetime of the ``strategy="auto"``
-    probe's persisted relation: :func:`~..plans.cache.cache_scope`.
+    otherwise preserved. Cache lifetime of the probe's persisted
+    relation: :func:`~..plans.cache.cache_scope`.
 
-    Two physical forms, identical semantics (equality pytest-pinned):
+    The boilerplate lines are counted (one scalar — the
+    :func:`measured_strategy` probe) and pick one of two physical
+    forms, identical semantics (equality pytest-pinned):
 
-    - ``strategy="broadcast"``: distinct (doc, line) rows -> line
-      document-frequency -> one collected boilerplate ARRAY broadcast
-      to a per-row array filter. The DF aggregation shuffles one row
-      per distinct (doc, line) — bounded by corpus line vocabulary —
-      and the rewrite is scan-fused. Dies when the boilerplate set
-      outgrows driver/broadcast memory.
-    - ``strategy="anti"``: posexplode every doc's lines, LEFT ANTI join
-      against the boilerplate relation on the line value, reassemble in
-      position order per doc. The corpus's line rows shuffle (join +
-      per-doc regroup — two exchanges the broadcast form avoids), but
-      NOTHING is ever collected: the boilerplate side stays distributed,
-      so an arbitrarily large boilerplate set (adversarial or just
-      100 TB-diverse) cannot kill the driver.
-    - ``strategy="auto"`` (default): count the boilerplate lines (one
-      scalar — the probe idiom of ``choose_near_dup_strategy``) and
-      pick broadcast below ``broadcast_max_lines``, anti past it.
+    - ``broadcast``, up to :data:`BROADCAST_PROBE_ROW_CAP` lines:
+      distinct (doc, line) rows -> line document-frequency -> one
+      collected boilerplate ARRAY broadcast to a per-row array filter.
+      The DF aggregation shuffles one row per distinct (doc, line) —
+      bounded by corpus line vocabulary — and the rewrite is
+      scan-fused. Dies when the boilerplate set outgrows
+      driver/broadcast memory.
+    - ``anti``, past the cap: posexplode every doc's lines, LEFT ANTI
+      join against the boilerplate relation on the line value,
+      reassemble in position order per doc. The corpus's line rows
+      shuffle (join + per-doc regroup — two exchanges the broadcast
+      form avoids), but NOTHING is ever collected: the boilerplate
+      side stays distributed, so an arbitrarily large boilerplate set
+      (adversarial or just 100 TB-diverse) cannot kill the driver.
 
     A document whose every line is boilerplate survives as empty text
     in BOTH forms (the anti form left-joins the reassembly back to the
     corpus ids — an all-lines-removed doc must not vanish)."""
-    if strategy not in ("auto", "broadcast", "anti"):
-        raise ValueError(
-            f"strategy must be 'auto', 'broadcast', or 'anti', got {strategy!r}"
-        )
     lines_rows = df.select(
         F.col(id_col).alias("_id"), F.explode(F.array_distinct(F.split(F.col(text_col), "\n"))).alias("line")
     )
@@ -1868,13 +1862,10 @@ def remove_boilerplate_lines(
         .filter(F.col("df") >= min_docs)
         .select("line")
     )
-    if strategy == "auto":
-        # The shared measure-then-pick probe: one scalar to the driver;
-        # the boilerplate relation is consumed again by whichever branch
-        # wins, so the helper pins it across both actions.
-        strategy, boiler, _ = measured_strategy(
-            boiler, "broadcast", "anti", cap=broadcast_max_lines
-        )
+    # The shared measure-then-pick probe: one scalar to the driver; the
+    # boilerplate relation is consumed again by whichever branch wins,
+    # so the helper pins it across both actions.
+    strategy, boiler, _ = measured_strategy(boiler, "broadcast", "anti")
     if strategy == "broadcast":
         boiler_arr = boiler.agg(F.sort_array(F.collect_list("line")).alias("bl"))
         return df.crossJoin(F.broadcast(boiler_arr)).select(
@@ -1992,12 +1983,10 @@ def _karp_rabin_window_hashes(window: int):
     structured/adversarial text can hit cross-substring collisions far
     more easily than the generic 2^-64 estimate suggests (a 1024-char
     pair built from Prouhet–Thue–Morse signs collides by construction;
-    pinned in tests). This is why :func:`repeated_spans` verifies
-    candidate windows against their actual substring bytes by default
-    (``verify=True``) — a collision then costs wasted verify work, not
-    silently deleted unique text. Operators that disable verification
-    on untrusted corpora should use ``hash_impl='expr'`` (xxhash64 —
-    no known structural anti-tests)."""
+    pinned in tests). This is why :func:`repeated_spans` always
+    verifies candidate windows against their actual substring bytes —
+    a collision then costs wasted verify work, not silently deleted
+    unique text."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -2056,9 +2045,6 @@ def repeated_spans(
     window: int = 50,
     stride: int = 1,
     min_docs: int = 2,
-    hash_impl: str = "rolling",
-    verify: bool = True,
-    broadcast_max_fps: int = BROADCAST_PROBE_ROW_CAP,
 ) -> DataFrame:
     """Corpus-wide EXACT-SUBSTRING detection (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better": exact
@@ -2088,29 +2074,23 @@ def repeated_spans(
     Shuffle volume ~ len(text)/stride 12-byte rows per doc — linear,
     skew bounded by max doc length; a boilerplate fingerprint's
     posting count is bounded by the partial agg, never materialized as
-    a list. ``hash_impl="rolling"`` (default) computes the fingerprint
-    pass with an O(len) Karp-Rabin prefix hash (Arrow-batched numpy —
-    see :func:`_karp_rabin_window_hashes`); ``"expr"`` keeps the pure
-    JVM-expression form (O(len·window), zero Python). Both have exact
-    RECALL (same-substring ⇒ same-fingerprint); span outputs are
-    identical (asserted in tests). The winnow arrays are per-row HOFs
-    (O(len·stride) worst case interpreted — stride is meant to be
-    small, 4-16).
+    a list. The fingerprint pass is an O(len) Karp-Rabin prefix hash
+    (Arrow-batched numpy — see :func:`_karp_rabin_window_hashes`) with
+    exact RECALL (same-substring ⇒ same-fingerprint). The winnow
+    arrays are per-row HOFs (O(len·stride) worst case interpreted —
+    stride is meant to be small, 4-16).
 
-    ``verify=True`` (default) re-checks every candidate window against
-    its ACTUAL substring bytes: candidates join back to ``df`` and the
-    distinct-doc count re-runs grouped by the substring itself, so a
-    fingerprint collision (two different substrings, same hash) can
-    never mark a unique span as repeated — essential for the rolling
-    hash, whose mod-2^64 structure admits adversarial collisions on
-    structured text (see :func:`_karp_rabin_window_hashes`; the
-    Thue–Morse colliding pair is pinned in tests), belt-and-braces for
-    xxhash64. Cost: one extra join whose volume is the CANDIDATE set
-    (actual duplication + collisions, never the corpus) carrying
-    window-char strings, plus a second scan of ``df`` — persist ``df``
-    first if it is expensive to recompute. ``verify=False`` trusts
-    fingerprints (the pre-round-6 behavior; safe with
-    ``hash_impl='expr'`` on non-adversarial corpora).
+    Every candidate window is re-checked against its ACTUAL substring
+    bytes: candidates join back to ``df`` and the distinct-doc count
+    re-runs grouped by the substring itself, so a fingerprint
+    collision (two different substrings, same hash) can never mark a
+    unique span as repeated — the rolling hash's mod-2^64 structure
+    admits adversarial collisions on structured text (see
+    :func:`_karp_rabin_window_hashes`; the Thue–Morse colliding pair
+    is pinned in tests). Cost: one extra join whose volume is the
+    CANDIDATE set (actual duplication + collisions, never the corpus)
+    carrying window-char strings, plus a second scan of ``df`` —
+    persist ``df`` first if it is expensive to recompute.
     NOTE: the detected-window relation is consumed twice downstream
     (hot-count + join) and is therefore persisted inside this
     function. Cache lifetime: :func:`~..plans.cache.cache_scope`."""
@@ -2120,32 +2100,15 @@ def repeated_spans(
         # min_docs=1 marks EVERY window repeated; downstream removal
         # would silently strip the whole corpus. Loud failure instead.
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-    t = F.col(text_col)
-    if hash_impl == "rolling":
-        # O(len) Karp-Rabin fingerprint pass (round-5 brief #2): the
-        # Arrow-batched prefix-hash UDF returns one bigint per window
-        # position; the transform zips positions on JVM-side (its array
-        # child evaluates once per row — no re-evaluation hazard).
-        rk = _karp_rabin_window_hashes(window)
-        hashes = F.transform(
-            rk(t),
-            lambda h, i: F.struct(h.alias("h"), (i + 1).cast("int").alias("p")),
-        )
-    elif hash_impl == "expr":
-        # Pure-expression fallback — zero Python, engine-replayable, but
-        # O(len·window) character work (each window hashed from scratch).
-        k = F.greatest(F.length(t) - window + 1, F.lit(0))
-        hashes = F.when(
-            k > 0,
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda p: F.struct(
-                    F.xxhash64(F.substring(t, p, window)).alias("h"), p.cast("int").alias("p")
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<h:bigint,p:int>>"))
-    else:
-        raise ValueError(f"hash_impl must be 'rolling' or 'expr', got {hash_impl!r}")
+    # O(len) Karp-Rabin fingerprint pass (round-5 brief #2): the
+    # Arrow-batched prefix-hash UDF returns one bigint per window
+    # position; the transform zips positions on JVM-side (its array
+    # child evaluates once per row — no re-evaluation hazard).
+    rk = _karp_rabin_window_hashes(window)
+    hashes = F.transform(
+        rk(F.col(text_col)),
+        lambda h, i: F.struct(h.alias("h"), (i + 1).cast("int").alias("p")),
+    )
     # PROJECTION BARRIER (the doc_shingle_sets idiom): the winnow lambda
     # below must reference a BOUND column, not the inline hash
     # expression — inlined, every stride-block would re-evaluate all k
@@ -2207,18 +2170,11 @@ def repeated_spans(
         .select("fp"),
         "broadcast",
         "merge",
-        cap=broadcast_max_fps,
     )
     if strategy == "broadcast":
         cand = wins.join(F.broadcast(hot), "fp")
     else:
         cand = wins.join(hot.hint("merge"), "fp")
-    if not verify:
-        return cand.select(
-            F.col("id").alias(id_col),
-            "start",
-            (F.col("start") + window - 1).alias("end"),
-        )
     # Exact verify: fetch each candidate's actual window substring and
     # re-run the distinct-doc count grouped by the SUBSTRING, not the
     # fingerprint. Re-grouping can only split a fingerprint's group, so
@@ -2252,8 +2208,6 @@ def remove_repeated_spans(
     stride: int = 1,
     min_docs: int = 2,
     out_name: str | None = None,
-    hash_impl: str = "rolling",
-    verify: bool = True,
 ) -> DataFrame:
     """Cut every corpus-repeated span (see :func:`repeated_spans`) out
     of each document — span-level removal, the surgical alternative to
@@ -2273,10 +2227,10 @@ def remove_repeated_spans(
     only exchanges are the fingerprint count and the spans-to-doc
     groupBy. ALL other columns of ``df`` ride through unchanged; docs
     with no repeated spans pass through byte-identical (left join +
-    coalesce). ``df`` is consumed twice (span detection + rebuild;
-    three times with ``verify=True`` — the collision check joins
-    candidates back to the text) — persist derived inputs first, per
-    the multi-consumer convention.
+    coalesce). ``df`` is consumed three times (span detection, the
+    collision check that joins candidates back to the text, and the
+    rebuild) — persist derived inputs first, per the multi-consumer
+    convention.
 
     ``out_name`` defaults to ``text_col`` (rebuilt text replaces the
     original in place); naming it onto an existing OTHER column would
@@ -2288,10 +2242,7 @@ def remove_repeated_spans(
             f"out_name {out_name!r} collides with a preserved column of df"
         )
     spans = (
-        repeated_spans(
-            df, id_col, text_col, window, stride, min_docs,
-            hash_impl=hash_impl, verify=verify,
-        )
+        repeated_spans(df, id_col, text_col, window, stride, min_docs)
         .groupBy(id_col)
         .agg(F.sort_array(F.collect_list(F.struct("start", "end"))).alias("_spans"))
     )

@@ -496,25 +496,21 @@ def skew_join(
     left: DataFrame,
     right: DataFrame,
     on: str | Sequence[str],
-    strategy: str = "auto",
     salt_buckets: int = 8,
 ) -> DataFrame:
     """Equi join with the measured skew policy applied
-    (:func:`choose_skew_join_strategy`): same rows as a plain
-    ``left.join(right, on)`` under EVERY strategy (pytest-pinned) —
-    only the physical plan differs."""
-    if strategy == "auto":
-        strategy, _ = choose_skew_join_strategy(left, right, on)
+    (:func:`choose_skew_join_strategy` picks the strategy): same rows
+    as a plain ``left.join(right, on)`` under every strategy
+    (pytest-pinned) — only the physical plan differs."""
+    strategy, _ = choose_skew_join_strategy(left, right, on)
     keys = [on] if isinstance(on, str) else list(on)
     if strategy == "broadcast":
         return left.join(F.broadcast(right), on=keys)
     if strategy == "salted":
         return salted_join(left, right, on, salt_buckets=salt_buckets)
-    if strategy in ("plain", "aqe_skew"):
-        # aqe_skew IS the plain join — the split happens at runtime;
-        # the name records that the picker verified AQE is live.
-        return left.join(right, on=keys)
-    raise ValueError(f"unknown skew-join strategy {strategy!r}")
+    # plain and aqe_skew are the same join — the split happens at
+    # runtime; the name records that the picker verified AQE is live.
+    return left.join(right, on=keys)
 
 
 def key_prefilter_join(

@@ -317,11 +317,10 @@ def _gemm_closure_chunks(q_rows, dim: int, kind: str, pq, budget: int):
 
 def _gemm_pool_frame(
     lists: DataFrame,
-    q: DataFrame,
     dim: int,
     kind: str,
     keep: int,
-    q_rows=None,
+    q_rows,
     pq=None,
     closure_budget: int | None = None,
 ):
@@ -362,9 +361,9 @@ def _gemm_pool_frame(
     return k all-NULL rows for such a query; degenerate either way,
     and the divergence is pytest-pinned).
 
-    ``q_rows`` lets the caller hand over the (query_id, cell, qv, qn)
-    rows it already collected for scan pruning — the probe's serving
-    path must not pay a second driver job re-running the cell UDF.
+    ``q_rows`` are the (query_id, cell, qv, qn) rows the probe already
+    collected for scan pruning — the serving path must not pay a
+    second driver job re-running the cell UDF.
 
     Batches whose per-query closure state would exceed
     ``closure_budget`` (default :data:`GEMM_CLOSURE_BUDGET_BYTES`)
@@ -372,8 +371,6 @@ def _gemm_pool_frame(
     per chunk over ONLY that chunk's probed cells, results unioned —
     the caller's window cut merges the partial pools exactly, since
     every chunk emits them in the global tie order."""
-    if q_rows is None:
-        q_rows = q.select("query_id", "cell", "qv", "qn").collect()
     budget = GEMM_CLOSURE_BUDGET_BYTES if closure_budget is None else closure_budget
     _est, chunks = _gemm_closure_chunks(q_rows, dim, kind, pq, budget)
     if chunks is not None:
@@ -385,7 +382,6 @@ def _gemm_pool_frame(
             parts.append(
                 _gemm_pool_frame(
                     lists.filter(F.col("cell").isin(cells)),
-                    q,
                     dim,
                     kind,
                     keep,
@@ -1654,7 +1650,6 @@ def ivf_state_probe(
     state_name: str,
     k: int = 5,
     nprobe: int = 4,
-    prune_scan: bool = True,
     rescore_factor: int = 4,
     scoring: str = "auto",
 ) -> DataFrame:
@@ -1668,11 +1663,12 @@ def ivf_state_probe(
     exhaustively by design, so per-batch cost is ~(probed cells /
     n_centroids) of the index — a constant fraction, not flat in
     corpus size (unlike the LSH state's candidate probe). What the
-    state buys: no codebook fit, no corpus re-assignment, and — with
-    ``prune_scan`` (default) — the batch's probed cells are collected
-    (one tiny job over the small-by-contract query batch) and pushed
-    as an ``IN`` filter, so the bucketed scan PRUNES unprobed buckets
-    instead of reading the whole index and discarding at the join.
+    state buys: no codebook fit, no corpus re-assignment, and a pruned
+    scan: the batch's probed cells are collected (one tiny job over the
+    small-by-contract query batch) and pushed as an ``IN`` filter, so
+    the bucketed scan PRUNES unprobed buckets instead of reading the
+    whole index and discarding at the join (pytest-pinned: one probed
+    cell of a 4-bucket state reads 1 of 4 buckets).
     Tombstoned ids (:func:`ivf_state_delete`) are anti-joined out
     broadcast-side.
 
@@ -1744,21 +1740,17 @@ def ivf_state_probe(
     q = q_base.withColumn(
         "cell", F.explode(probe_cells_udf(cents, nprobe)(F.col("qv")))
     )
-    cell_rows: list = []
-    n_queries = None
-    probe_rows = None
-    if prune_scan:
-        # non-distinct collect (bounded: |batch| * nprobe rows) — the
-        # multiplicity feeds the auto pick's pairs estimate below.
-        # Deliberately WITHOUT the query vectors: every fold/arrow
-        # serving call would otherwise ship each vector nprobe times
-        # to the driver; the gemm path joins the vectors back from one
-        # per-distinct-query collect below, only when selected.
-        probe_rows = q.select("query_id", "cell").collect()
-        cell_rows = [r.cell for r in probe_rows]
-        n_queries = len({r.query_id for r in probe_rows})
-        cells = list(set(cell_rows))
-        lists = lists.filter(F.col("cell").isin(cells))
+    # non-distinct collect (bounded: |batch| * nprobe rows) — the
+    # multiplicity feeds the auto pick's pairs estimate below.
+    # Deliberately WITHOUT the query vectors: every fold/arrow serving
+    # call would otherwise ship each vector nprobe times to the driver;
+    # the gemm path joins the vectors back from one per-distinct-query
+    # collect below, only when selected.
+    probe_rows = q.select("query_id", "cell").collect()
+    cell_rows = [r.cell for r in probe_rows]
+    n_queries = len({r.query_id for r in probe_rows})
+    cells = list(set(cell_rows))
+    lists = lists.filter(F.col("cell").isin(cells))
     use_fold = scoring == "fold"
     use_gemm = False
     if scoring == "auto":
@@ -1770,9 +1762,7 @@ def ivf_state_probe(
         # 1000-query batch probing the same cells multiplies every
         # candidate row by queries-per-cell). pairs ~= pruned candidate
         # rows x avg queries per probed cell; the row count is one
-        # cheap scalar job over the bucket-pruned cell column. Without
-        # prune_scan the count would scan the WHOLE index, so auto
-        # conservatively keeps the Arrow path there.
+        # cheap scalar job over the bucket-pruned cell column.
         # ONE pairs-steps estimate (candidate rows x queries-per-cell
         # x dim) shared by every kind's pick, so the crossover constant
         # lives in exactly one place (round-10 review). The count job
@@ -1780,7 +1770,7 @@ def ivf_state_probe(
         # removing it), but the ADC pass gives it a real approx-stage
         # strategy to choose now.
         est_steps = None
-        if prune_scan and cell_rows:
+        if cell_rows:
             n_cand = lists.count()
             queries_per_cell = len(cell_rows) / max(len(cells), 1)
             est_steps = n_cand * queries_per_cell * max(dim, 1)
@@ -1790,10 +1780,7 @@ def ivf_state_probe(
             # bound |batch| * rescore_factor * k BY CONSTRUCTION, not
             # n_cand * queries_per_cell: pick it from the bound alone
             # (round-9 ADVICE).
-            if n_queries is not None:
-                use_fold = (
-                    n_queries * rescore_factor * k * max(dim, 1) <= 64_000_000
-                )
+            use_fold = n_queries * rescore_factor * k * max(dim, 1) <= 64_000_000
             use_gemm = est_steps is not None and est_steps > 64_000_000
         elif est_steps is not None:
             # Below the crossover the JVM fold skips the Python worker
@@ -1805,7 +1792,7 @@ def ivf_state_probe(
             use_gemm = not use_fold
     use_gemm = use_gemm or scoring == "gemm"
     gemm_rows = None
-    if use_gemm and probe_rows is not None:
+    if use_gemm:
         # rebuild the helper's (query_id, cell, qv, qn) rows from the
         # pruning collect + ONE per-distinct-query vector fetch (no
         # explode, no cell UDF — round-10 review: collecting vectors on
@@ -1826,7 +1813,7 @@ def ivf_state_probe(
         if use_gemm:
             pool_plan = (
                 _gemm_pool_frame(
-                    lists, q, dim, kind, rescore_factor * k, q_rows=gemm_rows,
+                    lists, dim, kind, rescore_factor * k, q_rows=gemm_rows,
                     pq=(
                         (_state_pq_books(spark, state_name), cents)
                         if kind == "pq"
@@ -1925,7 +1912,7 @@ def ivf_state_probe(
             )
         )
     if use_gemm:
-        scored = _gemm_pool_frame(lists, q, dim, "flat", k, q_rows=gemm_rows)
+        scored = _gemm_pool_frame(lists, dim, "flat", k, q_rows=gemm_rows)
     else:
         if use_fold:
             flat_expr = _dim_guard(
@@ -1956,78 +1943,30 @@ def ivf_state_probe(
 
 def ivf_state_delete(spark, state_name: str, ids) -> None:
     """Tombstone vectors out of the index (takedown/recrawl churn) —
-    the LSH state's deletion discipline verbatim: ids append to
+    the LSH state's deletion discipline verbatim
+    (``dedup._write_tombstones``): ids append to
     ``{state_name}_tombstones``, probes anti-join them out, the next
     :func:`ivf_state_compact` physically removes them. Same lossy-cast
     fail-fast contract as ``dedup.minhash_state_delete`` (the lists
     table's id column is ``neighbor_id``)."""
-    from hadoop_20_warehouse_fix_spark.operators.dedup import _lossy_cast_count
+    from hadoop_20_warehouse_fix_spark.operators.dedup import _write_tombstones
 
-    if not isinstance(ids, DataFrame):
-        ids = list(ids)
-        if not ids:
-            return
-        ids = spark.createDataFrame([(i,) for i in ids], ["id"])
     id_type = spark.table(f"{state_name}_lists").schema["neighbor_id"].dataType
-    bad = _lossy_cast_count(ids, id_type)
-    if bad:
-        raise ValueError(
-            f"ivf_state_delete: {bad} id(s) are NULL or do not cast "
-            f"LOSSLESSLY to the index id type {id_type.simpleString()} — "
-            "deletion would silently miss them or tombstone the wrong row"
-        )
-    # Orphan-proof create (see minhash_state_delete): a stranded
-    # warehouse directory from an interrupted earlier process would
-    # otherwise refuse the first delete with LOCATION_ALREADY_EXISTS.
-    from hadoop_20_warehouse_fix_spark.sources.writers import ensure_managed_creatable
-
-    ensure_managed_creatable(spark, f"{state_name}_tombstones")
-    (
-        ids.select(F.col("id").try_cast(id_type).alias("id"))
-        .distinct()
-        .write.mode("append")
-        .format("parquet")
-        .saveAsTable(f"{state_name}_tombstones")
-    )
+    _write_tombstones(spark, state_name, ids, "ivf_state_delete", id_type)
 
 
 def ivf_state_compact(spark, state_name: str) -> dict[str, tuple[int, int]]:
     """Compact the lists table (per-append file sets -> ~one file per
-    bucket), physically dropping tombstoned vectors — the shared
-    bucketed-table compaction engine (rename-aside swap, alternating
-    stable locations; see ``minhash_state_compact``). A quantized
-    state's full-vector side table compacts the same way (bucketed +
-    re-sorted by neighbor_id, tombstones physically dropped)."""
-    from hadoop_20_warehouse_fix_spark.operators.dedup import (
-        _state_tombstones,
-        compact_bucketed_table,
-    )
+    bucket), physically dropping tombstoned vectors — the shared state
+    compaction (``dedup._compact_state``: rename-aside swap,
+    alternating stable locations; see ``minhash_state_compact``). A
+    quantized state's full-vector side table compacts the same way
+    (bucketed + re-sorted by neighbor_id, tombstones physically
+    dropped)."""
+    from hadoop_20_warehouse_fix_spark.operators.dedup import _compact_state
 
-    m, kind = _state_meta(spark, state_name)
-    tomb = _state_tombstones(spark, state_name)
-    tomb_ids = tomb.select("id").distinct().persist() if tomb is not None else None
-    if tomb_ids is not None:
-        tomb_ids.count()
-    report = {
-        f"{state_name}_lists": compact_bucketed_table(
-            spark,
-            f"{state_name}_lists",
-            ["cell"],
-            m.num_buckets,
-            tomb_ids=tomb_ids,
-            tomb_col="neighbor_id",
-        )
-    }
+    _, kind = _state_meta(spark, state_name)
+    tables = {f"{state_name}_lists": ["cell"]}
     if kind != "none":
-        report[f"{state_name}_vectors"] = compact_bucketed_table(
-            spark,
-            f"{state_name}_vectors",
-            ["neighbor_id"],
-            m.num_buckets,
-            tomb_ids=tomb_ids,
-            tomb_col="neighbor_id",
-        )
-    if tomb_ids is not None:
-        spark.sql(f"DROP TABLE IF EXISTS {state_name}_tombstones")
-        tomb_ids.unpersist()
-    return report
+        tables[f"{state_name}_vectors"] = ["neighbor_id"]
+    return _compact_state(spark, state_name, tables, "neighbor_id")

@@ -140,34 +140,32 @@ def with_global_rank(
     df: DataFrame,
     cols: Sequence[Column | str],
     rank_name: str = "rank",
-    form: str = "auto",
-    crossover_rows: int = GLOBAL_RANK_CROSSOVER_ROWS,
-    known_count: int | None = None,
 ) -> DataFrame:
     """Attach a 1-based global rank in sort order — turns ordering into
     checkable data (the SortValidator idea: prove global order by
     content, ``SortValidator.java:93-97``).
 
-    ``form``:
-    - ``"single"`` — one ``row_number().over(orderBy)`` window. Every
-      row flows through ONE task (Spark warns); cheapest below the
-      measured crossover, the job-killer above it.
-    - ``"distributed"`` — the TotalOrderPartitioner +
+    The row count picks the physical form against
+    :data:`GLOBAL_RANK_CROSSOVER_ROWS`, read at call time (tests reach
+    each side by patching the constant):
+    - below it, ``single`` — one ``row_number().over(orderBy)`` window.
+      Every row flows through ONE task (Spark warns); cheapest below
+      the measured crossover, the job-killer above it.
+    - at or above it, ``distributed`` — the TotalOrderPartitioner +
       per-partition-offset shape: range-partition on the sort key,
       row_number WITHIN each partition in parallel, collect one row
       count per partition (P rows — bounded by cluster size, not data
       size), prefix-scan driver-side, broadcast the offsets back.
       Scale-safe; pays a persist + P-row collect + broadcast join.
-    - ``"auto"`` (default) — pick by ``crossover_rows`` using the
-      cheapest row-count available, in order: a caller-supplied
-      ``known_count`` (free), the optimized plan's statistics row count
-      (free — no job), else ``df.count()`` over a PERSISTED ``df`` so
-      the probe's scan is the same materialization the ranking then
-      reads (round-5 review: the unpersisted form scanned the upstream
-      plan twice — once to choose the physical form, once to rank — at
-      exactly the scales where the choice matters). The InputSampler
-      move (``M/lib/InputSampler.java:101``): sample cheaply, then
-      partition.
+
+    The count is the cheapest one available: the optimized plan's
+    statistics row count (free — no job), else ``df.count()`` over a
+    PERSISTED ``df`` so the probe's scan is the same materialization
+    the ranking then reads (round-5 review: the unpersisted form
+    scanned the upstream plan twice — once to choose the physical
+    form, once to rank — at exactly the scales where the choice
+    matters). The InputSampler move (``M/lib/InputSampler.java:101``):
+    sample cheaply, then partition.
 
     Cache lifetime of the persisted input and of the distributed form's
     range-partitioned frame: :func:`~..plans.cache.cache_scope`.
@@ -176,16 +174,12 @@ def with_global_rank(
     order rows uniquely for a deterministic rank (true for every
     caller; ties would make the rank partitioning-dependent, as any
     global row_number's tie order is)."""
-    if form not in ("auto", "single", "distributed"):
-        raise ValueError(f"form must be 'auto', 'single', or 'distributed', got {form!r}")
-    if form == "auto":
-        n = known_count if known_count is not None else _plan_row_count(df)
-        if n is None:
-            if _count_reruns_real_work(df):
-                df = persisted(df)
-            n = df.count()
-        form = "single" if n < crossover_rows else "distributed"
-    if form == "single":
+    n = _plan_row_count(df)
+    if n is None:
+        if _count_reruns_real_work(df):
+            df = persisted(df)
+        n = df.count()
+    if n < GLOBAL_RANK_CROSSOVER_ROWS:
         w = Window.orderBy(*cols)
         return df.withColumn(rank_name, F.row_number().over(w))
     part = persisted(df.repartitionByRange(*cols).withColumn("_pid", F.spark_partition_id()))

@@ -381,8 +381,8 @@ def corpus_remove_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical form (operators/dedup.py: remove_boilerplate_lines):
     line-DF aggregation over distinct (page, line) rows — bounded by
     line vocabulary, not corpus size — then a broadcast set + scan-fused
-    array filter; the documented 100 TB swap is an anti-join on exploded
-    lines. Pages left empty (all lines boilerplate) are dropped on both
+    array filter; past the operator's boilerplate-line cap it switches
+    itself to an anti-join on exploded lines. Pages left empty (all lines boilerplate) are dropped on both
     sides."""
     from hadoop_20_warehouse_fix_spark.operators.dedup import remove_boilerplate_lines
 

@@ -34,10 +34,11 @@ def sort_total_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     InputSampler): globally ordered output, proven by materialized rank.
 
     Scale note: Spark's orderBy range-partitions on sampled split points
-    (no single reducer). The rank comes from with_global_rank's AUTO
-    form — single window below the measured 2.4M-row crossover (cheap
-    at test scale), per-partition offsets above it (scale-safe at
-    100 TB); identical output, asserted in tests (round-5 brief #1)."""
+    (no single reducer). The rank comes from with_global_rank, which
+    picks its form from the row count — single window below the
+    measured 2.4M-row crossover (cheap at test scale), per-partition
+    offsets above it (scale-safe at 100 TB); identical output, asserted
+    in tests (round-5 brief #1)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_shipdate")
     return with_global_rank(li, ["l_shipdate", "l_orderkey", "l_linenumber"], "rank").select(
         "l_orderkey", "l_linenumber", "l_shipdate", F.col("rank").cast("long").alias("rank")

@@ -261,36 +261,21 @@ def badrecords_safe_cast(col, dtype: str):
     return c.try_cast(dtype)
 
 
-def badrecords_safe_udf(
-    fn: Callable, return_type, counter_name: str = "bad_records", engine: str = "pandas"
-):
+def badrecords_safe_udf(fn: Callable, return_type, counter_name: str = "bad_records"):
     """Wrap a Python fn so records that crash it yield NULL instead of
     failing the task — the SkipBadRecords capability without the
     binary-search dance (``SkipBadRecords.java:51``: we don't re-execute
     a narrowed range; we tolerate inline).
     Use with ``df.withColumn(..., safe(col)); df.filter(col.isNotNull())``.
 
-    ``engine="pandas"`` (default) ships rows in Arrow batches and loops
-    in-process per batch — no per-row (de)serialization round-trip, the
-    10-100x fast path for arbitrary Python. ``engine="python_row"`` is
-    the legacy row-at-a-time form, kept ONLY as an explicit escape hatch
-    (e.g. fn needs true per-row isolation semantics); it plans a
-    BatchEvalPython node and is the classic 100 TB throughput killer.
+    Rows ship in Arrow batches and ``fn`` runs per row inside a
+    ``try/except`` in-process per batch — per-record isolation without
+    the per-row (de)serialization round-trip of a row-at-a-time UDF
+    (a BatchEvalPython node, the classic 100 TB throughput killer).
+    ``fn`` sees the values a row UDF would hand it: SQL NULL as None,
+    timestamps as datetime, arrays as lists.
     For SQL-expressible transforms skip Python entirely:
     :func:`badrecords_safe_cast` / ``F.try_*``."""
-    if engine == "python_row":
-
-        @F.udf(return_type)
-        def safe_row(*args):
-            try:
-                return fn(*args)
-            except Exception:
-                return None
-
-        return safe_row
-    if engine != "pandas":
-        raise ValueError(f"engine must be 'pandas' or 'python_row', got {engine!r}")
-
     import numpy as np
     import pandas as pd
 

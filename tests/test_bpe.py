@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from hadoop_20_warehouse_fix_spark.operators import bpe
 from hadoop_20_warehouse_fix_spark.operators.bpe import (
     END_OF_WORD,
     _train_local,
@@ -83,15 +84,21 @@ def test_local_trainer_matches_naive_reference():
     assert len(want) >= 8  # the corpus supports a real merge sequence
 
 
-def test_train_strategies_and_partitionings_agree(spark):
+def _distributed(monkeypatch):
+    """Force the distributed trainer: every non-empty vocabulary is
+    over a zero local-word cap."""
+    monkeypatch.setattr(bpe, "BPE_MAX_LOCAL_WORDS", 0)
+
+
+def test_train_strategies_and_partitionings_agree(spark, monkeypatch):
     wc = _counts(PINNED_DOCS)
     want, _ = ref_train(wc, 10)
     df = spark.createDataFrame([(d,) for d in PINNED_DOCS], ["text"])
-    local = bpe_train(df, "text", 10, strategy="local")
-    dist1 = bpe_train(df.repartition(1), "text", 10, strategy="distributed")
-    dist7 = bpe_train(df.repartition(7), "text", 10, strategy="distributed")
-    auto = bpe_train(df, "text", 10)  # tiny vocab -> auto picks local
-    assert local == dist1 == dist7 == auto == want
+    local = bpe_train(df, "text", 10)  # tiny vocab -> local
+    _distributed(monkeypatch)
+    dist1 = bpe_train(df.repartition(1), "text", 10)
+    dist7 = bpe_train(df.repartition(7), "text", 10)
+    assert local == dist1 == dist7 == want
 
 
 def test_encode_reproduces_training_segmentation(spark):
@@ -153,7 +160,7 @@ def test_chunk_documents_bpe_windows(spark):
 
     docs = [(i, " ".join(PINNED_DOCS) + f" tail{i}") for i in range(3)] + [(9, "low")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    merges = bpe_train(df, "text", 8, strategy="local")
+    merges = bpe_train(df, "text", 8)
     enc = {r.doc_id: r.t for r in bpe_encode(df, "text", merges, "t").collect()}
     out = chunk_documents_bpe(df, "doc_id", "text", merges, max_tokens=7).collect()
     by_doc: dict[int, list] = {}
@@ -187,7 +194,7 @@ def test_pack_by_bpe_budget_boundary_semantics(spark):
     df = spark.createDataFrame(
         [(i, "low low low low") for i in range(10)], "doc_id long, text string"
     )
-    merges = bpe_train(df, "text", 4, strategy="local")
+    merges = bpe_train(df, "text", 4)
     n_tok = (
         df.select(bpe_token_count_column("text", merges).alias("n")).collect()[0].n
     )
@@ -202,7 +209,7 @@ def test_detokenize_inverts_encode(spark):
     df = spark.createDataFrame(
         [(0, "newest widest lower low"), (1, "low")], "doc_id long, text string"
     )
-    merges = bpe_train(df, "text", 10, strategy="local")
+    merges = bpe_train(df, "text", 10)
     out = bpe_encode(df, "text", merges, "t").select(
         "doc_id", detokenize_column("t").alias("back")
     )
@@ -219,7 +226,7 @@ def test_bpe_save_load_merges_roundtrip(spark):
     )
 
     df = spark.createDataFrame([(d,) for d in PINNED_DOCS], ["text"])
-    merges = bpe_train(df, "text", 10, strategy="local")
+    merges = bpe_train(df, "text", 10)
     try:
         bpe_save_merges(spark, merges, "bpe_merges_rt")
         assert bpe_load_merges(spark, "bpe_merges_rt") == merges
@@ -241,7 +248,7 @@ def test_capstone_budgets_in_real_tokens(spark):
     )
 
     docs = load_table(spark, SF_CORRECT, "documents").select("doc_id", "text")
-    merges = bpe_train(docs, "text", 20, strategy="local")
+    merges = bpe_train(docs, "text", 20)
     try:
         out = corpus_prepare_training_set(
             spark, SF_CORRECT, token_budget=800, tokenizer_merges=merges
@@ -273,7 +280,7 @@ def test_bpe_vocab_and_id_encoding(spark):
     )
 
     df = spark.createDataFrame([(d,) for d in PINNED_DOCS], ["text"])
-    merges = bpe_train(df, "text", 10, strategy="local")
+    merges = bpe_train(df, "text", 10)
     vocab = bpe_vocab(df, "text", merges)
     assert vocab[0] == UNK_TOKEN and END_OF_WORD in vocab
     assert len(vocab) == len(set(vocab))  # no duplicate ids
@@ -307,7 +314,7 @@ def test_unigram_lm_scores_in_domain_below_gibberish(spark):
     )
 
     train = spark.createDataFrame([(d,) for d in PINNED_DOCS * 3], ["text"])
-    merges = bpe_train(train, "text", 12, strategy="local")
+    merges = bpe_train(train, "text", 12)
     vocab = bpe_vocab(train, "text", merges)
     lp1 = unigram_lm_train(train, "text", merges, vocab)
     lp2 = unigram_lm_train(train.repartition(7), "text", merges, vocab)
@@ -329,7 +336,7 @@ def test_unigram_lm_scores_in_domain_below_gibberish(spark):
     assert got[0] < got[1], got  # in-domain scores strictly better
 
 
-def test_unicode_word_split_and_strategy_parity(spark):
+def test_unicode_word_split_and_strategy_parity(spark, monkeypatch):
     """Supplementary-plane (emoji), CJK, and combining-accent text:
     JVM split('') yields code points exactly like Python tuple(word),
     so local and distributed trainers stay byte-identical beyond the
@@ -337,8 +344,9 @@ def test_unicode_word_split_and_strategy_parity(spark):
     the two paths)."""
     docs = ["😀a 😀a 😀b 😀b 日本 日本 café café"]
     df = spark.createDataFrame([(d,) for d in docs], ["text"])
-    loc = bpe_train(df, "text", 6, strategy="local")
-    dist = bpe_train(df, "text", 6, strategy="distributed")
+    loc = bpe_train(df, "text", 6)
+    _distributed(monkeypatch)
+    dist = bpe_train(df, "text", 6)
     assert loc == dist and len(loc) == 6
     assert any("é" in a + b for a, b in loc)  # non-ASCII merges as symbols
 
@@ -349,7 +357,7 @@ def test_min_word_count_prunes_the_hapax_tail(spark):
     with those words removed."""
     docs = [("low low low low newest newest hapax1 hapax2 hapax3",)]
     df = spark.createDataFrame(docs, ["text"])
-    pruned = bpe_train(df, "text", 8, strategy="local", min_word_count=2)
+    pruned = bpe_train(df, "text", 8, min_word_count=2)
     wc = {w: c for w, c in _counts([docs[0][0]]).items() if c >= 2}
     want, _ = ref_train(wc, 8)
     assert pruned == want
@@ -374,13 +382,14 @@ def test_detokenize_survives_literal_marker_text(spark):
     assert out[1] == "x y z"  # whitespace runs collapse (documented)
 
 
-def test_distributed_trainer_storage_is_bounded(spark):
+def test_distributed_trainer_storage_is_bounded(spark, monkeypatch):
     """Round-8 review: per-iteration localCheckpoints used to pile up
     until GC. The explicit unpersist chain returns the persistent-RDD
     registry to its starting size when training ends."""
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
     df = spark.createDataFrame([(d,) for d in PINNED_DOCS], ["text"])
-    merges = bpe_train(df, "text", 10, strategy="distributed")
+    _distributed(monkeypatch)
+    merges = bpe_train(df, "text", 10)
     assert len(merges) == 10
     assert jsc.getPersistentRDDs().size() <= before  # nothing leaked

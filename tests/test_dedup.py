@@ -318,12 +318,14 @@ def test_dedup_lines_within_doc(spark):
     assert got == {1: "intro\nbody A\nbody B", 2: "x", 3: "only line"}
 
 
-def test_measured_strategy_helper(spark):
+def test_measured_strategy_helper(spark, monkeypatch):
     """Round-6 brief #5: the measure-then-pick probe idiom lives in ONE
     helper — persist, one-scalar count, cap rule — shared by
     repeated_spans / remove_boilerplate_lines / choose_near_dup_strategy.
-    The cap is inclusive (<= picks the small side) and the persisted
-    relation is registered in the open cache_scope."""
+    The cap is inclusive (<= picks the small side), read from
+    BROADCAST_PROBE_ROW_CAP at call time, and the persisted relation is
+    registered in the open cache_scope."""
+    from hadoop_20_warehouse_fix_spark.operators import dedup
     from hadoop_20_warehouse_fix_spark.operators.dedup import (
         measured_strategy,
         pick_by_scalar,
@@ -335,11 +337,13 @@ def test_measured_strategy_helper(spark):
     rel = spark.range(100).select(F.col("id").alias("fp"))
     spark.catalog.clearCache()
     with cache_scope() as held:
-        strat, out, n = measured_strategy(rel, "broadcast", "merge", cap=100)
+        monkeypatch.setattr(dedup, "BROADCAST_PROBE_ROW_CAP", 100)
+        strat, out, n = measured_strategy(rel, "broadcast", "merge")
         assert (strat, n) == ("broadcast", 100)
         assert len(held) == 1 and held[0] is out
         assert out.storageLevel.useMemory  # persisted for the winning branch
-        strat2, out2, n2 = measured_strategy(rel, "broadcast", "merge", cap=99)
+        monkeypatch.setattr(dedup, "BROADCAST_PROBE_ROW_CAP", 99)
+        strat2, out2, n2 = measured_strategy(rel, "broadcast", "merge")
         assert (strat2, n2) == ("merge", 100)
     assert not out.storageLevel.useMemory  # released with the scope
     assert cache_manager_empty(spark)
@@ -376,14 +380,14 @@ def test_remove_boilerplate_lines(spark):
     assert untouched[1] == "COOKIE BANNER\nunique one\nFOOTER"
 
 
-def test_remove_boilerplate_anti_strategy_equals_broadcast(spark):
+def test_remove_boilerplate_anti_strategy_equals_broadcast(spark, monkeypatch):
     """Round-5 brief #4: the left-anti fallback for oversized
     boilerplate sets is now code. Identical output to the broadcast
     form on the same corpus — including the adversarial all-lines-
     boilerplate doc, which must survive as EMPTY text, not vanish —
-    and auto flips to anti when the probe count exceeds the cap."""
-    import pytest as _pytest
-
+    and the probe flips to anti when its count exceeds
+    BROADCAST_PROBE_ROW_CAP."""
+    from hadoop_20_warehouse_fix_spark.operators import dedup
     from hadoop_20_warehouse_fix_spark.operators.dedup import remove_boilerplate_lines
 
     docs = spark.createDataFrame(
@@ -396,42 +400,29 @@ def test_remove_boilerplate_anti_strategy_equals_broadcast(spark):
         ],
         "doc_id long, text string",
     )
-    bc = {
-        r.doc_id: r.text
-        for r in remove_boilerplate_lines(
-            docs, "doc_id", "text", min_docs=3, strategy="broadcast"
-        ).collect()
-    }
-    anti = {
-        r.doc_id: r.text
-        for r in remove_boilerplate_lines(
-            docs, "doc_id", "text", min_docs=3, strategy="anti"
-        ).collect()
-    }
+    def run():
+        # the probe's persisted boiler relation is registered in the
+        # open scope (round-6 review: it used to leak for the session)
+        with cache_scope() as held:
+            out = remove_boilerplate_lines(docs, "doc_id", "text", min_docs=3)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            got = {r.doc_id: r.text for r in out.collect()}
+            assert len(held) == 1
+        assert cache_manager_empty(spark)
+        return got, plan
+
+    spark.catalog.clearCache()
+    # 2 boilerplate lines (HEAD, FOOT): under the default cap ->
+    # broadcast, a collected array filter with no anti join
+    bc, bc_plan = run()
+    assert "LeftAnti" not in bc_plan
+    # past the cap -> the anti plan (no collected boilerplate array)
+    monkeypatch.setattr(dedup, "BROADCAST_PROBE_ROW_CAP", 1)
+    anti, anti_plan = run()
+    assert "LeftAnti" in anti_plan
     assert anti == bc
     assert bc[3] == ""  # survived, emptied
     assert bc[4] == "free standing doc"
-    # auto past the cap -> the anti plan (no collected boilerplate array);
-    # the probe's persisted boiler relation is registered in the open
-    # scope (round-6 review: it used to leak for the session)
-    spark.catalog.clearCache()
-    with cache_scope() as held:
-        auto_anti = remove_boilerplate_lines(
-            docs, "doc_id", "text", min_docs=3, strategy="auto",
-            broadcast_max_lines=1,
-        )
-        assert {r.doc_id: r.text for r in auto_anti.collect()} == bc
-        assert len(held) == 1
-    assert cache_manager_empty(spark)
-    # explicit strategies never probe, never persist
-    with cache_scope() as held:
-        remove_boilerplate_lines(
-            docs, "doc_id", "text", min_docs=3, strategy="anti"
-        ).collect()
-    assert held == []
-    with _pytest.raises(ValueError):
-        remove_boilerplate_lines(docs, "doc_id", "text", strategy="huh")
-    spark.catalog.clearCache()
 
 
 def test_minhash_survivors_equal_exact_component_survivors(spark):
@@ -880,8 +871,7 @@ def test_corpus_prepare_training_set_with_mix(spark):
         spark.catalog.clearCache()
 
 
-@pytest.mark.parametrize("hash_impl", ["rolling", "expr"])
-def test_repeated_spans_and_removal_vs_python_reference(spark, hash_impl):
+def test_repeated_spans_and_removal_vs_python_reference(spark):
     """Exact-substring span dedup vs a brute-force python reference:
     a 60-char license block planted in 3 docs at different offsets is
     detected (every window inside it, all 3 docs) and removed, while
@@ -903,9 +893,7 @@ def test_repeated_spans_and_removal_vs_python_reference(spark, hash_impl):
     }
     W = 40
     df = spark.createDataFrame(list(texts.items()), ["doc_id", "text"])
-    spans = repeated_spans(
-        df, "doc_id", "text", window=W, stride=1, min_docs=2, hash_impl=hash_impl
-    ).collect()
+    spans = repeated_spans(df, "doc_id", "text", window=W, stride=1, min_docs=2).collect()
 
     # python reference: windows appearing in >= 2 distinct docs
     from collections import defaultdict
@@ -924,9 +912,7 @@ def test_repeated_spans_and_removal_vs_python_reference(spark, hash_impl):
 
     out = {
         r.doc_id: r.text
-        for r in remove_repeated_spans(
-            df, "doc_id", "text", window=W, stride=1, hash_impl=hash_impl
-        ).collect()
+        for r in remove_repeated_spans(df, "doc_id", "text", window=W, stride=1).collect()
     }
     assert out[4] == texts[4] and out[5] == texts[5]  # untouched, byte-identical
     for i in (1, 2, 3):
@@ -994,11 +980,9 @@ def test_repeated_spans_verify_defeats_karp_rabin_collision(spark):
     1024-char strings whose difference polynomial Π(x^2^i - 1) is
     divisible by 2^65 at ANY odd base, so their Karp-Rabin window
     hashes collide by construction. This test pins (a) the collision is
-    real in _karp_rabin_window_hashes, (b) verify=False would falsely
-    mark both unique docs as repeated (and removal would silently
-    delete them), and (c) the default verify=True re-groups candidates
-    by actual substring bytes and refuses — collision cost is wasted
-    verify work, never lost text."""
+    real in _karp_rabin_window_hashes, and (b) the verify step
+    re-groups candidates by actual substring bytes and refuses —
+    collision cost is wasted verify work, never lost text."""
     from hadoop_20_warehouse_fix_spark.operators.dedup import (
         _karp_rabin_window_hashes,
         remove_repeated_spans,
@@ -1015,13 +999,9 @@ def test_repeated_spans_verify_defeats_karp_rabin_collision(spark):
     h = {r.doc_id: r.h[0] for r in df.select("doc_id", rk(F.col("text")).alias("h")).collect()}
     assert h[1] == h[2], "adversarial pair must collide (the premise of the test)"
 
-    false_hits = repeated_spans(
-        df, "doc_id", "text", window=1024, verify=False
-    ).collect()
-    assert {r.doc_id for r in false_hits} == {1, 2}  # the collision bites
     assert repeated_spans(df, "doc_id", "text", window=1024).count() == 0
     out = {r.doc_id: r.text for r in remove_repeated_spans(df, "doc_id", "text", window=1024).collect()}
-    assert out == {1: a, 2: b}  # byte-identical survival under default verify
+    assert out == {1: a, 2: b}  # byte-identical survival
     spark.catalog.clearCache()
 
 
@@ -1268,6 +1248,49 @@ def test_minhash_state_delete_rejects_uncastable_ids(spark, tmp_path):
         # losslessly-castable ids are still accepted (numeric string -> long)
         minhash_state_delete(spark, state, ["5"])
         assert {r.id for r in spark.table(f"{state}_tombstones").collect()} == {5}
+    finally:
+        for t in ("bands", "shingles", "meta", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
+        spark.catalog.clearCache()
+
+
+def test_state_compact_failure_releases_snapshot_keeps_tombstones(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction whose table rewrite raises must release its
+    persisted tombstone-id snapshot (it used to stay cached for the
+    session) and keep ``{state}_tombstones``: the deletions are still
+    pending, and the next compaction applies them."""
+    from hadoop_20_warehouse_fix_spark.operators import dedup
+    from hadoop_20_warehouse_fix_spark.operators.dedup import (
+        minhash_state_compact,
+        minhash_state_delete,
+        minhash_state_write,
+    )
+
+    docs = load_table(spark, SF_CORRECT, "documents").select("doc_id", "text")
+    state = "mh_state_cmp_fail"
+    try:
+        minhash_state_write(
+            docs.filter(F.col("doc_id") < 20), "doc_id", "text", state,
+            num_buckets=2, path=str(tmp_path / "state"),
+        )
+        minhash_state_delete(spark, state, [3])
+        spark.catalog.clearCache()
+
+        def failing_rewrite(*args, **kwargs):
+            raise RuntimeError("rewrite failed")
+
+        monkeypatch.setattr(dedup, "compact_bucketed_table", failing_rewrite)
+        with pytest.raises(RuntimeError, match="rewrite failed"):
+            minhash_state_compact(spark, state)
+        assert cache_manager_empty(spark)
+        assert spark.catalog.tableExists(f"{state}_tombstones")
+        monkeypatch.undo()
+        minhash_state_compact(spark, state)
+        assert not spark.catalog.tableExists(f"{state}_tombstones")
+        assert spark.table(f"{state}_bands").filter(F.col("id") == 3).count() == 0
+        assert cache_manager_empty(spark)
     finally:
         for t in ("bands", "shingles", "meta", "tombstones"):
             spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")

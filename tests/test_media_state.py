@@ -205,6 +205,10 @@ def test_media_state_lifecycle_probe_equals_rerun(spark, tmp_path):
         assert after <= before
         assert _probe_set(media_state_probe(batch2, state)) == got2
 
+        # a bad id refuses under the media op's own name, writing nothing
+        with pytest.raises(ValueError, match="media_state_delete"):
+            media_state_delete(spark, state, ["not-an-id"])
+        assert not spark.catalog.tableExists(f"{state}_tombstones")
         # tombstone image 10: suppressed at probe immediately...
         media_state_delete(spark, state, [10])
         got_del = _probe_set(media_state_probe(batch2, state))

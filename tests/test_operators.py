@@ -852,15 +852,14 @@ def test_mix_then_split_coins_are_independent(spark):
     )
 
 
-def test_with_global_rank_auto_selects_form_and_forms_agree(spark):
+def test_with_global_rank_auto_selects_form_and_forms_agree(spark, monkeypatch):
     """InputSampler-style auto selection (round-5 brief #1): below the
     measured crossover the cheap single-window form runs; above it the
     scale-safe per-partition-offset form engages (visible as the
     offsets BroadcastHashJoin in the plan). Output is identical either
     way — the strategy choice is a physical detail, never a semantic
     one."""
-    import pytest as _pytest
-
+    from hadoop_20_warehouse_fix_spark.operators import sort
     from hadoop_20_warehouse_fix_spark.operators.sort import with_global_rank
     from hadoop_20_warehouse_fix_spark.plans.cache import cache_scope
     from hadoop_20_warehouse_fix_spark.plans.inspect import plan_summary
@@ -868,32 +867,23 @@ def test_with_global_rank_auto_selects_form_and_forms_agree(spark):
     df = spark.range(0, 5000).select(
         (F.col("id") * 37 % 4999).alias("k"), F.col("id")
     )
-    single = with_global_rank(df, ["k", "id"], form="single")
-    dist = with_global_rank(df, ["k", "id"], form="distributed")
     key = lambda r: (r.k, r.id, r.rank)  # noqa: E731
-    assert sorted(map(key, single.collect())) == sorted(map(key, dist.collect()))
 
-    # auto below the default 2.4M crossover -> single window (no join)
-    auto_small = with_global_rank(df, ["k", "id"], form="auto")
-    assert plan_summary(auto_small).num_broadcast_joins == 0
-    # auto above a forced crossover -> distributed offsets (one
-    # BroadcastHashJoin shipping the P-row offset relation)
-    auto_big = with_global_rank(df, ["k", "id"], form="auto", crossover_rows=1000)
-    assert plan_summary(auto_big).num_broadcast_joins == 1
-    assert sorted(map(key, auto_big.collect())) == sorted(map(key, single.collect()))
-    # caller-supplied row count (round-5 review): trusted as-is — no
-    # probe job, no persist — and drives the same crossover decision
-    auto_known = with_global_rank(
-        df, ["k", "id"], form="auto", known_count=10_000_000
-    )
-    assert plan_summary(auto_known).num_broadcast_joins == 1
-    # round-6 conditional-persist contract, cheap branch: a
+    # below the default 2.4M crossover -> single window (no join).
+    # Round-6 conditional-persist contract, cheap branch: a
     # scan+project plan's probe count is ~free (Catalyst prunes it), so
-    # auto counts WITHOUT persisting and the scope stays empty
+    # the probe counts WITHOUT persisting and the scope stays empty
     with cache_scope() as held:
-        auto_h = with_global_rank(df, ["k", "id"], form="auto")
-        assert plan_summary(auto_h).num_broadcast_joins == 0
+        single = with_global_rank(df, ["k", "id"])
+        assert plan_summary(single).num_broadcast_joins == 0
     assert held == []  # no persist for a count()-is-free plan
+    # above a lowered crossover -> distributed offsets (one
+    # BroadcastHashJoin shipping the P-row offset relation)
+    monkeypatch.setattr(sort, "GLOBAL_RANK_CROSSOVER_ROWS", 1000)
+    dist = with_global_rank(df, ["k", "id"])
+    assert plan_summary(dist).num_broadcast_joins == 1
+    assert sorted(map(key, single.collect())) == sorted(map(key, dist.collect()))
+    monkeypatch.undo()
 
     # expensive branch: an upstream aggregate means re-evaluating the
     # plan for the probe count is real work, so auto persists first and
@@ -908,14 +898,11 @@ def test_with_global_rank_auto_selects_form_and_forms_agree(spark):
     aliased = df.select(F.col("k").alias("SortKeyJoinLimit"), "id")
     assert _count_reruns_real_work(aliased) is False
     with cache_scope() as held:
-        auto_heavy = with_global_rank(heavy, ["n", "k"], form="auto")
+        auto_heavy = with_global_rank(heavy, ["n", "k"])
         assert len(held) == 1  # the probe's persisted input
         assert plan_summary(auto_heavy).num_broadcast_joins == 0  # still below crossover
         assert auto_heavy.count() == heavy.count()
     assert not held[0].storageLevel.useMemory  # released with the scope
-
-    with _pytest.raises(ValueError):
-        with_global_rank(df, ["k", "id"], form="bogus")
     spark.catalog.clearCache()  # distributed form persists its input
 
 
@@ -923,10 +910,12 @@ def test_skew_join_strategy_picker_and_equality(spark):
     """Round-8 brief #4: the measured skew policy (SCALING.md r8 —
     broadcast when the right fits, AQE skew split over explicit
     salting when live, salted as the AQE-off fallback, plain when no
-    skew) — and every strategy returns the same rows."""
+    skew) — and every strategy's physical join returns the same rows
+    as the plain join."""
     from hadoop_20_warehouse_fix_spark.operators.joins import (
         choose_skew_join_strategy,
         estimate_key_skew,
+        salted_join,
         skew_join,
     )
 
@@ -959,14 +948,15 @@ def test_skew_join_strategy_picker_and_equality(spark):
     s, _ = choose_skew_join_strategy(uniform, right, "k", broadcast_row_cap=100)
     assert s == "plain"
 
-    want = {(r.k, r.lv, r.rv) for r in left.join(right, "k").collect()}
-    for strategy in ("broadcast", "salted", "plain", "aqe_skew", "auto"):
-        got = {(r.k, r.lv, r.rv) for r in skew_join(left, right, "k", strategy=strategy).collect()}
-        assert got == want, strategy
-    import pytest
+    def rows(df):
+        return {(r.k, r.lv, r.rv) for r in df.collect()}
 
-    with pytest.raises(ValueError, match="unknown"):
-        skew_join(left, right, "k", strategy="yolo")
+    # plain and aqe_skew ARE the plain join; broadcast and salted are
+    # checked directly, and skew_join itself (broadcast here) agrees
+    want = rows(left.join(right, "k"))
+    assert rows(left.join(F.broadcast(right), "k")) == want
+    assert rows(salted_join(left, right, "k")) == want
+    assert rows(skew_join(left, right, "k")) == want
 
 
 def test_skew_join_broadcast_cap_respects_row_width(spark):
@@ -1184,7 +1174,8 @@ def test_session_dev_profile_makes_aqe_skew_split_fire(spark):
     thr_key = "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
     adv_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     bc_key = "spark.sql.autoBroadcastJoinThreshold"
-    old = {k: spark.conf.get(k) for k in (thr_key, adv_key, bc_key)}
+    sp_key = "spark.sql.shuffle.partitions"
+    old = {k: spark.conf.get(k) for k in (thr_key, adv_key, bc_key, sp_key)}
 
     left = spark.range(2_000_000).select(
         F.when(F.col("id") % 2 == 0, F.lit(0)).otherwise(F.col("id")).alias("k"),
@@ -1213,6 +1204,12 @@ def test_session_dev_profile_makes_aqe_skew_split_fire(spark):
         assert s2 is spark
         assert spark.conf.get(thr_key) == "8m"
         assert spark.conf.get(adv_key) == "2m"
+        # The split needs enough shuffle partitions to resolve the
+        # skew: at 4 the hot partition holds ~62.5% of the bytes and
+        # the median ~12.5% — exactly skewedPartitionFactor (5) times
+        # it, and Spark splits only ABOVE that factor. build_session
+        # above set it to the host's core count; 16 and 32 both split.
+        spark.conf.set(sp_key, "32")
         plan = executed_plan_of_join()
         assert "skew=true" in plan and "AQEShuffleRead skewed" in plan
         # prod defaults: same join, no split

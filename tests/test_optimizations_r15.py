@@ -84,9 +84,8 @@ def test_minhash_banding_bit_identical_to_prechange_values(spark):
 
 def test_simhash_bands_bit_identical_to_prechange_values(spark):
     """Same pin for the simhash builder (64 bit-sums + 4x16 packing
-    rebuilt as parsed SQL, ~0.77 s of construction removed), BOTH token
-    hashes — the md5 form is also replayed bit-for-bit by the DuckDB
-    oracle, the xxhash64 form only by this pin."""
+    rebuilt as parsed SQL, ~0.77 s of construction removed); its md5
+    token hash is also replayed bit-for-bit by the DuckDB oracle."""
     from hadoop_20_warehouse_fix_spark.operators.dedup import simhash_bands
 
     docs = spark.createDataFrame(_PIN_DOCS, ["doc_id", "text"])
@@ -98,15 +97,6 @@ def test_simhash_bands_bit_identical_to_prechange_values(spark):
         (1, 2739, 8368, 6424, 2072),
         (2, 2737, 8368, 6456, 2584),
         (3, 15608, 4052, 26318, 52619),
-    ]
-    gotx = sorted(
-        (r.id, r.band0, r.band1, r.band2, r.band3)
-        for r in simhash_bands(docs, "doc_id", "text", token_hash="xxhash64").collect()
-    )
-    assert gotx == [
-        (1, 19977, 41878, 1752, 16784),
-        (2, 19597, 58246, 33488, 49496),
-        (3, 41170, 13643, 9198, 38628),
     ]
 
 

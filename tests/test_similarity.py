@@ -851,11 +851,49 @@ def test_ivf_sq8_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
         spark.catalog.clearCache()
 
 
+def test_ivf_state_probe_prunes_unprobed_buckets(spark, tmp_path):
+    """The probe collects its batch's probed cells and pushes them into
+    the bucketed lists scan as an IN filter, so unprobed buckets are
+    never read: one query at nprobe=1 against a 4-bucket state scans 1
+    bucket of 4."""
+    from hadoop_20_warehouse_fix_spark.operators.similarity import (
+        ivf_state_probe,
+        ivf_state_write,
+    )
+
+    emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
+    state = "ivf_state_prune"
+    try:
+        ivf_state_write(
+            emb.filter(F.col("vec_id") >= 100), "vec_id", "embedding", state,
+            n_centroids=16, codebook="sample_md5", num_buckets=4,
+            path=str(tmp_path / "ivf"),
+        )
+        res = ivf_state_probe(
+            emb.filter(F.col("vec_id") == 0), "vec_id", "embedding", state,
+            k=5, nprobe=1,
+        )
+        assert len(res.collect()) == 5
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        scans = [
+            line for line in plan.splitlines()
+            if "FileScan" in line and f"{state}_lists" in line
+        ]
+        assert scans, plan
+        assert all("SelectedBucketsCount: 1 out of 4" in line for line in scans), scans
+    finally:
+        for t in ("lists", "codebook", "meta", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
+        spark.catalog.clearCache()
+
+
 def test_hashing_vectorize_oracle_replay(spark):
     """Round-9 brief #3: the hashing-trick vectorizer is built from
     engine-agnostic pieces (words_of tokenization, md5-hex bucket,
     ln(1+tf), unit norm) — so DuckDB replays the VECTORS themselves.
-    Compared in exploded (doc_id, pos, value) form, rounded 6."""
+    Compared in exploded (doc_id, pos, value) form, rounded 6, for the
+    default log/normalized vectors and for raw tf counts (where empty
+    docs keep their zero vector instead of normalizing to NULL)."""
     from tests.oracle import compare
 
     from hadoop_20_warehouse_fix_spark.functions.embeddings import hashing_vectorize
@@ -863,13 +901,16 @@ def test_hashing_vectorize_oracle_replay(spark):
     docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet").select(
         "doc_id", "text"
     )
-    vecs = hashing_vectorize(docs, dim=8, weighting="log", normalize=True)
-    exploded = (
-        vecs.filter(F.col("embedding").isNotNull())
-        .select("doc_id", F.posexplode("embedding").alias("pos", "v"))
-        .select("doc_id", "pos", F.round("v", 6).alias("v"))
-    )
-    oracle = """
+
+    def exploded(**kw):
+        return (
+            hashing_vectorize(docs, dim=8, **kw)
+            .filter(F.col("embedding").isNotNull())
+            .select("doc_id", F.posexplode("embedding").alias("pos", "v"))
+            .select("doc_id", "pos", F.round("v", 6).alias("v"))
+        )
+
+    counts = """
     WITH words AS (
       SELECT doc_id,
              unnest(list_filter(string_split_regex(lower(text), '\\s+'),
@@ -885,20 +926,25 @@ def test_hashing_vectorize_oracle_replay(spark):
       SELECT doc_id, bucket, CAST(count(*) AS DOUBLE) AS c
       FROM b GROUP BY 1, 2
     ), dense AS (
-      SELECT d.doc_id, g.i AS pos, ln(1 + coalesce(c.c, 0)) AS wgt
-      FROM (SELECT DISTINCT doc_id FROM documents) d
+      SELECT d.doc_id, g.i AS pos, coalesce(c.c, 0) AS tf
+      FROM (SELECT DISTINCT doc_id FROM documents WHERE text IS NOT NULL) d
       CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i) g
       LEFT JOIN counts c ON c.doc_id = d.doc_id AND c.bucket = g.i
-    ), normed AS (
+    )"""
+    log_normed = counts + """, normed AS (
       SELECT doc_id, pos,
-             sqrt(sum(wgt * wgt) OVER (PARTITION BY doc_id)) AS nrm,
-             wgt
+             sqrt(sum(ln(1 + tf) * ln(1 + tf)) OVER (PARTITION BY doc_id)) AS nrm,
+             ln(1 + tf) AS wgt
       FROM dense
     )
     SELECT doc_id, pos, round(wgt / nrm, 6) AS v
     FROM normed WHERE nrm > 0
     """
-    assert compare(exploded, oracle, SF_CORRECT) == []
+    raw_tf = counts + """
+    SELECT doc_id, pos, round(tf, 6) AS v FROM dense
+    """
+    assert compare(exploded(weighting="log", normalize=True), log_normed, SF_CORRECT) == []
+    assert compare(exploded(weighting="tf", normalize=False), raw_tf, SF_CORRECT) == []
 
 
 def test_hashing_vectorize_contract(spark, tmp_path):
@@ -916,7 +962,8 @@ def test_hashing_vectorize_contract(spark, tmp_path):
     )
 
     docs = spark.createDataFrame(
-        [(1, "alpha beta alpha"), (2, "alpha beta ALPHA"), (3, ""), (4, "   ")],
+        [(1, "alpha beta alpha"), (2, "alpha beta ALPHA"), (3, ""), (4, "   "),
+         (5, None)],
         "doc_id long, text string",
     )
     raw = {
@@ -929,6 +976,7 @@ def test_hashing_vectorize_contract(spark, tmp_path):
     assert raw[1] == raw[2]
     assert sum(raw[1]) == 3.0 and max(raw[1]) == 2.0  # tf counts
     assert raw[3] == [0.0] * 4 and raw[4] == [0.0] * 4
+    assert raw[5] is None  # NULL text -> NULL vector, never the zero vector
     import math
 
     logged = {
@@ -943,6 +991,7 @@ def test_hashing_vectorize_contract(spark, tmp_path):
         for r in hashing_vectorize(docs, dim=4).collect()
     }
     assert normed[3] is None and normed[4] is None  # zero vector -> NULL
+    assert normed[5] is None
     assert sum(x * x for x in normed[1]) == pytest.approx(1.0)
     with pytest.raises(ValueError, match="dim"):
         hashing_vectorize(docs, dim=0)
@@ -952,9 +1001,7 @@ def test_hashing_vectorize_contract(spark, tmp_path):
     # the loop closes: raw text -> vectors -> persisted quantized ANN.
     # The vectors are materialized to parquet between the stages — the
     # realistic artifact boundary (a 100 TB embedding set is written
-    # once, indexed from files), and the boundary Catalyst needs: the
-    # docstring'd seam where the HOF vector expression must not be
-    # inlined into the indexer's pandas-UDF argument.
+    # once, indexed from files).
     corpus_docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet").select(
         "doc_id", "text"
     )
@@ -1214,88 +1261,28 @@ def test_ivf_pq_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
 
 
 def test_hashing_vectorize_unseamed_composition_failure_pinned(spark, tmp_path):
-    """Round-10 brief #7: the docstring'd composition seam as an
-    executable pin. Feeding hashing_vectorize's UN-materialized output
-    straight into a pandas-UDF consumer makes Catalyst inline the whole
-    HOF pipeline into the UDF argument; Spark 4.1's codegen refuses the
-    inlined expression ([INTERNAL_ERROR] "Cannot generate code for
-    expression: assign_cell(...)") and the interpreted fallback refuses
-    it too. The parquet seam documented in hashing_vectorize's
-    docstring is the workaround (and the realistic artifact boundary).
-
-    xfail-style on the error SHAPE: if a Spark upgrade ever makes this
-    composition legal, pytest.raises fails with DID-NOT-RAISE — the
-    signal to delete the workaround prose (and this pin) in the same
-    commit."""
-    import pytest
-
+    """Round-10 brief #7: hashing_vectorize's UN-materialized output
+    feeds a pandas-UDF consumer (ivf_state_write's cell assignment)
+    directly — its vector column is a plain UDF result, so Catalyst
+    has no expression tree to inline into the consumer's argument and
+    no parquet seam is needed between vectorizing and indexing."""
     from hadoop_20_warehouse_fix_spark.functions.embeddings import hashing_vectorize
-    from hadoop_20_warehouse_fix_spark.operators.similarity import ivf_state_write
+    from hadoop_20_warehouse_fix_spark.operators.similarity import (
+        ivf_state_probe,
+        ivf_state_write,
+    )
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta token{i}") for i in range(40)],
         "doc_id long, text string",
     )
-    vecs = hashing_vectorize(docs, dim=8, engine="expr").select(
-        "doc_id", "embedding"
-    )
-    with pytest.raises(Exception) as exc_info:
-        ivf_state_write(vecs, "doc_id", "embedding", "seam_pin_state", n_centroids=2)
-    msg = str(exc_info.value)
-    assert "INTERNAL_ERROR" in msg and "assign_cell" in msg, (
-        "the composition seam failed with a DIFFERENT shape than the "
-        f"pinned INTERNAL_ERROR/assign_cell — re-adjudicate the "
-        f"workaround prose in hashing_vectorize: {msg[:500]}"
-    )
-    # the arrow engine (default) has NO seam: the same un-materialized
-    # composition builds a working index directly
-    from hadoop_20_warehouse_fix_spark.operators.similarity import ivf_state_probe
-
-    vecs_a = hashing_vectorize(docs, dim=8).select("doc_id", "embedding")
-    ivf_state_write(vecs_a, "doc_id", "embedding", "seam_free_state",
+    vecs = hashing_vectorize(docs, dim=8).select("doc_id", "embedding")
+    ivf_state_write(vecs, "doc_id", "embedding", "seam_free_state",
                     n_centroids=2, path=str(tmp_path / "seamfree"))
     got = ivf_state_probe(
-        vecs_a.limit(3), "doc_id", "embedding", "seam_free_state", k=2
+        vecs.limit(3), "doc_id", "embedding", "seam_free_state", k=2
     ).collect()
     assert got
-
-
-def test_hashing_vectorize_engines_agree(spark):
-    """Round-10: the arrow engine (default — ~170x the interpreted HOF
-    fold, SCALING.md r10) computes value-identical vectors to the expr
-    engine on the shipped corpus, including the zero-vector -> NULL
-    normalization posture and empty/whitespace docs."""
-    import math
-
-    import pytest
-
-    from hadoop_20_warehouse_fix_spark.functions.embeddings import hashing_vectorize
-
-    docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet").select(
-        "doc_id", "text"
-    ).limit(300).unionByName(
-        spark.createDataFrame(
-            [(900001, ""), (900002, "   "), (900003, None)],
-            "doc_id long, text string",
-        )
-    )
-    for kw in (dict(weighting="log", normalize=True),
-               dict(weighting="tf", normalize=False)):
-        a = {r.doc_id: r.embedding
-             for r in hashing_vectorize(docs, dim=16, engine="arrow", **kw).collect()}
-        e = {r.doc_id: r.embedding
-             for r in hashing_vectorize(docs, dim=16, engine="expr", **kw).collect()}
-        assert set(a) == set(e)
-        for d in a:
-            if a[d] is None or e[d] is None:
-                assert a[d] == e[d], (d, a[d], e[d])
-                continue
-            assert all(
-                math.isclose(x, y, rel_tol=0, abs_tol=1e-12)
-                for x, y in zip(a[d], e[d])
-            ), d
-    with pytest.raises(ValueError, match="engine"):
-        hashing_vectorize(docs, engine="gpu")
 
 
 def test_ivf_probe_gemm_null_padding_parity(spark, tmp_path):

@@ -137,11 +137,9 @@ def test_jdbc_select_query_construction():
 
 def test_badrecords_safe_udf(spark):
     df = spark.createDataFrame([("5",), ("0",), ("x",), ("4",)], ["s"])
-    for engine in ("pandas", "python_row"):
-        safe = badrecords_safe_udf(lambda s: 100 // int(s), "int", engine=engine)
-        out = df.select(safe("s").alias("v"))
-        assert out.filter(F.col("v").isNotNull()).count() == 2, engine
-        assert out.filter(F.col("v").isNull()).count() == 2, engine
+    safe = badrecords_safe_udf(lambda s: 100 // int(s), "int")
+    out = df.select(safe("s").alias("v"))
+    assert [r.v for r in out.collect()] == [20, None, None, 25]
 
 
 def test_badrecords_pandas_engine_handles_more_return_types(spark):
@@ -155,9 +153,9 @@ def test_badrecords_pandas_engine_handles_more_return_types(spark):
 
 
 def test_badrecords_default_engine_is_not_row_at_a_time(spark):
-    """The default path must plan an Arrow-batched ArrowEvalPython, never
-    the per-row BatchEvalPython (the 100 TB scan-path throughput killer —
-    only engine='python_row' may produce it)."""
+    """The wrapper must plan an Arrow-batched ArrowEvalPython, never
+    the per-row BatchEvalPython (the 100 TB scan-path throughput
+    killer)."""
     df = spark.createDataFrame([("5",), ("x",)], ["s"])
     safe = badrecords_safe_udf(lambda s: int(s), "int")
     plan = df.select(safe("s").alias("v"))._jdf.queryExecution().executedPlan().toString()
@@ -225,10 +223,10 @@ def test_nested_recordio_style_roundtrip(spark, tmp_path):
 
 
 def test_badrecords_engines_agree_on_null_and_typed_values(spark):
-    """The pandas engine must hand fn the same Python values the row
-    engine does: SQL NULL as None (not NaN/NaT), timestamps as
-    datetime, arrays as lists — a fn written against the row contract
-    (`if v is None`) must not change behavior with the default engine."""
+    """The Arrow-batched wrapper must hand fn the Python values a row
+    UDF would: SQL NULL as None (not NaN/NaT), timestamps as datetime,
+    arrays as lists — a fn written against the row contract
+    (`if v is None`) must see exactly those values."""
     import datetime
 
     df = spark.createDataFrame(
@@ -249,14 +247,9 @@ def test_badrecords_engines_agree_on_null_and_typed_values(spark):
             return f"bad-a:{type(a).__name__}"
         return f"{x * 2}|{t.year}|{sum(a)}"
 
-    outs = {}
-    for engine in ("pandas", "python_row"):
-        safe = badrecords_safe_udf(classify, "string", engine=engine)
-        outs[engine] = [
-            r.o for r in df.select(safe("x", "t", "a").alias("o")).collect()
-        ]
-    assert outs["pandas"] == outs["python_row"]
-    assert outs["pandas"] == ["2.0|2000|3", "null-x", "6.0|2001|3"]
+    safe = badrecords_safe_udf(classify, "string")
+    got = [r.o for r in df.select(safe("x", "t", "a").alias("o")).collect()]
+    assert got == ["2.0|2000|3", "null-x", "6.0|2001|3"]
 
 
 def test_fan_out_small_scan_probe_and_equality(spark, tmp_path):
