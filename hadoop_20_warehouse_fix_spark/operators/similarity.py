@@ -21,6 +21,11 @@ Two tiers:
   deterministic and oracle-gated value-for-value (the benched
   ``sim_ann_ivf_md5`` headline); the k-means-codebook variant is
   engine-specific and pytest-gated for recall against brute force.
+- ``ivf_state_write`` / ``ivf_state_probe``: the same index persisted
+  as bucketed tables (flat, SQ8 or PQ lists). The write assigns cells
+  with one BLAS matmul per Arrow batch — the 100 TB corpus pass — and
+  the probe picks its scorer from the measured batch size
+  (:data:`IVF_SCORER_CROSSOVER_STEPS`).
 """
 
 from __future__ import annotations
@@ -60,6 +65,33 @@ def with_norm(df: DataFrame, vec_col: str, out: str = "nrm") -> DataFrame:
     return df.withColumn(out, l2_norm(F.col(vec_col)))
 
 
+def _rank_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Cut (query_id, neighbor_id, cosine) candidates to each query's
+    top ``k`` in the global tie order (desc cosine NULLS LAST, asc
+    neighbor_id): (query_id, neighbor_id, cosine rounded 6, rank) —
+    the output schema of every top-k operator in this module."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round("cosine", 6).alias("cosine"),
+            F.col("rank").cast("int").alias("rank"),
+        )
+    )
+
+
+def _require_positive(op: str, **args: int) -> None:
+    """Refuse a ``k`` / ``nprobe`` below 1 by name: zero would quietly
+    return nothing, and a negative ``nprobe`` slices the probe order
+    from its END (``[:, :-1]`` probes K-1 cells)."""
+    for name, val in args.items():
+        if val < 1:
+            raise ValueError(f"{op}: {name} must be >= 1, got {val}")
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -73,6 +105,7 @@ def brute_force_topk(
     Scale: corpus side streams (one pass, no shuffle of vectors); the
     per-query top-k is a window over query_id — at huge |queries| swap
     the window for a per-partition heap aggregation."""
+    _require_positive("brute_force_topk", k=k)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
@@ -84,17 +117,7 @@ def brute_force_topk(
         .withColumn("cosine", cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _rank_top_k(scored, k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -143,6 +166,7 @@ def lsh_topk(
     recall, more candidates; tune per corpus density.
 
     Output schema matches brute_force_topk (rank within candidates)."""
+    _require_positive("lsh_topk", k=k)
     # Fail loudly on a dim mismatch: zip_with pads the shorter side with
     # NULLs, every hyperplane dot goes NULL, every sign CASE yields 0 —
     # ALL vectors silently collapse into bucket 0 and the "sub-linear
@@ -171,17 +195,7 @@ def lsh_topk(
         .withColumn("cosine", cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _rank_top_k(scored, k)
 
 
 def _codebook_matrix(cents: list[tuple[int, list[float]]]):
@@ -209,8 +223,8 @@ def _stack_valid(vs: pd.Series, dim: int):
 
 def assign_cell_udf(cents: list[tuple[int, list[float]]]):
     """Arrow-batched nearest-centroid assignment (one numpy matmul per
-    batch) — the 100 TB corpus-pass form, shared by ``ivf_topk``'s
-    vectorized branch and the persisted-state write/append. Cell ids
+    batch) — the 100 TB corpus-pass form of the persisted-state
+    write/append. Cell ids
     ARE corpus ids (bigint): an int32 return type overflows the Arrow
     conversion once ids exceed 2^31 (hit at the 1M-corpus measurement,
     SCALING.md round 4)."""
@@ -249,7 +263,8 @@ def probe_cells_udf(cents: list[tuple[int, list[float]]], nprobe: int):
 
 
 def pair_cosine_udf(dim: int):
-    """Arrow-batched row-wise cosine over candidate pairs."""
+    """Arrow-batched row-wise cosine over candidate pairs — the
+    rescore scorer of :func:`ivf_state_probe` past the crossover."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -324,20 +339,19 @@ def _gemm_pool_frame(
     pq=None,
     closure_budget: int | None = None,
 ):
-    """Blocked-GEMM scorer for the probe's approx stage at LARGE
-    batches (round 10 — the 500k-loop finding, SCALING.md r10): the
-    pair scorers cost ~1.5 µs per (query, candidate) PAIR, so a
-    1000-query batch probing most cells pays minutes for its tens of
-    millions of pairs. This form collects the query batch driver-side
-    (bounded by the serving contract — the probe already collects its
-    cells), closes it over ONE ``mapInPandas`` pass of the pruned
-    lists, scores each Arrow batch with one BLAS matmul per probed
-    cell (the ``brute_force_topk_np`` physics), and keeps a per-batch
-    partial top-``keep`` per query IN THE GLOBAL TIE ORDER
+    """Blocked-GEMM scorer for the probe's approx stage: flat and SQ8
+    batches past :data:`IVF_SCORER_CROSSOVER_STEPS`, and every PQ
+    batch (round 10 — the 500k-loop finding, SCALING.md r10): the JVM
+    fold costs ~1.5 µs per (query, candidate) PAIR, so a 1000-query
+    batch probing most cells pays minutes for its tens of millions of
+    pairs. This form collects the query batch driver-side (bounded by
+    the serving contract — the probe already collects its cells),
+    closes it over ONE ``mapInPandas`` pass of the pruned lists, scores
+    each Arrow batch with one BLAS matmul per probed cell, and keeps a
+    per-batch partial top-``keep`` per query IN THE GLOBAL TIE ORDER
     (desc cosine, asc neighbor_id — lexsort, so the caller's window
-    cut over the union is exactly the full ranking's). Pair-scorer
-    semantics preserved: degenerate/ragged queries emit nothing,
-    degenerate corpus rows never rank, self-pairs masked.
+    cut over the union is exactly the full ranking's). Fold semantics
+    preserved: degenerate corpus rows never rank, self-pairs masked.
 
     ``kind``: "sq8" reads (codes, scale, cn); "pq" reads (pq, cn) and
     requires ``pq=(books, cents)`` — the classic ADC lookup-table form
@@ -349,21 +363,19 @@ def _gemm_pool_frame(
     duplication alone would put ~128 MB in the task closure; per-query
     it is ~16 MB). Anything else reads the flat (cv, cn) lists.
 
-    NULL parity with the pair scorers (round-10 review): degenerate
-    corpus candidates (ragged / zero-norm) are EMITTED as NULL-cosine
-    rows — capped at ``keep`` per query per batch and ordered after
-    every finite row by ascending id, which is exactly where the
-    window's (desc NULLS LAST, asc id) order puts them — so a probe
-    whose cells hold fewer than k finite candidates returns the same
-    padded rows on every scoring path. Degenerate QUERIES (NULL /
-    ragged / zero-norm) emit NO rows — the documented
-    ``brute_force_topk_np`` posture (the expression paths instead
-    return k all-NULL rows for such a query; degenerate either way,
-    and the divergence is pytest-pinned).
+    NULL parity with the fold (round-10 review): degenerate corpus
+    candidates (ragged / zero-norm) are EMITTED as NULL-cosine rows —
+    capped at ``keep`` per query per batch and ordered after every
+    finite row by ascending id, which is exactly where the window's
+    (desc NULLS LAST, asc id) order puts them — so a probe whose cells
+    hold fewer than k finite candidates returns the same padded rows
+    on either scorer.
 
     ``q_rows`` are the (query_id, cell, qv, qn) rows the probe already
     collected for scan pruning — the serving path must not pay a
-    second driver job re-running the cell UDF.
+    second driver job re-running the cell UDF. They hold well-formed
+    queries only: :func:`ivf_state_probe` drops NULL / ragged /
+    zero- or non-finite-norm queries before either scorer.
 
     Batches whose per-query closure state would exceed
     ``closure_budget`` (default :data:`GEMM_CLOSURE_BUDGET_BYTES`)
@@ -393,10 +405,6 @@ def _gemm_pool_frame(
         return reduce(DataFrame.unionByName, parts)
     percell: dict = {}
     for r in q_rows:
-        # degenerate queries (NULL / ragged / zero- or non-finite
-        # norm) emit nothing — see the docstring
-        if r.qv is None or len(r.qv) != dim or not r.qn or not np.isfinite(r.qn):
-            continue
         percell.setdefault(r.cell, []).append((r.query_id, r.qv, r.qn))
     sq8 = kind == "sq8"
     is_pq = kind == "pq"
@@ -487,8 +495,7 @@ def _gemm_pool_frame(
                             code_mat[i] = np.frombuffer(bytes(c), dtype=np.uint8)
                             valid[i] = True
                     # np.isfinite: an inf/NaN stored norm must pad as
-                    # degenerate, not rank at 0.0 / vanish (the pair
-                    # scorers mask non-finite denominators to NULL)
+                    # degenerate, not rank at 0.0 / vanish
                     ok = valid & np.isfinite(cn) & (cn != 0.0)
                     deg_nbr = np.sort(nbr[~ok])
                     nbr, cn, code_mat = nbr[ok], cn[ok], code_mat[ok]
@@ -497,8 +504,8 @@ def _gemm_pool_frame(
                         approx = np.repeat(qcent[:, None], len(nbr), axis=1)
                         for mi in range(m_sub):
                             approx += lt[:, mi, :][:, code_mat[:, mi]]
-                        # one division by the qn*cn PRODUCT — the pair
-                        # scorers' exact float rounding
+                        # one division by the qn*cn PRODUCT — the
+                        # fold's exact float rounding
                         sims = approx / (qn[:, None] * cn[None, :])
                     else:
                         sims = np.zeros((len(qids), 0))
@@ -516,11 +523,11 @@ def _gemm_pool_frame(
                     if len(nbr):
                         sims = qmat @ mats.T
                         if sq8:
-                            # scale AFTER the raw int-code dot — the pair
-                            # scorer computes scale*dot(q,codes)/denom, and
+                            # scale AFTER the raw int-code dot — the fold
+                            # computes scale*dot(q,codes)/denom, and
                             # matching its operation order keeps near-tied
                             # candidates in the same float order across
-                            # fold/arrow/gemm (round-10 ADVICE: per-element
+                            # fold/gemm (round-10 ADVICE: per-element
                             # pre-scaling diverges in the last ulp and can
                             # reorder a tie before the pool cut)
                             sims = sims * scale[ok][None, :]
@@ -559,33 +566,6 @@ def _gemm_pool_frame(
     return lists.select(*cols).mapInPandas(
         run, schema="query_id long, neighbor_id long, cosine double"
     )
-
-
-def pair_cosine_q_udf(dim: int):
-    """Arrow-batched row-wise APPROXIMATE cosine over (query, int8-code)
-    pairs — the quantized-list scoring path of the IVF-SQ8 state:
-    ``cosine ≈ scale · dot(qv, codes) / (qn · cn)`` where ``codes`` are
-    the symmetric per-vector int8 codes (:func:`~..functions.embeddings.
-    quantize_int8` arithmetic) and ``cn`` is the TRUE norm of the
-    original vector — quantization error lives only in the numerator
-    (≤ scale/2 per element). Same NULL posture as
-    :func:`pair_cosine_udf`."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def pair_cosine_q(
-        qs: pd.Series, codes: pd.Series, scale: pd.Series, qn: pd.Series, cn: pd.Series
-    ) -> pd.Series:
-        qm, qok = _stack_valid(qs, dim)
-        cm, cok = _stack_valid(codes, dim)
-        sc = scale.astype("float64").to_numpy()
-        denom = qn.astype("float64").to_numpy() * cn.astype("float64").to_numpy()
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = sc * np.einsum("ij,ij->i", qm, cm) / denom
-        bad = ~qok | ~cok | ~np.isfinite(denom) | (denom == 0)
-        return pd.Series(pd.array(out, dtype="Float64")).mask(bad)
-
-    return pair_cosine_q
 
 
 def pq_train(
@@ -710,53 +690,6 @@ def pq_encode_udf(books: np.ndarray, cents: list[tuple[int, list[float]]]):
     return encode
 
 
-def pair_cosine_pq_udf(books: np.ndarray, cents: list[tuple[int, list[float]]]):
-    """Arrow-batched APPROXIMATE cosine over (query, cell, pq-code)
-    pairs: ``dot(q, v) ~= dot(q, coarse_centroid(cell)) + dot(q,
-    decoded_residual)`` — the coarse term is EXACT (centroids ride the
-    closure), only the residual is quantized. The residual gather is
-    numerically identical to the classic ADC lookup-table sum,
-    organized as one numpy gather + einsum per batch. As with SQ8,
-    ``cn`` is the TRUE stored norm, so error lives only in the
-    numerator."""
-    from pyspark.sql.functions import pandas_udf
-
-    m, _, sub = books.shape
-    dim = m * sub
-    cid_order, cmat = _codebook_matrix(cents)
-    cid_to_row = {int(c): i for i, c in enumerate(cid_order)}
-
-    @pandas_udf("double")
-    def pair_pq(
-        qs: pd.Series, cells: pd.Series, codes: pd.Series, qn: pd.Series, cn: pd.Series
-    ) -> pd.Series:
-        qm, qok = _stack_valid(qs, dim)
-        n = len(qm)
-        cok = np.zeros(n, dtype=bool)
-        code_mat = np.zeros((n, m), dtype=np.int64)
-        for i, c in enumerate(codes):
-            if c is not None and len(c) == m:
-                code_mat[i] = np.frombuffer(bytes(c), dtype=np.uint8)
-                cok[i] = True
-        rows = np.array(
-            [cid_to_row.get(int(c), -1) if c is not None else -1 for c in cells],
-            dtype=np.int64,
-        )
-        cok = cok & (rows >= 0)
-        approx = np.einsum("ij,ij->i", qm, cmat[np.clip(rows, 0, None)])
-        for mi in range(m):
-            # decoded residual sub-vectors, row-gathered
-            dec = books[mi][code_mat[:, mi]]  # (n, sub)
-            approx += np.einsum("ij,ij->i", qm[:, mi * sub : (mi + 1) * sub], dec)
-        denom = qn.astype("float64").to_numpy() * cn.astype("float64").to_numpy()
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = approx / denom
-        bad = ~qok | ~cok | ~np.isfinite(denom) | (denom == 0)
-        return pd.Series(pd.array(out, dtype="Float64")).mask(bad)
-
-    return pair_pq
-
-
 def ivf_codebook(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -785,6 +718,12 @@ def ivf_codebook(
     :func:`ivf_state_write` so a caller rebuilding a large index can
     raise it (or pass ``None`` for the uncapped pre-r10 behavior)."""
     import math
+
+    if codebook not in ("kmeans", "sample", "sample_md5"):
+        raise ValueError(
+            "ivf_codebook: codebook must be 'kmeans', 'sample' or "
+            f"'sample_md5', got {codebook!r}"
+        )
 
     def unit(v: list[float]) -> list[float]:
         nrm = math.sqrt(sum(x * x for x in v)) or 1.0
@@ -894,7 +833,6 @@ def ivf_topk(
     nprobe: int = 4,
     seed: int = 42,
     codebook: str = "kmeans",
-    assign: str = "sql",
     precomputed_codebook: list[tuple[int, list[float]]] | None = None,
     max_train: int | None = 100_000,
 ) -> DataFrame:
@@ -909,6 +847,8 @@ def ivf_topk(
       measured recall@5 0.52 vs 0.44 at K=16/nprobe=4 on sf0.01.
     - ``"sample"``: the ``n_centroids`` smallest ``xxhash64(id, seed)``
       corpus vectors — a seeded uniform draw, one pass, no ML fit.
+    - ``"sample_md5"``: the same draw ordered by ``md5(id)`` — the
+      whole search replays in any SQL engine with md5.
     Recall reality check (measured, SCALING.md): on ISOTROPIC synthetic
     embeddings recall tracks the scanned fraction (neighbors are barely
     closer than random), so the 0.8-recall operating point is
@@ -929,8 +869,16 @@ def ivf_topk(
     (construction params are then ignored). An empty list is rejected,
     same as an empty draw.
 
+    Cell assignment and candidate scoring are JVM folds with exact
+    left-to-right double arithmetic — the DuckDB oracle replays them
+    value-for-value. Per-row cost is K interpreted folds, the
+    bottleneck past ~50k vectors (37 s at 200k, K=16, dim=64; SCALING.md
+    round 3): a corpus that large belongs in :func:`ivf_state_write`,
+    whose Arrow assignment is one BLAS matmul per batch.
+
     Output schema matches :func:`brute_force_topk` (rank within probed
     cells)."""
+    _require_positive("ivf_topk", k=k, nprobe=nprobe)
     if precomputed_codebook is not None:
         cents = [(int(cid), [float(x) for x in cv]) for cid, cv in precomputed_codebook]
         if not cents:
@@ -977,8 +925,9 @@ def ivf_topk(
         # zip_with, same CAST, same left-to-right 0.0-seeded sum — so
         # the DuckDB oracle replay still matches bit-for-bit).
         # (Scale note: exact-replay literals are the CORRECTNESS-scale
-        # contract; a 100 TB corpus pass would broadcast the codebook to
-        # a vectorized Pandas UDF instead — same cells, BLAS assignment.)
+        # contract; a 100 TB corpus goes through ivf_state_write, whose
+        # assign_cell_udf broadcasts the codebook to a vectorized
+        # Pandas UDF — same cells, BLAS assignment.)
         import json as _json
         import math as _math
 
@@ -1010,18 +959,6 @@ def ivf_topk(
             )
         return F.expr("array(" + ", ".join(entries) + ")")
 
-    # Two assignment paths, same cells:
-    # - "sql" (default): codegen/interpreted JVM fold over inlined
-    #   centroid literals — exact left-to-right double arithmetic, fully
-    #   replayable by the DuckDB oracle. Per-row cost is K interpreted
-    #   folds; measured (SCALING.md round 3) this is the bottleneck past
-    #   ~50k vectors (37 s at 200k, K=16, dim=64).
-    # - "vectorized": broadcast the codebook to an Arrow-batched Pandas
-    #   UDF and assign via one numpy matmul per batch — 30x faster at
-    #   200k and the 100 TB corpus-pass design. argmax tie-break (first
-    #   max = smallest cid) matches the SQL form's (d DESC, cid ASC);
-    #   only sub-ulp dot differences (BLAS vs sequential summation) can
-    #   flip a borderline cell, so the ORACLE-gated query keeps "sql".
     # Corpus-side parallelism: the per-row K-fold cell assignment (and
     # the candidate cosine scoring downstream of the broadcast join) is
     # the compute-heavy pass, and a small/compacted corpus arriving as
@@ -1032,79 +969,43 @@ def ivf_topk(
     from hadoop_20_warehouse_fix_spark.catalog import fan_out_small_scan
 
     corpus = fan_out_small_scan(corpus)
-    if assign == "vectorized":
-        assign_cell = assign_cell_udf(cents)
-        probe_cells = probe_cells_udf(cents, nprobe)
-        c = with_norm(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-            "cv",
-            "cn",
-        ).withColumn("cell", assign_cell(F.col("cv")))
-        q = with_norm(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-            "qv",
-            "qn",
-        ).withColumn("cell", F.explode(probe_cells(F.col("qv"))))
-    else:
-        # ONE construction of the centroid-fold array, bound to the
-        # canonical name "_av" and reused by BOTH sides (a Column is
-        # just an expression tree over an unresolved attribute, so it
-        # rebinds per side). The array_min / sort_array wrappers are
-        # cheap Column ops over the shared subtree — generated code and
-        # results are identical to the per-side SQL strings they
-        # replace.
-        dist_arr = dist_entries_col()
-        c = (
-            with_norm(
-                corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")), "cv", "cn"
-            )
-            .withColumn("_av", F.col("cv"))
-            .withColumn("cell", F.array_min(dist_arr)["cid"])
-            .drop("_av")
+    # ONE construction of the centroid-fold array, bound to the
+    # canonical name "_av" and reused by BOTH sides (a Column is just
+    # an expression tree over an unresolved attribute, so it rebinds
+    # per side). The array_min / sort_array wrappers are cheap Column
+    # ops over the shared subtree — generated code and results are
+    # identical to the per-side SQL strings they replace.
+    dist_arr = dist_entries_col()
+    c = (
+        with_norm(
+            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")), "cv", "cn"
         )
-        q = (
-            with_norm(
-                queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")), "qv", "qn"
-            )
-            .withColumn("_av", F.col("qv"))
-            .withColumn(
-                "cell",
-                F.explode(
-                    F.transform(
-                        F.slice(F.sort_array(dist_arr), 1, int(nprobe)), lambda e: e["cid"]
-                    )
-                ),
-            )
-            .drop("_av")
+        .withColumn("_av", F.col("cv"))
+        .withColumn("cell", F.array_min(dist_arr)["cid"])
+        .drop("_av")
+    )
+    q = (
+        with_norm(
+            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")), "qv", "qn"
         )
-    cosine_expr = cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
-    if assign == "vectorized":
-        # Candidate scoring is the next interpreted-fold bottleneck
-        # after assignment (|corpus|*nprobe/K pairs) — batch it through
-        # Arrow as row-wise numpy dots. Sub-ulp BLAS-vs-fold differences
-        # apply as above; the oracle-gated query keeps the fold.
-        pair_cosine = pair_cosine_udf(len(cents[0][1]))
-        cosine_expr = pair_cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
-    # ONE candidate pipeline; only the cosine expression differs by
-    # branch (building the JVM form and discarding it in the vectorized
-    # branch was copy-paste divergence waiting to happen).
+        .withColumn("_av", F.col("qv"))
+        .withColumn(
+            "cell",
+            F.explode(
+                F.transform(
+                    F.slice(F.sort_array(dist_arr), 1, int(nprobe)), lambda e: e["cid"]
+                )
+            ),
+        )
+        .drop("_av")
+    )
     scored = (
         c.join(F.broadcast(q), on="cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_expr)
+        .withColumn("cosine", cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _rank_top_k(scored, k)
 
 
 def embedding_cosine_pairs(
@@ -1228,94 +1129,6 @@ def blocked_cosine_pairs(
         score, "id_a long, id_b long, cosine double"
     )
     return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
-def brute_force_topk_np(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Vectorized brute-force cosine top-k: the query matrix is closed
-    over (driver-side, bounded — queries are the small side) and each
-    Arrow batch of corpus vectors is scored against ALL queries with one
-    numpy matmul inside ``mapInPandas``; per-partition partial top-k
-    rides to a tiny global window.
-
-    The Arrow/numpy path for the math the JVM fold does per element —
-    per-batch BLAS instead of 64 interpreted ops per pair. Produces
-    IDENTICAL output to :func:`brute_force_topk` at round-6 precision
-    (asserted in tests); prefer this form when dim or |queries| grows,
-    the JVM form when Python workers are unavailable."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")).collect()
-    # Degenerate-input guard, mirroring the JVM cosine()'s posture:
-    # NULL / ragged / zero-norm QUERIES are dropped (the JVM form emits
-    # all-NULL cosines for them — degenerate either way), NULL / ragged
-    # / zero-norm CORPUS vectors are masked per batch below, and an
-    # empty usable query set returns an empty result instead of a
-    # numpy AxisError.
-    dim = next((len(r.qv) for r in q_rows if r.qv is not None), 0)
-    q_keep = [
-        r
-        for r in q_rows
-        if r.qv is not None and len(r.qv) == dim and any(float(x) != 0.0 for x in r.qv)
-    ]
-    if not q_keep:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    q_ids = np.array([r.qid for r in q_keep])
-    q_mat = np.array([r.qv for r in q_keep], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf["nid"].to_numpy()
-            arrs = list(pdf["cv"])
-            ok = np.fromiter(
-                (a is not None and len(a) == dim for a in arrs), dtype=bool, count=len(arrs)
-            )
-            if not ok.any():
-                continue
-            ids = ids[ok]
-            c = np.array([arrs[ix] for ix in np.flatnonzero(ok)], dtype=np.float64)
-            c_nrm = np.linalg.norm(c, axis=1, keepdims=True)
-            nz = c_nrm[:, 0] != 0.0
-            ids, c, c_nrm = ids[nz], c[nz], c_nrm[nz]
-            c /= c_nrm
-            sims = q_mat @ c.T  # (n_queries, batch)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                mask = ids != q_ids[qi]
-                nb_ids, nb_sims = ids[mask], sims[qi][mask]
-                if len(nb_ids) > k:
-                    # partial top-k per batch: order by (-sim, id) like the window
-                    sel = np.lexsort((nb_ids, -nb_sims))[:k]
-                else:
-                    sel = np.lexsort((nb_ids, -nb_sims))
-                out_q.extend([q_ids[qi]] * len(sel))
-                out_n.extend(nb_ids[sel])
-                out_s.extend(nb_sims[sel])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cosine": out_s})
-
-    partial = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
-    ).mapInPandas(score, "query_id long, neighbor_id long, cosine double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1643,6 +1456,16 @@ def ivf_state_append(new_df: DataFrame, id_col: str, vec_col: str, state_name: s
         )
 
 
+#: Crossover of :func:`ivf_state_probe`'s scorer pick, in scored
+#: pair-steps (query x candidate pairs x dim): ~1M pairs at dim 64.
+#: At or below it the JVM fold wins — it skips the Python worker
+#: spin-up, ~1.5 s of a small-batch serving call's wall; above it the
+#: fold's ~1.5 µs per pair loses to BLAS (SCALING.md r9/r10: a
+#: 1000-query probe over a 500k index, 127.5 s -> 5.6 s). Read at call
+#: time, so tests reach either side by patching it.
+IVF_SCORER_CROSSOVER_STEPS = 64_000_000
+
+
 def ivf_state_probe(
     queries: DataFrame,
     id_col: str,
@@ -1651,13 +1474,12 @@ def ivf_state_probe(
     k: int = 5,
     nprobe: int = 4,
     rescore_factor: int = 4,
-    scoring: str = "auto",
 ) -> DataFrame:
     """Serve a query batch against the persisted index. Semantics ≡
-    ``ivf_topk(corpus, queries, assign="vectorized")`` with the same
-    codebook (pytest-pinned), but the corpus side is the bucketed lists
-    table and the codebook/assignment corpus pass is never re-run —
-    the amortization a production index exists for.
+    ``ivf_topk(corpus, queries, precomputed_codebook=...)`` with the
+    state's codebook (pytest-pinned), but the corpus side is the
+    bucketed lists table and the codebook/assignment corpus pass is
+    never re-run — the amortization a production index exists for.
 
     Probe physics (honest version): IVF-Flat scans the PROBED lists
     exhaustively by design, so per-batch cost is ~(probed cells /
@@ -1685,46 +1507,44 @@ def ivf_state_probe(
     ranked below the pool cut by quantization noise is missed
     (measured recall delta in SCALING.md r9).
 
-    ``scoring`` (round 9 + round 10): ``"fold"`` = pure JVM expression
-    cosine — no Python worker spin-up, which is ~1.5 s of a
-    small-batch serving call's wall; ``"arrow"`` = the pandas-UDF PAIR
-    scorer (~1.5 µs/pair after the spin-up constant); ``"gemm"``
-    (round 10, the 500k-loop finding) = per-cell blocked BLAS matmul
-    over the pruned lists with the query batch closed over
-    (:func:`_gemm_pool_frame`) — matmul flops per pair, the only form
-    that survives LARGE batches (measured: a 1000-query batch over a
-    500k index spent 95 s pair-scoring 62.5M pairs; the GEMM pass does
-    the same work in seconds). ``"auto"`` (default) estimates scored
-    pairs from the bucket-pruned candidate count (one cheap scalar
-    job) and picks fold below the ~1M-pair crossover, gemm above it
-    (arrow remains the explicit middle option). On PQ states the gemm
-    form is the classic ADC lookup-table pass — m byte-gathers per
-    pair instead of a dim-wide dot (Jégou 2011 §IV); fold governs only
-    the rescore stage there. All paths NULL/skip degenerate pairs
-    identically and share the global tie order (pytest-pinned
-    equality).
+    The scorer is picked from the batch against
+    :data:`IVF_SCORER_CROSSOVER_STEPS`; the caller has no say:
+
+    - approx stage of flat and SQ8 states: estimated pair-steps
+      (bucket-pruned candidate rows x queries per probed cell x dim —
+      one cheap scalar job) at or below the constant take the JVM-fold
+      cosine, above it the blocked-GEMM pass (:func:`_gemm_pool_frame`,
+      matmul flops per pair). An empty batch takes the fold.
+    - approx stage of PQ states: always the ADC lookup-table pass in
+      :func:`_gemm_pool_frame` (m byte-gathers per pair, Jégou 2011
+      §IV) — PQ has no fold form, so no estimate job runs.
+    - rescore stage (SQ8 and PQ): the pool bound |batch| ·
+      rescore_factor · k · dim at or below the constant takes the fold,
+      above it the Arrow pair scorer (:func:`pair_cosine_udf`).
+
+    Every side shares the global tie order and NULL-pads degenerate
+    corpus candidates identically (pytest-pinned equality). Degenerate
+    QUERIES — NULL, ragged, zero- or non-finite-norm — are dropped
+    before either scorer and return no rows.
 
     Output schema matches :func:`ivf_topk` / :func:`brute_force_topk`."""
-    from hadoop_20_warehouse_fix_spark.operators.dedup import _state_tombstones
+    from hadoop_20_warehouse_fix_spark.operators.dedup import (
+        _state_tombstones,
+        pick_by_scalar,
+    )
 
+    _require_positive(
+        "ivf_state_probe", k=k, nprobe=nprobe, rescore_factor=rescore_factor
+    )
     spark = queries.sparkSession
-    if rescore_factor < 1:
-        raise ValueError(f"rescore_factor must be >= 1, got {rescore_factor}")
-    if scoring not in ("auto", "arrow", "fold", "gemm"):
-        raise ValueError(
-            f"scoring must be 'auto', 'arrow', 'fold', or 'gemm', got {scoring!r}"
-        )
     cents = _state_codebook(spark, state_name)
     # dim comes from the codebook the probe collects anyway — reading
-    # the meta table added a whole extra job per serving call; the
-    # quantized flag rides the lists schema itself (codes column), so
-    # this stays meta-free too
+    # the meta table added a whole extra job per serving call
     dim = len(cents[0][1])
     _check_state_dim(queries, vec_col, dim, "ivf_state_probe")
     lists = spark.table(f"{state_name}_lists")
     # quantization kind rides the lists schema itself — meta-free probe
     kind = "sq8" if "codes" in lists.columns else ("pq" if "pq" in lists.columns else "none")
-    quantized = kind != "none"
     tomb = _state_tombstones(spark, state_name)
     if tomb is not None:
         lists = lists.join(
@@ -1732,213 +1552,112 @@ def ivf_state_probe(
             "neighbor_id",
             "left_anti",
         )
+    # Degenerate queries drop at the door, before either scorer: the
+    # fold would answer them with k all-NULL rows and the gemm pass
+    # with none, so the answer would hinge on the batch size. NaN
+    # sorts above +inf in Spark, so `< inf` refuses it too.
     q_base = with_norm(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
         "qv",
         "qn",
-    )
+    ).filter((F.size("qv") == dim) & (F.col("qn") > 0) & (F.col("qn") < float("inf")))
     q = q_base.withColumn(
         "cell", F.explode(probe_cells_udf(cents, nprobe)(F.col("qv")))
     )
     # non-distinct collect (bounded: |batch| * nprobe rows) — the
-    # multiplicity feeds the auto pick's pairs estimate below.
-    # Deliberately WITHOUT the query vectors: every fold/arrow serving
-    # call would otherwise ship each vector nprobe times to the driver;
-    # the gemm path joins the vectors back from one per-distinct-query
-    # collect below, only when selected.
+    # multiplicity feeds the pairs estimate below. Deliberately WITHOUT
+    # the query vectors: every fold serving call would otherwise ship
+    # each vector nprobe times to the driver; the gemm pass joins the
+    # vectors back from one per-distinct-query collect below.
     probe_rows = q.select("query_id", "cell").collect()
     cell_rows = [r.cell for r in probe_rows]
     n_queries = len({r.query_id for r in probe_rows})
     cells = list(set(cell_rows))
     lists = lists.filter(F.col("cell").isin(cells))
-    use_fold = scoring == "fold"
-    use_gemm = False
-    if scoring == "auto":
-        # Measured pick (SCALING.md r9): the Arrow pair scorer costs a
-        # ~1.5 s Python-worker spin-up CONSTANT per serving call but
-        # ~40 ns/pair after; the JVM fold has no constant but the
-        # interpreted HOF costs ~1.5 us/pair at dim 64. Crossover ~1M
-        # scored PAIRS — pairs, not candidate rows (round-9 review: a
-        # 1000-query batch probing the same cells multiplies every
-        # candidate row by queries-per-cell). pairs ~= pruned candidate
-        # rows x avg queries per probed cell; the row count is one
-        # cheap scalar job over the bucket-pruned cell column.
-        # ONE pairs-steps estimate (candidate rows x queries-per-cell
-        # x dim) shared by every kind's pick, so the crossover constant
-        # lives in exactly one place (round-10 review). The count job
-        # runs for PQ too: it decided nothing in r9 (hence the ADVICE
-        # removing it), but the ADC pass gives it a real approx-stage
-        # strategy to choose now.
-        est_steps = None
-        if cell_rows:
-            n_cand = lists.count()
-            queries_per_cell = len(cell_rows) / max(len(cells), 1)
-            est_steps = n_cand * queries_per_cell * max(dim, 1)
-        if kind == "pq":
-            # PQ has no JVM-expression approx form, so use_fold governs
-            # ONLY the rescore stage — whose pair count is the pool
-            # bound |batch| * rescore_factor * k BY CONSTRUCTION, not
-            # n_cand * queries_per_cell: pick it from the bound alone
-            # (round-9 ADVICE).
-            use_fold = n_queries * rescore_factor * k * max(dim, 1) <= 64_000_000
-            use_gemm = est_steps is not None and est_steps > 64_000_000
-        elif est_steps is not None:
-            # Below the crossover the JVM fold skips the Python worker
-            # spin-up; past it the Arrow PAIR scorer would still pay
-            # ~1.5 µs/pair (round 10, measured at 500k x 1000 queries:
-            # 95 s), so big batches flip straight to the blocked-GEMM
-            # scorer — ~matmul flops per pair
-            use_fold = est_steps <= 64_000_000
-            use_gemm = not use_fold
-    use_gemm = use_gemm or scoring == "gemm"
-    gemm_rows = None
-    if use_gemm:
+    cap = IVF_SCORER_CROSSOVER_STEPS
+    if kind == "pq":
+        approx = "gemm"
+    elif cell_rows:
+        # pairs, not candidate rows (round-9 review: a 1000-query batch
+        # probing the same cells multiplies every candidate row by
+        # queries-per-cell); the row count is one cheap scalar job over
+        # the bucket-pruned cell column
+        steps = lists.count() * len(cell_rows) / len(cells) * dim
+        approx = pick_by_scalar(steps, cap, "fold", "gemm")
+    else:
+        approx = "fold"
+    keep = k if kind == "none" else rescore_factor * k
+    if approx == "gemm":
         # rebuild the helper's (query_id, cell, qv, qn) rows from the
         # pruning collect + ONE per-distinct-query vector fetch (no
-        # explode, no cell UDF — round-10 review: collecting vectors on
-        # the exploded frame shipped each one nprobe times, on every
-        # probe, even the fold/arrow ones that never use them)
+        # explode, no cell UDF — round-10 review)
         qmap = {r.query_id: r for r in q_base.collect()}
         gemm_rows = [
             _GemmQRow(r.query_id, r.cell, qmap[r.query_id].qv, qmap[r.query_id].qn)
             for r in probe_rows
         ]
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    def _dim_guard(expr):
-        # NULL-parity with the Arrow scorer, which NULLs ragged rows: a
-        # mixed-width query batch must not silently truncate the fold
-        return F.when((F.size(F.col("qv")) == dim), expr)
-
-    if quantized:
-        if use_gemm:
-            pool_plan = (
-                _gemm_pool_frame(
-                    lists, dim, kind, rescore_factor * k, q_rows=gemm_rows,
-                    pq=(
-                        (_state_pq_books(spark, state_name), cents)
-                        if kind == "pq"
-                        else None
-                    ),
-                )
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= rescore_factor * k)
-                .select("query_id", "neighbor_id")
-            )
-            approx_expr = None
-        elif kind == "pq":
-            # PQ pair-Arrow approx (small batches; the large-batch ADC
-            # pass lives in the gemm branch above; use_fold still
-            # governs only the rescore)
-            approx_expr = pair_cosine_pq_udf(
-                _state_pq_books(spark, state_name), cents
-            )(F.col("qv"), F.col("cell"), F.col("pq"), F.col("qn"), F.col("cn"))
-        elif use_fold:
-            denom = F.col("qn") * F.col("cn")
-            approx_expr = _dim_guard(
-                F.when(
-                    denom != 0,
-                    F.col("scale") * dot(F.col("qv"), F.col("codes")) / denom,
-                )
-            )
-        else:
-            approx = pair_cosine_q_udf(dim)
-            approx_expr = approx(
-                F.col("qv"), F.col("codes"), F.col("scale"), F.col("qn"), F.col("cn")
-            )
-        if approx_expr is not None:
-            pool_plan = (
-                lists.join(F.broadcast(q), on="cell")
-                .filter(F.col("neighbor_id") != F.col("query_id"))
-                .withColumn("cosine", approx_expr)
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= rescore_factor * k)
-                .select("query_id", "neighbor_id")
-            )
-        # Bounded collect (the documented serving idiom): the pool is
-        # <= |batch| * rescore_factor * k pairs BY CONSTRUCTION — the
-        # window already cut it. Collecting once (a) yields the id
-        # list the vectors fetch pushes down as an IN filter and (b)
-        # re-seeds the rescore join from a local relation, so the
-        # expensive approx scan runs exactly once and the returned
-        # plan stays lazy with no persist lifecycle to manage.
-        pool_rows = pool_plan.collect()
-        pool = spark.createDataFrame(pool_rows, pool_plan.schema)
-        cand_ids = list({r.neighbor_id for r in pool_rows})
-        vectors_tbl = spark.table(f"{state_name}_vectors")
-        if len(cand_ids) > 2048:
-            # a multi-thousand-literal IN list costs more in plan
-            # compilation than it saves in pruning (round 10, measured
-            # 16.6 s at 19.5k ids on the 500k loop): keep row-group
-            # pruning via the coarse id RANGE, exactness via a
-            # broadcast join against the id set
-            ids_df = spark.createDataFrame(
-                [(int(i),) for i in cand_ids], "neighbor_id long"
-            )
-            vecs = (
-                vectors_tbl.filter(
-                    F.col("neighbor_id").between(min(cand_ids), max(cand_ids))
-                )
-                .join(F.broadcast(ids_df), "neighbor_id")
-                .dropDuplicates(["neighbor_id"])
-            )
-        else:
-            vecs = (
-                vectors_tbl.filter(F.col("neighbor_id").isin(cand_ids))
-                # appends re-add a vector row per batch; the fetch
-                # needs one row per id
-                .dropDuplicates(["neighbor_id"])
-            )
-        if use_fold:
-            exact_expr = _dim_guard(
-                cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
-            )
-        else:
-            exact = pair_cosine_udf(dim)
-            exact_expr = exact(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
-        scored = (
-            pool.join(vecs, "neighbor_id")
-            .join(F.broadcast(q_base), "query_id")
-            .withColumn("cosine", exact_expr)
-            .select("query_id", "neighbor_id", "cosine")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round("cosine", 6).alias("cosine"),
-                F.col("rank").cast("int").alias("rank"),
-            )
-        )
-    if use_gemm:
-        scored = _gemm_pool_frame(lists, dim, "flat", k, q_rows=gemm_rows)
+        pq = (_state_pq_books(spark, state_name), cents) if kind == "pq" else None
+        scored = _gemm_pool_frame(lists, dim, kind, keep, q_rows=gemm_rows, pq=pq)
     else:
-        if use_fold:
-            flat_expr = _dim_guard(
-                cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
+        if kind == "sq8":
+            denom = F.col("qn") * F.col("cn")
+            approx_expr = F.when(
+                denom != 0, F.col("scale") * dot(F.col("qv"), F.col("codes")) / denom
             )
         else:
-            pair_cosine = pair_cosine_udf(dim)
-            flat_expr = pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            )
+            approx_expr = cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
         scored = (
             lists.join(F.broadcast(q), on="cell")
             .filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("cosine", flat_expr)
+            .withColumn("cosine", approx_expr)
             .select("query_id", "neighbor_id", "cosine")
         )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
+    if kind == "none":
+        return _rank_top_k(scored, k)
+    # Bounded collect (the documented serving idiom): the pool is
+    # <= |batch| * rescore_factor * k pairs BY CONSTRUCTION — the
+    # window already cut it. Collecting once (a) yields the id list
+    # the vectors fetch pushes down as an IN filter and (b) re-seeds
+    # the rescore join from a local relation, so the expensive approx
+    # scan runs exactly once and the returned plan stays lazy with no
+    # persist lifecycle to manage.
+    pool_plan = _rank_top_k(scored, keep).select("query_id", "neighbor_id")
+    pool_rows = pool_plan.collect()
+    pool = spark.createDataFrame(pool_rows, pool_plan.schema)
+    cand_ids = list({r.neighbor_id for r in pool_rows})
+    vectors_tbl = spark.table(f"{state_name}_vectors")
+    if len(cand_ids) > 2048:
+        # a multi-thousand-literal IN list costs more in plan
+        # compilation than it saves in pruning (round 10, measured
+        # 16.6 s at 19.5k ids on the 500k loop): keep row-group
+        # pruning via the coarse id RANGE, exactness via a broadcast
+        # join against the id set
+        ids_df = spark.createDataFrame([(int(i),) for i in cand_ids], "neighbor_id long")
+        vecs = (
+            vectors_tbl.filter(F.col("neighbor_id").between(min(cand_ids), max(cand_ids)))
+            .join(F.broadcast(ids_df), "neighbor_id")
+            .dropDuplicates(["neighbor_id"])
         )
+    else:
+        vecs = (
+            vectors_tbl.filter(F.col("neighbor_id").isin(cand_ids))
+            # appends re-add a vector row per batch; the fetch needs
+            # one row per id
+            .dropDuplicates(["neighbor_id"])
+        )
+    args = (F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
+    exact_expr = (
+        cosine(*args)
+        if pick_by_scalar(n_queries * keep * dim, cap, "fold", "arrow") == "fold"
+        else pair_cosine_udf(dim)(*args)
     )
+    scored = (
+        pool.join(vecs, "neighbor_id")
+        .join(F.broadcast(q_base), "query_id")
+        .withColumn("cosine", exact_expr)
+        .select("query_id", "neighbor_id", "cosine")
+    )
+    return _rank_top_k(scored, k)
 
 
 def ivf_state_delete(spark, state_name: str, ids) -> None:

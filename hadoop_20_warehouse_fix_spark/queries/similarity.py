@@ -111,19 +111,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, emb.filter(F.col("vec_id") < 10), k=5, n_centroids=16, nprobe=4)
 
 
-@query("sim_cosine_topk_np", oracle=_COSINE_TOPK_ORACLE)
-def sim_cosine_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized (Arrow + numpy matmul) brute-force cosine top-k — the
-    pandas-UDF fast path for vector math. Exact: same oracle as the JVM
-    sim_cosine_topk (matmul summation order vs sequential fold agree at
-    round-6 on this corpus — verified value-identical at sf0.01/sf0.1;
-    equality also asserted in tests at 1e-6)."""
-    from hadoop_20_warehouse_fix_spark.operators.similarity import brute_force_topk_np
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return brute_force_topk_np(emb, emb.filter(F.col("vec_id") < 10), k=5)
-
-
 @query(
     "emb_quantize_int8",
     oracle="""
@@ -274,34 +261,6 @@ def sim_ann_ivf_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sim_ann_ivf_vec", oracle=_IVF_MD5_ORACLE)
-def sim_ann_ivf_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB IVF path under the SAME oracle as sim_ann_ivf_md5:
-    identical md5 codebook, but cell assignment and candidate scoring
-    run as Arrow-batched numpy matmuls (broadcast codebook Pandas UDFs)
-    instead of JVM folds — parity at 200k vectors, 2.6x at 1M, with
-    the gap growing linearly in corpus size (re-measured fresh-plan in
-    SCALING.md round 4, correcting round 3's 6.8x-at-200k figure).
-    Tie policy is aligned by construction and
-    tests/test_similarity.py asserts result equality with the fold
-    path, so the exact-replay oracle gates BOTH implementations.
-    Portability caveat: BLAS-vs-fold summation differs sub-ulp, so on
-    OTHER hardware a borderline cell/rank tie could flip; the
-    authoritative cross-platform gate is the fold-equality pytest
-    (test_ivf_vectorized_assignment_matches_sql) — the bit-exact oracle
-    is validated on the driver's own BLAS."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 10),
-        k=5,
-        n_centroids=16,
-        nprobe=4,
-        codebook="sample_md5",
-        assign="vectorized",
-    )
-
-
 _IVF_STATE_LIFECYCLE_ORACLE = """
     WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                FROM embeddings),
@@ -380,7 +339,9 @@ def sim_state_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     4. ``ivf_state_compact`` — per-bucket rewrite applying tombstones
        physically;
     5. ``ivf_state_probe``   — serve a query batch (% 5 == 0, id < 50):
-       top-5 exact cosines over the 4 probed cells.
+       top-5 exact cosines over the 4 probed cells. The batch sits far
+       below ``IVF_SCORER_CROSSOVER_STEPS``, so the probe picks the
+       JVM fold itself.
 
     The DuckDB oracle replays the ENTIRE construction value-for-value:
     md5 codebook selection over the base slice, argmax cell assignment
@@ -421,6 +382,5 @@ def sim_state_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ivf_state_compact(spark, state)
     return ivf_state_probe(
-        queries_df, "vec_id", "embedding", state, k=5, nprobe=4,
-        scoring="fold",
+        queries_df, "vec_id", "embedding", state, k=5, nprobe=4
     )

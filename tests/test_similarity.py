@@ -109,24 +109,6 @@ def test_multimodal_fake_features_deterministic(spark):
     assert all(v[0] > 0 for v in a.values())
 
 
-def test_numpy_brute_force_matches_jvm(spark):
-    from hadoop_20_warehouse_fix_spark.operators.similarity import brute_force_topk_np
-
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    jvm = {
-        (r.query_id, r.neighbor_id, r.rank): r.cosine
-        for r in brute_force_topk(emb, queries, k=5).collect()
-    }
-    np_ = {
-        (r.query_id, r.neighbor_id, r.rank): r.cosine
-        for r in brute_force_topk_np(emb, queries, k=5).collect()
-    }
-    assert set(jvm) == set(np_)
-    for key, c in jvm.items():
-        assert abs(np_[key] - c) < 1e-6
-
-
 def test_zero_vector_does_not_crash_or_rank(spark):
     """ANSI division by a zero norm must not fail the job; degenerate
     vectors rank last (NULL cosine) and never appear in top-k."""
@@ -443,21 +425,6 @@ def test_embedding_normalize_unit_and_null(spark):
     assert rows[2] is None  # zero-norm -> NULL, not NaN
 
 
-def test_ivf_vectorized_assignment_matches_sql(spark):
-    # The scale path (broadcast codebook -> Arrow matmul assignment +
-    # batched scoring) must produce the same cells/ranking as the
-    # oracle-replayable SQL fold; tie policy is aligned by construction.
-    from pyspark.sql import functions as F
-
-    from hadoop_20_warehouse_fix_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    a = ivf_topk(emb, q, k=5, codebook="sample_md5", assign="sql").orderBy("query_id", "rank")
-    b = ivf_topk(emb, q, k=5, codebook="sample_md5", assign="vectorized").orderBy("query_id", "rank")
-    assert a.collect() == b.collect()
-
-
 def test_ivf_precomputed_codebook_matches_inline_build(spark):
     """The amortization path (build the codebook once via ivf_codebook,
     reuse across query batches) must give bit-identical results to the
@@ -485,13 +452,17 @@ def test_ivf_precomputed_codebook_matches_inline_build(spark):
         ivf_topk(emb, emb.limit(1), precomputed_codebook=[])
 
 
-def test_ivf_vectorized_tolerates_null_and_ragged_embeddings(spark):
+def test_ivf_vectorized_tolerates_null_and_ragged_embeddings(spark, tmp_path):
     """A NULL or wrong-length embedding in the corpus must degrade to
     'that row contributes nothing' (as the SQL fold path does via NULL
-    propagation), never crash the Arrow batch."""
+    propagation), never crash the Arrow batch — checked through the
+    persisted index, whose write assigns cells in Arrow batches."""
     from pyspark.sql import functions as F
 
-    from hadoop_20_warehouse_fix_spark.operators.similarity import ivf_topk
+    from hadoop_20_warehouse_fix_spark.operators.similarity import (
+        ivf_state_probe,
+        ivf_state_write,
+    )
 
     emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
     poisoned = emb.withColumn(
@@ -501,24 +472,30 @@ def test_ivf_vectorized_tolerates_null_and_ragged_embeddings(spark):
         .otherwise(F.col("embedding")),
     )
     q = poisoned.filter(F.col("vec_id") < 10)
-    out = ivf_topk(poisoned, q, k=5, codebook="sample_md5", assign="vectorized")
-    rows = out.collect()  # must not raise
-    assert all(r.cosine is not None for r in rows)
-    # Queries with invalid vectors (NULL at %7: ids 0 and 7 among
-    # vec_id<10) simply return no neighbors — NO exemptions: a zero-fill
-    # regression in the Arrow batch path would fabricate neighbors for
-    # exactly these ids.
-    assert not any(r.query_id in (0, 7) for r in rows if r.query_id is not None)
+    state = "ivf_poisoned"
+    try:
+        ivf_state_write(
+            poisoned, "vec_id", "embedding", state, n_centroids=16,
+            codebook="sample_md5", num_buckets=4, path=str(tmp_path / "s"),
+        )
+        rows = ivf_state_probe(q, "vec_id", "embedding", state, k=5).collect()  # must not raise
+        assert rows
+        assert all(r.cosine is not None for r in rows)
+        # Queries with invalid vectors (NULL at %7: ids 0 and 7 among
+        # vec_id<10) simply return no neighbors — NO exemptions: a
+        # zero-fill regression in the Arrow batch path would fabricate
+        # neighbors for exactly these ids.
+        assert not any(r.query_id in (0, 7) for r in rows if r.query_id is not None)
+    finally:
+        for t in ("lists", "codebook", "meta", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
+        spark.catalog.clearCache()
 
 
 def test_blocked_cosine_and_np_topk_tolerate_null_ragged(spark):
     """NULL / ragged / zero-norm embeddings must degrade (absent rows),
-    never crash the Arrow batch — and an all-degenerate query set
-    returns empty, not an AxisError."""
-    from hadoop_20_warehouse_fix_spark.operators.similarity import (
-        blocked_cosine_pairs,
-        brute_force_topk_np,
-    )
+    never crash the Arrow batch."""
+    from hadoop_20_warehouse_fix_spark.operators.similarity import blocked_cosine_pairs
 
     emb = load_table(spark, SF_CORRECT, "embeddings")
     poisoned = emb.withColumn(
@@ -531,14 +508,6 @@ def test_blocked_cosine_and_np_topk_tolerate_null_ragged(spark):
     bad = {r.vec_id for r in poisoned.where(
         F.col("embedding").isNull() | (F.size("embedding") == 3)).collect()}
     assert all(r.id_a not in bad and r.id_b not in bad for r in pairs)
-
-    q = poisoned.filter(F.col("vec_id") < 10)
-    rows = brute_force_topk_np(poisoned, q, k=3).collect()
-    assert all(r.query_id not in bad and r.neighbor_id not in bad for r in rows)
-    assert rows  # clean queries still produce neighbors
-
-    all_null = emb.limit(3).withColumn("embedding", F.lit(None).cast("array<float>"))
-    assert brute_force_topk_np(emb, all_null, k=3).count() == 0
 
 
 def test_lsh_topk_rejects_dim_mismatch(spark):
@@ -630,8 +599,7 @@ def test_image_dhash_near_dup_pairs(spark):
 
 def test_ivf_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
     """Round-8 brief #3: the ANN index as persisted state. Probe against
-    the written state must equal ivf_topk(assign='vectorized') with the
-    SAME codebook; append folds new vectors in (probe ≡ rebuild over
+    the written state must equal ivf_topk with the SAME codebook; append folds new vectors in (probe ≡ rebuild over
     corpus ∪ batch); delete tombstones out (probe ≡ search over the
     survivors); compaction shrinks files, physically removes tombstoned
     rows, and changes no answer."""
@@ -658,7 +626,7 @@ def test_ivf_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
             for r in spark.table(f"{state}_codebook").collect()
         ]
         return (
-            ivf_topk(c, queries, k=5, assign="vectorized", precomputed_codebook=cb)
+            ivf_topk(c, queries, k=5, precomputed_codebook=cb)
             .orderBy("query_id", "rank")
             .collect()
         )
@@ -763,7 +731,7 @@ def test_ivf_sq8_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
     (+ per-vector scale) and a full-vector side table; probes score the
     codes, keep a rescore pool, and exact-rescore from the side table.
     At rescored precision the whole lifecycle must match the exact
-    vectorized rebuild: write, append, delete, compact."""
+    ivf_topk rebuild: write, append, delete, compact."""
     import pytest
 
     from hadoop_20_warehouse_fix_spark.operators.similarity import (
@@ -787,7 +755,7 @@ def test_ivf_sq8_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
             for r in spark.table(f"{state}_codebook").collect()
         ]
         return (
-            ivf_topk(c, queries, k=5, assign="vectorized", precomputed_codebook=cb)
+            ivf_topk(c, queries, k=5, precomputed_codebook=cb)
             .orderBy("query_id", "rank")
             .collect()
         )
@@ -1032,7 +1000,7 @@ def test_hashing_vectorize_contract(spark, tmp_path):
         want = (
             ivf_topk(
                 vecs, queries, id_col="doc_id", vec_col="embedding",
-                k=3, nprobe=3, assign="vectorized", precomputed_codebook=cb,
+                k=3, nprobe=3, precomputed_codebook=cb,
             )
             .orderBy("query_id", "rank")
             .collect()
@@ -1044,17 +1012,17 @@ def test_hashing_vectorize_contract(spark, tmp_path):
         spark.catalog.clearCache()
 
 
-def test_ivf_state_probe_scoring_paths_agree(spark, tmp_path):
-    """Round-9 brief #7: the JVM-fold scorer (no Python worker
-    spin-up — ~1.5s of a small-batch serving wall) must return
-    EXACTLY what the Arrow scorer returns, on both the flat and the
-    quantized state; 'auto' picks by the measured candidate-count
-    crossover and must agree too. Round 10 adds the blocked-GEMM
-    scorer (the large-batch form) to the same equality — including its
-    lexsort tie order, which must match the window's
-    (desc cosine, asc neighbor_id)."""
-    import pytest
-
+def test_ivf_state_probe_scoring_paths_agree(spark, tmp_path, monkeypatch):
+    """The probe picks its scorer by IVF_SCORER_CROSSOVER_STEPS: the
+    JVM fold (no Python worker spin-up — ~1.5s of a small-batch serving
+    wall) at or below it, the blocked-GEMM pass above it, and for the
+    rescore stage the fold or the Arrow pair scorer. Both sides must
+    return EXACTLY the same rows on the flat, SQ8 and PQ states,
+    including the GEMM pass's lexsort tie order, which must match the
+    window's (desc cosine, asc neighbor_id). Each side is reached by
+    patching the constant: 0 forces every pick past the crossover, a
+    huge value keeps every pick at or below it."""
+    from hadoop_20_warehouse_fix_spark.operators import similarity as sim
     from hadoop_20_warehouse_fix_spark.operators.similarity import (
         ivf_state_probe,
         ivf_state_write,
@@ -1063,29 +1031,34 @@ def test_ivf_state_probe_scoring_paths_agree(spark, tmp_path):
     emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
     corpus = emb.filter(F.col("vec_id") >= 50)
     queries = emb.filter(F.col("vec_id") < 10)
-    for tag, quant in (("flat", False), ("sq8", True)):
+    caps = {"fold": 10**18, "auto": sim.IVF_SCORER_CROSSOVER_STEPS, "gemm": 0}
+    for tag, kwargs in (
+        ("flat", {}), ("sq8", dict(quantize=True)), ("pq", dict(quantize="pq", pq_m=8)),
+    ):
         state = f"score_paths_{tag}"
         try:
             ivf_state_write(
                 corpus, "vec_id", "embedding", state, n_centroids=8,
                 codebook="sample_md5", num_buckets=4,
-                path=str(tmp_path / tag), quantize=quant,
+                path=str(tmp_path / tag), **kwargs,
             )
-            outs = {
-                mode: ivf_state_probe(
-                    queries, "vec_id", "embedding", state, k=5, nprobe=3,
-                    scoring=mode,
-                ).orderBy("query_id", "rank").collect()
-                for mode in ("arrow", "fold", "auto", "gemm")
-            }
-            assert outs["arrow"] == outs["fold"] == outs["auto"] == outs["gemm"]
-            assert len(outs["arrow"]) > 0
+            outs, plans = {}, {}
+            for side, cap in caps.items():
+                monkeypatch.setattr(sim, "IVF_SCORER_CROSSOVER_STEPS", cap)
+                res = ivf_state_probe(queries, "vec_id", "embedding", state, k=5, nprobe=3)
+                outs[side] = res.orderBy("query_id", "rank").collect()
+                plans[side] = res._jdf.queryExecution().executedPlan().toString()
+            assert outs["fold"] == outs["auto"] == outs["gemm"], tag
+            assert len(outs["fold"]) > 0
+            if tag == "flat":
+                # the flat probe returns its approx plan: each side is
+                # really the scorer it claims to be
+                assert "MapInPandas" in plans["gemm"], plans["gemm"]
+                assert "MapInPandas" not in plans["fold"], plans["fold"]
         finally:
-            for t in ("lists", "vectors", "codebook", "meta", "tombstones"):
+            for t in ("lists", "vectors", "codebook", "meta", "tombstones", "pq"):
                 spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
             spark.catalog.clearCache()
-    with pytest.raises(ValueError, match="scoring"):
-        ivf_state_probe(queries, "vec_id", "embedding", "nope", scoring="gpu")
 
 
 def test_gemm_batch_auto_chunks_past_closure_budget(spark, tmp_path, monkeypatch):
@@ -1094,7 +1067,8 @@ def test_gemm_batch_auto_chunks_past_closure_budget(spark, tmp_path, monkeypatch
     serving batch it was sized for. Over the budget the batch must
     auto-chunk by query id and return EXACTLY the unchunked ranking —
     the per-chunk partial pools are already in the global tie order,
-    so the window cut merges them losslessly."""
+    so the window cut merges them losslessly. A crossover of 0 sends
+    the sq8 approx stage to the gemm pass (pq always takes it)."""
     from hadoop_20_warehouse_fix_spark.operators import similarity as sim
     from hadoop_20_warehouse_fix_spark.operators.similarity import (
         _gemm_closure_chunks,
@@ -1117,9 +1091,9 @@ def test_gemm_batch_auto_chunks_past_closure_budget(spark, tmp_path, monkeypatch
             def probe():
                 return ivf_state_probe(
                     queries, "vec_id", "embedding", state, k=5, nprobe=3,
-                    scoring="gemm",
                 ).orderBy("query_id", "rank").collect()
 
+            monkeypatch.setattr(sim, "IVF_SCORER_CROSSOVER_STEPS", 0)
             unchunked = probe()
             assert unchunked
             # ~2 KB budget forces many chunks on a 12-query batch
@@ -1158,7 +1132,7 @@ def test_ivf_pq_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
     state machinery — m one-byte subspace codes per vector (8 bytes at
     m=8 vs 512 float64), codebooks trained on an md5-deterministic
     sample and persisted; probes score codes, exact-rescore the pool.
-    Whole lifecycle must match the exact vectorized rebuild at
+    Whole lifecycle must match the exact ivf_topk rebuild at
     rescored precision; both quantized layouts share the vectors side
     table and compaction."""
     import pytest
@@ -1185,7 +1159,7 @@ def test_ivf_pq_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
             for r in spark.table(f"{state}_codebook").collect()
         ]
         return (
-            ivf_topk(c, queries, k=5, assign="vectorized", precomputed_codebook=cb)
+            ivf_topk(c, queries, k=5, precomputed_codebook=cb)
             .orderBy("query_id", "rank")
             .collect()
         )
@@ -1202,18 +1176,6 @@ def test_ivf_pq_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
             .orderBy("query_id", "rank")
             .collect()
         )
-
-    def assert_gemm_agrees():
-        # round 10: the ADC lookup-table (gemm) PQ scorer must return
-        # exactly what the Arrow pair scorer returns
-        got = {
-            mode: ivf_state_probe(
-                queries, "vec_id", "embedding", state, k=5, nprobe=4,
-                scoring=mode,
-            ).orderBy("query_id", "rank").collect()
-            for mode in ("arrow", "gemm")
-        }
-        assert got["arrow"] == got["gemm"] and got["arrow"]
 
     try:
         ivf_state_write(
@@ -1246,7 +1208,6 @@ def test_ivf_pq_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
         assert report[f"{state}_lists"][1] < report[f"{state}_lists"][0]
         assert report[f"{state}_vectors"][1] < report[f"{state}_vectors"][0]
         assert probe() == ref(survivors)
-        assert_gemm_agrees()
         # validation: bad quantize value, bad subspace split
         with pytest.raises(ValueError, match="quantize"):
             ivf_state_write(
@@ -1285,12 +1246,14 @@ def test_hashing_vectorize_unseamed_composition_failure_pinned(spark, tmp_path):
     assert got
 
 
-def test_ivf_probe_gemm_null_padding_parity(spark, tmp_path):
+def test_ivf_probe_gemm_null_padding_parity(spark, tmp_path, monkeypatch):
     """Round-10 review catch: degenerate corpus candidates (zero-norm)
-    must appear as NULL-cosine padding rows on EVERY scoring path when
-    k exceeds a probe's finite candidates — the gemm scorer initially
-    dropped them while arrow/fold emitted them, breaking the pinned
-    all-paths equality on exactly the sparse-cell probes."""
+    must appear as NULL-cosine padding rows on BOTH scorers when k
+    exceeds a probe's finite candidates — the gemm scorer initially
+    dropped them while the fold emitted them, breaking the pinned
+    equality on exactly the sparse-cell probes. A degenerate QUERY
+    returns no rows on both."""
+    from hadoop_20_warehouse_fix_spark.operators import similarity as sim
     from hadoop_20_warehouse_fix_spark.operators.similarity import (
         ivf_state_probe,
         ivf_state_write,
@@ -1308,40 +1271,74 @@ def test_ivf_probe_gemm_null_padding_parity(spark, tmp_path):
     queries = spark.createDataFrame(
         [(100, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
     )
+    zq = spark.createDataFrame(
+        [(200, [0.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+    )
     state = "gemm_null_pad"
     try:
         ivf_state_write(
             corpus, "vec_id", "embedding", state, n_centroids=1,
             codebook="sample_md5", num_buckets=2, path=str(tmp_path / "s"),
         )
-        outs = {
-            mode: [
+        outs, degenerate = {}, {}
+        for side, cap in (("fold", 10**18), ("gemm", 0)):
+            monkeypatch.setattr(sim, "IVF_SCORER_CROSSOVER_STEPS", cap)
+            outs[side] = [
                 (r.query_id, r.neighbor_id, r.cosine, r.rank)
                 for r in ivf_state_probe(
                     queries, "vec_id", "embedding", state, k=4, nprobe=1,
-                    scoring=mode,
                 ).orderBy("rank").collect()
             ]
-            for mode in ("arrow", "fold", "gemm")
-        }
-        assert outs["arrow"] == outs["fold"] == outs["gemm"]
+            degenerate[side] = ivf_state_probe(
+                zq, "vec_id", "embedding", state, k=2, nprobe=1
+            ).collect()
+        assert outs["fold"] == outs["gemm"]
         # the degenerate row IS there, NULL cosine, ranked last
         assert outs["gemm"][-1][1] == 4 and outs["gemm"][-1][2] is None
         assert len(outs["gemm"]) == 4
-        # degenerate QUERY divergence, pinned as documented: the
-        # expression paths return k all-NULL rows, the gemm path (like
-        # brute_force_topk_np) returns none
-        zq = spark.createDataFrame(
-            [(200, [0.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
-        )
-        arrow_rows = ivf_state_probe(
-            zq, "vec_id", "embedding", state, k=2, nprobe=1, scoring="arrow"
-        ).collect()
-        assert len(arrow_rows) == 2 and all(r.cosine is None for r in arrow_rows)
-        assert not ivf_state_probe(
-            zq, "vec_id", "embedding", state, k=2, nprobe=1, scoring="gemm"
-        ).collect()
+        # a zero-norm query answers nothing on either scorer
+        assert degenerate == {"fold": [], "gemm": []}
     finally:
         for t in ("lists", "vectors", "codebook", "meta", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
+        spark.catalog.clearCache()
+
+
+def test_vector_entry_points_refuse_bad_arguments(spark, tmp_path):
+    """k < 1 and nprobe < 1 raise a ValueError naming the op instead of
+    quietly returning nothing (or, for a negative nprobe, probing K-1
+    cells); an unknown codebook name raises instead of falling through
+    to the xxhash draw."""
+    import pytest
+
+    from hadoop_20_warehouse_fix_spark.operators.similarity import (
+        ivf_codebook,
+        ivf_state_probe,
+        ivf_state_write,
+    )
+
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    q = emb.filter(F.col("vec_id") < 3)
+    state = "ivf_bad_args"
+    try:
+        ivf_state_write(
+            emb, "vec_id", "embedding", state, n_centroids=4,
+            codebook="sample_md5", num_buckets=2, path=str(tmp_path / "s"),
+        )
+        cases = [
+            ("brute_force_topk", lambda: brute_force_topk(emb, q, k=0)),
+            ("lsh_topk", lambda: lsh_topk(emb, q, k=0)),
+            ("ivf_topk", lambda: ivf_topk(emb, q, k=0, codebook="sample_md5")),
+            ("ivf_topk", lambda: ivf_topk(emb, q, nprobe=0, codebook="sample_md5")),
+            ("ivf_state_probe", lambda: ivf_state_probe(q, "vec_id", "embedding", state, k=0)),
+            ("ivf_state_probe", lambda: ivf_state_probe(q, "vec_id", "embedding", state, nprobe=-1)),
+            ("ivf_state_probe", lambda: ivf_state_probe(q, "vec_id", "embedding", state, nprobe=0)),
+            ("ivf_codebook", lambda: ivf_codebook(emb, codebook="kmean")),
+        ]
+        for op, call in cases:
+            with pytest.raises(ValueError, match=f"^{op}: "):
+                call()
+    finally:
+        for t in ("lists", "codebook", "meta", "tombstones"):
             spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
         spark.catalog.clearCache()
