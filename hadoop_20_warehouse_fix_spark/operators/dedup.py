@@ -11,9 +11,9 @@ Massive Datasets ch.3.
 Scale design:
 - Exact dedup: hash-groupBy on a fingerprint — shuffle bounded by
   distinct fingerprints.
-- n-gram Jaccard: inverted-index blocking (join on shared shingle) is
-  EXACT but the blocking join explodes on high-DF shingles; at 100 TB
-  cap document frequency (drop stop-shingles) or switch to MinHash.
+- n-gram Jaccard: inverted-index blocking (posting list per shared
+  shingle) is EXACT but its pair rows explode on high-DF shingles;
+  ``choose_near_dup_strategy`` measures that and switches to MinHash.
 - MinHash+LSH: signature is fixed-size (num_hashes × 8 B) regardless of
   doc length; banding turns all-pairs into equality joins on
   (band, band_hash) — the only scalable path for web-scale corpora.
@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_20_warehouse_fix_spark.plans.cache import cache_scope, persisted
@@ -166,33 +166,36 @@ def _pin_posting_parallelism(rows: DataFrame, *key_cols: str) -> DataFrame:
     return rows.repartition(n, *key_cols)
 
 
-def _posting_pairs(rows: DataFrame) -> DataFrame:
-    """(id, sh) rows → candidate (id_a, id_b) co-occurrence pairs via
-    posting lists: group by shingle, sort the doc-id list, emit all i<j
-    combinations. ONE aggregation + ONE pair of Generates — no
-    self-join, so the shingle subtree upstream is evaluated once, not
-    once per join side.
+def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, n_sh, sh) — one row per distinct word n-gram of each doc,
+    with the doc's set size riding along so the posting lists carry it
+    and no size join is needed.
 
-    Pair-emission form (round 15, measured): two codegen'd Generates
-    (posexplode the list, then explode the per-position tail slice)
-    replace the round-4 interpreted ``flatten(transform(transform))``
-    lambda. Same pair rows by construction; at 1x duplication the two
-    are a wash (the pair volume is small), under 10x duplication —
-    where every posting list is 10x longer and pair rows grow 100x —
-    the codegen'd form is 1.3x faster on the dominant stage (14.8 s ->
-    11.0 s on the 50k-doc replication corpus; value-identical, 256/256
-    pairs equal at sf0.1)."""
-    posting = (
-        _pin_posting_parallelism(rows, "sh").groupBy("sh")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
+    Blocking keys are xxhash64(shingle), not the shingle strings: the
+    posting groupBy shuffles 8-byte longs instead of ~25-byte strings
+    (measured ~20% off the dominant stage at sf0.1). Distinct hashes ==
+    distinct strings modulo a 2^-64 collision — the intersection COUNTS
+    (hence jaccard) are exact for any realistic corpus."""
+    return doc_shingle_sets(df, id_col, text_col, n).select(
+        "id", F.size("shs").alias("n_sh"), F.explode("shs").alias("sh_str")
+    ).select("id", "n_sh", F.xxhash64("sh_str").alias("sh"))
+
+
+def _score_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, n_a, id_b, n_b) rows, one per shared shingle → (id_a,
+    id_b, jaccard >= threshold, rounded 6): the row count per pair IS
+    the intersection size.
+
+    Size filter before the pair shuffle: J(a,b) >= t forces
+    min(n_a,n_b) >= t*max(n_a,n_b) (since inter <= min and union >=
+    max) — pairs violating it never reach the groupBy."""
     return (
-        posting.select("ids", F.posexplode("ids").alias("i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(F.expr("slice(ids, i+2, size(ids)-i-1)")).alias("id_b"),
-        )
+        pairs.filter(F.least("n_a", "n_b") >= F.lit(threshold) * F.greatest("n_a", "n_b"))
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
@@ -202,141 +205,54 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    prefix_filter: bool = False,
-    max_df: int | None = None,
 ) -> DataFrame:
     """EXACT near-dup pairs by word-n-gram Jaccard.
 
     Output: (id_a, id_b, jaccard), id_a < id_b, jaccard >= threshold.
 
-    Two physical strategies, identical results:
-    - ``prefix_filter=False``: inverted-index blocking — posting list per
-      shingle, explode i<j combinations, count co-occurrences per pair
-      (= intersection size), score. Doc set-sizes ride ALONG the posting
-      lists (struct(id, n_sh)), so the shingle subtree is evaluated
-      exactly once — no second aggregation, no size join. Cost is sum
-      over shingles of DF^2 pair rows — fine until high-document-
-      frequency shingles appear. ``max_df`` drops posting lists longer
-      than the cap (stop-shingle guard for web-scale corpora; result
-      becomes a documented approximation when set). The cap is a
-      RECALL CLIFF: it must exceed duplication-factor x base DF or
-      discriminative shingles get dropped wholesale (measured in
-      SCALING.md — a 10x-duplicated corpus found 0 pairs under a cap
-      tuned for 1x); derive it from the DF distribution and monitor
-      dropped-list counts.
-    - ``prefix_filter=True``: PPJoin-style prefix filtering (Bayardo et
-      al. WWW'07 "Scaling Up All Pairs"; Xiao et al. WWW'08 "Efficient
-      Similarity Joins"): order each doc's shingles by ascending global
-      DF; a pair with J >= t must share a shingle within the first
-      ``|sh| - ceil(t*|sh|) + 1`` of BOTH docs, so only those prefix rows
-      generate candidates. Candidates are then verified exactly via
-      full-set intersection. Stop-shingles land at prefix ends, capping
-      the DF^2 blowup without any approximation — the 100 TB strategy.
+    Inverted-index blocking: posting list per shingle, emit its i<j
+    combinations, count co-occurrences per pair (= intersection size),
+    score. Lossless, since Jaccard > 0 implies a shared shingle. Doc
+    set-sizes ride ALONG the posting lists (struct(id, n_sh)), so the
+    shingle subtree is evaluated exactly once — no second aggregation,
+    no size join.
 
-    Scale notes: no broadcast hints — the size/set side is one row per
-    doc, far too big to broadcast at corpus scale; AQE auto-broadcasts
-    it at bench scale where it is small. The only unavoidable shuffles
-    are the shingle groupBys (keyed on xxhash64(shingle) — 8-byte keys,
-    high cardinality, skew bounded by max DF) and the tiny per-pair
-    aggregation."""
-    docs = doc_shingle_sets(df, id_col, text_col, n)
+    Cost is the sum over shingles of DF^2 pair rows: linear while
+    document frequencies stay bounded, quadratic once duplication or
+    boilerplate makes shingles hot (SCALING.md round 4: 10x duplication
+    => ~100x pair rows). On a corpus whose DF skew is unknown, ask
+    :func:`choose_near_dup_strategy` first; past its pair budget it
+    answers ``"lsh"`` and :func:`minhash_lsh_pairs` (fixed-size
+    signatures, candidates ~ true pairs, exact verify) is the path.
 
-    if not prefix_filter:
-        # Blocking keys are xxhash64(shingle), not the shingle strings:
-        # the posting groupBy shuffles 8-byte longs instead of ~25-byte
-        # strings (measured ~20% off the dominant stage at sf0.1).
-        # Distinct hashes == distinct strings modulo a 2^-64 collision —
-        # the intersection COUNTS (hence jaccard) are exact for any
-        # realistic corpus; the prefix/verify path below intersects the
-        # original string sets, so it is collision-free by construction.
-        rows = docs.select(
-            "id", F.size("shs").alias("n_sh"), F.explode("shs").alias("sh_str")
-        ).select("id", "n_sh", F.xxhash64("sh_str").alias("sh"))
-        if max_df is not None:
-            # Stop-shingle cap via a combinable count + broadcast
-            # anti-join, NOT a window count (full sort of every exploded
-            # row) and NOT a post-aggregation size filter (which would
-            # BUILD the 10M-element posting array for a hot shingle
-            # before discarding it — the executor-memory blowup max_df
-            # exists to prevent). The hot set is tiny by construction
-            # (shingles with DF > cap), so it broadcasts.
-            hot = (
-                rows.groupBy("sh")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > max_df)
-                .select("sh")
-            )
-            rows = rows.join(F.broadcast(hot), "sh", "left_anti")
-        # Pin the posting exchange's parallelism: the reduce side's work
-        # is the (quadratic) pair explode below, which AQE would
-        # otherwise coalesce down to match the exchange's input bytes
-        # (see _pin_posting_parallelism).
-        posting = (
-            _pin_posting_parallelism(rows, "sh").groupBy("sh")
-            .agg(F.sort_array(F.collect_list(F.struct("id", "n_sh"))).alias("ids"))
-            .filter(F.size("ids") > 1)
-        )
-        # Size filter before the pair shuffle: J(a,b) >= t forces
-        # min(n_a,n_b) >= t*max(n_a,n_b) (since inter <= min and
-        # union >= max) — pairs violating it never reach the groupBy.
-        # Pair emission is two codegen'd Generates (round 15): see
-        # _posting_pairs — 1.3x on the dominant stage under 10x
-        # duplication, value-identical, wash at 1x.
-        pairs = (
-            posting.select("ids", F.posexplode("ids").alias("i", "x"))
-            .select(
-                F.col("x.id").alias("id_a"),
-                F.col("x.n_sh").alias("n_a"),
-                F.explode(F.expr("slice(ids, i+2, size(ids)-i-1)")).alias("y"),
-            )
-            .select("id_a", "n_a", F.col("y.id").alias("id_b"), F.col("y.n_sh").alias("n_b"))
-            .filter(
-                F.least("n_a", "n_b") >= F.lit(threshold) * F.greatest("n_a", "n_b")
-            )
-        )
-        return (
-            pairs.groupBy("id_a", "id_b", "n_a", "n_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-            .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        )
-
-    # Prefix path: rank each doc's shingles rarest-first (global DF, then
-    # shingle text for determinism); only the pigeonhole prefix generates
-    # candidates. The length filter (min >= t*max, implied by J >= t)
-    # runs AFTER the distinct, as a join against the one-row-per-doc
-    # size side: deduped candidates are far fewer than raw pair rows, so
-    # filtering there beats carrying sizes through the (interpreted)
-    # pair-explode lambda — measured ~35% faster end-to-end at sf0.1.
-    # Hashed blocking keys here too (same argument as above; the final
-    # verify intersects original string sets, so results stay exact even
-    # under a hash collision — a collision only adds a candidate).
-    rows = docs.select(
-        "id", F.size("shs").alias("n_sh"), F.explode("shs").alias("sh_str")
-    ).select("id", "n_sh", F.xxhash64("sh_str").alias("sh"))
-    ranked = rows.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-    ).withColumn("r", F.row_number().over(Window.partitionBy("id").orderBy("df", "sh")))
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    block = ranked.filter(F.col("r") <= prefix_len).select("id", "sh")
-    sizes = docs.select("id", F.size("shs").alias("n"))
-    cand = (
-        _posting_pairs(block)
-        .distinct()
-        .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .filter(F.least("n_a", "n_b") >= F.lit(threshold) * F.greatest("n_a", "n_b"))
-        .select("id_a", "id_b")
+    Scale notes: the only shuffles are the shingle groupBy (keyed on
+    xxhash64(shingle) — 8-byte keys, high cardinality, skew bounded by
+    max DF) and the per-pair aggregation."""
+    rows = _hashed_shingle_rows(df, id_col, text_col, n)
+    # Pin the posting exchange's parallelism: the reduce side's work
+    # is the (quadratic) pair explode below, which AQE would
+    # otherwise coalesce down to match the exchange's input bytes
+    # (see _pin_posting_parallelism).
+    posting = (
+        _pin_posting_parallelism(rows, "sh").groupBy("sh")
+        .agg(F.sort_array(F.collect_list(F.struct("id", "n_sh"))).alias("ids"))
+        .filter(F.size("ids") > 1)
     )
-    return (
-        cand.join(docs.select(F.col("id").alias("id_a"), F.col("shs").alias("sh_a")), "id_a")
-        .join(docs.select(F.col("id").alias("id_b"), F.col("shs").alias("sh_b")), "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard", F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    # Pair emission is two codegen'd Generates (round 15): posexplode
+    # the list, then explode each position's tail slice. They replaced
+    # an interpreted flatten(transform(transform)) lambda — same pair
+    # rows, a wash at 1x, 1.3x faster on the dominant stage under 10x
+    # duplication (14.8 s -> 11.0 s on the 50k-doc replication corpus).
+    pairs = (
+        posting.select("ids", F.posexplode("ids").alias("i", "x"))
+        .select(
+            F.col("x.id").alias("id_a"),
+            F.col("x.n_sh").alias("n_a"),
+            F.explode(F.expr("slice(ids, i+2, size(ids)-i-1)")).alias("y"),
+        )
+        .select("id_a", "n_a", F.col("y.id").alias("id_b"), F.col("y.n_sh").alias("n_b"))
     )
+    return _score_pairs(pairs, threshold)
 
 
 def estimate_posting_pair_volume(
@@ -364,6 +280,13 @@ def estimate_posting_pair_volume(
     function of the data: reproducible across runs and engines, no RNG
     state. Cost: shingle explode + one combinable groupBy over the
     sample, ONE scalar collected."""
+    if not 0.0 < sample_frac <= 1.0:
+        # Checked before any job runs: 0 would divide by zero after the
+        # scan, > 1 skips the sample yet still divides the exact count
+        # by p^2, and < 0 samples nothing — each a wrong estimate.
+        raise ValueError(
+            f"estimate_posting_pair_volume: sample_frac must be in (0, 1], got {sample_frac!r}"
+        )
     rows = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
     if sample_frac < 1.0:
         # Same md5-coin construction (and 1<<32 divisor) as
@@ -428,32 +351,38 @@ def measured_strategy(
     return pick_by_scalar(n, BROADCAST_PROBE_ROW_CAP, small, large), rel, n
 
 
+# choose_near_dup_strategy's sampling rate and budget, read at call time
+# (tests reach each side by patching them). The budget is pair rows the
+# dominant shuffle may emit, roughly pair_rows_per_core_per_sec x cores
+# x acceptable_seconds: the sf0.1 bench sustains ~10M pair rows/s on
+# 32 cores through the posting stage, so 5e7 sits well inside the
+# measured-healthy regime while tripping orders of magnitude before the
+# DF^2 cliff. A 5% md5 sample keeps the estimate within the order of
+# magnitude the pick needs (see estimate_posting_pair_volume).
+NEAR_DUP_SAMPLE_FRAC = 0.05
+NEAR_DUP_PAIR_BUDGET = 5e7
+
+
 def choose_near_dup_strategy(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
-    sample_frac: float = 1.0,
-    pair_budget: float = 50_000_000.0,
 ) -> str:
     """Pick the near-dup strategy from the DATA, not from hope: returns
-    ``"ngram"`` (exact posting-list blocking) while the estimated
-    posting-pair volume fits ``pair_budget``, else ``"lsh"`` (MinHash
-    banding, candidates ~ true-pair count, immune to the DF^2 blowup).
+    ``"ngram"`` (exact posting-list blocking) while the posting-pair
+    volume estimated on a :data:`NEAR_DUP_SAMPLE_FRAC` sample fits
+    :data:`NEAR_DUP_PAIR_BUDGET`, else ``"lsh"`` (MinHash banding,
+    candidates ~ true-pair count, immune to the DF^2 blowup).
 
     This is the operating rule SCALING.md round 4 derived from the
     corpus_clean 100x-duplication sweep (ngram DNF at ~10,000x the pair
-    volume; LSH linear) turned into code. ``pair_budget`` is the
-    cluster knob: pair rows the dominant shuffle may emit, roughly
-    ``pair_rows_per_core_per_sec x cores x acceptable_seconds`` (the
-    sf0.1 bench sustains ~10M pair rows/s/32 cores through the posting
-    stage; 50M keeps the default well inside the measured-healthy
-    regime while tripping orders of magnitude before the cliff).
+    volume; LSH linear) turned into code.
 
     Deterministic by construction (md5 sample, exact arithmetic) — safe
     on replayed/oracle-gated paths so long as the corpus is fixed."""
-    est = estimate_posting_pair_volume(df, id_col, text_col, n, sample_frac)
-    return pick_by_scalar(est, pair_budget, "ngram", "lsh")
+    est = estimate_posting_pair_volume(df, id_col, text_col, n, NEAR_DUP_SAMPLE_FRAC)
+    return pick_by_scalar(est, NEAR_DUP_PAIR_BUDGET, "ngram", "lsh")
 
 
 def decontaminate(
@@ -770,7 +699,6 @@ def ngram_jaccard_pairs_cross(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = None,
 ) -> DataFrame:
     """EXACT cross-corpus near-dup pairs: (corpus_id, new_id, jaccard)
     for every new document within ``threshold`` of an EXISTING document
@@ -793,31 +721,10 @@ def ngram_jaccard_pairs_cross(
     ~all of them no batch shingle can touch — and heap-dies at scale
     (measured round 6: OOM at a 50k-doc corpus under an 8 GB driver;
     filtered, the 500k corpus completes)."""
-    c_rows = doc_shingle_sets(corpus_df, id_col, text_col, n).select(
-        "id", F.size("shs").alias("n_sh"), F.explode("shs").alias("sh_str")
-    ).select("id", "n_sh", F.xxhash64("sh_str").alias("sh"))
-    n_rows = doc_shingle_sets(new_df, id_col, text_col, n).select(
-        "id", F.size("shs").alias("n_sh"), F.explode("shs").alias("sh_str")
-    ).select("id", "n_sh", F.xxhash64("sh_str").alias("sh"))
+    c_rows = _hashed_shingle_rows(corpus_df, id_col, text_col, n)
+    n_rows = _hashed_shingle_rows(new_df, id_col, text_col, n)
     batch_shingles = n_rows.select("sh").distinct()
     c_rows = c_rows.join(F.broadcast(batch_shingles), "sh", "left_semi")
-    if max_df is not None:
-        # Same stop-shingle guard as the self-join form, applied to the
-        # CORPUS-side document frequency: a shingle hot in the corpus
-        # produces a cs×ns cross product per group (df_c · df_n pair
-        # structs materialized in ONE array) — the documented DF²
-        # regime, reproduced round 6 as a GC-kill at a 500k-doc
-        # synthetic-vocabulary corpus. Dropping both sides keeps the
-        # jaccard denominators exact; intersection counts become a
-        # documented under-estimate, exactly as in ngram_jaccard_pairs.
-        hot = (
-            c_rows.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("sh")
-        )
-        c_rows = c_rows.join(F.broadcast(hot), "sh", "left_anti")
-        n_rows = n_rows.join(F.broadcast(hot), "sh", "left_anti")
     posting = (
         _pin_posting_parallelism(
             c_rows.withColumn("side", F.lit(0)).unionByName(
@@ -836,9 +743,8 @@ def ngram_jaccard_pairs_cross(
         )
         .filter((F.size("cs") > 0) & (F.size("ns") > 0))
     )
-    # Cross product as two codegen'd Generates (round 15): see
-    # _posting_pairs — replaces the interpreted nested-transform lambda;
-    # value-identical, 1.3x on the explode stage under duplication.
+    # Cross product as two codegen'd Generates (round 15; see
+    # ngram_jaccard_pairs).
     pairs = (
         posting.select("ns", F.explode("cs").alias("x"))
         .select(
@@ -847,15 +753,8 @@ def ngram_jaccard_pairs_cross(
             F.explode("ns").alias("y"),
         )
         .select("id_a", "n_a", F.col("y.id").alias("id_b"), F.col("y.n_sh").alias("n_b"))
-        .filter(F.least("n_a", "n_b") >= F.lit(threshold) * F.greatest("n_a", "n_b"))
     )
-    return (
-        pairs.groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _score_pairs(pairs, threshold)
 
 
 def hashed_shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:

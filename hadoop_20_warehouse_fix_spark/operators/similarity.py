@@ -26,6 +26,10 @@ Two tiers:
   with one BLAS matmul per Arrow batch — the 100 TB corpus pass — and
   the probe picks its scorer from the measured batch size
   (:data:`IVF_SCORER_CROSSOVER_STEPS`).
+
+Every top-k entry point drops NULL, zero-norm and non-finite-norm
+queries (they return no rows) and scores such corpus vectors NULL, so
+they rank last.
 """
 
 from __future__ import annotations
@@ -52,17 +56,38 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def _finite_quotient(num: Column, denom: Column) -> Column:
+    """``num / denom`` where the norm product ``denom`` is positive and
+    finite, else NULL. A zero denominator would throw under ANSI; an
+    infinite or NaN one (a vector holding inf or NaN) gives NaN, which
+    sorts ABOVE every double under desc ranking. NULL sorts last, so
+    degenerate vectors never place in top-k. With a finite positive
+    denominator the quotient is finite too (|a.b| <= |a||b|)."""
+    return F.when((denom > 0) & (denom < float("inf")), num / denom)
+
+
 def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    """NULL for zero-norm vectors (ANSI division would throw; NULL sorts
-    last under desc ranking, so degenerate vectors never place in
-    top-k)."""
-    denom = norm_a * norm_b
-    return F.when(denom != 0, dot(a, b) / denom)
+    """Cosine of two vectors with precomputed norms; NULL when either
+    norm is zero or not finite (see :func:`_finite_quotient`)."""
+    return _finite_quotient(dot(a, b), norm_a * norm_b)
 
 
 def with_norm(df: DataFrame, vec_col: str, out: str = "nrm") -> DataFrame:
     """Precompute norms once — never inside the pair loop."""
     return df.withColumn(out, l2_norm(F.col(vec_col)))
+
+
+def _query_frame(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qv, qn) for the queries that can be answered: NULL,
+    zero-norm and non-finite-norm queries are dropped at the door and
+    return no rows, the one rule every top-k entry point shares. NULL
+    norms fail the filter, and NaN sorts above +inf in Spark, so
+    ``< inf`` refuses it too."""
+    return with_norm(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
+        "qv",
+        "qn",
+    ).filter((F.col("qn") > 0) & (F.col("qn") < float("inf")))
 
 
 def _rank_top_k(scored: DataFrame, k: int) -> DataFrame:
@@ -106,10 +131,7 @@ def brute_force_topk(
     per-query top-k is a window over query_id — at huge |queries| swap
     the window for a per-partition heap aggregation."""
     _require_positive("brute_force_topk", k=k)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    q = with_norm(q, "qv", "qn")
+    q = _query_frame(queries, id_col, vec_col)
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
     c = with_norm(c, "cv", "cn")
     scored = (
@@ -183,9 +205,9 @@ def lsh_topk(
             "a mismatch buckets every vector into bucket 0 (full all-pairs scan)"
         )
     planes = hyperplanes(dim, n_planes, seed)
-    q = with_norm(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")), "qv", "qn"
-    ).withColumn("bucket", bucket_id(F.col("qv"), planes, vec_sql="qv"))
+    q = _query_frame(queries, id_col, vec_col).withColumn(
+        "bucket", bucket_id(F.col("qv"), planes, vec_sql="qv")
+    )
     c = with_norm(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")), "cv", "cn"
     ).withColumn("bucket", bucket_id(F.col("cv"), planes, vec_sql="cv"))
@@ -985,9 +1007,7 @@ def ivf_topk(
         .drop("_av")
     )
     q = (
-        with_norm(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")), "qv", "qn"
-        )
+        _query_frame(queries, id_col, vec_col)
         .withColumn("_av", F.col("qv"))
         .withColumn(
             "cell",
@@ -1552,15 +1572,10 @@ def ivf_state_probe(
             "neighbor_id",
             "left_anti",
         )
-    # Degenerate queries drop at the door, before either scorer: the
-    # fold would answer them with k all-NULL rows and the gemm pass
-    # with none, so the answer would hinge on the batch size. NaN
-    # sorts above +inf in Spark, so `< inf` refuses it too.
-    q_base = with_norm(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        "qv",
-        "qn",
-    ).filter((F.size("qv") == dim) & (F.col("qn") > 0) & (F.col("qn") < float("inf")))
+    # Degenerate queries drop at the door, before either scorer (the
+    # fold and the gemm pass would otherwise answer them differently);
+    # ragged ones too, since the state fixes the dim.
+    q_base = _query_frame(queries, id_col, vec_col).filter(F.size("qv") == dim)
     q = q_base.withColumn(
         "cell", F.explode(probe_cells_udf(cents, nprobe)(F.col("qv")))
     )
@@ -1600,9 +1615,8 @@ def ivf_state_probe(
         scored = _gemm_pool_frame(lists, dim, kind, keep, q_rows=gemm_rows, pq=pq)
     else:
         if kind == "sq8":
-            denom = F.col("qn") * F.col("cn")
-            approx_expr = F.when(
-                denom != 0, F.col("scale") * dot(F.col("qv"), F.col("codes")) / denom
+            approx_expr = _finite_quotient(
+                F.col("scale") * dot(F.col("qv"), F.col("codes")), F.col("qn") * F.col("cn")
             )
         else:
             approx_expr = cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))

@@ -87,8 +87,6 @@ def corpus_clean(
     spark: SparkSession,
     sf_dir: str,
     near_dup: str = "ngram",
-    auto_sample_frac: float = 0.05,
-    auto_pair_budget: float = 50_000_000.0,
     repetition_gate: bool = False,
 ) -> DataFrame:
     """Corpus cleaning pipeline, one plan:
@@ -101,8 +99,8 @@ def corpus_clean(
        duplicate-bigram > 3/10 drops the doc) into the same projection
        — one more column expression on the existing scan, no extra
        pass (off by default so the oracle replays stages 1-4 exactly);
-    3. exact dedup — min doc_id per md5-of-normalized-text (semi-join
-       against the winner set);
+    3. exact dedup — min doc_id per md5-of-normalized-text, one
+       ``exact_dedup_rows`` min_by aggregation;
     4. near-dup removal — word-3-gram Jaccard >= 0.6 pairs via
        inverted-index blocking; the higher doc_id of each pair drops
        (deterministic keep-lowest policy).
@@ -113,8 +111,9 @@ def corpus_clean(
     shuffles fingerprints; stage 4 is the documented n-gram blocking
     strategy (``near_dup="lsh"`` swaps in minhash_lsh_pairs past the
     DF^2 regime; ``near_dup="auto"`` probes the DF distribution on a
-    deterministic sample and picks for you — the web-scale default,
-    since duplication is exactly what an ingest doesn't know). Nothing
+    deterministic sample and picks for you via
+    ``choose_near_dup_strategy`` — the web-scale default, since
+    duplication is exactly what an ingest doesn't know). Nothing
     collects to the driver. The cleaned corpus (s2) feeds THREE
     consumers (pair generation and the final anti-join's both sides), so
     it is persisted — MEMORY_AND_DISK, spill-safe — rather than
@@ -233,8 +232,7 @@ def corpus_clean(
         )
 
         near_dup = choose_near_dup_strategy(
-            s2.select("doc_id", "text"), "doc_id", "text", n=3,
-            sample_frac=auto_sample_frac, pair_budget=auto_pair_budget,
+            s2.select("doc_id", "text"), "doc_id", "text", n=3
         )
     if near_dup not in ("ngram", "lsh"):
         # Loud failure, not a silent default: a typo ('Auto', 'minhash')
@@ -252,7 +250,7 @@ def corpus_clean(
         # slower than LSH (every posting list 10-hot => 100x pair
         # rows), identical survivor sets; at 1x the two are within 4%
         # (signature cost ~ posting cost), so the default stays ngram
-        # (exact by construction) and the swap is a flag, not a fork.
+        # (exact by construction); near_dup="auto" lets the probe pick.
         # Recall is the banding S-curve (~0.999 at j >= 0.7),
         # precision 1.0 (exact verify). See SCALING.md round 4.
         from hadoop_20_warehouse_fix_spark.operators.dedup import minhash_lsh_pairs

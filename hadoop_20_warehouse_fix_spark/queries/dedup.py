@@ -80,22 +80,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_ngram_prefix_filter",
-    oracle=_NGRAM_PAIRS_ORACLE,
-)
-def dedup_ngram_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact Jaccard>=0.5 pairs via PPJoin-style prefix filtering
-    (rarest-shingle prefixes as the only blocking keys, full-set verify)
-    — the strategy that survives high-document-frequency shingles at
-    100 TB. Oracle-identical to dedup_ngram_jaccard proves the filter
-    is lossless."""
-    return ngram_jaccard_pairs(
-        fan_out_small_scan(load_table(spark, sf_dir, "documents")),
-        "doc_id", "text", n=3, threshold=0.5, prefix_filter=True,
-    )
-
-
 @query("dedup_minhash_lsh", oracle=_NGRAM_PAIRS_ORACLE)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash (60 perms) + LSH banding (20×3) + exact-Jaccard verify —
@@ -108,7 +92,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic) banding finds every pair and the EXACT all-pairs
     oracle holds — verified value-identical at both SFs. On a corpus
     with pairs hugging the threshold, drop back to the exact
-    dedup_ngram_* queries or accept S-curve recall."""
+    dedup_ngram_jaccard or accept S-curve recall."""
     return minhash_lsh_pairs(
         fan_out_small_scan(load_table(spark, sf_dir, "documents")),
         "doc_id", "text", n=3, num_hashes=60, bands=20, threshold=0.5,

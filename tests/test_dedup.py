@@ -86,11 +86,6 @@ def test_dedup_family_null_and_degenerate_text(spark):
     assert sets_[6] == sets_[7] and len(sets_[6]) == 2
     pairs = {(r.id_a, r.id_b) for r in ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.5).collect()}
     assert pairs == {(6, 7)}
-    pairs_pf = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.5, prefix_filter=True).collect()
-    }
-    assert pairs_pf == {(6, 7)}
     lsh = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(df, "doc_id", "text").collect()}
     assert lsh == {(6, 7)}
     sim = {(r.id_a, r.id_b) for r in simhash_pairs(df, "doc_id", "text").collect()}
@@ -125,10 +120,9 @@ def test_text_functions_null_and_empty(spark):
 
 
 def test_ngram_jaccard_strategies_match_python_truth(spark):
-    """Randomized cross-check: both physical strategies (posting-list
-    blocking, PPJoin prefix filtering) against an independent pure-Python
-    brute-force oracle, over corpora engineered to contain near-dups
-    (shared base docs with small mutations)."""
+    """Randomized cross-check: posting-list blocking against an
+    independent pure-Python brute-force oracle, over corpora engineered
+    to contain near-dups (shared base docs with small mutations)."""
     import random
 
     from hadoop_20_warehouse_fix_spark.operators.dedup import ngram_jaccard_pairs
@@ -165,12 +159,7 @@ def test_ngram_jaccard_strategies_match_python_truth(spark):
     posting = {
         (r.id_a, r.id_b) for r in ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.5).collect()
     }
-    prefix = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.5, prefix_filter=True).collect()
-    }
     assert posting == truth
-    assert prefix == truth
 
 
 def test_connected_components_chain_and_clique(spark):
@@ -206,42 +195,6 @@ def test_connected_components_warns_when_iteration_cap_hit(spark):
         got = {r.id: r.cluster_id for r in connected_components(chain).collect()}
     assert not any("without converging" in str(w.message) for w in caught)
     assert set(got.values()) == {1}
-
-
-def test_ngram_cross_max_df_guard(spark):
-    """The cross-corpus pair op's DF² guard (round-6 measurement: a hot
-    corpus shingle's cs×ns cross product GC-killed the 500k rescan):
-    max_df=None stays exact; a permissive cap changes nothing; a
-    too-tight cap yields a SUBSET with under-estimated jaccard — the
-    same documented approximation contract as ngram_jaccard_pairs."""
-    from hadoop_20_warehouse_fix_spark.operators.dedup import ngram_jaccard_pairs_cross
-
-    docs = load_table(spark, SF_CORRECT, "documents").select("doc_id", "text")
-    corpus = docs.filter(F.col("doc_id") < 400)
-    batch = corpus.filter(F.col("doc_id") < 30).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" tail")).alias("text"),
-    )
-    exact = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs_cross(batch, corpus, "doc_id", "text").collect()
-    }
-    assert exact, "planted near-copies must cross-match"
-    loose = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs_cross(
-            batch, corpus, "doc_id", "text", max_df=10_000
-        ).collect()
-    }
-    assert loose == exact
-    tight = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs_cross(
-            batch, corpus, "doc_id", "text", max_df=2
-        ).collect()
-    }
-    assert set(tight) <= set(exact)
-    assert all(tight[k] <= exact[k] for k in tight)  # intersections only shrink
 
 
 def test_connected_components_star_rule_equals_min_label(spark):
@@ -578,30 +531,42 @@ def test_estimate_posting_pair_volume_exact_at_full_sample(spark):
     assert est == k * (k - 1) / 2
 
 
-def test_choose_near_dup_strategy_flips_on_duplication(spark):
+def test_choose_near_dup_strategy_flips_on_duplication(spark, monkeypatch):
     """The SCALING.md operating rule as code: a bounded-DF corpus picks
     the exact ngram path; heavy duplication (every posting list hot)
-    crosses the pair budget and flips to LSH."""
-    from hadoop_20_warehouse_fix_spark.operators.dedup import (
-        choose_near_dup_strategy,
-    )
+    crosses the pair budget and flips to LSH. Both sides and the
+    sampled estimate are reached through the module constants."""
+    from hadoop_20_warehouse_fix_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "NEAR_DUP_PAIR_BUDGET", 500.0)
+    monkeypatch.setattr(dedup, "NEAR_DUP_SAMPLE_FRAC", 1.0)
     base = [(i, f"w{i}a w{i}b w{i}c w{i}d common tail words here") for i in range(20)]
     df = spark.createDataFrame(base, ["doc_id", "text"])
-    budget = 500.0
-    assert choose_near_dup_strategy(df, "doc_id", "text", pair_budget=budget) == "ngram"
+    assert dedup.choose_near_dup_strategy(df, "doc_id", "text") == "ngram"
 
     # 30x duplication: the 5 'common tail words here'-window shingles
     # each reach DF ~600 => pair volume >> budget.
     dup = [(1000 * r + i, t) for r in range(30) for (i, t) in base]
     ddf = spark.createDataFrame(dup, ["doc_id", "text"])
-    assert choose_near_dup_strategy(ddf, "doc_id", "text", pair_budget=budget) == "lsh"
+    assert dedup.choose_near_dup_strategy(ddf, "doc_id", "text") == "lsh"
     # Sampling preserves the decision (deterministic md5 coin, scaled
     # estimate stays orders of magnitude over budget).
-    assert (
-        choose_near_dup_strategy(ddf, "doc_id", "text", sample_frac=0.5, pair_budget=budget)
-        == "lsh"
+    monkeypatch.setattr(dedup, "NEAR_DUP_SAMPLE_FRAC", 0.5)
+    assert dedup.choose_near_dup_strategy(ddf, "doc_id", "text") == "lsh"
+
+
+def test_estimate_posting_pair_volume_refuses_bad_sample_frac(spark):
+    """A rate outside (0, 1] has no meaning for the p^2 scale-up: 1.5
+    would divide the exact count by 2.25, 0 divide by zero after the
+    scan, and a negative rate sample nothing. Each is refused up front."""
+    from hadoop_20_warehouse_fix_spark.operators.dedup import (
+        estimate_posting_pair_volume,
     )
+
+    df = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
+    for frac in (1.5, 0.0, -0.1, float("nan")):
+        with pytest.raises(ValueError, match="estimate_posting_pair_volume: sample_frac"):
+            estimate_posting_pair_volume(df, "doc_id", "text", sample_frac=frac)
 
 
 def test_corpus_clean_auto_matches_ngram_at_test_scale(spark):

@@ -111,13 +111,45 @@ def test_multimodal_fake_features_deterministic(spark):
 
 def test_zero_vector_does_not_crash_or_rank(spark):
     """ANSI division by a zero norm must not fail the job; degenerate
-    vectors rank last (NULL cosine) and never appear in top-k."""
+    vectors rank last (NULL cosine) and never appear in top-k. Every
+    top-k entry point drops the zero-norm and NULL queries (2 and 4)
+    instead of answering them with k NULL rows."""
     rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.0, 0.0]), (3, [1.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = brute_force_topk(df, df, k=2).collect()
+    queries = df.unionByName(
+        spark.createDataFrame([(4, None)], "vec_id long, embedding array<float>")
+    )
+    out = brute_force_topk(df, queries, k=2).collect()
     assert all(r.neighbor_id != 2 or r.cosine is None for r in out)
-    # queries with zero norm return no meaningful matches but don't crash
-    assert {r.query_id for r in out} >= {0, 1, 3}
+    cb = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    for op, got in (
+        ("brute_force_topk", out),
+        ("lsh_topk", lsh_topk(df, queries, k=2, n_planes=1, dim=2).collect()),
+        ("ivf_topk", ivf_topk(df, queries, k=2, nprobe=2, precomputed_codebook=cb).collect()),
+    ):
+        assert {r.query_id for r in got}.isdisjoint({2, 4}), op
+    assert {r.query_id for r in out} == {0, 1, 3}
+
+
+def test_infinite_element_vector_ranks_last(spark):
+    """A candidate holding an inf element has an infinite norm, so its
+    cosine is inf/inf = NaN, which sorts above every double; it must
+    score NULL and rank last, behind the true nearest neighbour."""
+    inf = float("inf")
+    rows = [
+        (0, [1.0, 0.1]),
+        (1, [1.0, 0.2]),
+        (2, [0.0, 1.0]),
+        (3, [inf, 1.0]),
+        (4, [-1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = {
+        r.rank: (r.neighbor_id, r.cosine)
+        for r in brute_force_topk(df, df.filter("vec_id = 0"), k=4).collect()
+    }
+    assert got[1][0] == 1
+    assert got[4] == (3, None)
 
 
 def test_multimodal_resize_and_frames_deterministic(spark):
