@@ -77,9 +77,9 @@ def keyed_upsert_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_totalprice", F.col("o_totalprice") + 1)
         .withColumn("o_orderpriority", F.lit("u1"))
     )
-    upsert_keyed_table(spark, path, upd1, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, upd1, assume_unique=True)
     dels = orders.filter(k % 10 == 7).select("o_orderkey")
-    delete_from_keyed_table(spark, path, dels, mode="mor")
+    delete_from_keyed_table(spark, path, dels)
     upd3 = (
         orders.filter(k % 20 == 3)
         .withColumn("o_totalprice", F.col("o_totalprice") + 2)
@@ -95,7 +95,7 @@ def keyed_upsert_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("o_orderpriority", F.lit("ins"))
         )
     )
-    upsert_keyed_table(spark, path, upd3, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, upd3, assume_unique=True)
     return read_keyed_table(spark, path).select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
@@ -151,9 +151,9 @@ def keyed_compact_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("c_acctbal", F.col("c_acctbal") + 100)
         .withColumn("c_mktsegment", F.lit("upd"))
     )
-    upsert_keyed_table(spark, path, upd, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, upd, assume_unique=True)
     delete_from_keyed_table(
-        spark, path, cust.filter(k.isin(3, 5)).select("c_custkey"), mode="mor"
+        spark, path, cust.filter(k.isin(3, 5)).select("c_custkey")
     )
     compact_keyed_table(spark, path)
     upd2 = (
@@ -161,7 +161,7 @@ def keyed_compact_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("c_acctbal", F.col("c_acctbal") + 7)
         .withColumn("c_mktsegment", F.lit("upd2"))
     )
-    upsert_keyed_table(spark, path, upd2, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, upd2, assume_unique=True)
     found = lookup_keys(spark, path, [0, 1, 2, 3, 4, 5, 6, 7, 8, 999_999])
     return found.select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
 
@@ -306,15 +306,15 @@ def keyed_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("p_retailprice", F.col("p_retailprice") + 5)
         .withColumn("p_brand", F.lit("B1"))
     )
-    upsert_keyed_table(spark, path, upd1, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, upd1, assume_unique=True)
     upd2 = (
         part.filter(k % 9 == 1)
         .withColumn("p_retailprice", F.col("p_retailprice") + 9)
         .withColumn("p_brand", F.lit("B2"))
     )
-    upsert_keyed_table(spark, path, upd2, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, upd2, assume_unique=True)
     delete_from_keyed_table(
-        spark, path, part.filter(k % 6 == 4).select("p_partkey"), mode="mor"
+        spark, path, part.filter(k % 6 == 4).select("p_partkey")
     )
     feed = read_keyed_changes(spark, path)
     return feed.select("p_partkey", "p_retailprice", "p_brand", "_change_op", "_seq")
@@ -355,7 +355,7 @@ def keyed_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.col("o_orderkey")
     wide = orders.filter(k % 25 == 11).withColumn("tier", F.lit("gold"))
     upsert_keyed_table(
-        spark, path, wide, assume_unique=True, mode="mor", evolve_schema=True
+        spark, path, wide, assume_unique=True, evolve_schema=True
     )
     compact_keyed_table(spark, path)  # fold the evolved schema into the base
     return read_keyed_table(spark, path).select("o_orderkey", "o_totalprice", "tier")
@@ -405,7 +405,7 @@ def keyed_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qty", (F.lit(5_000_000_000) + k).cast("bigint")
     )
     upsert_keyed_table(
-        spark, path, big, assume_unique=True, mode="mor", evolve_schema=True
+        spark, path, big, assume_unique=True, evolve_schema=True
     )
     compact_keyed_table(spark, path, rewrite_all=True)
     return read_keyed_table(spark, path).select("o_orderkey", "qty")
@@ -433,7 +433,7 @@ def keyed_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
        seq 1 as pending; the evolving batch itself lands after)
     4. compaction (folds seqs into the base, seq dirs retire to the
        feed archive)                               (commit 3)
-    5. COW upsert: %10==5 gets acctbal+2           (commit 4)
+    5. upsert: %10==5 gets acctbal+2               (delta seq 3)
 
     Reading at_commit=2 must resolve the COMMIT-2 manifest's immutable
     bucket dirs (kept by gc_generations), overlay delta seq 1 FROM THE
@@ -460,17 +460,17 @@ def keyed_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd = cust.filter(k % 10 == 3).withColumn(
         "c_acctbal", F.col("c_acctbal") + 1
     )
-    upsert_keyed_table(spark, path, upd, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, upd, assume_unique=True)
     wide = cust.filter(k == 1).withColumn("c_custkey", F.lit(-1).cast("long")) \
                .withColumn("score", F.lit(0.5))
     upsert_keyed_table(
-        spark, path, wide, assume_unique=True, mode="mor", evolve_schema=True
+        spark, path, wide, assume_unique=True, evolve_schema=True
     )
     compact_keyed_table(spark, path)
     upd2 = cust.filter(k % 10 == 5).withColumn(
         "c_acctbal", F.col("c_acctbal") + 2
     ).withColumn("score", F.lit(None).cast("double"))
-    upsert_keyed_table(spark, path, upd2, assume_unique=True, mode="cow")
+    upsert_keyed_table(spark, path, upd2, assume_unique=True)
     return read_keyed_table(spark, path, at_commit=2).select(
         "c_custkey", "c_name", "c_acctbal", "score"
     )
@@ -490,8 +490,9 @@ def keyed_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a prior compacted commit — bad-batch recovery at O(metadata),
     no copy, no restore-from-backup. The query loads ``supplier``
     (commit 1), applies a GOOD generation (%10==3 gets acctbal+5,
-    COW — commit 2), then a BAD generation (a COW corruption of
-    %10==7 AND a pending MOR delta), rolls back to commit 2, and
+    compacted — commit 2), then a BAD generation (a compacted
+    corruption of %10==7 AND a pending MOR delta), rolls back to
+    commit 2, and
     returns the current read. The oracle recomputes the good state
     from the source view — every trace of the bad generation must be
     gone, including the pending delta (retired by the delta_floor in
@@ -500,6 +501,7 @@ def keyed_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-travel-readable while retention lasts, and a bad rollback can
     be rolled back."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
+        compact_keyed_table,
         read_keyed_table,
         rollback_keyed_table,
         upsert_keyed_table,
@@ -516,13 +518,15 @@ def keyed_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     good = sup.filter(k % 10 == 3).withColumn(
         "s_acctbal", F.col("s_acctbal") + 5
     )
-    upsert_keyed_table(spark, path, good, assume_unique=True, mode="cow")
+    upsert_keyed_table(spark, path, good, assume_unique=True)
+    compact_keyed_table(spark, path)
     bad = sup.filter(k % 10 == 7).withColumn(
         "s_acctbal", F.lit(-1.0)
     ).withColumn("s_name", F.lit("CORRUPT"))
-    upsert_keyed_table(spark, path, bad, assume_unique=True, mode="cow")
+    upsert_keyed_table(spark, path, bad, assume_unique=True)
+    compact_keyed_table(spark, path)
     bad2 = sup.filter(k % 100 == 11).withColumn("s_name", F.lit("CORRUPT2"))
-    upsert_keyed_table(spark, path, bad2, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, bad2, assume_unique=True)
     rollback_keyed_table(spark, path, to_commit=2)
     return read_keyed_table(spark, path).select(
         "s_suppkey", "s_name", "s_acctbal"
@@ -546,11 +550,11 @@ def keyed_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a marker table —
 
     1. initial load of supplier          (commit 1: 8 buckets, 4 cols)
-    2. COW update of %7==2 keys          (commit 2)
-    3. MOR delta (seq 1), then an additive evolution ('tier') whose
+    2. update of %7==2 keys, compacted   (commit 2)
+    3. MOR delta (seq 2), then an additive evolution ('tier') whose
        meta-only publish records it pending (commit 3: pending=1,
        5 cols)
-    4. compaction folding seq 1          (commit 4: pending=0, current)
+    4. compaction folding seqs 2-3       (commit 4: pending=0, current)
 
     — and compare the listed history against the hand-computed VALUES
     oracle (timestamps excluded: informational, nondeterministic).
@@ -573,12 +577,13 @@ def keyed_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = F.col("s_suppkey")
     upd = supp.filter(k % 7 == 2).withColumn("s_acctbal", F.col("s_acctbal") + 1)
-    upsert_keyed_table(spark, path, upd, assume_unique=True, mode="cow")
+    upsert_keyed_table(spark, path, upd, assume_unique=True)
+    compact_keyed_table(spark, path)
     mor = supp.filter(k % 7 == 3).withColumn("s_acctbal", F.col("s_acctbal") + 2)
-    upsert_keyed_table(spark, path, mor, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, mor, assume_unique=True)
     wide = supp.filter(k % 11 == 1).withColumn("tier", F.lit("gold"))
     upsert_keyed_table(
-        spark, path, wide, assume_unique=True, mode="mor", evolve_schema=True
+        spark, path, wide, assume_unique=True, evolve_schema=True
     )
     compact_keyed_table(spark, path)
     return keyed_table_history(spark, path).select(
@@ -632,7 +637,7 @@ def keyed_column_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("c_name", F.lit("u1"))
         .withColumn("c_acctbal", F.col("c_acctbal") + 10)
     )
-    upsert_keyed_table(spark, path, u1, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, u1, assume_unique=True)
     drop_keyed_columns(spark, path, ["c_nationkey"])
     u2 = (
         cust.filter(k % 9 == 5)
@@ -640,7 +645,7 @@ def keyed_column_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("c_mktsegment", F.lit("u2"))
         .withColumn("c_acctbal", F.col("c_acctbal") + 20)
     )
-    upsert_keyed_table(spark, path, u2, assume_unique=True, mode="mor")
+    upsert_keyed_table(spark, path, u2, assume_unique=True)
     return read_keyed_table(spark, path).select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     )

@@ -14,27 +14,39 @@ Layout: plain parquet partitioned by a derived bucket column —
 key (time-series / monotonic-id tables). One directory per bucket;
 Spark partition pruning on ``kb`` is directory pruning.
 
-Two write paths, because the round-11 study (SCALING.md) measured the
-quadrant honestly:
+Two physical forms of one write, and the writer picks between them
+(the round-11 study, SCALING.md, measured the quadrant):
 
-- **COW** (``mode="cow"``): rewrite ONLY the touched bucket dirs,
-  leave every other file physically untouched (pytest pins identity).
+- **COW**: rewrite ONLY the touched bucket dirs, leave every other
+  file physically untouched (pytest pins identity on a range layout).
   Wins when the batch's keys are BUCKET-LOCAL — a backfill of one day
   on a range layout touches one dir of thousands. LOSES for scattered
-  point updates on a hash layout: 1,000 uniform keys over 256 buckets
-  touch ~254 of them (birthday math — touched ≈ B·(1-(1-1/B)^n)), and
-  the "pruned" rewrite IS the full rewrite plus swap overhead
-  (measured 36.5 s vs 10.4 s at 20M rows).
-- **MOR** (``mode="mor"``): append the batch as a delta file set under
-  ``_delta/seq=N`` — O(batch) write cost regardless of key spread (the
-  scattered-batch answer). Readers resolve latest-seq-wins per key
-  (one max_by shuffle — the read tax), deletes are tombstone rows,
-  and :func:`compact_keyed_table` folds deltas back into the base via
-  the COW machinery, pruned to the buckets the deltas actually touch.
+  point updates: 1,000 uniform keys over 256 hash buckets touch ~254
+  of them (birthday math — touched ≈ B·(1-(1-1/B)^n)), and the
+  "pruned" rewrite IS the full rewrite plus swap overhead (6.9 s
+  against the append's 0.41 s at 20M rows, SCALING.md r13).
+- **MOR**: append the batch as a delta file set under
+  ``_delta/seq=N`` — O(batch) write cost regardless of key spread.
+  Readers resolve latest-seq-wins per key (the read tax), deletes are
+  tombstone rows, and :func:`compact_keyed_table` folds deltas back
+  into the base via the COW machinery, pruned to the buckets the
+  deltas actually touch.
+
+The selector (:func:`_write_batch`) reads only what the writer already
+knows. MOR, with no extra job, when deltas are pending (a COW rewrite
+under them would be overridden by older deltas at read time), when the
+batch carries an ``idempotency_key`` or ``evolve_schema`` (both ride
+the delta), or when the layout is hash (scattered by construction).
+On a range layout with nothing pending, COW — the key-local corner it
+wins. A COW batch takes a seq number too, so the change feed
+(:func:`read_keyed_changes`) raises toward re-sync instead of silently
+skipping it.
 
 This is the publicly documented Hudi/Iceberg COW-vs-MOR trade
-re-expressed on plain parquet directories; the delta/compact lifecycle
-mirrors this repo's ``minhash_state_append``/``_compact`` discipline.
+re-expressed on plain parquet directories, with the physical path
+picked by the writer as Impala's planner picks it; the delta/compact
+lifecycle mirrors this repo's ``minhash_state_append``/``_compact``
+discipline.
 
 Crash story: every commit is ONE single-file PUT. Bucket data lives in
 immutable versioned hidden dirs (``_b<b>.v<n>``) resolved through the
@@ -168,7 +180,9 @@ def _read_json_file(
     return None
 
 
-def _put_json_atomic(spark: SparkSession, dest: str, doc: dict, overwrite: bool) -> None:
+def _put_json_atomic(
+    spark: SparkSession, dest: str, doc: dict | int, overwrite: bool
+) -> None:
     """Control-file PUT with ATOMIC VISIBILITY (round-14 verdict #1 —
     the r13 storm-test race): ``fs.create`` in place leaves the file
     visible and EMPTY between create and close on rename-capable
@@ -629,36 +643,6 @@ def _bucket_expr(meta: dict):
     ).cast("int")
 
 
-def _check_unique(df: DataFrame, key_cols: Sequence[str], what: str) -> None:
-    """One aggregation pass enforcing BOTH key-contract halves:
-    uniqueness, and no NULL key components. NULL keys are not a
-    style rule — the COW/MOR override machinery anti-joins on the
-    keys, and NULL never equi-matches, so a NULL-keyed row would
-    survive every override/delete aimed at it and duplicate forever."""
-    from functools import reduce
-
-    any_null = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in key_cols])
-    bad = (
-        df.groupBy(*key_cols)
-        .count()
-        .filter((F.col("count") > 1) | any_null)
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        if any(bad[0][c] is None for c in key_cols):
-            raise ValueError(
-                f"{what} has NULL key components on {list(key_cols)} — NULL never "
-                "equi-matches, so such rows can never be overridden or deleted; "
-                "filter or backfill them first"
-            )
-        raise ValueError(
-            f"{what} has duplicate keys on {list(key_cols)} — a keyed table is "
-            "key-unique by contract; dedupe first (exact_dedup_rows / override_join) "
-            "or pass assume_unique=True if uniqueness is already proven"
-        )
-
-
 def write_keyed_table(
     df: DataFrame,
     path: str,
@@ -726,7 +710,7 @@ def write_keyed_table(
         if missing_s:
             raise ValueError(f"sort columns {missing_s} not in DataFrame")
     if not assume_unique:
-        _check_unique(df, key_cols, "initial load")
+        _fused_batch_stats(df, key_cols, False, "initial load", {})
     spark = df.sparkSession
     fs, _, jvm = _fs(spark, path)
     existing: dict | None = None
@@ -885,6 +869,12 @@ DELTA_BROADCAST_BYTES = 256 << 20
 #: shuffle instead of a broadcast hint — the same executor-budget cap
 #: as ``key_prefilter_join``'s default (≈32 MB of broadcast longs).
 COW_BROADCAST_KEY_ROWS = 4_000_000
+
+_NULL_BUCKET_ERR = (
+    "batch has rows with a NULL bucket id (NULL leading key on a range "
+    "layout) — such rows can never be placed, overridden or deleted; "
+    "filter or backfill them first"
+)
 
 
 def _delta_bytes(spark: SparkSession, path: str) -> int:
@@ -1618,14 +1608,9 @@ def _coerce_to_table_types(
     return batch
 
 
-def _validated_batch(
-    meta: dict, batch: DataFrame, delete: bool, assume_unique: bool
-) -> DataFrame:
+def _validated_batch(meta: dict, batch: DataFrame, delete: bool) -> DataFrame:
     key_cols, data_cols = meta["key_cols"], meta["data_cols"]
     if delete:
-        missing = [c for c in key_cols if c not in batch.columns]
-        if missing:
-            raise ValueError(f"delete batch lacks key columns {missing}")
         batch = batch.select(*key_cols)
         batch = _coerce_to_table_types(meta, batch, key_cols, "delete batch")
     else:
@@ -1636,10 +1621,7 @@ def _validated_batch(
             )
         batch = batch.select(*data_cols)
         batch = _coerce_to_table_types(meta, batch, data_cols, "update batch")
-    if not assume_unique:
-        _check_unique(batch, key_cols, "batch")
     return batch
-
 
 
 def _fused_batch_stats(
@@ -1700,36 +1682,87 @@ def _fused_batch_stats(
     return st
 
 
-def _apply_batch(
+def _write_batch(
     spark: SparkSession,
     path: str,
     batch: DataFrame,
     delete: bool,
     assume_unique: bool,
+    idempotency_key: str | None = None,
+    evolve_schema: bool = False,
 ) -> dict:
+    """Upsert or delete under the caller's lease: picks the path
+    (module docstring); the result's ``"mode"`` names the pick. Only a
+    range layout with nothing pending is rewritten in place."""
     meta = read_keyed_meta(spark, path)
-    key_cols, n, data_cols = meta["key_cols"], meta["num_buckets"], meta["data_cols"]
-    if _delta_seq_dirs(spark, path, meta):
-        # A COW rewrite puts the new value in the base at logical seq 0;
-        # any pending delta (seq >= 1) would still override it at read
-        # time — silently resurrecting older writes. Refuse instead.
-        raise ValueError(
-            "table has pending MOR deltas — compact_keyed_table() first, "
-            "then apply COW batches (mixing modes would let older deltas "
-            "override this newer write at read time)"
+    if delete:
+        missing = [c for c in meta["key_cols"] if c not in batch.columns]
+        if missing:
+            raise ValueError(f"delete batch lacks key columns {missing}")
+    if (
+        meta.get("layout", "hash") == "hash"
+        or idempotency_key is not None
+        or evolve_schema
+        or _delta_seq_dirs(spark, path, meta)
+    ):
+        return _append_batch(
+            spark, path, meta, batch, delete, assume_unique, idempotency_key, evolve_schema
         )
+    return _apply_batch(spark, path, meta, batch, delete, assume_unique)
+
+
+def _append_batch(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    batch: DataFrame,
+    delete: bool,
+    assume_unique: bool,
+    idempotency_key: str | None = None,
+    evolve_schema: bool = False,
+) -> dict:
+    """MOR form: one :func:`_apply_changes_locked` append; a delete
+    batch rides as tombstone rows (keys, NULL values, op ``delete``)."""
+    op_col = None
+    if delete:
+        op_col = "_op"
+        while op_col in meta["data_cols"]:
+            op_col += "_"
+        schema = _data_schema(meta)
+        batch = batch.select(
+            *[
+                F.col(c) if c in meta["key_cols"] else F.lit(None).cast(t).alias(c)
+                for c, t in schema.items()
+            ],
+            F.lit("delete").alias(op_col),
+        )
+    return _apply_changes_locked(
+        spark, path, batch, op_col, assume_unique, idempotency_key, evolve_schema
+    )
+
+
+def _apply_batch(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    batch: DataFrame,
+    delete: bool,
+    assume_unique: bool,
+) -> dict:
+    """COW form: rewrite the touched bucket dirs, one manifest PUT."""
+    key_cols = meta["key_cols"]
     # GC any crashed writer's garbage BEFORE staging: a moved-but-
     # unpublished _b<b>.v<n> dir from a crash would collide with this
     # batch's publish of the same commit number.
     _recover_unlocked(spark, path)
-    batch = _validated_batch(meta, batch, delete, assume_unique=True)  # columns only
+    batch = _validated_batch(meta, batch, delete)
     batch = batch.withColumn(BUCKET_COL, _bucket_expr(meta)).persist()
     try:
         # ONE fused pass (round 12): uniqueness + NULL-key detection +
         # row count + touched-bucket set from a single aggregation,
         # where the first draft ran three jobs.
         st = _fused_batch_stats(
-            batch, meta["key_cols"], assume_unique, "batch",
+            batch, key_cols, assume_unique, "batch",
             {
                 "bks": (F.col(BUCKET_COL), F.first, F.collect_set),
                 # collect_set silently DROPS a NULL bucket id (range
@@ -1742,19 +1775,15 @@ def _apply_batch(
             },
         )
         if bool(st.null_kb):
-            raise ValueError(
-                "batch has rows with a NULL bucket id (NULL leading key on a "
-                "range layout) — such rows can never be placed, overridden or "
-                "deleted; filter or backfill them first"
-            )
+            raise ValueError(_NULL_BUCKET_ERR)
         touched = sorted(int(b) for b in st.bks)
         batch_rows = int(st.n or 0)
         if not touched:
-            return {"touched_buckets": [], "batch_rows": 0, "survivor_rows": 0}
+            return {"mode": "cow", "touched_buckets": [], "rows": 0, "seq": None}
         # Read of ONLY the touched bucket dirs, pruned at the path list
         # (plan pytest-pinned).
         old = _base_df(spark, path, meta, buckets=touched).filter(
-            F.col(BUCKET_COL).isin([int(b) for b in touched])
+            F.col(BUCKET_COL).isin(touched)
         )
         # Broadcast the batch keys only while they plausibly fit the
         # executor budget (round-11 review: a multi-million-row range
@@ -1771,13 +1800,19 @@ def _apply_batch(
         fs, _, jvm = _fs(spark, staging)
         fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
         _write_layout(merged, staging, len(touched), meta)
+        # the batch takes the next seq (hwm first: a crash only skips
+        # one) and records it in the manifest meta for read_keyed_changes
+        seq = max(_read_seq_hwm(spark, path), int(meta.get("delta_floor") or 0)) + 1
+        _write_seq_hwm(spark, path, seq)
         pub = _marker_publish(
-            spark, path, staging, [int(b) for b in touched], meta=meta
+            spark, path, staging, touched, meta=dict(meta, cow_seq=seq)
         )
         return {
-            "touched_buckets": [int(b) for b in touched],
+            "mode": "cow",
+            "touched_buckets": touched,
             "untouched_buckets": pub["live_buckets"] - len(touched),
-            "batch_rows": batch_rows,
+            "rows": batch_rows,
+            "seq": seq,
         }
     finally:
         batch.unpersist()
@@ -1821,21 +1856,9 @@ def _read_seq_hwm(spark: SparkSession, path: str) -> int:
 
 
 def _write_seq_hwm(spark: SparkSession, path: str, value: int) -> None:
-    """Atomic single-file PUT (round 14 — same temp-then-rename as the
-    JSON control files; consumers read this concurrently)."""
-    import uuid
-
-    fs, hpath, jvm = _fs(spark, f"{path}/{_SEQ_HWM}")
-    Path = jvm.org.apache.hadoop.fs.Path
-    tmpp = Path(f"{path}/.{_SEQ_HWM}.{uuid.uuid4().hex}.tmp")
-    out = fs.create(tmpp, True)
-    out.write(bytearray(str(int(value)).encode()))
-    out.close()
-    if fs.exists(hpath):
-        fs.delete(hpath, False)
-    if not fs.rename(tmpp, hpath):
-        fs.delete(tmpp, False)
-        raise IOError(f"atomic PUT of {path}/{_SEQ_HWM} failed")
+    """Atomic single-file PUT (round 14 — the JSON control files'
+    temp-then-rename; consumers read this concurrently)."""
+    _put_json_atomic(spark, f"{path}/{_SEQ_HWM}", int(value), overwrite=True)
 
 
 def _key_digest(key: str) -> str:
@@ -1891,90 +1914,13 @@ def _delta_ingest_keys(
     return out
 
 
-def _mor_append(
-    spark: SparkSession,
-    path: str,
-    batch: DataFrame,
-    delete: bool,
-    assume_unique: bool,
-    idempotency_key: str | None = None,
-    evolve_schema: bool = False,
-) -> dict:
-    """Append the batch as the next ``_delta/seq=N`` file set —
-    O(batch) whatever the key spread. Deletes ride as tombstone rows
-    (non-key columns NULLed, ``_del`` true). The ``_COMMITTED`` marker
-    is written as the LAST step, so a crash mid-write leaves no
-    half-visible batch. ``idempotency_key`` (written INTO the seq dir
-    before the marker, so it commits atomically with the data) makes a
-    replayed append a no-op — the streaming-ingest contract."""
-    meta = read_keyed_meta(spark, path)
-    # Same pre-write sweep as _apply_batch/compact (round-11 ADVICE #2):
-    # every writer collects crashed writers' garbage up front.
-    _recover_unlocked(spark, path)
-    if evolve_schema and not delete:
-        extra = [c for c in batch.columns if c not in meta["data_cols"]]
-        # round 14: a batch column STRICTLY WIDER than the table's
-        # (int batch column arriving as bigint, decimal outgrowing its
-        # precision) widens the table type instead of being refused by
-        # the dtype contract — metadata-only, old files upcast at scan
-        ttypes = {
-            f.name: f.dataType
-            for f in T.StructType.fromJson(json.loads(meta["schema_json"])).fields
-        }
-        widen = {
-            f.name: f.dataType
-            for f in batch.schema.fields
-            if f.name in ttypes
-            and f.dataType != ttypes[f.name]
-            and _is_widening(ttypes[f.name], f.dataType)
-        }
-        if extra or widen:
-            if extra and not set(meta["data_cols"]).issubset(set(batch.columns)):
-                raise ValueError(
-                    "schema evolution is ADDITIVE: the batch must carry every "
-                    f"existing column plus the new ones; missing "
-                    f"{sorted(set(meta['data_cols']) - set(batch.columns))}"
-                )
-            meta = _evolve_schema(spark, path, meta, batch, extra, widen=widen)
-    key_cols, data_cols = meta["key_cols"], meta["data_cols"]
-    if idempotency_key is not None:
-        seen = _delta_ingest_keys(spark, path, meta)
-        digest = _key_digest(idempotency_key)
-        if digest in seen:
-            return {
-                "mode": "mor",
-                "seq": seen[digest],
-                "delete": delete,
-                "replayed": True,
-            }
-    batch = _validated_batch(meta, batch, delete, assume_unique)
-    if delete:
-        base_schema = _data_schema(spark, path, meta)
-        batch = batch.select(
-            *key_cols,
-            *[
-                F.lit(None).cast(base_schema[c]).alias(c)
-                for c in data_cols
-                if c not in key_cols
-            ],
-        )
-    batch = (
-        batch.select(*data_cols)
-        .withColumn(_DEL_COL, F.lit(delete))
-        .withColumn(BUCKET_COL, _bucket_expr(meta))
-    )
-    return _commit_delta(spark, path, meta, batch, delete, idempotency_key)
-
-
-def _data_schema(spark: SparkSession, path: str, meta: dict) -> dict:
+def _data_schema(meta: dict) -> dict:
     """{data col: DataType} from the metadata written at load time —
     no base scan (the first draft's read-the-base schema inference cost
     a listing + footer job PER delete batch; round-12 CDC fixed-cost
-    work). Pre-schema_json tables (none in practice) fall back."""
-    if meta.get("schema_json"):
-        full = T.StructType.fromJson(json.loads(meta["schema_json"]))
-        return {f.name: f.dataType for f in full.fields}
-    return {f.name: f.dataType for f in _base_df(spark, path, meta).schema.fields}
+    work)."""
+    full = T.StructType.fromJson(json.loads(meta["schema_json"]))
+    return {f.name: f.dataType for f in full.fields}
 
 
 def _commit_delta(
@@ -1982,10 +1928,9 @@ def _commit_delta(
     path: str,
     meta: dict,
     staged: DataFrame,
-    delete: bool,
     idempotency_key: str | None,
-    post_write_check=None,
-) -> dict:
+    post_write_check,
+) -> int | None:
     """Shared MOR commit tail: write ``staged`` (data cols + ``_del`` +
     ``kb``) as the next ``seq=N`` batch, the idempotency marker riding
     with it. The data lands straight in the final seq dir and
@@ -1995,14 +1940,14 @@ def _commit_delta(
     Numbering is monotonic across compactions (the ``_seq.hwm`` file),
     so change-feed checkpoints never alias.
 
-    ``post_write_check`` (round 15): optional callable run after the
+    ``post_write_check`` (round 15): callable run after the
     data write but BEFORE the commit point — the hook where write-fused
     validation (observed metrics) gets to refuse the batch while the
     seq dir is still uncommitted (invisible to every reader, exactly
     like a crashed writer's leftovers). It may raise (the uncommitted
     dir is deleted, the error propagates) or return False (empty batch:
-    dir deleted, ``seq=None`` returned — nothing committed). Returning
-    True proceeds to the marker."""
+    dir deleted, ``None`` returned — nothing committed). Returning
+    True proceeds to the marker, and the committed seq is returned."""
     seqs = _delta_seq_dirs(spark, path, meta)
     next_seq = (
         max(
@@ -2021,15 +1966,14 @@ def _commit_delta(
     # (measured 10 s of pure file-open overhead); nothing reads deltas
     # by bucket dir — compaction takes kb from the column.
     staged.write.mode("overwrite").parquet(dest)
-    if post_write_check is not None:
-        try:
-            keep = post_write_check()
-        except Exception:
-            fs.delete(Path(dest), True)  # refused: never commits
-            raise
-        if not keep:
-            fs.delete(Path(dest), True)  # empty batch: commit nothing
-            return {"mode": "mor", "seq": None, "delete": delete}
+    try:
+        keep = post_write_check()
+    except Exception:
+        fs.delete(Path(dest), True)  # refused: never commits
+        raise
+    if not keep:
+        fs.delete(Path(dest), True)  # empty batch: commit nothing
+        return None
     if idempotency_key is not None:
         # Empty marker, key digest in the NAME — detection is a listing,
         # never a per-file read; md5 also makes arbitrary caller keys
@@ -2043,7 +1987,7 @@ def _commit_delta(
     _fence_lease(spark, path)
     mark = fs.create(Path(f"{dest}/{_COMMITTED_MARK}"), True)
     mark.close()
-    return {"mode": "mor", "seq": next_seq, "delete": delete}
+    return next_seq
 
 
 def _archived_seq_dirs(
@@ -2256,42 +2200,35 @@ def upsert_keyed_table(
     path: str,
     updates: DataFrame,
     assume_unique: bool = False,
-    mode: str = "cow",
     idempotency_key: str | None = None,
     lock_ttl_sec: float = DEFAULT_LOCK_TTL_SEC,
     evolve_schema: bool = False,
 ) -> dict:
     """Override-join semantics at the storage layer: rows whose keys
-    appear in ``updates`` are replaced, new keys are inserted.
-    ``mode="cow"`` rewrites only the touched bucket dirs (key-local
-    batches); ``mode="mor"`` appends an O(batch) delta the readers
-    merge until :func:`compact_keyed_table` folds it (scattered
-    batches — the measured quadrant split, SCALING.md r11).
-    ``idempotency_key`` (MOR only) makes a replayed batch a no-op.
-    ``evolve_schema=True`` (MOR only) lets the batch carry ADDITIVE new
-    columns and/or WIDEN existing columns along the lossless ladder
+    appear in ``updates`` are replaced, new keys are inserted. The
+    writer picks the physical path (module docstring): an O(batch) MOR
+    delta the readers merge until :func:`compact_keyed_table` folds it,
+    or — on a range layout with nothing pending — a COW rewrite of only
+    the touched bucket dirs. The result's ``"mode"`` (``"cow"`` |
+    ``"mor"``) names the pick.
+    On a hash layout every write is MOR and leaves a pending delta:
+    until ``compact_keyed_table(refresh_manifest=True)`` folds it,
+    ``sources.manifest.read_pruned`` refuses the table, the commit it
+    is pending under is no :func:`rollback_keyed_table` target, and
+    each further batch adds to the read tax.
+    ``idempotency_key`` makes a replayed batch a no-op.
+    ``evolve_schema=True`` lets the batch carry ADDITIVE new columns
+    and/or WIDEN existing columns along the lossless ladder
     (int→bigint, float→double, decimal growth — round 14): the table
     schema evolves atomically before the delta commits, old files read
     through the evolved schema (new column NULL; widened column upcast
     at scan time), and COW churn / compaction rewrites buckets with the
-    evolved schema as they are touched."""
-    if idempotency_key is not None and mode != "mor":
-        raise ValueError("idempotency_key is a MOR-delta contract; mode='cow' rewrites in place")
-    if evolve_schema and mode != "mor":
-        raise ValueError(
-            "evolve_schema is a MOR contract (the delta carries the new "
-            "column; compaction folds it into the base) — a COW evolve "
-            "would rewrite only the touched buckets into the new schema "
-            "while claiming the whole table changed"
-        )
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
+    evolved schema as they are touched. Both ride the delta, so either
+    picks MOR."""
     with _writer_lease(spark, path, lock_ttl_sec):
-        if mode == "cow":
-            return _apply_batch(spark, path, updates, delete=False, assume_unique=assume_unique)
-        return _mor_append(
-            spark, path, updates, delete=False, assume_unique=assume_unique,
-            idempotency_key=idempotency_key, evolve_schema=evolve_schema,
+        return _write_batch(
+            spark, path, updates, False, assume_unique, idempotency_key,
+            evolve_schema,
         )
 
 
@@ -2300,25 +2237,18 @@ def delete_from_keyed_table(
     path: str,
     keys: DataFrame,
     assume_unique: bool = True,
-    mode: str = "cow",
     idempotency_key: str | None = None,
     lock_ttl_sec: float = DEFAULT_LOCK_TTL_SEC,
 ) -> dict:
-    """Key deletion: ``cow`` removes rows physically from the touched
-    buckets now; ``mor`` writes tombstones the readers honor and
-    compaction makes physical. Duplicate keys in a delete batch are
-    harmless, so uniqueness defaults off."""
-    if idempotency_key is not None and mode != "mor":
-        raise ValueError("idempotency_key is a MOR-delta contract; mode='cow' rewrites in place")
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
+    """Key deletion, path picked as for :func:`upsert_keyed_table`: a
+    COW batch removes rows physically from the touched buckets now; a
+    MOR batch writes tombstones the readers honor and compaction makes
+    physical. On a hash layout every delete is MOR and leaves a pending
+    delta, with the same consequences as an upsert's until compaction.
+    Duplicate keys in a delete batch are harmless, so uniqueness
+    defaults off."""
     with _writer_lease(spark, path, lock_ttl_sec):
-        if mode == "cow":
-            return _apply_batch(spark, path, keys, delete=True, assume_unique=assume_unique)
-        return _mor_append(
-            spark, path, keys, delete=True, assume_unique=assume_unique,
-            idempotency_key=idempotency_key,
-        )
+        return _write_batch(spark, path, keys, True, assume_unique, idempotency_key)
 
 
 def read_keyed_changes(
@@ -2344,9 +2274,14 @@ def read_keyed_changes(
     (``compact_every`` in the streaming ingest bounds both the read
     tax and this window). Reading a ``since_seq`` newer than the
     highest committed seq returns an empty frame; a ``since_seq``
-    older than the earliest PENDING seq raises — those changes were
+    older than the earliest available seq raises — those changes were
     already folded and the consumer must re-sync from the base (the
     same contract as Delta/Hudi incremental reads past retention).
+    The same error covers a checkpoint older than the newest COW batch
+    of :func:`upsert_keyed_table` / :func:`delete_from_keyed_table`:
+    such a batch takes a seq but rewrites the base in place, so it is
+    never in the feed. Writers whose every batch must reach the feed
+    use :func:`apply_changes_keyed_table`, which always appends.
 
     Scale: one scan of O(pending delta) files; the resolve shuffle is
     delta-sized. The base is never touched."""
@@ -2374,11 +2309,15 @@ def read_keyed_changes(
         if avail
         else max(_read_seq_hwm(spark, path), floor) + 1
     )
+    # a COW batch's seq is a hole in the feed: nothing at or before it
+    # can be served as a complete change set
+    earliest = max(earliest, int(meta.get("cow_seq") or 0) + 1)
     if since_seq + 1 < earliest:
         raise ValueError(
             f"since_seq={since_seq} predates the earliest available delta "
             f"(seq={earliest}) — earlier changes were compacted into the "
-            "base and aged out of the feed archive; re-sync from "
+            "base (or rewritten in place by a COW batch) and aged out of "
+            "the feed archive; re-sync from "
             "read_keyed_table and restart the feed from the current "
             "high-water mark (raise compact's retain_generations to widen "
             "the window)"
@@ -2452,17 +2391,18 @@ def apply_changes_keyed_table(
     evolve_schema: bool = False,
 ) -> dict:
     """Apply a MIXED batch of row-level changes (upserts + deletes) as
-    ONE MOR delta append — the CDC fast path (round-12 brief #5).
+    ONE MOR delta append — the CDC fast path (round-12 brief #5), and
+    the one append every MOR pick of :func:`upsert_keyed_table` /
+    :func:`delete_from_keyed_table` goes through. It never picks COW,
+    so every batch it commits reaches :func:`read_keyed_changes`.
 
     ``op_col`` names an optional change-kind column: rows whose value
     is ``"delete"`` become tombstones (non-key columns NULLed), every
     other row upserts; without it the whole batch upserts. Compared to
     a delete_from_keyed_table + upsert_keyed_table pair this runs ONE
-    validation job (uniqueness, NULL keys, and the delete/upsert
-    counts come out of a single aggregation — no isEmpty probes) and
-    ONE delta write under ONE writer lease, cutting the per-batch
-    fixed cost that dominated the round-11 CDC soak (1.41 s/batch
-    steady state vs 0.35 s for the append itself). A key appearing
+    delta write under ONE writer lease, cutting the per-batch fixed
+    cost that dominated the round-11 CDC soak (1.41 s/batch steady
+    state vs 0.35 s for the append itself). A key appearing
     twice (including once as a delete and once as an upsert) is an
     error, not an order-dependent answer — same contract as the
     streaming ingest always had. Empty batches commit nothing.
@@ -2506,22 +2446,34 @@ def _apply_changes_locked(
     if evolve_schema:
         payload = [c for c in changes.columns if c != op_col]
         extra = [c for c in payload if c not in meta["data_cols"]]
-        if extra:
-            if not set(meta["data_cols"]).issubset(set(payload)):
-                raise ValueError(
-                    "schema evolution is ADDITIVE: the batch must carry every "
-                    f"existing column plus the new ones; missing "
-                    f"{sorted(set(meta['data_cols']) - set(payload))}"
-                )
-            meta = _evolve_schema(spark, path, meta, changes, extra)
+        if extra and not set(meta["data_cols"]).issubset(set(payload)):
+            raise ValueError(
+                "schema evolution is ADDITIVE: the batch must carry every "
+                f"existing column plus the new ones; missing "
+                f"{sorted(set(meta['data_cols']) - set(payload))}"
+            )
+        # round 14: a batch column STRICTLY WIDER than the table's (int
+        # arriving as bigint, decimal outgrowing its precision) widens
+        # the table type instead of being refused by the dtype contract
+        # — metadata-only, old files upcast at scan
+        ttypes = _data_schema(meta)
+        widen = {
+            f.name: f.dataType
+            for f in changes.schema.fields
+            if f.name in ttypes
+            and f.dataType != ttypes[f.name]
+            and _is_widening(ttypes[f.name], f.dataType)
+        }
+        if extra or widen:
+            meta = _evolve_schema(spark, path, meta, changes, extra, widen=widen)
     key_cols, data_cols = meta["key_cols"], meta["data_cols"]
     expected = set(data_cols) | ({op_col} if op_col else set())
     if set(changes.columns) != expected:
         raise ValueError(
-            f"change batch columns {sorted(changes.columns)} != expected "
-            f"{sorted(expected)} — a keyed change batch replaces whole rows "
-            f"(plus the op column{'' if op_col else ' if declared'}); new "
-            "columns need evolve_schema=True"
+            f"change batch columns {sorted(changes.columns)} != table columns "
+            f"{sorted(data_cols)}{f' plus {op_col!r}' if op_col else ''} — a "
+            "keyed change batch replaces whole rows; new columns need "
+            "evolve_schema=True"
         )
     changes = _coerce_to_table_types(meta, changes, data_cols, "change batch")
     isdel = (
@@ -2529,7 +2481,7 @@ def _apply_changes_locked(
         if op_col
         else F.lit(False)
     )
-    schema = _data_schema(spark, path, meta)
+    schema = _data_schema(meta)
     non_key = [c for c in data_cols if c not in key_cols]
     staged = changes.select(
         *key_cols,
@@ -2583,6 +2535,11 @@ def _apply_changes_locked(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col(_DEL_COL).cast("long")).alias("n_del"),
     ]
+    if meta.get("layout", "hash") == "range":
+        # a NULL leading key (possible under assume_unique) has no
+        # bucket: committed, it reads back but crashes every later
+        # compaction. Hash pmod(xxhash64) is never NULL.
+        metrics.append(F.max(F.col(BUCKET_COL).isNull().cast("int")).alias("null_kb"))
     validated = staged
     if not assume_unique:
         from functools import reduce
@@ -2610,6 +2567,8 @@ def _apply_changes_locked(
 
     def _post_write_check() -> bool:
         got = obs.get
+        if got.get("null_kb"):
+            raise ValueError(_NULL_BUCKET_ERR)
         if not assume_unique:
             if bool(got["has_null"]):
                 raise ValueError(
@@ -2629,23 +2588,17 @@ def _apply_changes_locked(
         counts["n_del"] = int(got["n_del"] or 0)
         return counts["n"] > 0
 
-    commit = _commit_delta(
-        spark, path, meta, validated, False, idempotency_key,
-        post_write_check=_post_write_check,
-    )
+    seq = _commit_delta(spark, path, meta, validated, idempotency_key, _post_write_check)
     n_rows, n_del = counts["n"], counts["n_del"]
     result = {
         "mode": "mor",
         "rows": n_rows,
         "deletes": n_del,
         "upserts": n_rows - n_del,
+        "seq": seq,
     }
-    result.update(commit)
-    if n_rows == 0:
-        result["seq"] = None
-        result.pop("delete", None)
-        return result
-    result["delete"] = "mixed" if n_del else False
+    if n_rows:
+        result["delete"] = "mixed" if 0 < n_del < n_rows else n_del > 0
     return result
 
 

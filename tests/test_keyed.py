@@ -1,5 +1,7 @@
-"""Keyed-table COW upsert/delete (round 11): override semantics at the
-storage layer, with ONLY the touched hash-bucket directories rewritten."""
+"""Keyed-table upsert/delete (round 11): override semantics at the
+storage layer. The writer picks the physical path — a MOR delta append,
+or on a range layout a COW rewrite of ONLY the touched bucket
+directories."""
 
 from __future__ import annotations
 
@@ -41,35 +43,50 @@ def _bucket_files(spark, path: str) -> dict[int, set[tuple[str, str, float, int]
     }
 
 
-@pytest.fixture()
-def keyed(spark):
+def _mk_table(spark, **layout):
     tmp = tempfile.mkdtemp(prefix="keyed_")
     path = f"{tmp}/tab"
     base = spark.range(10_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
     )
-    write_keyed_table(base, path, ["k"], num_buckets=16)
+    write_keyed_table(base, path, ["k"], num_buckets=16, **layout)
+    return path
+
+
+@pytest.fixture()
+def keyed(spark):
+    path = _mk_table(spark)
     yield path
-    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
 
 
-def test_upsert_override_semantics_and_cow(spark, keyed):
-    before = _bucket_files(spark, keyed)
-    updates = spark.range(100).select(
-        (F.col("id") * 101).alias("k"),  # 0..9999 hits existing, >9999 inserts
+@pytest.fixture()
+def ranged(spark):
+    # 16 buckets of 625 keys, the same bucket count as the hash table
+    path = _mk_table(spark, layout="range", range_step=625)
+    yield path
+    shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
+
+
+def test_upsert_override_semantics_and_cow(spark, ranged):
+    before = _bucket_files(spark, ranged)
+    updates = spark.range(110).select(
+        # keys 3000..3099 hit bucket 4; 20_000..20_009 insert into bucket 32
+        F.when(F.col("id") < 100, F.col("id") + 3_000).otherwise(F.col("id") + 19_900).alias("k"),
         F.lit(-1).cast("long").alias("v"),
         F.lit("upd").alias("tag"),
     )
-    diag = upsert_keyed_table(spark, keyed, updates)
-    got = {(r.k, r.v, r.tag) for r in read_keyed_table(spark, keyed).collect()}
-    want = {(k, 2 * k, "base") for k in range(10_000) if k % 101 != 0} | {
-        (i * 101, -1, "upd") for i in range(100)
+    diag = upsert_keyed_table(spark, ranged, updates)
+    assert diag["mode"] == "cow"
+    got = {(r.k, r.v, r.tag) for r in read_keyed_table(spark, ranged).collect()}
+    want = {(k, 2 * k, "base") for k in range(10_000) if not 3_000 <= k < 3_100} | {
+        (k, -1, "upd") for k in [*range(3_000, 3_100), *range(20_000, 20_010)]
     }
     assert got == want
     # COW: every untouched bucket's files are physically identical
-    after = _bucket_files(spark, keyed)
+    after = _bucket_files(spark, ranged)
     touched = set(diag["touched_buckets"])
-    assert 0 < len(touched) <= 16 and diag["batch_rows"] == 100
+    assert touched == {4, 32} and diag["rows"] == 110
     for b, files in before.items():
         if b not in touched:
             assert after[b] == files, f"untouched bucket {b} was rewritten"
@@ -79,9 +96,9 @@ def test_delete_and_new_bucket_insert(spark, keyed):
     # delete every key divisible by 7
     keys = spark.range(10_000).filter(F.col("id") % 7 == 0).select(F.col("id").alias("k"))
     diag = delete_from_keyed_table(spark, keyed, keys)
-    assert diag["batch_rows"] == len([k for k in range(10_000) if k % 7 == 0])
+    assert diag["rows"] == len([k for k in range(10_000) if k % 7 == 0])
     left = read_keyed_table(spark, keyed)
-    assert left.count() == 10_000 - diag["batch_rows"]
+    assert left.count() == 10_000 - diag["rows"]
     assert left.filter(F.col("k") % 7 == 0).count() == 0
     # duplicate delete keys are fine (assume_unique defaults True there)
     delete_from_keyed_table(spark, keyed, keys.union(keys))
@@ -153,8 +170,8 @@ def _ups(spark, pairs):
 
 def test_mor_upsert_is_append_only_and_resolves(spark, keyed):
     before = _bucket_files(spark, keyed)
-    d1 = upsert_keyed_table(spark, keyed, _ups(spark, [(5, -5, "m1"), (20_001, 1, "m1")]), mode="mor")
-    d2 = upsert_keyed_table(spark, keyed, _ups(spark, [(5, -55, "m2")]), mode="mor")
+    d1 = upsert_keyed_table(spark, keyed, _ups(spark, [(5, -5, "m1"), (20_001, 1, "m1")]))
+    d2 = upsert_keyed_table(spark, keyed, _ups(spark, [(5, -55, "m2")]))
     assert (d1["seq"], d2["seq"]) == (1, 2)
     # base files byte-identical: MOR writes never touch them
     assert _bucket_files(spark, keyed) == before
@@ -169,9 +186,9 @@ def test_mor_upsert_is_append_only_and_resolves(spark, keyed):
 
 
 def test_mor_delete_tombstone_then_compact_physical(spark, keyed):
-    upsert_keyed_table(spark, keyed, _ups(spark, [(3, -3, "m")]), mode="mor")
+    upsert_keyed_table(spark, keyed, _ups(spark, [(3, -3, "m")]))
     delete_from_keyed_table(
-        spark, keyed, spark.createDataFrame([(3,), (8,)], "k long"), mode="mor"
+        spark, keyed, spark.createDataFrame([(3,), (8,)], "k long")
     )
     tab = read_keyed_table(spark, keyed)
     assert tab.count() == 9_998  # 3 (overridden then tombstoned) and 8 gone
@@ -196,17 +213,26 @@ def test_mor_delete_tombstone_then_compact_physical(spark, keyed):
     assert compact_keyed_table(spark, keyed) == {"touched_buckets": [], "deltas_folded": 0}
 
 
-def test_cow_refused_while_deltas_pending(spark, keyed):
-    upsert_keyed_table(spark, keyed, _ups(spark, [(1, 0, "m")]), mode="mor")
-    with pytest.raises(ValueError, match="pending MOR deltas"):
-        upsert_keyed_table(spark, keyed, _ups(spark, [(2, 0, "c")]), mode="cow")
-    with pytest.raises(ValueError, match="pending MOR deltas"):
-        delete_from_keyed_table(spark, keyed, spark.createDataFrame([(2,)], "k long"))
-    compact_keyed_table(spark, keyed)
-    upsert_keyed_table(spark, keyed, _ups(spark, [(2, -2, "c")]), mode="cow")
-    assert read_keyed_table(spark, keyed).filter("k = 2").first().v == -2
-    with pytest.raises(ValueError, match="mode"):
-        upsert_keyed_table(spark, keyed, _ups(spark, [(9, 0, "x")]), mode="merge")
+def test_pending_deltas_pick_mor_and_newest_write_wins(spark, ranged):
+    """A COW rewrite under pending deltas would sit in the base at
+    logical seq 0 and be overridden by the OLDER deltas at read time.
+    With a delta pending, a key-local batch that would otherwise be
+    COW is appended, so the newest write wins; once compacted, the
+    same batch shape rewrites in place again."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import apply_changes_keyed_table
+
+    apply_changes_keyed_table(spark, ranged, _ups(spark, [(1, 0, "m"), (2, 0, "m")]))
+    out = upsert_keyed_table(spark, ranged, _ups(spark, [(1, -1, "new")]))
+    assert out["mode"] == "mor"
+    out = delete_from_keyed_table(spark, ranged, spark.createDataFrame([(2,)], "k long"))
+    assert out["mode"] == "mor"
+    tab = read_keyed_table(spark, ranged)
+    assert tab.filter("k = 1").first().v == -1 and tab.filter("k = 2").count() == 0
+    compact_keyed_table(spark, ranged)
+    out = upsert_keyed_table(spark, ranged, _ups(spark, [(1, -3, "c")]))
+    assert out["mode"] == "cow"
+    tab = read_keyed_table(spark, ranged)
+    assert tab.filter("k = 1").first().v == -3 and tab.count() == 9_999
 
 
 def test_range_layout_keeps_local_batches_local(spark):
@@ -226,6 +252,7 @@ def test_range_layout_keeps_local_batches_local(spark):
             F.col("id").alias("k"), F.lit(-1).cast("long").alias("v"), F.lit("fix").alias("tag")
         )
         diag = upsert_keyed_table(spark, path, ups)
+        assert diag["mode"] == "cow"
         assert diag["touched_buckets"] == [3] and diag["untouched_buckets"] == 9
         tab = read_keyed_table(spark, path)
         assert tab.filter("tag = 'fix'").count() == 100 and tab.count() == 100_000
@@ -354,11 +381,11 @@ def test_compact_refresh_manifest_flag(spark, tmp_path):
     df = spark.range(1_000).select(F.col("id").alias("k"), (F.col("id") % 97).alias("v"))
     write_keyed_table(df, path, ["k"], num_buckets=4)
     ups = spark.createDataFrame([(5, -1)], "k long, v long")
-    upsert_keyed_table(spark, path, ups, mode="mor")
+    upsert_keyed_table(spark, path, ups)
     diag = compact_keyed_table(spark, path, refresh_manifest=True)
     assert "manifest" not in diag  # no manifest on the table: no-op
     write_file_stats_manifest(spark, path, cols=["v"])
-    upsert_keyed_table(spark, path, spark.createDataFrame([(6, -2)], "k long, v long"), mode="mor")
+    upsert_keyed_table(spark, path, spark.createDataFrame([(6, -2)], "k long, v long"))
     diag = compact_keyed_table(spark, path, refresh_manifest=True)
     assert diag["manifest"]["added"] >= 1 and diag["manifest"]["removed"] >= 1
     got = read_pruned(spark, path, {"v": (-2, -1)})
@@ -367,45 +394,46 @@ def test_compact_refresh_manifest_flag(spark, tmp_path):
 
 def test_mor_idempotency_key_replay(spark, keyed):
     ups = _ups(spark, [(10, -10, "m")])
-    d1 = upsert_keyed_table(spark, keyed, ups, mode="mor", idempotency_key="batch-7")
+    d1 = upsert_keyed_table(spark, keyed, ups, idempotency_key="batch-7")
     d2 = upsert_keyed_table(
         spark, keyed, _ups(spark, [(10, -999, "SHOULD-NOT-LAND")]),
-        mode="mor", idempotency_key="batch-7",
+        idempotency_key="batch-7",
     )
     assert "replayed" not in d1 and d2["replayed"] and d2["seq"] == d1["seq"]
     assert read_keyed_table(spark, keyed).filter("k = 10").first().v == -10
-    with pytest.raises(ValueError, match="MOR-delta contract"):
-        upsert_keyed_table(spark, keyed, ups, idempotency_key="batch-8")
     # round 13: the replay ledger SURVIVES a default compaction (the
     # ingest markers ride into _feed_archive), so a post-compaction
     # replay is detected physically, not just value-idempotent
     compact_keyed_table(spark, keyed)
-    d3 = upsert_keyed_table(spark, keyed, ups, mode="mor", idempotency_key="batch-7")
+    d3 = upsert_keyed_table(spark, keyed, ups, idempotency_key="batch-7")
     assert d3.get("replayed") is True and d3["seq"] == d1["seq"]
     assert read_keyed_table(spark, keyed).filter("k = 10").first().v == -10
     # with retention OFF the markers fold away and the replay lands as
     # a NEW delta — value-idempotent (same rows), the pre-r13 seam
     compact_keyed_table(spark, keyed, retain_generations=0)
-    d4 = upsert_keyed_table(spark, keyed, ups, mode="mor", idempotency_key="batch-7")
+    d4 = upsert_keyed_table(spark, keyed, ups, idempotency_key="batch-7")
     assert "replayed" not in d4
     assert read_keyed_table(spark, keyed).filter("k = 10").first().v == -10
 
 
 def test_delete_everything_keeps_table_readable(spark):
-    """Round-11 review: an all-rows delete removes every bucket dir —
-    the table must stay readable (schema from meta) and writable."""
+    """Round-11 review: an all-rows delete, once folded, removes every
+    bucket dir — the table must stay readable (schema from meta) and
+    writable."""
     tmp = tempfile.mkdtemp(prefix="keyed_empty_")
     path = f"{tmp}/tab"
     try:
         df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
         write_keyed_table(df, path, ["k"], num_buckets=4)
         delete_from_keyed_table(spark, path, df.select("k"))
+        compact_keyed_table(spark, path)
+        assert not (_current_commit(spark, path) or {}).get("buckets")
         out = read_keyed_table(spark, path)
         assert out.count() == 0 and out.columns == ["k", "v"]
         # MOR ops on the empty table work too (base schema from meta)
-        delete_from_keyed_table(spark, path, df.select("k"), mode="mor")
+        delete_from_keyed_table(spark, path, df.select("k"))
         upsert_keyed_table(
-            spark, path, spark.createDataFrame([(9, "z")], "k long, v string"), mode="mor"
+            spark, path, spark.createDataFrame([(9, "z")], "k long, v string")
         )
         assert [tuple(r) for r in read_keyed_table(spark, path).collect()] == [(9, "z")]
         compact_keyed_table(spark, path)
@@ -414,7 +442,7 @@ def test_delete_everything_keeps_table_readable(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_cow_broadcast_cap_falls_back_to_shuffle(spark, keyed, monkeypatch):
+def test_cow_broadcast_cap_falls_back_to_shuffle(spark, ranged, monkeypatch):
     """Round-11 review: past the key cap the COW anti-join must run as
     a plain shuffle (a forced broadcast of a huge backfill fails where
     the shuffle succeeds) — rows identical either way."""
@@ -422,10 +450,10 @@ def test_cow_broadcast_cap_falls_back_to_shuffle(spark, keyed, monkeypatch):
 
     monkeypatch.setattr(K, "COW_BROADCAST_KEY_ROWS", 1)
     ups = _ups(spark, [(11, -11, "s"), (12, -12, "s"), (20_002, 1, "s")])
-    upsert_keyed_table(spark, keyed, ups)
+    assert upsert_keyed_table(spark, ranged, ups)["mode"] == "cow"
     got = {
         (r.k, r.v, r.tag)
-        for r in read_keyed_table(spark, keyed).filter(F.col("k").isin(11, 12, 20_002)).collect()
+        for r in read_keyed_table(spark, ranged).filter(F.col("k").isin(11, 12, 20_002)).collect()
     }
     assert got == {(11, -11, "s"), (12, -12, "s"), (20_002, 1, "s")}
 
@@ -459,13 +487,15 @@ def test_sort_cols_preserved_through_cow_and_compact(spark, tmp_path):
     rewrites AND compaction, not just the initial load."""
     import pyarrow.parquet as pq
 
+    from hadoop_20_warehouse_fix_spark.sources.keyed import apply_changes_keyed_table
+
     path = str(tmp_path / "tab")
     df = spark.range(40_000).select(
         F.col("id").alias("k"),
         F.pmod(F.xxhash64("id"), F.lit(1_000_000)).alias("ts"),
         F.lit("x").alias("tag"),
     )
-    write_keyed_table(df, path, ["k"], num_buckets=4, sort_cols=["ts"])
+    write_keyed_table(df, path, ["k"], layout="range", range_step=5_000, sort_cols=["ts"])
 
     def assert_sorted_files():
         dirs = _base_dirs(spark, path)
@@ -479,12 +509,12 @@ def test_sort_cols_preserved_through_cow_and_compact(spark, tmp_path):
 
     assert_sorted_files()
     ups = spark.createDataFrame([(5, 12345, "u"), (17, 1, "u")], "k long, ts long, tag string")
-    upsert_keyed_table(spark, path, ups)  # COW rewrite of touched buckets
+    # COW rewrite of the touched bucket
+    assert upsert_keyed_table(spark, path, ups)["mode"] == "cow"
     assert_sorted_files()
-    upsert_keyed_table(
+    apply_changes_keyed_table(
         spark, path,
         spark.createDataFrame([(6, 99, "m")], "k long, ts long, tag string"),
-        mode="mor",
     )
     compact_keyed_table(spark, path)
     assert_sorted_files()
@@ -498,9 +528,9 @@ def test_lookup_keys_point_reads(spark, keyed):
     dirs, honor pending MOR overrides and tombstones, and miss cleanly."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import lookup_keys
 
-    upsert_keyed_table(spark, keyed, _ups(spark, [(42, -42, "m")]), mode="mor")
+    upsert_keyed_table(spark, keyed, _ups(spark, [(42, -42, "m")]))
     delete_from_keyed_table(
-        spark, keyed, spark.createDataFrame([(43,)], "k long"), mode="mor"
+        spark, keyed, spark.createDataFrame([(43,)], "k long")
     )
     got = {(r.k, r.v, r.tag) for r in lookup_keys(spark, keyed, [42, 43, 44, 99_999]).collect()}
     assert got == {(42, -42, "m"), (44, 88, "base")}  # 43 tombstoned, 99999 absent
@@ -601,7 +631,7 @@ def test_read_plan_shapes(spark, keyed):
 
     s = plan_summary(read_keyed_table(spark, keyed))
     assert s.num_file_scans == 1 and s.num_exchanges == 0 and s.num_broadcast_joins == 0
-    upsert_keyed_table(spark, keyed, _ups(spark, [(1, -1, "m")]), mode="mor")
+    upsert_keyed_table(spark, keyed, _ups(spark, [(1, -1, "m")]))
     s2 = plan_summary(read_keyed_table(spark, keyed))
     # base anti-join must be BROADCAST (an SMJ would mean the base got
     # shuffled); the only exchanges allowed are the two DELTA-sized
@@ -700,13 +730,11 @@ def test_writer_lease_refuses_second_writer_and_recovers_stale(spark, keyed):
     with open(lock, "w") as f:
         json.dump({"host": "other", "pid": 999, "acquired_unix": time.time()}, f)
     with pytest.raises(KeyedTableLockedError, match="locked by another writer"):
-        upsert_keyed_table(spark, keyed, batch, mode="mor")
-    with pytest.raises(KeyedTableLockedError):
-        upsert_keyed_table(spark, keyed, batch, mode="cow")
+        upsert_keyed_table(spark, keyed, batch)
     with pytest.raises(KeyedTableLockedError):
         compact_keyed_table(spark, keyed)
     with pytest.raises(KeyedTableLockedError):
-        delete_from_keyed_table(spark, keyed, batch.select("k"), mode="mor")
+        delete_from_keyed_table(spark, keyed, batch.select("k"))
     base = spark.range(5).select(F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("x").alias("tag"))
     with pytest.raises(KeyedTableLockedError):
         write_keyed_table(base, keyed, ["k"], num_buckets=4)
@@ -714,7 +742,7 @@ def test_writer_lease_refuses_second_writer_and_recovers_stale(spark, keyed):
     # stale lease: holder presumed crashed once past the TTL
     old = time.time() - 120
     os.utime(lock, (old, old))
-    out = upsert_keyed_table(spark, keyed, batch, mode="mor", lock_ttl_sec=60)
+    out = upsert_keyed_table(spark, keyed, batch, lock_ttl_sec=60)
     assert out["mode"] == "mor"
     assert not os.path.exists(lock), "lease must be released after the write"
     assert read_keyed_table(spark, keyed).filter("k = 1").first().v == -5
@@ -725,7 +753,7 @@ def test_initial_load_keeps_root_and_replaces_state(spark, keyed):
     publish, so a re-load of an existing table replaces buckets/deltas/
     meta without deleting the root dir (where the writer lease lives)."""
     batch = spark.createDataFrame([(7, 0, "d")], "k long, v long, tag string")
-    upsert_keyed_table(spark, keyed, batch, mode="mor")  # pending delta
+    upsert_keyed_table(spark, keyed, batch)  # pending delta
     fresh = spark.range(100).select(
         F.col("id").alias("kk"), (F.col("id") + 1).alias("vv")
     )
@@ -808,7 +836,6 @@ def test_read_keyed_changes_feed(spark, keyed):
     upsert_keyed_table(
         spark, keyed,
         spark.createDataFrame([(1, 10, "a"), (2, 20, "a")], "k long, v long, tag string"),
-        mode="mor",
     )
     chg = spark.createDataFrame(
         [(1, 11, "b", None), (3, None, None, "delete")],
@@ -844,7 +871,6 @@ def test_read_keyed_changes_feed(spark, keyed):
     upsert_keyed_table(
         spark, keyed,
         spark.createDataFrame([(9, 99, "c")], "k long, v long, tag string"),
-        mode="mor",
     )
     nxt = read_keyed_changes(spark, keyed, since_seq=2).collect()
     assert len(nxt) == 1 and nxt[0]._seq == 3, "seq continues past compaction"
@@ -865,7 +891,7 @@ def test_change_feed_empty_window_column_order(spark, tmp_path):
     df = spark.createDataFrame([(10, 1), (20, 2)], "v long, k long")  # key NOT leading
     write_keyed_table(df, path, ["k"], num_buckets=2)
     empty = read_keyed_changes(spark, path)
-    upsert_keyed_table(spark, path, spark.createDataFrame([(11, 1)], "v long, k long"), mode="mor")
+    upsert_keyed_table(spark, path, spark.createDataFrame([(11, 1)], "v long, k long"))
     full = read_keyed_changes(spark, path)
     assert empty.columns == full.columns == ["k", "v", "_change_op", "_seq"]
     raw_empty_cols = read_keyed_changes(spark, path, since_seq=1, resolve=False).columns
@@ -896,14 +922,14 @@ def test_reload_keeps_hwm_and_feed_contract(spark, keyed):
     re-sync instead of aliasing."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import read_keyed_changes
 
-    upsert_keyed_table(spark, keyed, _ups(spark, [(1, -1, "d1")]), mode="mor")
-    upsert_keyed_table(spark, keyed, _ups(spark, [(2, -2, "d2")]), mode="mor")
+    upsert_keyed_table(spark, keyed, _ups(spark, [(1, -1, "d1")]))
+    upsert_keyed_table(spark, keyed, _ups(spark, [(2, -2, "d2")]))
     fresh = spark.range(10).select(
         F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("g2").alias("tag")
     )
     write_keyed_table(fresh, keyed, ["k"], num_buckets=2)
     assert read_keyed_table(spark, keyed).count() == 10
-    out = upsert_keyed_table(spark, keyed, _ups(spark, [(5, 55, "n")]), mode="mor")
+    out = upsert_keyed_table(spark, keyed, _ups(spark, [(5, 55, "n")]))
     assert out["seq"] == 3, "seqs continue past the retired generation"
     nxt = read_keyed_changes(spark, keyed, since_seq=2).collect()
     assert len(nxt) == 1 and nxt[0]._seq == 3
@@ -929,8 +955,6 @@ def test_schema_evolution_additive_mor(spark, keyed):
     # refused without the flag...
     with pytest.raises(ValueError, match="evolve_schema"):
         apply_changes_keyed_table(spark, keyed, wide)
-    with pytest.raises(ValueError, match="MOR contract"):
-        upsert_keyed_table(spark, keyed, wide, mode="cow", evolve_schema=True)
     # ...and additive-only: dropping an existing column stays an error
     with pytest.raises(ValueError, match="ADDITIVE"):
         apply_changes_keyed_table(
@@ -957,9 +981,9 @@ def test_schema_evolution_additive_mor(spark, keyed):
 
     look = {r.k: r.score for r in lookup_keys(spark, keyed, [1, 2]).collect()}
     assert look == {1: 0.5, 2: None}
-    # COW now requires (and writes) the full evolved set
+    # later batches require (and write) the full evolved set
     cow = spark.createDataFrame([(2, 222, "c", 1.5)], "k long, v long, tag string, score double")
-    upsert_keyed_table(spark, keyed, cow, mode="cow")
+    upsert_keyed_table(spark, keyed, cow)
     assert read_keyed_table(spark, keyed).filter("k = 2").first().score == 1.5
 
 
@@ -1062,3 +1086,152 @@ def test_stream_ingest_without_sequence_col_refuses_cross_file_dupes(spark, tmp_
     with pytest.raises(pyspark.errors.exceptions.captured.StreamingQueryException,
                        match="duplicate keys"):
         stream_keyed_upsert_ingest(sdf, path, str(tmp_path / "ckpt"), op_col="op")
+
+
+def test_write_path_selector_matches_fold(spark):
+    """The writer picks COW or MOR from what it already knows: hash
+    layouts, pending deltas, idempotency keys and schema evolution
+    append; any other range-layout batch is rewritten in place, however
+    many buckets it touches. Whatever the pick, the table equals the
+    plain dict fold of the writes."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import apply_changes_keyed_table
+
+    def keys_df(keys):
+        return spark.createDataFrame([(k,) for k in keys], "k long")
+
+    local = list(range(1_000, 1_050)) + [6_450]  # 2 of 64 range buckets
+    scattered = list(range(0, 6_400, 100)) + list(range(50, 6_400, 200))  # 64 of 64
+    # (layout, pre-write pending delta?, batch keys, delete?, extra kwargs, pick)
+    cases = [
+        ("hash", False, local, False, {}, "mor"),
+        ("hash", False, local, True, {}, "mor"),
+        ("range", False, local, False, {}, "cow"),
+        ("range", False, local, True, {}, "cow"),
+        ("range", False, scattered, False, {}, "cow"),
+        ("range", False, scattered, True, {}, "cow"),
+        ("range", True, local, False, {}, "mor"),
+        ("range", True, local, True, {}, "mor"),
+        ("range", False, local, False, {"idempotency_key": "b1"}, "mor"),
+        ("range", False, local, False, {"evolve_schema": True}, "mor"),
+    ]
+    for i, (layout, pending, keys, delete, kw, pick) in enumerate(cases):
+        tmp = tempfile.mkdtemp(prefix="keyed_pick_")
+        path = f"{tmp}/tab"
+        try:
+            base = spark.range(6_400).select(
+                F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
+            )
+            if layout == "hash":
+                write_keyed_table(base, path, ["k"], num_buckets=64)
+            else:
+                write_keyed_table(base, path, ["k"], layout="range", range_step=100)
+            fold = {k: (2 * k, "base") for k in range(6_400)}
+            if pending:
+                apply_changes_keyed_table(spark, path, _ups(spark, [(keys[0], -7, "pre")]))
+                fold[keys[0]] = (-7, "pre")
+            if delete:
+                out = delete_from_keyed_table(spark, path, keys_df(keys), **kw)
+                for k in keys:
+                    fold.pop(k, None)
+            else:
+                out = upsert_keyed_table(
+                    spark, path, _ups(spark, [(k, -k, f"w{i}") for k in keys]), **kw
+                )
+                fold.update({k: (-k, f"w{i}") for k in keys})
+            assert out["mode"] == pick, (i, out)
+            got = {
+                (r.k, r.v, r.tag)
+                for r in read_keyed_table(spark, path).select("k", "v", "tag").collect()
+            }
+            assert got == {(k, v, tag) for k, (v, tag) in fold.items()}, i
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_hash_upsert_runs_only_the_append_jobs(spark, keyed):
+    """A hash upsert is one append: its validation rides the delta
+    write. Pinned through the status store — 1 job for a trusted batch,
+    2 for a validated one (the key-uniqueness window's exchange runs as
+    its own job under adaptive execution). The default COW path ran 6
+    and 7."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(fn) -> tuple[dict, int]:
+        group = f"keyed-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    batch = _ups(spark, [(1, -1, "j"), (20_001, 5, "j")])
+    out, n = jobs(lambda: upsert_keyed_table(spark, keyed, batch, assume_unique=True))
+    assert out["mode"] == "mor" and n == 1
+    out, n = jobs(lambda: upsert_keyed_table(spark, keyed, batch))
+    assert out["mode"] == "mor" and n == 2
+    assert read_keyed_table(spark, keyed).filter("tag = 'j'").count() == 2
+
+
+def test_change_feed_returns_every_hash_batch(spark, keyed):
+    """A checkpointed consumer reads back every key changed after its
+    checkpoint: on a hash table every upsert and delete is appended,
+    so the feed carries all of them."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import (
+        apply_changes_keyed_table,
+        read_keyed_changes,
+    )
+
+    ckpt = apply_changes_keyed_table(spark, keyed, _ups(spark, [(1, -1, "a")]))["seq"]
+    compact_keyed_table(spark, keyed)
+    upsert_keyed_table(spark, keyed, _ups(spark, [(k, -k, "u1") for k in range(100, 110)]))
+    delete_from_keyed_table(
+        spark, keyed, spark.createDataFrame([(k,) for k in range(200, 205)], "k long")
+    )
+    upsert_keyed_table(spark, keyed, _ups(spark, [(k, -k, "u2") for k in range(300, 305)]))
+    got = {r.k: r._change_op for r in read_keyed_changes(spark, keyed, since_seq=ckpt).collect()}
+    want = {k: "upsert" for k in [*range(100, 110), *range(300, 305)]}
+    want.update({k: "delete" for k in range(200, 205)})
+    assert got == want
+
+
+def test_change_feed_raises_past_a_cow_batch(spark, ranged):
+    """A COW batch rewrites the base in place, so it never reaches the
+    feed: a checkpoint older than it raises toward re-sync instead of
+    silently skipping it; a consumer that re-synced at the batch's seq
+    reads on from there."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import (
+        apply_changes_keyed_table,
+        read_keyed_changes,
+    )
+
+    ckpt = apply_changes_keyed_table(spark, ranged, _ups(spark, [(1, -1, "a")]))["seq"]
+    compact_keyed_table(spark, ranged)
+    cow = upsert_keyed_table(spark, ranged, _ups(spark, [(k, -k, "c") for k in range(3_000, 3_010)]))
+    with pytest.raises(ValueError, match="COW batch"):
+        read_keyed_changes(spark, ranged, since_seq=ckpt)
+    assert cow["mode"] == "cow" and cow["seq"] > ckpt
+    nxt = apply_changes_keyed_table(spark, ranged, _ups(spark, [(5, -5, "n")]))
+    assert nxt["seq"] > cow["seq"]
+    assert [r.k for r in read_keyed_changes(spark, ranged, since_seq=cow["seq"]).collect()] == [5]
+
+
+def test_append_refuses_null_bucket_rows(spark, tmp_path):
+    """A range-layout append refuses a NULL leading key under
+    assume_unique exactly as COW does: committed, the row read back but
+    crashed every later compaction of the table."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import apply_changes_keyed_table
+
+    path = str(tmp_path / "t")
+    df = spark.range(100).select(F.col("id").alias("k"), F.lit(1).cast("long").alias("v"))
+    write_keyed_table(df, path, ["k"], layout="range", range_step=10)
+    bad = spark.createDataFrame([(None, 5), (3, 33)], "k long, v long")
+    with pytest.raises(ValueError, match="NULL bucket id"):
+        apply_changes_keyed_table(spark, path, bad, assume_unique=True)
+    with pytest.raises(ValueError, match="NULL bucket id"):
+        upsert_keyed_table(spark, path, bad, assume_unique=True, idempotency_key="b1")
+    assert read_keyed_table(spark, path).count() == 100
+    assert compact_keyed_table(spark, path) == {"touched_buckets": [], "deltas_folded": 0}

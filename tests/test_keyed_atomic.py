@@ -87,10 +87,11 @@ def test_manifest_put_lands_whole_and_exclusive(spark):
     """After any batch, every manifest on disk parses, no .tmp files
     remain, and a duplicate PUT of an existing manifest number is
     refused (rename's fail-if-exists = create-exclusive)."""
-    path = _mk(spark)
+    path = _mk(spark, layout="range", range_step=20)
     try:
         batch = spark.createDataFrame([(1, -1, "z")], "k long, v long, tag string")
-        K.upsert_keyed_table(spark, path, batch, mode="cow", assume_unique=True)
+        out = K.upsert_keyed_table(spark, path, batch, assume_unique=True)
+        assert out["mode"] == "cow"
         cdir = os.path.join(path, K._COMMITS_DIR)
         names = sorted(
             n for n in os.listdir(cdir) if not n.endswith(".crc")
@@ -155,7 +156,7 @@ def test_heartbeat_keeps_long_writer_alive(spark):
 def test_long_batch_past_ttl_commits(spark, monkeypatch):
     """End-to-end form: a COW batch stalled past the TTL inside the
     merge job still commits (previously: loud fence abort)."""
-    path = _mk(spark, rows=100, buckets=2)
+    path = _mk(spark, rows=100, layout="range", range_step=10)
     try:
         real = K._write_layout
 
@@ -165,9 +166,10 @@ def test_long_batch_past_ttl_commits(spark, monkeypatch):
 
         monkeypatch.setattr(K, "_write_layout", slow)
         batch = spark.createDataFrame([(1, -5, "slow")], "k long, v long, tag string")
-        K.upsert_keyed_table(
-            spark, path, batch, mode="cow", assume_unique=True, lock_ttl_sec=1.5
+        out = K.upsert_keyed_table(
+            spark, path, batch, assume_unique=True, lock_ttl_sec=1.5
         )
+        assert out["mode"] == "cow"
         assert K.read_keyed_table(spark, path).filter(F.col("k") == 1).first().v == -5
     finally:
         _cleanup(path)
@@ -234,14 +236,13 @@ def test_time_travel_of_rollback_skipped_commit_survives_next_write(spark):
         K.upsert_keyed_table(
             spark, path,
             spark.createDataFrame([(1, 111, "m1")], "k long, v long, tag string"),
-            mode="mor",
         )
         K.upsert_keyed_table(
             spark, path,
             spark.createDataFrame(
                 [(2, 222, "m2", 9.5)], "k long, v long, tag string, w double"
             ),
-            mode="mor", evolve_schema=True,
+            evolve_schema=True,
         )
         cm2 = K._current_commit(spark, path)
         assert cm2["pending_seqs"] == [1]
@@ -252,7 +253,6 @@ def test_time_travel_of_rollback_skipped_commit_survives_next_write(spark):
         K.upsert_keyed_table(
             spark, path,
             spark.createDataFrame([(3, 333, "m3")], "k long, v long, tag string"),
-            mode="mor",
         )
         at2 = K.read_keyed_table(spark, path, at_commit=n2)
         got = {r.k: r.v for r in at2.filter(F.col("k").isin(1, 2, 3)).collect()}
@@ -273,8 +273,9 @@ def test_history_lists_rollback(spark):
         K.upsert_keyed_table(
             spark, path,
             spark.createDataFrame([(1, -1, "c")], "k long, v long, tag string"),
-            mode="cow", assume_unique=True,
+            assume_unique=True,
         )
+        K.compact_keyed_table(spark, path)  # the batch's commit
         K.rollback_keyed_table(spark, path, to_commit=1)
         h = {r.commit_n: (r.pending_deltas, r.is_current)
              for r in K.keyed_table_history(spark, path).collect()}

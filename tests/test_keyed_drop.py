@@ -68,7 +68,7 @@ def test_drop_is_metadata_only_and_batches_slim_down(spark):
         K.upsert_keyed_table(
             spark, path,
             spark.createDataFrame([(3, 333)], "k long, v long"),
-            mode="mor", assume_unique=True,
+            assume_unique=True,
         )
         assert K.read_keyed_table(spark, path).filter(
             F.col("k") == 3
@@ -77,7 +77,7 @@ def test_drop_is_metadata_only_and_batches_slim_down(spark):
             K.upsert_keyed_table(
                 spark, path,
                 spark.createDataFrame([(4, 4, "ghost")], "k long, v long, tag string"),
-                mode="mor", assume_unique=True,
+                assume_unique=True,
             )
     finally:
         _cleanup(path)
@@ -107,7 +107,7 @@ def test_readd_guard_until_purged(spark):
                 spark.createDataFrame(
                     [(1, 2, "new")], "k long, v long, tag string"
                 ),
-                mode="mor", assume_unique=True, evolve_schema=True,
+                assume_unique=True, evolve_schema=True,
             )
         # full purge: every live file rewritten without the column
         K.compact_keyed_table(spark, path, rewrite_all=True, retain_generations=0)
@@ -125,7 +125,7 @@ def test_readd_guard_until_purged(spark):
                 F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
                 (F.col("id") % 5).alias("tag"),  # bigint now
             ),
-            mode="mor", assume_unique=True, evolve_schema=True,
+            assume_unique=True, evolve_schema=True,
         )
         tab = K.read_keyed_table(spark, path)
         assert dict(tab.dtypes)["tag"] == "bigint"

@@ -9,7 +9,9 @@ types at WRITE time (key/value class checks,
 ``src/mapred/org/apache/hadoop/mapred/MapTask.java:845-854``); these
 pins hold this engine to the same discipline: lossless batches coerce,
 lossy batches refuse loudly, and a refused batch never leaves the table
-unreadable.
+unreadable. The pins run on both layouts: a hash table appends every
+batch (MOR), a range table rewrites these key-local batches in place
+(COW).
 """
 
 from __future__ import annotations
@@ -30,7 +32,16 @@ from hadoop_20_warehouse_fix_spark.sources.keyed import (
 )
 
 
-def _table(spark) -> str:
+# range: 20 buckets of 50 keys, so a batch of two keys stays COW
+_LAYOUTS = {"hash": {}, "range": {"layout": "range", "range_step": 50}}
+_MODE = {"hash": "mor", "range": "cow"}
+# each layout drives one write path; the test id names that path
+_BY_PATH = pytest.mark.parametrize(
+    "layout", [pytest.param(lay, id=mode) for lay, mode in _MODE.items()]
+)
+
+
+def _table(spark, layout="hash") -> str:
     tmp = tempfile.mkdtemp(prefix="keyed_dt_")
     path = f"{tmp}/tab"
     base = spark.range(1_000).select(
@@ -38,11 +49,11 @@ def _table(spark) -> str:
         (F.col("id") * 2).alias("v"),  # v: bigint
         F.lit("base").alias("tag"),
     )
-    write_keyed_table(base, path, ["k"], num_buckets=4)
+    write_keyed_table(base, path, ["k"], num_buckets=4, **_LAYOUTS[layout])
     return path
 
 
-def _int_table(spark) -> str:
+def _int_table(spark, layout="hash") -> str:
     """Table whose k and v are 32-bit ints."""
     tmp = tempfile.mkdtemp(prefix="keyed_dt_int_")
     path = f"{tmp}/tab"
@@ -51,7 +62,7 @@ def _int_table(spark) -> str:
         (F.col("id") * 2).cast("int").alias("v"),
         F.lit("base").alias("tag"),
     )
-    write_keyed_table(base, path, ["k"], num_buckets=4)
+    write_keyed_table(base, path, ["k"], num_buckets=4, **_LAYOUTS[layout])
     return path
 
 
@@ -59,35 +70,36 @@ def _cleanup(path: str) -> None:
     shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_int_batch_on_long_table_coerces(spark, mode):
+@_BY_PATH
+def test_int_batch_on_long_table_coerces(spark, layout):
     """Lossless widening (int→long): the upsert succeeds, the stored
     value is correct, and EVERY explicit-schema read path survives."""
-    path = _table(spark)
+    path = _table(spark, layout)
     try:
         batch = spark.createDataFrame(
             [(5, 555, "n"), (2_000, 7, "ins")], "k int, v int, tag string"
         )
-        upsert_keyed_table(spark, path, batch, mode=mode)
+        out = upsert_keyed_table(spark, path, batch)
+        assert out["mode"] == _MODE[layout]
         tab = read_keyed_table(spark, path)
         assert dict(tab.dtypes)["v"] == "bigint", "table schema is authoritative"
         got = {r.k: (r.v, r.tag) for r in tab.filter(F.col("k").isin(5, 2_000)).collect()}
         assert got == {5: (555, "n"), 2_000: (7, "ins")}
-        if mode == "mor":
+        if layout == "hash":  # appended, so the feed carries it
             feed = read_keyed_changes(spark, path).collect()
             assert {r.k for r in feed} == {5, 2_000}
     finally:
         _cleanup(path)
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_long_batch_on_int_table_in_range_coerces(spark, mode):
-    path = _int_table(spark)
+@_BY_PATH
+def test_long_batch_on_int_table_in_range_coerces(spark, layout):
+    path = _int_table(spark, layout)
     try:
         batch = spark.createDataFrame(
             [(5, 555, "n")], "k long, v long, tag string"
         )
-        upsert_keyed_table(spark, path, batch, mode=mode)
+        upsert_keyed_table(spark, path, batch)
         tab = read_keyed_table(spark, path)
         assert dict(tab.dtypes)["v"] == "int"
         assert tab.filter(F.col("k") == 5).first().v == 555
@@ -95,42 +107,42 @@ def test_long_batch_on_int_table_in_range_coerces(spark, mode):
         _cleanup(path)
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_long_batch_out_of_range_refuses_and_table_stays_readable(spark, mode):
+@_BY_PATH
+def test_long_batch_out_of_range_refuses_and_table_stays_readable(spark, layout):
     """The verdict's pin: a lossy batch REFUSES loudly (per-column
     counts in the message) and a crashed-read table is never produced."""
-    path = _int_table(spark)
+    path = _int_table(spark, layout)
     try:
         batch = spark.createDataFrame(
             [(5, 2**40, "boom"), (6, 7, "ok")], "k long, v long, tag string"
         )
         with pytest.raises(ValueError, match="do not fit int"):
-            upsert_keyed_table(spark, path, batch, mode=mode)
+            upsert_keyed_table(spark, path, batch)
         # nothing committed, table fully readable, old value intact
         tab = read_keyed_table(spark, path)
         assert tab.count() == 1_000
         assert tab.filter(F.col("k") == 5).first().v == 10
-        if mode == "mor":
+        if layout == "hash":  # no refused delta behind the feed
             assert read_keyed_changes(spark, path).count() == 0
     finally:
         _cleanup(path)
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_double_with_fraction_refuses_whole_batch(spark, mode):
-    path = _table(spark)
+@_BY_PATH
+def test_double_with_fraction_refuses_whole_batch(spark, layout):
+    path = _table(spark, layout)
     try:
         batch = spark.createDataFrame(
             [(5, 5.0, "ok"), (6, 6.5, "frac")], "k long, v double, tag string"
         )
         with pytest.raises(ValueError, match="1 value\\(s\\) do not fit bigint"):
-            upsert_keyed_table(spark, path, batch, mode=mode)
+            upsert_keyed_table(spark, path, batch)
         assert read_keyed_table(spark, path).count() == 1_000
         # all-integral doubles coerce by value
         ok = spark.createDataFrame(
             [(5, 5.0, "ok")], "k long, v double, tag string"
         )
-        upsert_keyed_table(spark, path, ok, mode=mode)
+        upsert_keyed_table(spark, path, ok)
         assert read_keyed_table(spark, path).filter(F.col("k") == 5).first().v == 5
     finally:
         _cleanup(path)
@@ -144,32 +156,32 @@ def test_string_batch_coerces_by_value_not_format(spark):
         ok = spark.createDataFrame(
             [("007", 70, "pad")], "k string, v long, tag string"
         )
-        upsert_keyed_table(spark, path, ok, mode="mor")
+        upsert_keyed_table(spark, path, ok)
         assert read_keyed_table(spark, path).filter(F.col("k") == 7).first().v == 70
         bad = spark.createDataFrame(
             [("x7", 70, "bad")], "k string, v long, tag string"
         )
         with pytest.raises(ValueError, match="do not fit bigint"):
-            upsert_keyed_table(spark, path, bad, mode="mor")
+            upsert_keyed_table(spark, path, bad)
     finally:
         _cleanup(path)
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_delete_batch_keys_coerced(spark, mode):
+@_BY_PATH
+def test_delete_batch_keys_coerced(spark, layout):
     """Delete batches carry only keys — those get the same contract: a
     mismatched-but-lossless key type deletes the right row; a lossy one
     refuses instead of tombstoning the wrong row / crashing readers."""
-    path = _table(spark)
+    path = _table(spark, layout)
     try:
         keys = spark.createDataFrame([(7,)], "k int")  # int keys, long table
-        delete_from_keyed_table(spark, path, keys, mode=mode)
+        assert delete_from_keyed_table(spark, path, keys)["mode"] == _MODE[layout]
         tab = read_keyed_table(spark, path)
         assert tab.count() == 999
         assert tab.filter(F.col("k") == 7).count() == 0
         bad = spark.createDataFrame([("zz",)], "k string")
         with pytest.raises(ValueError, match="do not fit bigint"):
-            delete_from_keyed_table(spark, path, bad, mode=mode)
+            delete_from_keyed_table(spark, path, bad)
         assert read_keyed_table(spark, path).count() == 999
     finally:
         _cleanup(path)
@@ -208,7 +220,6 @@ def test_reload_then_retyped_upsert_round12_repro(spark):
         upsert_keyed_table(
             spark, path,
             spark.createDataFrame([(1, -1, "d1")], "k long, v long, tag string"),
-            mode="mor",
         )
         fresh = spark.range(10).select(
             F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("g2").alias("tag")
@@ -217,7 +228,6 @@ def test_reload_then_retyped_upsert_round12_repro(spark):
         upsert_keyed_table(
             spark, path,
             spark.createDataFrame([(5, 55, "n")], "k long, v long, tag string"),
-            mode="mor",
         )
         tab = read_keyed_table(spark, path)
         assert dict(tab.dtypes)["v"] == "int"
@@ -247,12 +257,12 @@ def test_bigint_past_2_53_on_double_table_refuses(spark):
             [(5, (1 << 53) + 1, "big")], "k long, v long, tag string"
         )
         with pytest.raises(ValueError, match="1 value\\(s\\) do not fit double"):
-            upsert_keyed_table(spark, path, bad, mode="mor")
+            upsert_keyed_table(spark, path, bad)
         # 2⁵³ itself round-trips exactly — accepted by the value check
         ok = spark.createDataFrame(
             [(5, 1 << 53, "edge")], "k long, v long, tag string"
         )
-        upsert_keyed_table(spark, path, ok, mode="mor")
+        upsert_keyed_table(spark, path, ok)
         assert read_keyed_table(spark, path).filter(
             F.col("k") == 5
         ).first().v == float(1 << 53)
@@ -276,7 +286,7 @@ def test_decimal_past_double_precision_refuses(spark):
             [(5, "9007199254740993", "big")], "k long, v string, tag string"
         ).select("k", F.col("v").cast("decimal(20,0)").alias("v"), "tag")
         with pytest.raises(ValueError, match="do not fit double"):
-            upsert_keyed_table(spark, path, bad, mode="mor")
+            upsert_keyed_table(spark, path, bad)
         assert read_keyed_table(spark, path).count() == 100
     finally:
         _cleanup(path)

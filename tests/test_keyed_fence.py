@@ -53,7 +53,7 @@ def test_fence_noop_without_registered_lease(spark, table):
     deregisters its lease afterward."""
     K._fence_lease(spark, table)  # no lease registered → no-op
     batch = spark.createDataFrame([(1, -9, "z")], "k long, v long, tag string")
-    K.upsert_keyed_table(spark, table, batch, mode="mor")
+    K.upsert_keyed_table(spark, table, batch)
     assert not any(p == table for p, _ in K._ACTIVE_LEASES)
     assert K.read_keyed_table(spark, table).filter(F.col("k") == 1).first().v == -9
 
@@ -68,7 +68,8 @@ def test_marker_publish_fences_manifest_put(spark, monkeypatch):
         base = spark.range(100).select(
             F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("m").alias("tag")
         )
-        K.write_keyed_table(base, path, ["k"], num_buckets=2)
+        # range layout, 10 buckets: a one-key batch takes the COW publish
+        K.write_keyed_table(base, path, ["k"], layout="range", range_step=10)
         cm_before = K._current_commit(spark, path)
 
         real = K._write_layout
@@ -81,7 +82,7 @@ def test_marker_publish_fences_manifest_put(spark, monkeypatch):
         monkeypatch.setattr(K, "_write_layout", usurp_then)
         batch = spark.createDataFrame([(1, -9, "z")], "k long, v long, tag string")
         with pytest.raises(K.KeyedTableLockedError, match="lease lost before commit"):
-            K.upsert_keyed_table(spark, path, batch, mode="cow")
+            K.upsert_keyed_table(spark, path, batch)
         monkeypatch.undo()
         os.remove(os.path.join(path, K._WRITER_LOCK))
         assert K._current_commit(spark, path)["n"] == cm_before["n"]
@@ -114,7 +115,7 @@ def test_marker_mor_commit_fences_before_committed_mark(spark, monkeypatch):
         monkeypatch.setattr(K, "_read_seq_hwm", usurp_then)
         batch = spark.createDataFrame([(1, -9, "z")], "k long, v long, tag string")
         with pytest.raises(K.KeyedTableLockedError, match="lease lost before commit"):
-            K.upsert_keyed_table(spark, path, batch, mode="mor")
+            K.upsert_keyed_table(spark, path, batch)
         monkeypatch.undo()
         os.remove(os.path.join(path, K._WRITER_LOCK))
         seq1 = os.path.join(path, K._DELTA_DIR, "seq=1")

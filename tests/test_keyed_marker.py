@@ -32,38 +32,55 @@ def _rows(df):
     return {tuple(r) for r in df.collect()}
 
 
-@pytest.fixture()
-def marker(spark):
+def _marker_table(spark, **layout):
     tmp = tempfile.mkdtemp(prefix="keyed_marker_")
     path = f"{tmp}/tab"
     base = spark.range(2_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
     )
-    write_keyed_table(base, path, ["k"], num_buckets=8)
+    write_keyed_table(base, path, ["k"], num_buckets=8, **layout)
+    return path
+
+
+@pytest.fixture()
+def marker(spark):
+    path = _marker_table(spark)
     yield path
-    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
+
+
+@pytest.fixture()
+def ranged(spark):
+    """Range layout, 20 buckets of 100 keys: a batch of a few keys
+    touches at most a tenth of them, so it drives the COW publish."""
+    path = _marker_table(spark, layout="range", range_step=100)
+    yield path
+    shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
 
 
 def _ups(spark, rows):
     return spark.createDataFrame(rows, "k long, v long, tag string")
 
 
-def test_marker_lifecycle_matches_python_fold(spark, marker):
+def test_marker_lifecycle_matches_python_fold(spark, ranged):
     """The full lifecycle — COW upsert, MOR upsert + tombstone,
     resolved read, compaction, point lookup — answers exactly what a
     plain dict fold of the same operations does. The table keeps NO
     kb= dirs at the root (all data in hidden versioned dirs +
     manifest)."""
+    marker = ranged
     want = {k: (2 * k, "base") for k in range(2_000)}
-    upsert_keyed_table(
-        spark, marker, _ups(spark, [(3, 33, "cow"), (4_000, 1, "ins")]), mode="cow"
+    out = upsert_keyed_table(
+        spark, marker, _ups(spark, [(3, 33, "cow"), (4_000, 1, "ins")])
     )
+    assert out["mode"] == "cow"
     want.update({3: (33, "cow"), 4_000: (1, "ins")})
-    upsert_keyed_table(spark, marker, _ups(spark, [(5, 55, "mor")]), mode="mor")
+    apply_changes_keyed_table(spark, marker, _ups(spark, [(5, 55, "mor")]))
     want[5] = (55, "mor")
-    delete_from_keyed_table(
-        spark, marker, spark.createDataFrame([(7,)], "k long"), mode="mor"
+    out = delete_from_keyed_table(
+        spark, marker, spark.createDataFrame([(7,)], "k long")
     )
+    assert out["mode"] == "mor"  # a delta is pending
     del want[7]
     rows = {(k, v, tag) for k, (v, tag) in want.items()}
     assert _rows(read_keyed_table(spark, marker)) == rows
@@ -111,10 +128,11 @@ def test_marker_mor_crash_matrix(spark, marker):
     assert out3.get("replayed") and out3["seq"] == out2["seq"]
 
 
-def test_marker_cow_crash_before_flip_preserves_old_state(spark, marker, monkeypatch):
+def test_marker_cow_crash_before_flip_preserves_old_state(spark, ranged, monkeypatch):
     """Kill between the staged-bucket moves and the manifest PUT: the
     table answers from the OLD manifest; recovery GCs the moved-but-
     unreferenced dirs; re-applying the batch succeeds cleanly."""
+    marker = ranged
     before = _rows(read_keyed_table(spark, marker))
     real = K._write_commit
 
@@ -124,24 +142,25 @@ def test_marker_cow_crash_before_flip_preserves_old_state(spark, marker, monkeyp
     monkeypatch.setattr(K, "_write_commit", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         upsert_keyed_table(
-            spark, marker, _ups(spark, [(2, 222, "u"), (9_999, 9, "ins")]), mode="cow"
+            spark, marker, _ups(spark, [(2, 222, "u"), (9_999, 9, "ins")])
         )
     assert _rows(read_keyed_table(spark, marker)) == before, "old state intact"
     monkeypatch.setattr(K, "_write_commit", real)
     gc = K.recover_keyed_table(spark, marker)
     assert gc["gc_buckets"], "moved-but-unreferenced dirs collected"
     upsert_keyed_table(
-        spark, marker, _ups(spark, [(2, 222, "u"), (9_999, 9, "ins")]), mode="cow"
+        spark, marker, _ups(spark, [(2, 222, "u"), (9_999, 9, "ins")])
     )
     after = read_keyed_table(spark, marker)
     assert after.filter("k = 2").first().v == 222
     assert after.count() == 2_001
 
 
-def test_marker_unreferenced_garbage_is_gc_not_read(spark, marker):
+def test_marker_unreferenced_garbage_is_gc_not_read(spark, ranged):
     """A stray versioned dir (crash after flip, before best-effort
     deletes) is never read — resolution is manifest-only — and the
     sweep removes it. Old manifests are bounded to current+previous."""
+    marker = ranged
     stray = f"{marker}/_b3.v99"
     os.makedirs(stray)
     shutil.copy(
@@ -159,7 +178,7 @@ def test_marker_unreferenced_garbage_is_gc_not_read(spark, marker):
     assert "_b3.v99" in gc["gc_buckets"] and not os.path.exists(stray)
     # manifest GC: several batches leave at most 2 commit files
     for i in range(4):
-        upsert_keyed_table(spark, marker, _ups(spark, [(i, -i, "x")]), mode="cow")
+        assert upsert_keyed_table(spark, marker, _ups(spark, [(i, -i, "x")]))["mode"] == "cow"
     commits = [f for f in os.listdir(f"{marker}/_commits") if f.startswith("commit-")]
     assert len(commits) <= 2
 
@@ -168,7 +187,7 @@ def test_marker_reload_replaces_table(spark, marker):
     """A re-load (write_keyed_table over the live marker table) fully
     replaces buckets, deltas, and meta — prior keys are gone even when
     the new load touches fewer buckets."""
-    upsert_keyed_table(spark, marker, _ups(spark, [(1, -1, "m")]), mode="mor")
+    upsert_keyed_table(spark, marker, _ups(spark, [(1, -1, "m")]))
     fresh = spark.range(10).select(F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("n").alias("tag"))
     write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     got = read_keyed_table(spark, marker)
@@ -206,13 +225,14 @@ def test_marker_cdc_stream_ingest(spark, marker, tmp_path):
     assert got.filter("k = 30001").first().tag == "new"
 
 
-def test_marker_gc_grace_keeps_previous_generation_readable(spark, marker):
+def test_marker_gc_grace_keeps_previous_generation_readable(spark, ranged):
     """An in-flight reader that resolved the PREVIOUS manifest just
     before a flip must still find every dir it lists: superseded dirs
     survive exactly one more publish, then go."""
-    upsert_keyed_table(spark, marker, _ups(spark, [(1, -1, "g1")]), mode="cow")
+    marker = ranged
+    assert upsert_keyed_table(spark, marker, _ups(spark, [(1, -1, "g1")]))["mode"] == "cow"
     cm_prev = K._current_commit(spark, marker)  # the manifest a reader might hold
-    upsert_keyed_table(spark, marker, _ups(spark, [(1, -2, "g2")]), mode="cow")
+    upsert_keyed_table(spark, marker, _ups(spark, [(1, -2, "g2")]))
     # every dir the held manifest references still exists (grace)
     for d in cm_prev["buckets"].values():
         assert os.path.exists(f"{marker}/{d}"), f"grace violated for {d}"
@@ -220,7 +240,7 @@ def test_marker_gc_grace_keeps_previous_generation_readable(spark, marker):
     dirs = [f"{marker}/{d}" for d in cm_prev["buckets"].values()]
     assert spark.read.parquet(*dirs).count() == 2_000
     # one more publish retires the old generation
-    upsert_keyed_table(spark, marker, _ups(spark, [(1, -3, "g3")]), mode="cow")
+    upsert_keyed_table(spark, marker, _ups(spark, [(1, -3, "g3")]))
     cm_now = K._current_commit(spark, marker)
     live_and_prev = set(cm_now["buckets"].values())
     gone = [
@@ -321,9 +341,10 @@ def test_legacy_rename_table_refused_untouched(spark, tmp_path, legacy):
     refusal = "retired per-bucket rename commit protocol.*write_keyed_table into a new path"
     with pytest.raises(ValueError, match=refusal):
         read_keyed_table(spark, path)
-    for mode in ("cow", "mor"):
-        with pytest.raises(ValueError, match=refusal):
-            upsert_keyed_table(spark, path, _ups(spark, [(1, -1, "x")]), mode=mode)
+    with pytest.raises(ValueError, match=refusal):
+        upsert_keyed_table(spark, path, _ups(spark, [(1, -1, "x")]))
+    with pytest.raises(ValueError, match=refusal):
+        delete_from_keyed_table(spark, path, spark.createDataFrame([(1,)], "k long"))
     with pytest.raises(ValueError, match=refusal):
         compact_keyed_table(spark, path)
     assert snapshot() == before
@@ -342,7 +363,7 @@ def test_reload_retires_old_deltas_atomically(spark, marker, monkeypatch):
     floor so feed checkpoints never alias across re-loads."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import read_keyed_changes
 
-    upsert_keyed_table(spark, marker, _ups(spark, [(1, -1, "old-delta")]), mode="mor")
+    upsert_keyed_table(spark, marker, _ups(spark, [(1, -1, "old-delta")]))
     fresh = spark.range(10).select(
         F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("g2").alias("tag")
     )
@@ -362,7 +383,7 @@ def test_reload_retires_old_deltas_atomically(spark, marker, monkeypatch):
     assert got.count() == 10 and got.filter("k = 1").first().v == 0, \
         "old delta retired by the flip, not resurrected over the new table"
     # seq numbering continues past the retired generation
-    out = upsert_keyed_table(spark, marker, _ups_small(spark, [(3, 33, "n")]), mode="mor")
+    out = upsert_keyed_table(spark, marker, _ups_small(spark, [(3, 33, "n")]))
     assert out["seq"] >= 2, "floor keeps seqs monotonic across re-loads"
     with pytest.raises(ValueError, match="compacted into the base"):
         read_keyed_changes(spark, marker, since_seq=0)

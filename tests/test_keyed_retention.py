@@ -48,10 +48,10 @@ def test_slow_consumer_drains_archived_batches(spark):
     pending alike — with correct ops and seqs."""
     path = _mk(spark)
     try:
-        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11), mode="mor")   # seq 1
-        K.upsert_keyed_table(spark, path, _ups(spark, 2, 22), mode="mor")   # seq 2
+        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11))   # seq 1
+        K.upsert_keyed_table(spark, path, _ups(spark, 2, 22))   # seq 2
         K.compact_keyed_table(spark, path)                                  # folds 1-2
-        K.upsert_keyed_table(spark, path, _ups(spark, 3, 33), mode="mor")   # seq 3
+        K.upsert_keyed_table(spark, path, _ups(spark, 3, 33))   # seq 3
         # consumer checkpointed at seq 1: drains 2 (archived) + 3 (pending)
         got = {r.k: (r.v, r._seq, r._change_op)
                for r in K.read_keyed_changes(spark, path, since_seq=1).collect()}
@@ -76,9 +76,9 @@ def test_archive_gc_after_n_generations(spark):
     re-sync with the retention knob named."""
     path = _mk(spark)
     try:
-        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11), mode="mor")  # seq 1
+        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11))  # seq 1
         K.compact_keyed_table(spark, path)                                 # gen 1
-        K.upsert_keyed_table(spark, path, _ups(spark, 2, 22), mode="mor")  # seq 2
+        K.upsert_keyed_table(spark, path, _ups(spark, 2, 22))  # seq 2
         K.compact_keyed_table(spark, path)                                 # gen 2; gen 1 GC'd
         gens = os.listdir(os.path.join(path, K._FEED_ARCHIVE))
         assert gens == ["gen=2"], f"only the newest generation retained: {gens}"
@@ -95,7 +95,7 @@ def test_archive_gc_after_n_generations(spark):
 def test_retain_zero_restores_drop_on_fold(spark):
     path = _mk(spark)
     try:
-        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11), mode="mor")
+        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11))
         K.compact_keyed_table(spark, path, retain_generations=0)
         assert not os.path.exists(os.path.join(path, K._FEED_ARCHIVE))
         with pytest.raises(ValueError, match="compacted into the base"):
@@ -108,7 +108,7 @@ def test_retain_many_keeps_multiple_generations(spark):
     path = _mk(spark)
     try:
         for i, (k, v) in enumerate([(1, 11), (2, 22), (3, 33)], start=1):
-            K.upsert_keyed_table(spark, path, _ups(spark, k, v), mode="mor")
+            K.upsert_keyed_table(spark, path, _ups(spark, k, v))
             K.compact_keyed_table(spark, path, retain_generations=3)
         gens = sorted(os.listdir(os.path.join(path, K._FEED_ARCHIVE)))
         assert gens == ["gen=1", "gen=2", "gen=3"]
@@ -124,7 +124,7 @@ def test_reload_purges_archive(spark):
     page through rows the new base never contained."""
     path = _mk(spark)
     try:
-        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11), mode="mor")
+        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11))
         K.compact_keyed_table(spark, path)
         assert os.path.exists(os.path.join(path, K._FEED_ARCHIVE))
         fresh = spark.range(5).select(
@@ -147,12 +147,12 @@ def test_replay_ledger_survives_one_compaction(spark):
     path = _mk(spark)
     try:
         out1 = K.upsert_keyed_table(
-            spark, path, _ups(spark, 1, 11), mode="mor",
+            spark, path, _ups(spark, 1, 11),
             idempotency_key="batch-1",
         )
         K.compact_keyed_table(spark, path)
         replay = K.upsert_keyed_table(
-            spark, path, _ups(spark, 1, 11), mode="mor",
+            spark, path, _ups(spark, 1, 11),
             idempotency_key="batch-1",
         )
         assert replay.get("replayed") is True
@@ -168,12 +168,12 @@ def test_schema_evolution_reads_archived_prefold_deltas(spark):
     schema reads them with NULL for the new column."""
     path = _mk(spark)
     try:
-        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11), mode="mor")  # pre-evolve
+        K.upsert_keyed_table(spark, path, _ups(spark, 1, 11))  # pre-evolve
         K.compact_keyed_table(spark, path)
         wide = spark.createDataFrame(
             [(2, 22, "u", 0.5)], "k long, v long, tag string, score double"
         )
-        K.upsert_keyed_table(spark, path, wide, mode="mor", evolve_schema=True)
+        K.upsert_keyed_table(spark, path, wide, evolve_schema=True)
         got = {r.k: r.score for r in K.read_keyed_changes(spark, path, since_seq=0).collect()}
         assert got == {1: None, 2: 0.5}
     finally:
@@ -191,7 +191,9 @@ def test_marker_gc_generations_knob(spark):
             F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
             F.lit("m").alias("tag"),
         )
-        K.write_keyed_table(base, path, ["k"], num_buckets=2, gc_generations=3)
+        K.write_keyed_table(
+            base, path, ["k"], layout="range", range_step=25, gc_generations=3
+        )
         snapshots = {}
         for gen in range(1, 6):
             snapshots[gen] = K._current_commit(spark, path)
@@ -199,8 +201,8 @@ def test_marker_gc_generations_knob(spark):
                 F.col("id").alias("k"), F.lit(gen * 10).cast("long").alias("v"),
                 F.lit("m").alias("tag"),
             )
-            K.upsert_keyed_table(spark, path, batch, mode="cow",
-                                 assume_unique=True)
+            out = K.upsert_keyed_table(spark, path, batch, assume_unique=True)
+            assert out["mode"] == "cow"
         commits = sorted(
             int(f[len("commit-"):-len(".json")])
             for f in os.listdir(os.path.join(path, K._COMMITS_DIR))
@@ -245,16 +247,16 @@ def test_time_travel_marker_reads_history(spark):
                 spark, path,
                 spark.createDataFrame([(gen, gen * 100, "c")],
                                       "k long, v long, tag string"),
-                mode="cow",
             )
+            K.compact_keyed_table(spark, path)
             snapshot()
         # a MOR delta + an EVOLUTION commit (meta-only publish records
         # the delta as pending), then a compaction folds it to archive
-        K.upsert_keyed_table(spark, path, _ups(spark, 50, 555), mode="mor")
+        K.upsert_keyed_table(spark, path, _ups(spark, 50, 555))
         wide = spark.createDataFrame(
             [(60, 666, "e", 0.5)], "k long, v long, tag string, score double"
         )
-        K.upsert_keyed_table(spark, path, wide, mode="mor", evolve_schema=True)
+        K.upsert_keyed_table(spark, path, wide, evolve_schema=True)
         n_evolve = K._current_commit(spark, path)["n"]               # commit 5
         K.compact_keyed_table(spark, path)                           # commit 6
         snapshot()
@@ -298,11 +300,11 @@ def test_time_travel_refusals(spark):
                             gc_generations=10)
         # pending delta recorded in an evolution commit, then folded
         # with retention OFF: the time-travel overlay is gone
-        K.upsert_keyed_table(spark, mpath, _ups(spark, 1, 11), mode="mor")
+        K.upsert_keyed_table(spark, mpath, _ups(spark, 1, 11))
         wide = spark.createDataFrame(
             [(2, 22, "e", 1.5)], "k long, v long, tag string, score double"
         )
-        K.upsert_keyed_table(spark, mpath, wide, mode="mor", evolve_schema=True)
+        K.upsert_keyed_table(spark, mpath, wide, evolve_schema=True)
         n_evolve = K._current_commit(spark, mpath)["n"]
         K.compact_keyed_table(spark, mpath, retain_generations=0)
         with pytest.raises(ValueError, match="retain_generations"):
@@ -334,17 +336,17 @@ def test_rollback_marker_table(spark):
         K.upsert_keyed_table(
             spark, path,
             spark.createDataFrame([(1, 111, "good")], "k long, v long, tag string"),
-            mode="cow",
-        )                                                           # commit 2
+        )
+        K.compact_keyed_table(spark, path)                          # commit 2
         good = {(r.k, r.v) for r in K.read_keyed_table(spark, path).collect()}
-        # the bad generation: a COW batch AND a pending MOR delta
+        # the bad generation: a compacted batch AND a pending MOR delta
         K.upsert_keyed_table(
             spark, path,
             spark.createDataFrame([(2, -999, "bad")], "k long, v long, tag string"),
-            mode="cow",
-        )                                                           # commit 3
+        )
+        K.compact_keyed_table(spark, path)                          # commit 3
         bad_seq = K.upsert_keyed_table(
-            spark, path, _ups(spark, 3, -888), mode="mor",
+            spark, path, _ups(spark, 3, -888),
         )["seq"]
         out = K.rollback_keyed_table(spark, path, to_commit=2)
         assert out["rolled_back_to"] == 2 and out["new_commit"] == 4
@@ -355,7 +357,7 @@ def test_rollback_marker_table(spark):
         with pytest.raises(ValueError):
             K.read_keyed_changes(spark, path, since_seq=0)
         # new writes take fresh seqs ABOVE the retired ones
-        nxt = K.upsert_keyed_table(spark, path, _ups(spark, 5, 55), mode="mor")
+        nxt = K.upsert_keyed_table(spark, path, _ups(spark, 5, 55))
         assert nxt["seq"] > bad_seq
         assert K.read_keyed_table(spark, path).filter("k = 5").first().v == 55
         # the skipped generation stays time-travel-readable (retention
@@ -380,11 +382,11 @@ def test_rollback_refusals(spark):
         K.write_keyed_table(base, mpath, ["k"], num_buckets=2,
                             gc_generations=10)
         # a pending MOR delta, then an evolution commit that records it
-        K.upsert_keyed_table(spark, mpath, _ups(spark, 1, 11), mode="mor")
+        K.upsert_keyed_table(spark, mpath, _ups(spark, 1, 11))
         wide = spark.createDataFrame(
             [(2, 22, "e", 0.1)], "k long, v long, tag string, score double"
         )
-        K.upsert_keyed_table(spark, mpath, wide, mode="mor", evolve_schema=True)
+        K.upsert_keyed_table(spark, mpath, wide, evolve_schema=True)
         n_evolve = K._current_commit(spark, mpath)["n"]
         with pytest.raises(ValueError, match="pending MOR deltas"):
             K.rollback_keyed_table(spark, mpath, to_commit=n_evolve)

@@ -34,7 +34,7 @@ def test_marker_readers_never_torn_during_cow_storm(spark):
         F.col("id").alias("k"), F.lit(0).cast("long").alias("v"),
         F.lit("base").alias("tag"),
     )
-    K.write_keyed_table(base, path, ["k"], num_buckets=4)
+    K.write_keyed_table(base, path, ["k"], layout="range", range_step=125)
     try:
         errors: list[str] = []
         stop = threading.Event()
@@ -61,8 +61,8 @@ def test_marker_readers_never_torn_during_cow_storm(spark):
                     F.lit(gen * 1000).cast("long").alias("v"),
                     F.lit("s").alias("tag"),
                 )
-                K.upsert_keyed_table(spark, path, batch, mode="cow",
-                                     assume_unique=True)
+                out = K.upsert_keyed_table(spark, path, batch, assume_unique=True)
+                assert out["mode"] == "cow"
         finally:
             stop.set()
             for t in threads:

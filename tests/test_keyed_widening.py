@@ -71,7 +71,7 @@ def test_widen_int_to_bigint_metadata_only(spark):
             "k int, v bigint, tag string",
         )
         K.upsert_keyed_table(
-            spark, path, big, mode="mor", evolve_schema=True, assume_unique=True
+            spark, path, big, evolve_schema=True, assume_unique=True
         )
         assert base_files() == before, "widening must not rewrite base files"
         meta = K.read_keyed_meta(spark, path)
@@ -95,7 +95,7 @@ def test_compaction_converges_physical_type(spark):
             [(5, 5_000_000_000, "wide")], "k int, v bigint, tag string"
         )
         K.upsert_keyed_table(
-            spark, path, big, mode="mor", evolve_schema=True, assume_unique=True
+            spark, path, big, evolve_schema=True, assume_unique=True
         )
         K.compact_keyed_table(spark, path, rewrite_all=True)
         import os
@@ -124,7 +124,7 @@ def test_widen_key_refused_on_hash_layout(spark):
         )
         with pytest.raises(ValueError, match="cannot widen key columns"):
             K.upsert_keyed_table(
-                spark, path, big, mode="mor", evolve_schema=True, assume_unique=True
+                spark, path, big, evolve_schema=True, assume_unique=True
             )
     finally:
         _cleanup(path)
@@ -141,7 +141,7 @@ def test_widen_key_allowed_on_range_layout(spark):
             "k bigint, v int, tag string",
         )
         K.upsert_keyed_table(
-            spark, path, big, mode="mor", evolve_schema=True, assume_unique=True
+            spark, path, big, evolve_schema=True, assume_unique=True
         )
         tab = K.read_keyed_table(spark, path)
         assert dict(tab.dtypes)["k"] == "bigint"
@@ -163,7 +163,7 @@ def test_without_evolve_flag_lossy_bigint_still_refused(spark):
             [(5, 5_000_000_000, "wide")], "k int, v bigint, tag string"
         )
         with pytest.raises(ValueError, match="do not fit int"):
-            K.upsert_keyed_table(spark, path, big, mode="mor", assume_unique=True)
+            K.upsert_keyed_table(spark, path, big, assume_unique=True)
         assert K.read_keyed_table(spark, path).count() == 500
     finally:
         _cleanup(path)
@@ -183,7 +183,7 @@ def test_widen_float_to_double_and_decimal_growth(spark):
             [(5, 1.25, "123456789012345678.25")], "k long, f double, d string"
         ).select("k", "f", F.col("d").cast("decimal(20,2)").alias("d"))
         K.upsert_keyed_table(
-            spark, path, batch, mode="mor", evolve_schema=True, assume_unique=True
+            spark, path, batch, evolve_schema=True, assume_unique=True
         )
         tab = K.read_keyed_table(spark, path)
         assert dict(tab.dtypes)["f"] == "double"
@@ -195,3 +195,22 @@ def test_widen_float_to_double_and_decimal_growth(spark):
         assert r3.f == 1.5 and str(r3.d) == "3.00"
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_apply_changes_evolve_schema_widens(spark):
+    """The CDC entry point widens like the upsert does: a bigint value
+    past int range in an int column evolves the column to bigint (one
+    metadata commit) and lands exactly, instead of refusing the batch as
+    a lossy cast."""
+    path = _int_table(spark)
+    try:
+        big = spark.createDataFrame([(5, 2**40, "wide")], "k int, v bigint, tag string")
+        out = K.apply_changes_keyed_table(spark, path, big, evolve_schema=True)
+        assert out["upserts"] == 1
+        tab = K.read_keyed_table(spark, path)
+        assert dict(tab.dtypes)["v"] == "bigint"
+        assert tab.filter(F.col("k") == 5).first().v == 2**40
+        assert tab.filter(F.col("k") == 3).first().v == 6
+        assert tab.count() == 500
+    finally:
+        _cleanup(path)

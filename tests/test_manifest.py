@@ -240,6 +240,7 @@ def test_refresh_on_emptied_table_writes_empty_manifest(spark):
     # row used to make refresh raise AFTER the compact committed,
     # stranding a stale manifest full of dead paths.
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
+        compact_keyed_table,
         delete_from_keyed_table,
         write_keyed_table,
     )
@@ -255,7 +256,8 @@ def test_refresh_on_emptied_table_writes_empty_manifest(spark):
         mpath = write_file_stats_manifest(spark, path)
         n_files = spark.read.parquet(mpath).count()
         assert n_files >= 1
-        delete_from_keyed_table(spark, path, df.select("k"), mode="cow")
+        delete_from_keyed_table(spark, path, df.select("k"))
+        compact_keyed_table(spark, path)
         out = refresh_file_stats_manifest(spark, path)
         assert out == {"added": 0, "removed": n_files, "kept": 0, "total": 0}
         assert spark.read.parquet(mpath).count() == 0
@@ -269,7 +271,8 @@ def test_refresh_on_emptied_table_writes_empty_manifest(spark):
 def test_read_pruned_refuses_pending_mor_deltas(spark):
     # Round-11 ADVICE #5: the manifest covers only base files, so a
     # pruned read over a keyed table with pending deltas would silently
-    # return stale/resurrected rows.
+    # return stale/resurrected rows. Every upsert on a hash layout is an
+    # append, so the refusal holds until the next compaction.
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
         compact_keyed_table,
         upsert_keyed_table,
@@ -286,7 +289,7 @@ def test_read_pruned_refuses_pending_mor_deltas(spark):
         write_keyed_table(df, path, ["k"], num_buckets=4)
         write_file_stats_manifest(spark, path)
         batch = spark.createDataFrame([(5, 999)], "k long, v long")
-        upsert_keyed_table(spark, path, batch, mode="mor")
+        assert upsert_keyed_table(spark, path, batch)["mode"] == "mor"
         with pytest.raises(ValueError, match="pending MOR deltas"):
             read_pruned(spark, path, {"k": (0, 10)})
         compact_keyed_table(spark, path)
@@ -317,16 +320,17 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
         df = spark.range(5_000).select(
             F.col("id").alias("k"), (F.col("id") * 7 % 997).alias("v")
         )
-        for path in (a, b):
-            write_keyed_table(df, path, ["k"], num_buckets=8)
+        for path in (a, b):  # range layout: 20 buckets of 250 keys
+            write_keyed_table(df, path, ["k"], layout="range", range_step=250)
             write_file_stats_manifest(spark, path, cols=["k", "v"])
         dirs_before = _current_commit(spark, b)["buckets"]
-        batch = spark.range(40).select(
-            (F.col("id") * 100).alias("k"), F.lit(-1).alias("v")
+        batch = spark.range(40).select(  # keys 1000..1390: buckets 4 and 5
+            (F.col("id") * 10 + 1_000).alias("k"), F.lit(-1).alias("v")
         )
         outs = {}
         for path in (a, b):
-            outs[path] = upsert_keyed_table(spark, path, batch, mode="cow")
+            outs[path] = upsert_keyed_table(spark, path, batch)
+            assert outs[path]["mode"] == "cow"
         touched = outs[a]["touched_buckets"]
         assert touched == outs[b]["touched_buckets"]
         dirs_after = _current_commit(spark, b)["buckets"]
@@ -387,10 +391,9 @@ def test_compact_refresh_declares_touched_dirs(spark):
             spark,
             path,
             spark.createDataFrame([(3, -1), (2_500, -2)], "k long, v long"),
-            mode="mor",
         )
         delete_from_keyed_table(
-            spark, path, spark.createDataFrame([(10,)], "k long"), mode="mor"
+            spark, path, spark.createDataFrame([(10,)], "k long")
         )
         out = compact_keyed_table(spark, path, refresh_manifest=True)
         assert out["manifest"]["added"] == len(out["touched_buckets"])
@@ -407,6 +410,7 @@ def test_manifest_on_marker_commit_keyed_table(spark):
     COW churn + declared-dirs refresh (with grace-retained superseded
     dirs on disk), and an incremental refresh after compaction."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
+        apply_changes_keyed_table,
         compact_keyed_table,
         upsert_keyed_table,
         write_keyed_table,
@@ -421,8 +425,8 @@ def test_manifest_on_marker_commit_keyed_table(spark):
         df = spark.range(4_000).select(
             F.col("id").alias("k"), (F.col("id") % 97).alias("v")
         )
-        write_keyed_table(
-            df, path, ["k"], num_buckets=8, sort_cols=["k"]
+        write_keyed_table(  # range layout: 16 buckets of 250 keys
+            df, path, ["k"], layout="range", range_step=250, sort_cols=["k"]
         )
         mpath = write_file_stats_manifest(spark, path, cols=["k", "v"])
         m = spark.read.parquet(mpath)
@@ -437,8 +441,8 @@ def test_manifest_on_marker_commit_keyed_table(spark):
             spark,
             path,
             spark.createDataFrame([(110, -1), (5_000, -2)], "k long, v long"),
-            mode="cow",
         )
+        assert out["mode"] == "cow"
         r = refresh_file_stats_manifest(spark, path)
         assert r["added"] > 0 and r["removed"] > 0
         m2 = spark.read.parquet(mpath)
@@ -447,8 +451,8 @@ def test_manifest_on_marker_commit_keyed_table(spark):
         assert got2 == ({(i, i % 97) for i in range(100, 121)} - {(110, 110 % 97)}) | {(110, -1)}
 
         # MOR + compact(refresh_manifest=True): declared versioned dirs
-        upsert_keyed_table(
-            spark, path, spark.createDataFrame([(7, -7)], "k long, v long"), mode="mor"
+        apply_changes_keyed_table(
+            spark, path, spark.createDataFrame([(7, -7)], "k long, v long")
         )
         with pytest.raises(ValueError, match="pending MOR deltas"):
             read_pruned(spark, path, {"k": (0, 10)})
