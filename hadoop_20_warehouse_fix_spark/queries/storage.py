@@ -1,5 +1,6 @@
 """Driver-gated storage-layer queries (round 12): the keyed-table
-COW/MOR lifecycle and manifest file-pruning under the DuckDB oracle.
+append/compact lifecycle and manifest file-pruning under the DuckDB
+oracle.
 
 Round 11 built the mutable-table storage layer (``sources/keyed.py``,
 ``sources/manifest.py``) with pytest-only evidence; these queries make

@@ -1,5 +1,4 @@
-"""Keyed tables: copy-on-write AND merge-on-read upsert / delete
-(round 11).
+"""Keyed tables: merge-on-read upsert / delete (round 11).
 
 The reference's mutable-state story is MapFile merge — rewrite the
 sorted file with the new keys folded in (``C/io/MapFile.java``), and
@@ -14,47 +13,25 @@ Layout: plain parquet partitioned by a derived bucket column —
 key (time-series / monotonic-id tables). One directory per bucket;
 Spark partition pruning on ``kb`` is directory pruning.
 
-Two physical forms of one write, and the writer picks between them
-(the round-11 study, SCALING.md, measured the quadrant):
-
-- **COW**: rewrite ONLY the touched bucket dirs, leave every other
-  file physically untouched (pytest pins identity on a range layout).
-  Wins when the batch's keys are BUCKET-LOCAL — a backfill of one day
-  on a range layout touches one dir of thousands. LOSES for scattered
-  point updates: 1,000 uniform keys over 256 hash buckets touch ~254
-  of them (birthday math — touched ≈ B·(1-(1-1/B)^n)), and the
-  "pruned" rewrite IS the full rewrite plus swap overhead (6.9 s
-  against the append's 0.41 s at 20M rows, SCALING.md r13).
-- **MOR**: append the batch as a delta file set under
-  ``_delta/seq=N`` — O(batch) write cost regardless of key spread.
-  Readers resolve latest-seq-wins per key (the read tax), deletes are
-  tombstone rows, and :func:`compact_keyed_table` folds deltas back
-  into the base via the COW machinery, pruned to the buckets the
-  deltas actually touch.
-
-The selector (:func:`_write_batch`) reads only what the writer already
-knows. MOR, with no extra job, when deltas are pending (a COW rewrite
-under them would be overridden by older deltas at read time), when the
-batch carries an ``idempotency_key`` or ``evolve_schema`` (both ride
-the delta), or when the layout is hash (scattered by construction).
-On a range layout with nothing pending, COW — the key-local corner it
-wins. A COW batch takes a seq number too, so the change feed
-(:func:`read_keyed_changes`) raises toward re-sync instead of silently
-skipping it.
-
-This is the publicly documented Hudi/Iceberg COW-vs-MOR trade
-re-expressed on plain parquet directories, with the physical path
-picked by the writer as Impala's planner picks it; the delta/compact
-lifecycle mirrors this repo's ``minhash_state_append``/``_compact``
-discipline.
+Every upsert, delete and change batch is ONE delta append
+(:func:`_apply_changes_locked`) under ``_delta/seq=N`` — O(batch)
+write cost regardless of key spread, on either layout. Readers resolve
+latest-seq-wins per key (the read tax), deletes are tombstone rows,
+and every batch reaches the change feed (:func:`read_keyed_changes`).
+:func:`compact_keyed_table` folds the deltas back into the base by
+rewriting ONLY the bucket dirs they touch — the MapFile merge, and
+with a re-load the only writer of base bucket dirs (rollback and schema
+evolution publish a new manifest over existing dirs). The delta/compact lifecycle mirrors this repo's
+``minhash_state_append``/``_compact`` discipline, re-expressed from
+the publicly documented Hudi/Iceberg merge-on-read tables.
 
 Crash story: every commit is ONE single-file PUT. Bucket data lives in
 immutable versioned hidden dirs (``_b<b>.v<n>``) resolved through the
-highest-numbered ``_commits/commit-<n>.json`` manifest; a COW batch,
-compaction, re-load, evolution or rollback stages its new bucket dirs
+highest-numbered ``_commits/commit-<n>.json`` manifest; a compaction,
+re-load, evolution or rollback stages its new bucket dirs
 out of sight and then PUTs the next manifest — that PUT is the commit,
 and it flips every touched bucket (and the table metadata riding
-inside it) at once. A MOR delta dir counts only once its
+inside it) at once. A delta dir counts only once its
 ``_COMMITTED`` marker lands, written last. A crash anywhere leaves
 either the old manifest state or unreferenced garbage (moved-but-
 unpublished bucket dirs, unmarked seq dirs, ``_staging``) that the
@@ -80,7 +57,7 @@ format tag. Tables written by the retired per-bucket rename protocol
 rebuild them with :func:`write_keyed_table` into a new path.
 
 Single-writer, enforced (round 12): every mutation (initial load,
-COW/MOR batch, compaction) holds a ``_writer.lock`` lease taken by
+delta batch, compaction) holds a ``_writer.lock`` lease taken by
 create-exclusive — atomic on HDFS and local filesystems. A second
 concurrent writer raises :class:`KeyedTableLockedError` instead of
 silently interleaving with a publish; a lease older than the TTL is
@@ -129,7 +106,7 @@ DEFAULT_LOCK_TTL_SEC = 3600.0
 
 class KeyedTableLockedError(IOError):
     """Another writer holds the table's lease (round-12: keyed tables
-    are single-writer by construction — two interleaved COW publishes or a
+    are single-writer by construction — two interleaved publishes or a
     compact racing an append corrupt silently, so concurrent writers
     must refuse, not interleave)."""
 
@@ -457,7 +434,7 @@ class _writer_lease:
     Round 14: the lease HEARTBEATS — a daemon thread renews the lock
     payload every ``ttl/3`` (floor 1 s) while the batch runs, so TTL
     semantics become "writer alive", not "batch shorter than TTL": a
-    legitimate long COW backfill keeps its lease (breakers see a fresh
+    legitimate long compaction or re-load keeps its lease (breakers see a fresh
     mtime) while a crashed/hung writer stops renewing and is broken
     after one TTL as before. The renewal is ownership-checked and the
     thread stops permanently the moment the token no longer matches —
@@ -612,17 +589,32 @@ def _base_df(
     # inference entirely.
     cm = meta.get("_commit") or _current_commit(spark, path)
     want = None if buckets is None else {int(b) for b in buckets}
-    dirs = [
-        f"{path}/{d}"
+    dirs = sorted(
+        d
         for b, d in ((cm or {}).get("buckets") or {}).items()
         if want is None or int(b) in want
-    ]
+    )
     if not dirs:
         return empty()
+    # The scan's root paths are the dirs' parquet FILES, found by one
+    # driver-side glob: a hidden ``_b<b>.v<n>`` dir given as a root path
+    # trips Spark's hidden-path check, which logs "All paths were
+    # ignored" plus one line per dir on every read.
+    fs, _, jvm = _fs(spark, path)
+    found = fs.globStatus(
+        jvm.org.apache.hadoop.fs.Path(f"{path}/{{{','.join(dirs)}}}/*.parquet")
+    )
+    files = sorted(st.getPath().toString() for st in found or [])
+    # a published dir always holds a file, so a dir the glob finds
+    # nothing in is gone (GC'd under a reader too slow for the grace)
+    # and must raise, as a missing root path did, not read as empty
+    missing = sorted(set(dirs) - {f.rsplit("/", 2)[-2] for f in files})
+    if missing:
+        raise FileNotFoundError(f"{path!r}: live bucket dirs {missing} are gone")
     # kb is RECOMPUTED from the key columns (deterministic by
     # construction) — the versioned dirs are not kb= partition dirs,
     # so the column does not ride in from the path.
-    return spark.read.schema(data_schema).parquet(*sorted(dirs)).withColumn(
+    return spark.read.schema(data_schema).parquet(*files).withColumn(
         BUCKET_COL, _bucket_expr(meta)
     )
 
@@ -666,10 +658,13 @@ def write_keyed_table(
     commits land (Delta/Hudi-style retention; default 1 = the prior
     behavior).
     ``layout="range"`` buckets by ``leading_key div range_step`` —
-    pick it when update batches are key-local (time-series backfills),
-    so COW touches few directories (SCALING.md r11 quadrant study).
-    ``sort_cols`` orders rows WITHIN each bucket file (preserved by COW
-    rewrites and compaction) so parquet row-group min/max prunes on the
+    pick it when update batches are key-local (time-series backfills):
+    compaction then rewrites only the few bucket dirs those deltas
+    touch, each bucket covers one key interval so a compacted table
+    gives ``sources.manifest.read_pruned`` real key-range skipping, and
+    :func:`lookup_keys` computes bucket ids driver-side.
+    ``sort_cols`` orders rows WITHIN each bucket file (preserved by
+    compaction and re-loads) so parquet row-group min/max prunes on the
     sort key inside every bucket — the MapFile sorted-index discipline
     at the file level."""
     key_cols = list(key_cols)
@@ -728,7 +723,7 @@ def write_keyed_table(
         "range_step": int(range_step) if range_step else None,
         # The MapFile discipline one level down: rows sorted inside each
         # bucket file give parquet row-group min/max pruning on the sort
-        # key — COW rewrites and compaction preserve the order.
+        # key — compaction and re-loads preserve the order.
         "sort_cols": list(sort_cols) if sort_cols else [],
         # On-disk format tag: commit-manifest PUTs + _COMMITTED markers
         # (read_keyed_meta refuses any other value)
@@ -795,8 +790,8 @@ def write_keyed_table(
 
 
 def _write_layout(df: DataFrame, dest: str, n_parts: int, meta: dict) -> None:
-    """The single choke point for base-layout writes (initial load, COW
-    staging, compaction staging): bucket-aligned repartition, the
+    """The single choke point for base-layout writes (initial load,
+    compaction staging): bucket-aligned repartition, the
     table's within-bucket sort order, partitioned parquet. Always
     overwrite — appends must go through the delta/publish machinery, never
     around it."""
@@ -865,10 +860,11 @@ def _read_deltas(spark: SparkSession, path: str, meta: dict) -> DataFrame | None
 #: no probe job on the read path).
 DELTA_BROADCAST_BYTES = 256 << 20
 
-#: COW batches above this many rows anti-join the base with a plain
-#: shuffle instead of a broadcast hint — the same executor-budget cap
-#: as ``key_prefilter_join``'s default (≈32 MB of broadcast longs).
-COW_BROADCAST_KEY_ROWS = 4_000_000
+#: :func:`lookup_keys` key frames above this many keys semi-join the
+#: table with a plain shuffle instead of a broadcast hint — the same
+#: executor-budget cap as ``key_prefilter_join``'s default (≈32 MB of
+#: broadcast longs).
+LOOKUP_BROADCAST_KEY_ROWS = 4_000_000
 
 _NULL_BUCKET_ERR = (
     "batch has rows with a NULL bucket id (NULL leading key on a range "
@@ -1203,9 +1199,9 @@ def rollback_keyed_table(
     a bad rollback can be rolled back, and time-travel reads of the
     skipped generations keep working while retention lasts.
 
-    The target commit must have had NO pending MOR deltas
-    (``pending_seqs == []`` — a load, compaction, or quiesced-COW
-    commit): the normal read path overlays only PENDING deltas, and a
+    The target commit must have had NO pending deltas
+    (``pending_seqs == []`` — a load, or a compaction with no batch
+    after it): the normal read path overlays only PENDING deltas, and a
     target with folded-away pending state would silently read without
     it. For such targets, re-load from a time-travel read instead:
     ``write_keyed_table(read_keyed_table(spark, path, at_commit=n), …)``.
@@ -1352,7 +1348,7 @@ def _evolve_schema(
     explicit-schema readers upcast at scan time (Spark's vectorized
     parquet reader performs the ``_WIDENS`` promotions — int32→int64,
     float→double, int→double, decimal growth — probe-verified in
-    ``tests/test_keyed_widening.py``); compaction/COW churn converge
+    ``tests/test_keyed_widening.py``); compaction converges
     the physical type as buckets rewrite. Widening a KEY column is
     refused on the hash layout — ``xxhash64`` hashes int 5 and long 5
     to DIFFERENT values (probe-verified), so the widened key would
@@ -1419,7 +1415,7 @@ def drop_keyed_columns(
     ``schema_json``; no file rewrites. Old files still carry the bytes
     but the explicit-schema readers simply never request them (parquet
     column pruning — reading a SUBSET of a file's columns is the format
-    working as designed), and COW churn / compaction physically sheds
+    working as designed), and compaction physically sheds
     them as buckets rewrite; ``compact_keyed_table(rewrite_all=True)``
     is the immediate full purge. Batches written after the drop need
     not carry the columns.
@@ -1502,7 +1498,7 @@ def _coerce_to_table_types(
     """Cast ``batch``'s columns to the TABLE's declared types
     (``schema_json``), refusing loudly when any value would not survive.
 
-    Round-12 judge bug: ``_validated_batch`` compared column NAMES only,
+    Round-12 judge bug: batch validation compared column NAMES only,
     so an int-typed batch onto a long-typed table (or vice versa) wrote
     a delta parquet with the wrong physical type — the write reported
     success and every explicit-schema reader then crashed with
@@ -1608,22 +1604,6 @@ def _coerce_to_table_types(
     return batch
 
 
-def _validated_batch(meta: dict, batch: DataFrame, delete: bool) -> DataFrame:
-    key_cols, data_cols = meta["key_cols"], meta["data_cols"]
-    if delete:
-        batch = batch.select(*key_cols)
-        batch = _coerce_to_table_types(meta, batch, key_cols, "delete batch")
-    else:
-        if sorted(batch.columns) != sorted(data_cols):
-            raise ValueError(
-                f"update batch columns {sorted(batch.columns)} != table columns "
-                f"{sorted(data_cols)} — a keyed upsert replaces whole rows"
-            )
-        batch = batch.select(*data_cols)
-        batch = _coerce_to_table_types(meta, batch, data_cols, "update batch")
-    return batch
-
-
 def _fused_batch_stats(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -1631,13 +1611,11 @@ def _fused_batch_stats(
     what: str,
     extra: dict,
 ):
-    """ONE aggregation answering every per-batch question the write
-    paths need (round-12 review: _apply_batch and
-    apply_changes_keyed_table carried near-identical copies of this
-    block). ``extra`` maps an output name to ``(row_col, per_key_agg,
-    final_agg)`` — e.g. the delete count (sum/sum) or the touched
-    bucket set (first/collect_set; any per-key representative works
-    because the value is key-determined). Returns a Row with
+    """ONE aggregation answering every key-contract question of a
+    frame that is not written through the fused delta append (the
+    initial load and a replayed change batch). ``extra`` maps an output
+    name to ``(row_col, per_key_agg, final_agg)`` — e.g. the delete
+    count (sum/sum). Returns a Row with
     ``max_dup``, ``has_null``, ``n`` and the extra names; raises the
     key-contract errors (duplicates, NULL components) unless
     ``assume_unique``."""
@@ -1680,142 +1658,6 @@ def _fused_batch_stats(
             "first or pass assume_unique=True if uniqueness is already proven"
         )
     return st
-
-
-def _write_batch(
-    spark: SparkSession,
-    path: str,
-    batch: DataFrame,
-    delete: bool,
-    assume_unique: bool,
-    idempotency_key: str | None = None,
-    evolve_schema: bool = False,
-) -> dict:
-    """Upsert or delete under the caller's lease: picks the path
-    (module docstring); the result's ``"mode"`` names the pick. Only a
-    range layout with nothing pending is rewritten in place."""
-    meta = read_keyed_meta(spark, path)
-    if delete:
-        missing = [c for c in meta["key_cols"] if c not in batch.columns]
-        if missing:
-            raise ValueError(f"delete batch lacks key columns {missing}")
-    if (
-        meta.get("layout", "hash") == "hash"
-        or idempotency_key is not None
-        or evolve_schema
-        or _delta_seq_dirs(spark, path, meta)
-    ):
-        return _append_batch(
-            spark, path, meta, batch, delete, assume_unique, idempotency_key, evolve_schema
-        )
-    return _apply_batch(spark, path, meta, batch, delete, assume_unique)
-
-
-def _append_batch(
-    spark: SparkSession,
-    path: str,
-    meta: dict,
-    batch: DataFrame,
-    delete: bool,
-    assume_unique: bool,
-    idempotency_key: str | None = None,
-    evolve_schema: bool = False,
-) -> dict:
-    """MOR form: one :func:`_apply_changes_locked` append; a delete
-    batch rides as tombstone rows (keys, NULL values, op ``delete``)."""
-    op_col = None
-    if delete:
-        op_col = "_op"
-        while op_col in meta["data_cols"]:
-            op_col += "_"
-        schema = _data_schema(meta)
-        batch = batch.select(
-            *[
-                F.col(c) if c in meta["key_cols"] else F.lit(None).cast(t).alias(c)
-                for c, t in schema.items()
-            ],
-            F.lit("delete").alias(op_col),
-        )
-    return _apply_changes_locked(
-        spark, path, batch, op_col, assume_unique, idempotency_key, evolve_schema
-    )
-
-
-def _apply_batch(
-    spark: SparkSession,
-    path: str,
-    meta: dict,
-    batch: DataFrame,
-    delete: bool,
-    assume_unique: bool,
-) -> dict:
-    """COW form: rewrite the touched bucket dirs, one manifest PUT."""
-    key_cols = meta["key_cols"]
-    # GC any crashed writer's garbage BEFORE staging: a moved-but-
-    # unpublished _b<b>.v<n> dir from a crash would collide with this
-    # batch's publish of the same commit number.
-    _recover_unlocked(spark, path)
-    batch = _validated_batch(meta, batch, delete)
-    batch = batch.withColumn(BUCKET_COL, _bucket_expr(meta)).persist()
-    try:
-        # ONE fused pass (round 12): uniqueness + NULL-key detection +
-        # row count + touched-bucket set from a single aggregation,
-        # where the first draft ran three jobs.
-        st = _fused_batch_stats(
-            batch, key_cols, assume_unique, "batch",
-            {
-                "bks": (F.col(BUCKET_COL), F.first, F.collect_set),
-                # collect_set silently DROPS a NULL bucket id (range
-                # layout + NULL leading key under assume_unique slipped
-                # past the key checks) — such a row would land in a
-                # hive-default staging dir the publish never moves, i.e.
-                # silent row loss (second review pass); detect and
-                # refuse loudly whatever the assume_unique setting.
-                "null_kb": (F.col(BUCKET_COL).isNull(), F.max, F.max),
-            },
-        )
-        if bool(st.null_kb):
-            raise ValueError(_NULL_BUCKET_ERR)
-        touched = sorted(int(b) for b in st.bks)
-        batch_rows = int(st.n or 0)
-        if not touched:
-            return {"mode": "cow", "touched_buckets": [], "rows": 0, "seq": None}
-        # Read of ONLY the touched bucket dirs, pruned at the path list
-        # (plan pytest-pinned).
-        old = _base_df(spark, path, meta, buckets=touched).filter(
-            F.col(BUCKET_COL).isin(touched)
-        )
-        # Broadcast the batch keys only while they plausibly fit the
-        # executor budget (round-11 review: a multi-million-row range
-        # backfill is exactly this path, and an unconditional broadcast
-        # hint fails outright past the 8 GB hard limit where the plain
-        # shuffle anti-join succeeds). Same cap as key_prefilter_join.
-        # batch_rows comes from the fused stats pass above — no extra job.
-        batch_keys = batch.select(*key_cols)
-        if batch_rows <= COW_BROADCAST_KEY_ROWS:
-            batch_keys = F.broadcast(batch_keys)
-        survivors = old.join(batch_keys, on=key_cols, how="left_anti")
-        merged = survivors if delete else survivors.unionByName(batch)
-        staging = f"{path}/_staging"
-        fs, _, jvm = _fs(spark, staging)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-        _write_layout(merged, staging, len(touched), meta)
-        # the batch takes the next seq (hwm first: a crash only skips
-        # one) and records it in the manifest meta for read_keyed_changes
-        seq = max(_read_seq_hwm(spark, path), int(meta.get("delta_floor") or 0)) + 1
-        _write_seq_hwm(spark, path, seq)
-        pub = _marker_publish(
-            spark, path, staging, touched, meta=dict(meta, cow_seq=seq)
-        )
-        return {
-            "mode": "cow",
-            "touched_buckets": touched,
-            "untouched_buckets": pub["live_buckets"] - len(touched),
-            "rows": batch_rows,
-            "seq": seq,
-        }
-    finally:
-        batch.unpersist()
 
 
 _INGEST_KEY = "_ingest_key"
@@ -2102,7 +1944,7 @@ def _compact_locked(
     retain_generations: int = 1,
     rewrite_all: bool = False,
 ) -> dict:
-    _recover_unlocked(spark, path)  # same pre-read sweep as _apply_batch
+    _recover_unlocked(spark, path)  # same pre-read sweep as every writer
     deltas = _read_deltas(spark, path, meta)
     if deltas is None and not rewrite_all:
         # nothing to fold, but still honor the retention setting: a
@@ -2205,14 +2047,12 @@ def upsert_keyed_table(
     evolve_schema: bool = False,
 ) -> dict:
     """Override-join semantics at the storage layer: rows whose keys
-    appear in ``updates`` are replaced, new keys are inserted. The
-    writer picks the physical path (module docstring): an O(batch) MOR
-    delta the readers merge until :func:`compact_keyed_table` folds it,
-    or — on a range layout with nothing pending — a COW rewrite of only
-    the touched bucket dirs. The result's ``"mode"`` (``"cow"`` |
-    ``"mor"``) names the pick.
-    On a hash layout every write is MOR and leaves a pending delta:
-    until ``compact_keyed_table(refresh_manifest=True)`` folds it,
+    appear in ``updates`` are replaced, new keys are inserted. On
+    either layout the batch is ONE O(batch) delta append (the module
+    docstring) that readers merge until :func:`compact_keyed_table`
+    folds it, and that :func:`read_keyed_changes` returns.
+    Every write leaves a pending delta: until
+    ``compact_keyed_table(refresh_manifest=True)`` folds it,
     ``sources.manifest.read_pruned`` refuses the table, the commit it
     is pending under is no :func:`rollback_keyed_table` target, and
     each further batch adds to the read tax.
@@ -2222,12 +2062,11 @@ def upsert_keyed_table(
     (int→bigint, float→double, decimal growth — round 14): the table
     schema evolves atomically before the delta commits, old files read
     through the evolved schema (new column NULL; widened column upcast
-    at scan time), and COW churn / compaction rewrites buckets with the
-    evolved schema as they are touched. Both ride the delta, so either
-    picks MOR."""
+    at scan time), and compaction rewrites buckets with the evolved
+    schema as they are touched."""
     with _writer_lease(spark, path, lock_ttl_sec):
-        return _write_batch(
-            spark, path, updates, False, assume_unique, idempotency_key,
+        return _apply_changes_locked(
+            spark, path, updates, None, assume_unique, idempotency_key,
             evolve_schema,
         )
 
@@ -2240,15 +2079,30 @@ def delete_from_keyed_table(
     idempotency_key: str | None = None,
     lock_ttl_sec: float = DEFAULT_LOCK_TTL_SEC,
 ) -> dict:
-    """Key deletion, path picked as for :func:`upsert_keyed_table`: a
-    COW batch removes rows physically from the touched buckets now; a
-    MOR batch writes tombstones the readers honor and compaction makes
-    physical. On a hash layout every delete is MOR and leaves a pending
-    delta, with the same consequences as an upsert's until compaction.
-    Duplicate keys in a delete batch are harmless, so uniqueness
-    defaults off."""
+    """Key deletion as one delta append of tombstone rows (keys, NULL
+    values) that readers honor and compaction makes physical — pending
+    until then, with the same consequences as an upsert's. Columns
+    other than the keys are ignored. Duplicate keys in a delete batch
+    are harmless, so uniqueness defaults off."""
     with _writer_lease(spark, path, lock_ttl_sec):
-        return _write_batch(spark, path, keys, True, assume_unique, idempotency_key)
+        meta = read_keyed_meta(spark, path)
+        key_cols = meta["key_cols"]
+        missing = [c for c in key_cols if c not in keys.columns]
+        if missing:
+            raise ValueError(f"delete batch lacks key columns {missing}")
+        op_col = "_op"
+        while op_col in meta["data_cols"]:
+            op_col += "_"
+        tombstones = keys.select(
+            *[
+                F.col(c) if c in key_cols else F.lit(None).cast(t).alias(c)
+                for c, t in _data_schema(meta).items()
+            ],
+            F.lit("delete").alias(op_col),
+        )
+        return _apply_changes_locked(
+            spark, path, tombstones, op_col, assume_unique, idempotency_key
+        )
 
 
 def read_keyed_changes(
@@ -2277,11 +2131,11 @@ def read_keyed_changes(
     older than the earliest available seq raises — those changes were
     already folded and the consumer must re-sync from the base (the
     same contract as Delta/Hudi incremental reads past retention).
-    The same error covers a checkpoint older than the newest COW batch
-    of :func:`upsert_keyed_table` / :func:`delete_from_keyed_table`:
-    such a batch takes a seq but rewrites the base in place, so it is
-    never in the feed. Writers whose every batch must reach the feed
-    use :func:`apply_changes_keyed_table`, which always appends.
+    Every upsert, delete and change batch is an append, so each one is
+    in the feed. The same error covers a checkpoint older than a
+    ``cow_seq`` recorded in the table meta: earlier versions of this
+    module rewrote some range-layout batches in place, recorded the
+    newest such batch's seq there, and never fed it.
 
     Scale: one scan of O(pending delta) files; the resolve shuffle is
     delta-sized. The base is never touched."""
@@ -2309,14 +2163,14 @@ def read_keyed_changes(
         if avail
         else max(_read_seq_hwm(spark, path), floor) + 1
     )
-    # a COW batch's seq is a hole in the feed: nothing at or before it
-    # can be served as a complete change set
+    # a batch an earlier version rewrote in place is a hole in the
+    # feed: nothing at or before its recorded seq is a complete change set
     earliest = max(earliest, int(meta.get("cow_seq") or 0) + 1)
     if since_seq + 1 < earliest:
         raise ValueError(
             f"since_seq={since_seq} predates the earliest available delta "
             f"(seq={earliest}) — earlier changes were compacted into the "
-            "base (or rewritten in place by a COW batch) and aged out of "
+            "base (or rewritten in place) and aged out of "
             "the feed archive; re-sync from "
             "read_keyed_table and restart the feed from the current "
             "high-water mark (raise compact's retain_generations to widen "
@@ -2391,10 +2245,10 @@ def apply_changes_keyed_table(
     evolve_schema: bool = False,
 ) -> dict:
     """Apply a MIXED batch of row-level changes (upserts + deletes) as
-    ONE MOR delta append — the CDC fast path (round-12 brief #5), and
-    the one append every MOR pick of :func:`upsert_keyed_table` /
-    :func:`delete_from_keyed_table` goes through. It never picks COW,
-    so every batch it commits reaches :func:`read_keyed_changes`.
+    ONE delta append — the CDC fast path (round-12 brief #5), and the
+    one append :func:`upsert_keyed_table` and
+    :func:`delete_from_keyed_table` go through, so every batch reaches
+    :func:`read_keyed_changes`.
 
     ``op_col`` names an optional change-kind column: rows whose value
     is ``"delete"`` become tombstones (non-key columns NULLed), every
@@ -2508,7 +2362,6 @@ def _apply_changes_locked(
             )
             n_rows, n_del = int(tot.n or 0), int(tot.n_del or 0)
             return {
-                "mode": "mor",
                 "rows": n_rows,
                 "deletes": n_del,
                 "upserts": n_rows - n_del,
@@ -2591,7 +2444,6 @@ def _apply_changes_locked(
     seq = _commit_delta(spark, path, meta, validated, idempotency_key, _post_write_check)
     n_rows, n_del = counts["n"], counts["n_del"]
     result = {
-        "mode": "mor",
         "rows": n_rows,
         "deletes": n_del,
         "upserts": n_rows - n_del,
@@ -2624,7 +2476,7 @@ def lookup_keys(
     pass a DataFrame of keys past that — it runs as the
     broadcast-semi form (:func:`~..operators.joins.key_prefilter_join`
     physics), falling back to a shuffle semi-join past
-    ``COW_BROADCAST_KEY_ROWS`` keys. A caller-supplied key frame is
+    ``LOOKUP_BROADCAST_KEY_ROWS`` keys. A caller-supplied key frame is
     snapshotted ONCE via ``localCheckpoint(eager=True)`` (bucket probe
     + semi-join reuse the same rows — a non-deterministic frame
     re-evaluated between the two could probe buckets inconsistent with
@@ -2643,15 +2495,7 @@ def lookup_keys(
     """
     meta = read_keyed_meta(spark, path)
     key_cols, data_cols = meta["key_cols"], meta["data_cols"]
-    key_types: dict | None = None
-    if meta.get("schema_json"):
-        full = T.StructType.fromJson(json.loads(meta["schema_json"]))
-        key_types = {c: full[c].dataType for c in key_cols}
-
-    def typed(df: DataFrame) -> DataFrame:
-        if key_types is None:
-            return df.select(*key_cols)
-        return df.select(*[F.col(c).cast(key_types[c]).alias(c) for c in key_cols])
+    key_types = {c: t for c, t in _data_schema(meta).items() if c in key_cols}
 
     key_df: DataFrame | None = None
     cond = None
@@ -2659,7 +2503,11 @@ def lookup_keys(
         missing = [c for c in key_cols if c not in keys.columns]
         if missing:
             raise ValueError(f"key frame lacks key columns {missing}")
-        key_df = typed(keys).distinct().localCheckpoint(eager=True)
+        key_df = (
+            keys.select(*[F.col(c).cast(key_types[c]).alias(c) for c in key_cols])
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
     else:
         rows = [(k,) if not isinstance(k, tuple) else k for k in keys]
         if not rows:
@@ -2671,16 +2519,13 @@ def lookup_keys(
             )
         if any(len(r) != len(key_cols) for r in rows):
             raise ValueError(f"each key needs {len(key_cols)} component(s): {key_cols}")
-        if len(key_cols) == 1 and key_types is not None:
+        if len(key_cols) == 1:
             # single-key literal: a typed isin pushes to row groups —
             # keep it AND compute buckets without any Spark job where
             # the layout math is plain arithmetic
             cond = F.col(key_cols[0]).isin([r[0] for r in rows])
-        if key_types is not None:
-            kschema = T.StructType([T.StructField(c, key_types[c], True) for c in key_cols])
-            key_df = spark.createDataFrame(rows, kschema)
-        else:
-            key_df = typed(spark.createDataFrame(rows, list(key_cols)))
+        kschema = T.StructType([T.StructField(c, key_types[c], True) for c in key_cols])
+        key_df = spark.createDataFrame(rows, kschema)
 
     if meta.get("layout", "hash") == "range" and not isinstance(keys, DataFrame):
         step = int(meta["range_step"])
@@ -2701,7 +2546,7 @@ def lookup_keys(
             return df.filter(cond)
     else:
         n_keys = key_df.count()
-        probe = F.broadcast(key_df) if n_keys <= COW_BROADCAST_KEY_ROWS else key_df
+        probe = F.broadcast(key_df) if n_keys <= LOOKUP_BROADCAST_KEY_ROWS else key_df
 
         def restrict(df: DataFrame) -> DataFrame:
             return df.join(probe, on=key_cols, how="left_semi")

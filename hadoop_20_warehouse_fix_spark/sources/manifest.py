@@ -249,14 +249,14 @@ def refresh_file_stats_manifest(
 ) -> dict:
     """Incremental manifest maintenance: footer-read ONLY files that
     appeared since the last build, drop rows for files that vanished
-    (compaction, COW swaps, deletes), keep everything else verbatim.
+    (compaction, re-loads, deletes), keep everything else verbatim.
     At 100 TB a full rebuild is O(all files) per ingest — this is
     O(changed files) + one small manifest rewrite, the same
     cost-tracks-the-batch discipline as the dedup/IVF state appends.
 
     ``changed_dirs`` (round 12, VERDICT r11 observation #2) lets the
     WRITER declare which directories its batch touched — the bucket
-    dirs a COW swap or compaction replaced — so the refresh lists only
+    dirs a compaction replaced — so the refresh lists only
     those instead of walking the whole table: add/remove detection is
     then O(changed files), independent of table file count (measured:
     flat vs table size in SCALING.md, ~10k-file table). Writers in

@@ -32,6 +32,24 @@ def cache_manager_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``. The count comes from a
+    job group of this call alone: the status store keeps only the last
+    ``spark.ui.retainedJobs`` jobs, so a session-wide count stops
+    growing once a long suite has filled it."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from hadoop_20_warehouse_fix_spark.session import build_session

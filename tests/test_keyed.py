@@ -1,7 +1,6 @@
 """Keyed-table upsert/delete (round 11): override semantics at the
-storage layer. The writer picks the physical path — a MOR delta append,
-or on a range layout a COW rewrite of ONLY the touched bucket
-directories."""
+storage layer. Every batch is one delta append; compaction folds the
+deltas back by rewriting ONLY the bucket directories they touch."""
 
 from __future__ import annotations
 
@@ -22,6 +21,7 @@ from hadoop_20_warehouse_fix_spark.sources.keyed import (
     upsert_keyed_table,
     write_keyed_table,
 )
+from tests.conftest import count_jobs
 
 
 def _base_dirs(spark, path: str) -> dict[int, str]:
@@ -69,6 +69,9 @@ def ranged(spark):
 
 
 def test_upsert_override_semantics_and_cow(spark, ranged):
+    """The upsert appends and leaves every base file as it was; the
+    compaction that folds it is the copy-on-write step, and it rewrites
+    only the bucket dirs the batch touched."""
     before = _bucket_files(spark, ranged)
     updates = spark.range(110).select(
         # keys 3000..3099 hit bucket 4; 20_000..20_009 insert into bucket 32
@@ -77,16 +80,19 @@ def test_upsert_override_semantics_and_cow(spark, ranged):
         F.lit("upd").alias("tag"),
     )
     diag = upsert_keyed_table(spark, ranged, updates)
-    assert diag["mode"] == "cow"
-    got = {(r.k, r.v, r.tag) for r in read_keyed_table(spark, ranged).collect()}
+    assert diag["rows"] == 110 and diag["seq"] == 1
+    assert _bucket_files(spark, ranged) == before
     want = {(k, 2 * k, "base") for k in range(10_000) if not 3_000 <= k < 3_100} | {
         (k, -1, "upd") for k in [*range(3_000, 3_100), *range(20_000, 20_010)]
     }
+    got = {(r.k, r.v, r.tag) for r in read_keyed_table(spark, ranged).collect()}
     assert got == want
-    # COW: every untouched bucket's files are physically identical
+    cdiag = compact_keyed_table(spark, ranged)
+    touched = set(cdiag["touched_buckets"])
+    assert touched == {4, 32}
+    assert {(r.k, r.v, r.tag) for r in read_keyed_table(spark, ranged).collect()} == want
+    # every untouched bucket's files are physically identical
     after = _bucket_files(spark, ranged)
-    touched = set(diag["touched_buckets"])
-    assert touched == {4, 32} and diag["rows"] == 110
     for b, files in before.items():
         if b not in touched:
             assert after[b] == files, f"untouched bucket {b} was rewritten"
@@ -168,6 +174,42 @@ def _ups(spark, pairs):
     return spark.createDataFrame(pairs, "k long, v long, tag string")
 
 
+def _scan_roots(df) -> list[str]:
+    """Root paths of every file scan in ``df``'s optimized plan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            rp = leaf.relation().location().rootPaths()
+            out += [rp.apply(j).toString() for j in range(rp.size())]
+    return out
+
+
+def test_base_scan_roots_are_files_not_hidden_dirs(spark, keyed):
+    """The base scan's root paths are the parquet files of the live
+    versioned dirs. A hidden ``_b<b>.v<n>`` dir as a root path made
+    Spark log "All paths were ignored" plus one line per dir on every
+    read, lookup and compaction. A live dir that is gone still raises
+    rather than reading as empty."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import lookup_keys
+
+    def hidden(paths):
+        return [p for p in paths if p.rstrip("/").rsplit("/", 1)[-1].startswith("_")]
+
+    roots = _scan_roots(read_keyed_table(spark, keyed))
+    assert roots and not hidden(roots)
+    live = {os.path.basename(d) for d in _base_dirs(spark, keyed).values()}
+    assert {r.rsplit("/", 2)[-2] for r in roots} == live
+    upsert_keyed_table(spark, keyed, _ups(spark, [(1, -1, "m")]))
+    for df in (read_keyed_table(spark, keyed), lookup_keys(spark, keyed, [1, 2])):
+        roots = _scan_roots(df)
+        assert roots and not hidden(roots), roots
+    shutil.rmtree(_base_dirs(spark, keyed)[0])
+    with pytest.raises(FileNotFoundError, match="are gone"):
+        read_keyed_table(spark, keyed)
+
+
 def test_mor_upsert_is_append_only_and_resolves(spark, keyed):
     before = _bucket_files(spark, keyed)
     d1 = upsert_keyed_table(spark, keyed, _ups(spark, [(5, -5, "m1"), (20_001, 1, "m1")]))
@@ -214,31 +256,27 @@ def test_mor_delete_tombstone_then_compact_physical(spark, keyed):
 
 
 def test_pending_deltas_pick_mor_and_newest_write_wins(spark, ranged):
-    """A COW rewrite under pending deltas would sit in the base at
-    logical seq 0 and be overridden by the OLDER deltas at read time.
-    With a delta pending, a key-local batch that would otherwise be
-    COW is appended, so the newest write wins; once compacted, the
-    same batch shape rewrites in place again."""
+    """Upserts, deletes and change batches share one seq order, so the
+    newest write wins across them, before and after a compaction."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import apply_changes_keyed_table
 
-    apply_changes_keyed_table(spark, ranged, _ups(spark, [(1, 0, "m"), (2, 0, "m")]))
+    first = apply_changes_keyed_table(spark, ranged, _ups(spark, [(1, 0, "m"), (2, 0, "m")]))
     out = upsert_keyed_table(spark, ranged, _ups(spark, [(1, -1, "new")]))
-    assert out["mode"] == "mor"
+    assert out["seq"] == first["seq"] + 1
     out = delete_from_keyed_table(spark, ranged, spark.createDataFrame([(2,)], "k long"))
-    assert out["mode"] == "mor"
+    assert out["seq"] == first["seq"] + 2 and out["deletes"] == 1
     tab = read_keyed_table(spark, ranged)
     assert tab.filter("k = 1").first().v == -1 and tab.filter("k = 2").count() == 0
     compact_keyed_table(spark, ranged)
-    out = upsert_keyed_table(spark, ranged, _ups(spark, [(1, -3, "c")]))
-    assert out["mode"] == "cow"
+    upsert_keyed_table(spark, ranged, _ups(spark, [(1, -3, "c")]))
     tab = read_keyed_table(spark, ranged)
     assert tab.filter("k = 1").first().v == -3 and tab.count() == 9_999
 
 
 def test_range_layout_keeps_local_batches_local(spark):
-    """The COW quadrant fix: a key-local batch on a range layout touches
-    ONE bucket dir of many (hash scatters the same batch everywhere —
-    the SCALING.md r11 birthday-math finding)."""
+    """A key-local batch on a range layout touches ONE bucket dir of
+    many, so its compaction rewrites that dir alone (hash scatters the
+    same batch everywhere — the SCALING.md r11 birthday-math finding)."""
     tmp = tempfile.mkdtemp(prefix="keyed_range_")
     path = f"{tmp}/tab"
     try:
@@ -251,9 +289,14 @@ def test_range_layout_keeps_local_batches_local(spark):
         ups = spark.range(30_000, 30_100).select(
             F.col("id").alias("k"), F.lit(-1).cast("long").alias("v"), F.lit("fix").alias("tag")
         )
-        diag = upsert_keyed_table(spark, path, ups)
-        assert diag["mode"] == "cow"
-        assert diag["touched_buckets"] == [3] and diag["untouched_buckets"] == 9
+        assert upsert_keyed_table(spark, path, ups)["rows"] == 100
+        before = _base_dirs(spark, path)
+        assert compact_keyed_table(spark, path)["touched_buckets"] == [3]
+        after = _base_dirs(spark, path)
+        assert after[3] != before[3]
+        assert {b: d for b, d in after.items() if b != 3} == {
+            b: d for b, d in before.items() if b != 3
+        }
         tab = read_keyed_table(spark, path)
         assert tab.filter("tag = 'fix'").count() == 100 and tab.count() == 100_000
         with pytest.raises(ValueError, match="range_step"):
@@ -442,20 +485,25 @@ def test_delete_everything_keeps_table_readable(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_cow_broadcast_cap_falls_back_to_shuffle(spark, ranged, monkeypatch):
-    """Round-11 review: past the key cap the COW anti-join must run as
-    a plain shuffle (a forced broadcast of a huge backfill fails where
-    the shuffle succeeds) — rows identical either way."""
+def test_lookup_broadcast_cap_falls_back_to_shuffle(spark, ranged, monkeypatch):
+    """Round-11 review: past the key cap a lookup key frame must
+    semi-join as a plain shuffle (a forced broadcast of a huge key set
+    fails where the shuffle succeeds) — rows identical either way."""
     import hadoop_20_warehouse_fix_spark.sources.keyed as K
+    from hadoop_20_warehouse_fix_spark.sources.keyed import lookup_keys
 
-    monkeypatch.setattr(K, "COW_BROADCAST_KEY_ROWS", 1)
-    ups = _ups(spark, [(11, -11, "s"), (12, -12, "s"), (20_002, 1, "s")])
-    assert upsert_keyed_table(spark, ranged, ups)["mode"] == "cow"
-    got = {
-        (r.k, r.v, r.tag)
-        for r in read_keyed_table(spark, ranged).filter(F.col("k").isin(11, 12, 20_002)).collect()
-    }
-    assert got == {(11, -11, "s"), (12, -12, "s"), (20_002, 1, "s")}
+    kdf = spark.createDataFrame([(11,), (12,), (20_002,)], "k long")
+
+    def hinted(df) -> bool:
+        return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+    runs = {}
+    for cap in (K.LOOKUP_BROADCAST_KEY_ROWS, 1):
+        monkeypatch.setattr(K, "LOOKUP_BROADCAST_KEY_ROWS", cap)
+        out = lookup_keys(spark, ranged, kdf)
+        runs[cap > 1] = (hinted(out), {(r.k, r.v, r.tag) for r in out.collect()})
+    assert runs[True][0] and not runs[False][0]
+    assert runs[True][1] == runs[False][1] == {(11, 22, "base"), (12, 24, "base")}
 
 
 def test_stream_namespace_isolates_checkpoints(spark, tmp_path):
@@ -483,8 +531,9 @@ def test_stream_namespace_isolates_checkpoints(spark, tmp_path):
 
 def test_sort_cols_preserved_through_cow_and_compact(spark, tmp_path):
     """sort_cols orders rows within every bucket file (row-group
-    min/max pruning on the sort key) — and the order must survive COW
-    rewrites AND compaction, not just the initial load."""
+    min/max pruning on the sort key) — and the order must survive every
+    compaction (the copy-on-write bucket rewrite), not just the initial
+    load."""
     import pyarrow.parquet as pq
 
     from hadoop_20_warehouse_fix_spark.sources.keyed import apply_changes_keyed_table
@@ -509,8 +558,8 @@ def test_sort_cols_preserved_through_cow_and_compact(spark, tmp_path):
 
     assert_sorted_files()
     ups = spark.createDataFrame([(5, 12345, "u"), (17, 1, "u")], "k long, ts long, tag string")
-    # COW rewrite of the touched bucket
-    assert upsert_keyed_table(spark, path, ups)["mode"] == "cow"
+    upsert_keyed_table(spark, path, ups)
+    compact_keyed_table(spark, path)
     assert_sorted_files()
     apply_changes_keyed_table(
         spark, path,
@@ -743,7 +792,7 @@ def test_writer_lease_refuses_second_writer_and_recovers_stale(spark, keyed):
     old = time.time() - 120
     os.utime(lock, (old, old))
     out = upsert_keyed_table(spark, keyed, batch, lock_ttl_sec=60)
-    assert out["mode"] == "mor"
+    assert out["seq"] == 1
     assert not os.path.exists(lock), "lease must be released after the write"
     assert read_keyed_table(spark, keyed).filter("k = 1").first().v == -5
 
@@ -899,22 +948,6 @@ def test_change_feed_empty_window_column_order(spark, tmp_path):
     assert raw_empty_cols == raw_cols == ["v", "k", "_change_op", "_seq"]
 
 
-def test_cow_refuses_null_bucket_rows_even_assume_unique(spark, tmp_path):
-    """Second review pass: on a range layout a NULL leading key under
-    assume_unique used to slip past the key checks into a bucket id of
-    NULL — collect_set dropped it from `touched` and the row silently
-    vanished into a staging dir the swap never moves. Refuse loudly."""
-    path = str(tmp_path / "t")
-    df = spark.range(100).select(F.col("id").alias("k"), F.lit(1).alias("v"))
-    write_keyed_table(df, path, ["k"], layout="range", range_step=10)
-    bad = spark.createDataFrame([(None, 5), (3, 7)], "k long, v long")
-    with pytest.raises(ValueError, match="NULL"):
-        upsert_keyed_table(spark, path, bad, assume_unique=True)
-    with pytest.raises(ValueError, match="NULL"):
-        upsert_keyed_table(spark, path, bad)  # checked path still refuses
-    assert read_keyed_table(spark, path).count() == 100
-
-
 def test_reload_keeps_hwm_and_feed_contract(spark, keyed):
     """A re-load keeps seq numbering monotonic (hwm survives,
     delta_floor retires the old generation's pending deltas) so
@@ -941,8 +974,8 @@ def test_schema_evolution_additive_mor(spark, keyed):
     """Round-12 schema evolution: a MOR batch carries a NEW column —
     the schema evolves atomically before the delta commits, old rows
     read the column as NULL (explicit-schema readers), compaction folds
-    the evolved schema into the touched buckets, COW batches then carry
-    the full evolved set, and the change feed sees the column."""
+    the evolved schema into the touched buckets, later batches then
+    carry the full evolved set, and the change feed sees the column."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
         apply_changes_keyed_table,
         read_keyed_changes,
@@ -982,8 +1015,8 @@ def test_schema_evolution_additive_mor(spark, keyed):
     look = {r.k: r.score for r in lookup_keys(spark, keyed, [1, 2]).collect()}
     assert look == {1: 0.5, 2: None}
     # later batches require (and write) the full evolved set
-    cow = spark.createDataFrame([(2, 222, "c", 1.5)], "k long, v long, tag string, score double")
-    upsert_keyed_table(spark, keyed, cow)
+    later = spark.createDataFrame([(2, 222, "c", 1.5)], "k long, v long, tag string, score double")
+    upsert_keyed_table(spark, keyed, later)
     assert read_keyed_table(spark, keyed).filter("k = 2").first().score == 1.5
 
 
@@ -1088,33 +1121,36 @@ def test_stream_ingest_without_sequence_col_refuses_cross_file_dupes(spark, tmp_
         stream_keyed_upsert_ingest(sdf, path, str(tmp_path / "ckpt"), op_col="op")
 
 
-def test_write_path_selector_matches_fold(spark):
-    """The writer picks COW or MOR from what it already knows: hash
-    layouts, pending deltas, idempotency keys and schema evolution
-    append; any other range-layout batch is rewritten in place, however
-    many buckets it touches. Whatever the pick, the table equals the
-    plain dict fold of the writes."""
-    from hadoop_20_warehouse_fix_spark.sources.keyed import apply_changes_keyed_table
+def test_every_write_corner_appends_and_matches_fold(spark):
+    """Every upsert and delete is one delta append — on both layouts,
+    with or without a pending delta, idempotency key or schema
+    evolution, key-local or scattered over every bucket — so every
+    corner adds exactly one committed seq dir, leaves the base files as
+    they were, and reads back as the plain dict fold of the writes."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import (
+        _delta_seq_dirs,
+        apply_changes_keyed_table,
+    )
 
     def keys_df(keys):
         return spark.createDataFrame([(k,) for k in keys], "k long")
 
     local = list(range(1_000, 1_050)) + [6_450]  # 2 of 64 range buckets
     scattered = list(range(0, 6_400, 100)) + list(range(50, 6_400, 200))  # 64 of 64
-    # (layout, pre-write pending delta?, batch keys, delete?, extra kwargs, pick)
+    # (layout, pre-write pending delta?, batch keys, delete?, extra kwargs)
     cases = [
-        ("hash", False, local, False, {}, "mor"),
-        ("hash", False, local, True, {}, "mor"),
-        ("range", False, local, False, {}, "cow"),
-        ("range", False, local, True, {}, "cow"),
-        ("range", False, scattered, False, {}, "cow"),
-        ("range", False, scattered, True, {}, "cow"),
-        ("range", True, local, False, {}, "mor"),
-        ("range", True, local, True, {}, "mor"),
-        ("range", False, local, False, {"idempotency_key": "b1"}, "mor"),
-        ("range", False, local, False, {"evolve_schema": True}, "mor"),
+        ("hash", False, local, False, {}),
+        ("hash", False, local, True, {}),
+        ("range", False, local, False, {}),
+        ("range", False, local, True, {}),
+        ("range", False, scattered, False, {}),
+        ("range", False, scattered, True, {}),
+        ("range", True, local, False, {}),
+        ("range", True, local, True, {}),
+        ("range", False, local, False, {"idempotency_key": "b1"}),
+        ("range", False, local, False, {"evolve_schema": True}),
     ]
-    for i, (layout, pending, keys, delete, kw, pick) in enumerate(cases):
+    for i, (layout, pending, keys, delete, kw) in enumerate(cases):
         tmp = tempfile.mkdtemp(prefix="keyed_pick_")
         path = f"{tmp}/tab"
         try:
@@ -1129,6 +1165,8 @@ def test_write_path_selector_matches_fold(spark):
             if pending:
                 apply_changes_keyed_table(spark, path, _ups(spark, [(keys[0], -7, "pre")]))
                 fold[keys[0]] = (-7, "pre")
+            files = _bucket_files(spark, path)
+            n_deltas = len(_delta_seq_dirs(spark, path))
             if delete:
                 out = delete_from_keyed_table(spark, path, keys_df(keys), **kw)
                 for k in keys:
@@ -1138,7 +1176,9 @@ def test_write_path_selector_matches_fold(spark):
                     spark, path, _ups(spark, [(k, -k, f"w{i}") for k in keys]), **kw
                 )
                 fold.update({k: (-k, f"w{i}") for k in keys})
-            assert out["mode"] == pick, (i, out)
+            assert out["rows"] == len(keys), (i, out)
+            assert len(_delta_seq_dirs(spark, path)) == n_deltas + 1, i
+            assert _bucket_files(spark, path) == files, i
             got = {
                 (r.k, r.v, r.tag)
                 for r in read_keyed_table(spark, path).select("k", "v", "tag").collect()
@@ -1148,81 +1188,106 @@ def test_write_path_selector_matches_fold(spark):
             shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_hash_upsert_runs_only_the_append_jobs(spark, keyed):
-    """A hash upsert is one append: its validation rides the delta
-    write. Pinned through the status store — 1 job for a trusted batch,
-    2 for a validated one (the key-uniqueness window's exchange runs as
-    its own job under adaptive execution). The default COW path ran 6
-    and 7."""
-    import uuid
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs(fn) -> tuple[dict, int]:
-        group = f"keyed-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(tracker.getJobIdsForGroup(group))
+def _assert_writes_run_the_apply_jobs(spark, path):
+    """upsert, delete and apply_changes run the same jobs: 1 for a
+    trusted batch, 2 for a validated one (the key-uniqueness window's
+    exchange runs as its own job under adaptive execution)."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import apply_changes_keyed_table
 
     batch = _ups(spark, [(1, -1, "j"), (20_001, 5, "j")])
-    out, n = jobs(lambda: upsert_keyed_table(spark, keyed, batch, assume_unique=True))
-    assert out["mode"] == "mor" and n == 1
-    out, n = jobs(lambda: upsert_keyed_table(spark, keyed, batch))
-    assert out["mode"] == "mor" and n == 2
-    assert read_keyed_table(spark, keyed).filter("tag = 'j'").count() == 2
+    keys = spark.createDataFrame([(2,), (3,)], "k long")
+    writes = {
+        "apply": lambda trusted: apply_changes_keyed_table(
+            spark, path, batch, assume_unique=trusted
+        ),
+        "upsert": lambda trusted: upsert_keyed_table(
+            spark, path, batch, assume_unique=trusted
+        ),
+        "delete": lambda trusted: delete_from_keyed_table(
+            spark, path, keys, assume_unique=trusted
+        ),
+    }
+    for name, write in writes.items():
+        for trusted, want in ((True, 1), (False, 2)):
+            out, n = count_jobs(spark, lambda: write(trusted))
+            assert out["rows"] == 2 and n == want, (name, trusted, n)
+    tab = read_keyed_table(spark, path)
+    assert tab.filter("tag = 'j'").count() == 2 and tab.filter("k in (2, 3)").count() == 0
 
 
-def test_change_feed_returns_every_hash_batch(spark, keyed):
-    """A checkpointed consumer reads back every key changed after its
-    checkpoint: on a hash table every upsert and delete is appended,
-    so the feed carries all of them."""
+def test_hash_upsert_runs_only_the_append_jobs(spark, keyed):
+    """A hash-table upsert or delete is one append whose validation
+    rides the delta write, pinned through a per-call job group."""
+    _assert_writes_run_the_apply_jobs(spark, keyed)
+
+
+def test_range_writes_run_only_the_append_jobs(spark, ranged):
+    """A range-table upsert or delete runs the same jobs as on a hash
+    table: the NULL-bucket check rides the append's observation."""
+    _assert_writes_run_the_apply_jobs(spark, ranged)
+
+
+def _assert_feed_returns_every_batch(spark, path):
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
         apply_changes_keyed_table,
         read_keyed_changes,
     )
 
-    ckpt = apply_changes_keyed_table(spark, keyed, _ups(spark, [(1, -1, "a")]))["seq"]
-    compact_keyed_table(spark, keyed)
-    upsert_keyed_table(spark, keyed, _ups(spark, [(k, -k, "u1") for k in range(100, 110)]))
+    ckpt = apply_changes_keyed_table(spark, path, _ups(spark, [(1, -1, "a")]))["seq"]
+    compact_keyed_table(spark, path)
+    upsert_keyed_table(spark, path, _ups(spark, [(k, -k, "u1") for k in range(100, 110)]))
     delete_from_keyed_table(
-        spark, keyed, spark.createDataFrame([(k,) for k in range(200, 205)], "k long")
+        spark, path, spark.createDataFrame([(k,) for k in range(200, 205)], "k long")
     )
-    upsert_keyed_table(spark, keyed, _ups(spark, [(k, -k, "u2") for k in range(300, 305)]))
-    got = {r.k: r._change_op for r in read_keyed_changes(spark, keyed, since_seq=ckpt).collect()}
+    upsert_keyed_table(spark, path, _ups(spark, [(k, -k, "u2") for k in range(300, 305)]))
+    got = {r.k: r._change_op for r in read_keyed_changes(spark, path, since_seq=ckpt).collect()}
     want = {k: "upsert" for k in [*range(100, 110), *range(300, 305)]}
     want.update({k: "delete" for k in range(200, 205)})
     assert got == want
 
 
-def test_change_feed_raises_past_a_cow_batch(spark, ranged):
-    """A COW batch rewrites the base in place, so it never reaches the
-    feed: a checkpoint older than it raises toward re-sync instead of
-    silently skipping it; a consumer that re-synced at the batch's seq
-    reads on from there."""
-    from hadoop_20_warehouse_fix_spark.sources.keyed import (
-        apply_changes_keyed_table,
-        read_keyed_changes,
-    )
+def test_change_feed_returns_every_hash_batch(spark, keyed):
+    """A checkpointed consumer reads back every key changed after its
+    checkpoint: every upsert and delete is appended, so the feed
+    carries all of them."""
+    _assert_feed_returns_every_batch(spark, keyed)
 
-    ckpt = apply_changes_keyed_table(spark, ranged, _ups(spark, [(1, -1, "a")]))["seq"]
+
+def test_change_feed_returns_every_range_batch(spark, ranged):
+    """The same on a range table: key-local upserts and deletes are
+    appended too, so none is missing from the feed."""
+    _assert_feed_returns_every_batch(spark, ranged)
+
+
+def test_change_feed_raises_past_a_cow_batch(spark, ranged):
+    """A table whose manifest meta already records a ``cow_seq`` (a
+    batch an earlier version rewrote in place, never fed) still raises
+    for a checkpoint below it instead of silently skipping that batch;
+    a consumer that re-synced at that seq reads on from there."""
+    import hadoop_20_warehouse_fix_spark.sources.keyed as K
+
+    ckpt = K.apply_changes_keyed_table(spark, ranged, _ups(spark, [(1, -1, "a")]))["seq"]
     compact_keyed_table(spark, ranged)
-    cow = upsert_keyed_table(spark, ranged, _ups(spark, [(k, -k, "c") for k in range(3_000, 3_010)]))
-    with pytest.raises(ValueError, match="COW batch"):
-        read_keyed_changes(spark, ranged, since_seq=ckpt)
-    assert cow["mode"] == "cow" and cow["seq"] > ckpt
-    nxt = apply_changes_keyed_table(spark, ranged, _ups(spark, [(5, -5, "n")]))
-    assert nxt["seq"] > cow["seq"]
-    assert [r.k for r in read_keyed_changes(spark, ranged, since_seq=cow["seq"]).collect()] == [5]
+    cow_seq = ckpt + 1
+    with K._writer_lease(spark, ranged, K.DEFAULT_LOCK_TTL_SEC):
+        K._write_seq_hwm(spark, ranged, cow_seq)
+        meta = dict(read_keyed_meta(spark, ranged), cow_seq=cow_seq)
+        K._marker_publish(spark, ranged, f"{ranged}/_staging", [], meta=meta)
+    with pytest.raises(ValueError, match="rewritten in place"):
+        K.read_keyed_changes(spark, ranged, since_seq=ckpt)
+    nxt = K.apply_changes_keyed_table(spark, ranged, _ups(spark, [(5, -5, "n")]))
+    assert nxt["seq"] == cow_seq + 1
+    assert [r.k for r in K.read_keyed_changes(spark, ranged, since_seq=cow_seq).collect()] == [5]
+    # a compaction carries the recorded seq forward in the meta
+    compact_keyed_table(spark, ranged)
+    with pytest.raises(ValueError, match="rewritten in place"):
+        K.read_keyed_changes(spark, ranged, since_seq=ckpt)
 
 
 def test_append_refuses_null_bucket_rows(spark, tmp_path):
-    """A range-layout append refuses a NULL leading key under
-    assume_unique exactly as COW does: committed, the row read back but
-    crashed every later compaction of the table."""
+    """A range-layout append refuses a NULL leading key, under
+    assume_unique too: committed, the row read back but crashed every
+    later compaction of the table."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import apply_changes_keyed_table
 
     path = str(tmp_path / "t")
@@ -1232,6 +1297,10 @@ def test_append_refuses_null_bucket_rows(spark, tmp_path):
     with pytest.raises(ValueError, match="NULL bucket id"):
         apply_changes_keyed_table(spark, path, bad, assume_unique=True)
     with pytest.raises(ValueError, match="NULL bucket id"):
+        upsert_keyed_table(spark, path, bad, assume_unique=True)
+    with pytest.raises(ValueError, match="NULL bucket id"):
         upsert_keyed_table(spark, path, bad, assume_unique=True, idempotency_key="b1")
+    with pytest.raises(ValueError, match="NULL"):
+        upsert_keyed_table(spark, path, bad)  # the checked path refuses too
     assert read_keyed_table(spark, path).count() == 100
     assert compact_keyed_table(spark, path) == {"touched_buckets": [], "deltas_folded": 0}

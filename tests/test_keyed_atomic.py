@@ -84,14 +84,14 @@ def test_reader_skips_truncated_garbage_manifest(spark):
 
 
 def test_manifest_put_lands_whole_and_exclusive(spark):
-    """After any batch, every manifest on disk parses, no .tmp files
+    """After any publish, every manifest on disk parses, no .tmp files
     remain, and a duplicate PUT of an existing manifest number is
     refused (rename's fail-if-exists = create-exclusive)."""
     path = _mk(spark, layout="range", range_step=20)
     try:
         batch = spark.createDataFrame([(1, -1, "z")], "k long, v long, tag string")
-        out = K.upsert_keyed_table(spark, path, batch, assume_unique=True)
-        assert out["mode"] == "cow"
+        K.upsert_keyed_table(spark, path, batch, assume_unique=True)
+        assert K.compact_keyed_table(spark, path)["deltas_folded"] == 1
         cdir = os.path.join(path, K._COMMITS_DIR)
         names = sorted(
             n for n in os.listdir(cdir) if not n.endswith(".crc")
@@ -154,10 +154,12 @@ def test_heartbeat_keeps_long_writer_alive(spark):
 
 
 def test_long_batch_past_ttl_commits(spark, monkeypatch):
-    """End-to-end form: a COW batch stalled past the TTL inside the
+    """End-to-end form: a compaction stalled past the TTL inside the
     merge job still commits (previously: loud fence abort)."""
     path = _mk(spark, rows=100, layout="range", range_step=10)
     try:
+        batch = spark.createDataFrame([(1, -5, "slow")], "k long, v long, tag string")
+        K.upsert_keyed_table(spark, path, batch, assume_unique=True)
         real = K._write_layout
 
         def slow(df, dest, n_parts, meta):
@@ -165,11 +167,9 @@ def test_long_batch_past_ttl_commits(spark, monkeypatch):
             return real(df, dest, n_parts, meta)
 
         monkeypatch.setattr(K, "_write_layout", slow)
-        batch = spark.createDataFrame([(1, -5, "slow")], "k long, v long, tag string")
-        out = K.upsert_keyed_table(
-            spark, path, batch, assume_unique=True, lock_ttl_sec=1.5
-        )
-        assert out["mode"] == "cow"
+        out = K.compact_keyed_table(spark, path, lock_ttl_sec=1.5)
+        assert out["deltas_folded"] == 1
+        assert not K._delta_seq_dirs(spark, path)
         assert K.read_keyed_table(spark, path).filter(F.col("k") == 1).first().v == -5
     finally:
         _cleanup(path)

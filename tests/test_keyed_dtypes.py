@@ -9,9 +9,7 @@ types at WRITE time (key/value class checks,
 ``src/mapred/org/apache/hadoop/mapred/MapTask.java:845-854``); these
 pins hold this engine to the same discipline: lossless batches coerce,
 lossy batches refuse loudly, and a refused batch never leaves the table
-unreadable. The pins run on both layouts: a hash table appends every
-batch (MOR), a range table rewrites these key-local batches in place
-(COW).
+unreadable. The pins run on both layouts; each appends every batch.
 """
 
 from __future__ import annotations
@@ -32,12 +30,12 @@ from hadoop_20_warehouse_fix_spark.sources.keyed import (
 )
 
 
-# range: 20 buckets of 50 keys, so a batch of two keys stays COW
+# range: 20 buckets of 50 keys
 _LAYOUTS = {"hash": {}, "range": {"layout": "range", "range_step": 50}}
-_MODE = {"hash": "mor", "range": "cow"}
-# each layout drives one write path; the test id names that path
-_BY_PATH = pytest.mark.parametrize(
-    "layout", [pytest.param(lay, id=mode) for lay, mode in _MODE.items()]
+# Stable test ids from when a range batch was rewritten in place:
+# "mor" runs the hash layout, "cow" the range layout.
+_BY_LAYOUT = pytest.mark.parametrize(
+    "layout", [pytest.param("hash", id="mor"), pytest.param("range", id="cow")]
 )
 
 
@@ -70,7 +68,7 @@ def _cleanup(path: str) -> None:
     shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
 
 
-@_BY_PATH
+@_BY_LAYOUT
 def test_int_batch_on_long_table_coerces(spark, layout):
     """Lossless widening (int→long): the upsert succeeds, the stored
     value is correct, and EVERY explicit-schema read path survives."""
@@ -80,19 +78,18 @@ def test_int_batch_on_long_table_coerces(spark, layout):
             [(5, 555, "n"), (2_000, 7, "ins")], "k int, v int, tag string"
         )
         out = upsert_keyed_table(spark, path, batch)
-        assert out["mode"] == _MODE[layout]
+        assert out["upserts"] == 2
         tab = read_keyed_table(spark, path)
         assert dict(tab.dtypes)["v"] == "bigint", "table schema is authoritative"
         got = {r.k: (r.v, r.tag) for r in tab.filter(F.col("k").isin(5, 2_000)).collect()}
         assert got == {5: (555, "n"), 2_000: (7, "ins")}
-        if layout == "hash":  # appended, so the feed carries it
-            feed = read_keyed_changes(spark, path).collect()
-            assert {r.k for r in feed} == {5, 2_000}
+        feed = read_keyed_changes(spark, path).collect()  # appended
+        assert {r.k for r in feed} == {5, 2_000}
     finally:
         _cleanup(path)
 
 
-@_BY_PATH
+@_BY_LAYOUT
 def test_long_batch_on_int_table_in_range_coerces(spark, layout):
     path = _int_table(spark, layout)
     try:
@@ -107,7 +104,7 @@ def test_long_batch_on_int_table_in_range_coerces(spark, layout):
         _cleanup(path)
 
 
-@_BY_PATH
+@_BY_LAYOUT
 def test_long_batch_out_of_range_refuses_and_table_stays_readable(spark, layout):
     """The verdict's pin: a lossy batch REFUSES loudly (per-column
     counts in the message) and a crashed-read table is never produced."""
@@ -122,13 +119,13 @@ def test_long_batch_out_of_range_refuses_and_table_stays_readable(spark, layout)
         tab = read_keyed_table(spark, path)
         assert tab.count() == 1_000
         assert tab.filter(F.col("k") == 5).first().v == 10
-        if layout == "hash":  # no refused delta behind the feed
-            assert read_keyed_changes(spark, path).count() == 0
+        # no refused delta behind the feed
+        assert read_keyed_changes(spark, path).count() == 0
     finally:
         _cleanup(path)
 
 
-@_BY_PATH
+@_BY_LAYOUT
 def test_double_with_fraction_refuses_whole_batch(spark, layout):
     path = _table(spark, layout)
     try:
@@ -167,7 +164,7 @@ def test_string_batch_coerces_by_value_not_format(spark):
         _cleanup(path)
 
 
-@_BY_PATH
+@_BY_LAYOUT
 def test_delete_batch_keys_coerced(spark, layout):
     """Delete batches carry only keys — those get the same contract: a
     mismatched-but-lossless key type deletes the right row; a lossy one
@@ -175,7 +172,7 @@ def test_delete_batch_keys_coerced(spark, layout):
     path = _table(spark, layout)
     try:
         keys = spark.createDataFrame([(7,)], "k int")  # int keys, long table
-        assert delete_from_keyed_table(spark, path, keys)["mode"] == _MODE[layout]
+        assert delete_from_keyed_table(spark, path, keys)["deletes"] == 1
         tab = read_keyed_table(spark, path)
         assert tab.count() == 999
         assert tab.filter(F.col("k") == 7).count() == 0

@@ -1,7 +1,7 @@
 """Commit-point lease fencing (round-13, from round-12 ADVICE medium).
 
-A writer that legitimately outlives ``lock_ttl_sec`` (large COW
-backfill, slow compaction) has its lease broken and re-issued to a
+A writer that legitimately outlives ``lock_ttl_sec`` (large re-load,
+slow compaction) has its lease broken and re-issued to a
 successor. Before this round the zombie's in-flight commit
 (``_marker_publish`` / delta ``_COMMITTED`` marker) proceeded
 anyway — exactly the interleaved-write corruption the lock exists to
@@ -59,17 +59,19 @@ def test_fence_noop_without_registered_lease(spark, table):
 
 
 def test_marker_publish_fences_manifest_put(spark, monkeypatch):
-    """The manifest PUT is the commit — a usurped lease aborts before
-    it, so readers keep resolving the old commit and every bucket keeps
-    its pre-batch contents."""
+    """The manifest PUT is the commit — a compaction whose lease is
+    usurped aborts before it, so readers keep resolving the old commit,
+    every bucket keeps its pre-compaction contents and the folded delta
+    stays pending."""
     tmp = tempfile.mkdtemp(prefix="keyed_fence_mk_")
     path = f"{tmp}/tab"
     try:
         base = spark.range(100).select(
             F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("m").alias("tag")
         )
-        # range layout, 10 buckets: a one-key batch takes the COW publish
         K.write_keyed_table(base, path, ["k"], layout="range", range_step=10)
+        batch = spark.createDataFrame([(1, -9, "z")], "k long, v long, tag string")
+        K.upsert_keyed_table(spark, path, batch)
         cm_before = K._current_commit(spark, path)
 
         real = K._write_layout
@@ -80,15 +82,19 @@ def test_marker_publish_fences_manifest_put(spark, monkeypatch):
             return out
 
         monkeypatch.setattr(K, "_write_layout", usurp_then)
-        batch = spark.createDataFrame([(1, -9, "z")], "k long, v long, tag string")
         with pytest.raises(K.KeyedTableLockedError, match="lease lost before commit"):
-            K.upsert_keyed_table(spark, path, batch)
+            K.compact_keyed_table(spark, path)
         monkeypatch.undo()
         os.remove(os.path.join(path, K._WRITER_LOCK))
-        assert K._current_commit(spark, path)["n"] == cm_before["n"]
+        assert K._current_commit(spark, path) == cm_before
+        assert [s for s, _ in K._delta_seq_dirs(spark, path)] == [1]
         tab = K.read_keyed_table(spark, path)
         assert tab.count() == 100
-        assert tab.filter(F.col("k") == 1).first().v == 0
+        assert tab.filter(F.col("k") == 1).first().v == -9
+        plain = spark.read.parquet(
+            *[os.path.join(path, d) for d in cm_before["buckets"].values()]
+        )
+        assert plain.filter(F.col("k") == 1).first().v == 0
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

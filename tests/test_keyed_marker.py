@@ -51,8 +51,8 @@ def marker(spark):
 
 @pytest.fixture()
 def ranged(spark):
-    """Range layout, 20 buckets of 100 keys: a batch of a few keys
-    touches at most a tenth of them, so it drives the COW publish."""
+    """Range layout, 20 buckets of 100 keys: compacting a batch of a
+    few keys rewrites at most a tenth of them."""
     path = _marker_table(spark, layout="range", range_step=100)
     yield path
     shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
@@ -63,29 +63,28 @@ def _ups(spark, rows):
 
 
 def test_marker_lifecycle_matches_python_fold(spark, ranged):
-    """The full lifecycle — COW upsert, MOR upsert + tombstone,
-    resolved read, compaction, point lookup — answers exactly what a
-    plain dict fold of the same operations does. The table keeps NO
+    """The full lifecycle — upsert, change batch, tombstone, resolved
+    read, compaction, point lookup — answers exactly what a plain dict
+    fold of the same operations does. The table keeps NO
     kb= dirs at the root (all data in hidden versioned dirs +
     manifest)."""
     marker = ranged
     want = {k: (2 * k, "base") for k in range(2_000)}
-    out = upsert_keyed_table(
-        spark, marker, _ups(spark, [(3, 33, "cow"), (4_000, 1, "ins")])
+    upsert_keyed_table(
+        spark, marker, _ups(spark, [(3, 33, "ups"), (4_000, 1, "ins")])
     )
-    assert out["mode"] == "cow"
-    want.update({3: (33, "cow"), 4_000: (1, "ins")})
-    apply_changes_keyed_table(spark, marker, _ups(spark, [(5, 55, "mor")]))
-    want[5] = (55, "mor")
+    want.update({3: (33, "ups"), 4_000: (1, "ins")})
+    apply_changes_keyed_table(spark, marker, _ups(spark, [(5, 55, "chg")]))
+    want[5] = (55, "chg")
     out = delete_from_keyed_table(
         spark, marker, spark.createDataFrame([(7,)], "k long")
     )
-    assert out["mode"] == "mor"  # a delta is pending
+    assert out["deletes"] == 1
     del want[7]
     rows = {(k, v, tag) for k, (v, tag) in want.items()}
     assert _rows(read_keyed_table(spark, marker)) == rows
     assert len(rows) == 2_000  # +1 insert -1 delete
-    assert compact_keyed_table(spark, marker)["deltas_folded"] == 2
+    assert compact_keyed_table(spark, marker)["deltas_folded"] == 3
     assert _rows(read_keyed_table(spark, marker)) == rows
     look = lookup_keys(spark, marker, [3, 5, 7, 4_000, 999_999])
     assert _rows(look) == {r for r in rows if r[0] in (3, 5, 7, 4_000, 999_999)}
@@ -129,11 +128,16 @@ def test_marker_mor_crash_matrix(spark, marker):
 
 
 def test_marker_cow_crash_before_flip_preserves_old_state(spark, ranged, monkeypatch):
-    """Kill between the staged-bucket moves and the manifest PUT: the
-    table answers from the OLD manifest; recovery GCs the moved-but-
-    unreferenced dirs; re-applying the batch succeeds cleanly."""
+    """Kill a compaction between the staged-bucket moves and the
+    manifest PUT: the table answers from the OLD manifest with the
+    delta still pending; recovery GCs the moved-but-unreferenced dirs;
+    re-running the compaction succeeds cleanly."""
     marker = ranged
+    upsert_keyed_table(
+        spark, marker, _ups(spark, [(2, 222, "u"), (9_999, 9, "ins")])
+    )
     before = _rows(read_keyed_table(spark, marker))
+    cm_before = K._current_commit(spark, marker)
     real = K._write_commit
 
     def boom(*a, **kw):
@@ -141,16 +145,14 @@ def test_marker_cow_crash_before_flip_preserves_old_state(spark, ranged, monkeyp
 
     monkeypatch.setattr(K, "_write_commit", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        upsert_keyed_table(
-            spark, marker, _ups(spark, [(2, 222, "u"), (9_999, 9, "ins")])
-        )
+        compact_keyed_table(spark, marker)
+    assert K._current_commit(spark, marker) == cm_before
     assert _rows(read_keyed_table(spark, marker)) == before, "old state intact"
     monkeypatch.setattr(K, "_write_commit", real)
     gc = K.recover_keyed_table(spark, marker)
     assert gc["gc_buckets"], "moved-but-unreferenced dirs collected"
-    upsert_keyed_table(
-        spark, marker, _ups(spark, [(2, 222, "u"), (9_999, 9, "ins")])
-    )
+    assert compact_keyed_table(spark, marker)["deltas_folded"] == 1
+    assert _rows(read_keyed_table(spark, marker)) == before
     after = read_keyed_table(spark, marker)
     assert after.filter("k = 2").first().v == 222
     assert after.count() == 2_001
@@ -176,9 +178,10 @@ def test_marker_unreferenced_garbage_is_gc_not_read(spark, ranged):
     assert read_keyed_table(spark, marker).count() == 2_000  # stray invisible
     gc = K.recover_keyed_table(spark, marker)
     assert "_b3.v99" in gc["gc_buckets"] and not os.path.exists(stray)
-    # manifest GC: several batches leave at most 2 commit files
+    # manifest GC: several compactions leave at most 2 commit files
     for i in range(4):
-        assert upsert_keyed_table(spark, marker, _ups(spark, [(i, -i, "x")]))["mode"] == "cow"
+        upsert_keyed_table(spark, marker, _ups(spark, [(i, -i, "x")]))
+        assert compact_keyed_table(spark, marker)["deltas_folded"] == 1
     commits = [f for f in os.listdir(f"{marker}/_commits") if f.startswith("commit-")]
     assert len(commits) <= 2
 
@@ -230,9 +233,14 @@ def test_marker_gc_grace_keeps_previous_generation_readable(spark, ranged):
     before a flip must still find every dir it lists: superseded dirs
     survive exactly one more publish, then go."""
     marker = ranged
-    assert upsert_keyed_table(spark, marker, _ups(spark, [(1, -1, "g1")]))["mode"] == "cow"
+
+    def publish(v, tag):  # one compacted batch = one manifest flip
+        upsert_keyed_table(spark, marker, _ups(spark, [(1, v, tag)]))
+        compact_keyed_table(spark, marker)
+
+    publish(-1, "g1")
     cm_prev = K._current_commit(spark, marker)  # the manifest a reader might hold
-    upsert_keyed_table(spark, marker, _ups(spark, [(1, -2, "g2")]))
+    publish(-2, "g2")
     # every dir the held manifest references still exists (grace)
     for d in cm_prev["buckets"].values():
         assert os.path.exists(f"{marker}/{d}"), f"grace violated for {d}"
@@ -240,7 +248,7 @@ def test_marker_gc_grace_keeps_previous_generation_readable(spark, ranged):
     dirs = [f"{marker}/{d}" for d in cm_prev["buckets"].values()]
     assert spark.read.parquet(*dirs).count() == 2_000
     # one more publish retires the old generation
-    upsert_keyed_table(spark, marker, _ups(spark, [(1, -3, "g3")]))
+    publish(-3, "g3")
     cm_now = K._current_commit(spark, marker)
     live_and_prev = set(cm_now["buckets"].values())
     gone = [

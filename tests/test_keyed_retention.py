@@ -201,14 +201,14 @@ def test_marker_gc_generations_knob(spark):
                 F.col("id").alias("k"), F.lit(gen * 10).cast("long").alias("v"),
                 F.lit("m").alias("tag"),
             )
-            out = K.upsert_keyed_table(spark, path, batch, assume_unique=True)
-            assert out["mode"] == "cow"
+            K.upsert_keyed_table(spark, path, batch, assume_unique=True)
+            assert K.compact_keyed_table(spark, path)["deltas_folded"] == 1
         commits = sorted(
             int(f[len("commit-"):-len(".json")])
             for f in os.listdir(os.path.join(path, K._COMMITS_DIR))
             if f.startswith("commit-")
         )
-        # newest commit is 6 (load=1 + 5 upserts): floor = 6-3 = 3
+        # newest commit is 6 (load=1 + 5 compactions): floor = 6-3 = 3
         assert commits == [3, 4, 5, 6], commits
         # every dir referenced by the OLDEST retained manifest survives
         cm3 = snapshots[3]  # the commit with n=3 (pre-4th-upsert state)

@@ -3,8 +3,8 @@
 Readers resolve bucket dirs only through the commit manifest, and a
 superseded generation's dirs survive ``gc_generations`` further
 commits — so a reader never observes a half-published batch or a
-mix of generations. Pinned here with a threaded reader-during-COW
-storm.
+mix of generations. Pinned here with a threaded reader-during-re-load
+storm (a re-load is the publish that rewrites every bucket at once).
 """
 
 from __future__ import annotations
@@ -23,10 +23,10 @@ def _cleanup(path):
 
 
 def test_marker_readers_never_torn_during_cow_storm(spark):
-    """Threaded done-gate: readers hammer a marker table while COW
-    upserts continuously swap buckets. Every read must see a complete,
+    """Threaded done-gate: readers hammer a marker table while
+    re-loads continuously swap buckets. Every read must see a complete,
     internally-consistent snapshot: exactly 500 rows, and v uniform
-    across the whole table (each batch rewrites EVERY key to the same
+    across the whole table (each re-load rewrites EVERY key to the same
     new value, so a mixed-generation read shows two v values)."""
     tmp = tempfile.mkdtemp(prefix="keyed_snap_storm_")
     path = f"{tmp}/tab"
@@ -61,8 +61,10 @@ def test_marker_readers_never_torn_during_cow_storm(spark):
                     F.lit(gen * 1000).cast("long").alias("v"),
                     F.lit("s").alias("tag"),
                 )
-                out = K.upsert_keyed_table(spark, path, batch, assume_unique=True)
-                assert out["mode"] == "cow"
+                K.write_keyed_table(
+                    batch, path, ["k"], assume_unique=True, layout="range",
+                    range_step=125,
+                )
         finally:
             stop.set()
             for t in threads:

@@ -289,7 +289,7 @@ def test_read_pruned_refuses_pending_mor_deltas(spark):
         write_keyed_table(df, path, ["k"], num_buckets=4)
         write_file_stats_manifest(spark, path)
         batch = spark.createDataFrame([(5, 999)], "k long, v long")
-        assert upsert_keyed_table(spark, path, batch)["mode"] == "mor"
+        assert upsert_keyed_table(spark, path, batch)["seq"] == 1
         with pytest.raises(ValueError, match="pending MOR deltas"):
             read_pruned(spark, path, {"k": (0, 10)})
         compact_keyed_table(spark, path)
@@ -301,12 +301,47 @@ def test_read_pruned_refuses_pending_mor_deltas(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_default_writes_refuse_pruned_read_until_compact_refresh(spark):
+    # Every default upsert and delete leaves a pending delta on either
+    # layout, so read_pruned refuses the table until
+    # compact_keyed_table(refresh_manifest=True) folds the deltas and
+    # refreshes the stats manifest in one call.
+    from hadoop_20_warehouse_fix_spark.sources.keyed import (
+        compact_keyed_table,
+        delete_from_keyed_table,
+        upsert_keyed_table,
+        write_keyed_table,
+    )
+
+    tmp = tempfile.mkdtemp(prefix="manifest_default_")
+    try:
+        df = spark.range(1_000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
+        layouts = {"hash": {"num_buckets": 4}, "range": {"layout": "range", "range_step": 100}}
+        for name, layout in layouts.items():
+            path = f"{tmp}/{name}"
+            write_keyed_table(df, path, ["k"], **layout)
+            write_file_stats_manifest(spark, path)
+            upsert_keyed_table(spark, path, spark.createDataFrame([(5, 999)], "k long, v long"))
+            with pytest.raises(ValueError, match="pending MOR deltas"):
+                read_pruned(spark, path, {"k": (0, 10)})
+            delete_from_keyed_table(spark, path, spark.createDataFrame([(6,)], "k long"))
+            with pytest.raises(ValueError, match="pending MOR deltas"):
+                read_pruned(spark, path, {"k": (0, 10)})
+            assert compact_keyed_table(spark, path, refresh_manifest=True)["manifest"]
+            got = {tuple(r) for r in read_pruned(spark, path, {"k": (0, 10)}).select("k", "v").collect()}
+            want = {(i, i * 3) for i in range(11)} - {(5, 15), (6, 18)} | {(5, 999)}
+            assert got == want, name
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_refresh_changed_dirs_equals_full_reconcile(spark):
     # Round-12 brief #4: a writer-declared changed-dir refresh must
     # produce the byte-identical manifest a full reconciliation does,
     # while never listing outside the declared dirs.
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
         _current_commit,
+        compact_keyed_table,
         upsert_keyed_table,
         write_keyed_table,
     )
@@ -329,12 +364,12 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
         )
         outs = {}
         for path in (a, b):
-            outs[path] = upsert_keyed_table(spark, path, batch)
-            assert outs[path]["mode"] == "cow"
+            upsert_keyed_table(spark, path, batch)
+            outs[path] = compact_keyed_table(spark, path)
         touched = outs[a]["touched_buckets"]
-        assert touched == outs[b]["touched_buckets"]
+        assert touched == outs[b]["touched_buckets"] == [4, 5]
         dirs_after = _current_commit(spark, b)["buckets"]
-        # the churn a COW batch declares: each touched bucket's
+        # the churn a compaction declares: each touched bucket's
         # superseded versioned dir and its newly published one
         churn = sorted(
             {f"{b}/{dirs_before[str(t)]}" for t in touched}
@@ -407,8 +442,8 @@ def test_compact_refresh_declares_touched_dirs(spark):
 def test_manifest_on_marker_commit_keyed_table(spark):
     """Round-12 composition: the stats manifest resolves marker-commit
     keyed tables through the commit manifest — build, pruned read,
-    COW churn + declared-dirs refresh (with grace-retained superseded
-    dirs on disk), and an incremental refresh after compaction."""
+    compaction churn + full refresh (with grace-retained superseded
+    dirs on disk), and a declared-dirs refresh riding a compaction."""
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
         apply_changes_keyed_table,
         compact_keyed_table,
@@ -435,14 +470,14 @@ def test_manifest_on_marker_commit_keyed_table(spark):
         got = {tuple(r) for r in read_pruned(spark, path, {"k": (100, 120)}).collect()}
         assert got == {(i, i % 97) for i in range(100, 121)}
 
-        # COW churn; superseded version dirs LINGER (grace) — the
-        # declared-dirs refresh must not resurrect their files
-        out = upsert_keyed_table(
+        # compaction churn; superseded version dirs LINGER (grace) —
+        # the refresh must not resurrect their files
+        upsert_keyed_table(
             spark,
             path,
             spark.createDataFrame([(110, -1), (5_000, -2)], "k long, v long"),
         )
-        assert out["mode"] == "cow"
+        compact_keyed_table(spark, path)
         r = refresh_file_stats_manifest(spark, path)
         assert r["added"] > 0 and r["removed"] > 0
         m2 = spark.read.parquet(mpath)

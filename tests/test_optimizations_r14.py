@@ -20,6 +20,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import count_jobs
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -105,15 +107,9 @@ def test_load_table_schema_memo_skips_inference_job(spark):
     identical either way."""
     from hadoop_20_warehouse_fix_spark.catalog import _SCHEMA_CACHE, load_table
 
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs() -> int:
-        return len(tracker.getJobIdsForGroup(None) or [])
-
     first = load_table(spark, SF, "region")
     assert any(p.endswith("region.parquet") for p in _SCHEMA_CACHE)
-    before = jobs()
-    second = load_table(spark, SF, "region")
-    assert jobs() == before, "memoized load_table must not run a job at build"
+    second, n = count_jobs(spark, lambda: load_table(spark, SF, "region"))
+    assert n == 0, "memoized load_table must not run a job at build"
     assert second.schema == first.schema
     assert sorted(map(tuple, second.collect())) == sorted(map(tuple, first.collect()))
