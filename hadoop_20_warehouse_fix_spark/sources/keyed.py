@@ -77,7 +77,9 @@ sees only the BASE (deltas live under a hidden dir by design).
 
 from __future__ import annotations
 
+import datetime
 import json
+import struct
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -635,6 +637,103 @@ def _bucket_expr(meta: dict):
     ).cast("int")
 
 
+def _xxh64(data: bytes, seed: int) -> int:
+    """Standard XXH64 of ``data`` as an unsigned 64-bit int — the hash
+    Spark's ``xxhash64`` runs per column (its ``hashInt``/``hashLong``
+    are the 4- and 8-byte little-endian cases)."""
+    M = 0xFFFFFFFFFFFFFFFF
+    P1, P2, P3, P4, P5 = (
+        0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+        0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+    )
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (64 - r))) & M
+
+    def rnd(acc: int, lane: int) -> int:
+        return rotl((acc + lane * P2) & M, 31) * P1 & M
+
+    n, p = len(data), 0
+    if n >= 32:
+        v = [(seed + P1 + P2) & M, (seed + P2) & M, seed, (seed - P1) & M]
+        while p + 32 <= n:
+            v = [rnd(a, x) for a, x in zip(v, struct.unpack_from("<4Q", data, p))]
+            p += 32
+        h = (rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12) + rotl(v[3], 18)) & M
+        for a in v:
+            h = ((h ^ rnd(0, a)) * P1 + P4) & M
+    else:
+        h = (seed + P5) & M
+    h = (h + n) & M
+    while p + 8 <= n:
+        h = (rotl(h ^ rnd(0, struct.unpack_from("<Q", data, p)[0]), 27) * P1 + P4) & M
+        p += 8
+    if p + 4 <= n:
+        h = (rotl(h ^ (struct.unpack_from("<I", data, p)[0] * P1 & M), 23) * P2 + P3) & M
+        p += 4
+    for b in data[p:]:
+        h = rotl(h ^ (b * P5 & M), 11) * P1 & M
+    h = (h ^ (h >> 33)) * P2 & M
+    h = (h ^ (h >> 29)) * P3 & M
+    return h ^ (h >> 32)
+
+
+def _literal_buckets(
+    meta: dict, key_types: Sequence[T.DataType], rows: Sequence[tuple]
+) -> list[int] | None:
+    """The distinct bucket ids of literal key ``rows`` (one value per
+    key column, typed ``key_types``), computed on the driver exactly as
+    :func:`_bucket_expr` computes them in Spark — or ``None`` where it
+    cannot answer, and the caller runs that expression as a Spark job.
+    It answers only for values ``createDataFrame`` would accept
+    unconverted: an ``int`` (not ``bool``) inside an integral key's
+    range, a ``bool``, a ``str`` for a binary-collated string, a
+    ``datetime.date`` (not ``datetime``); NULL components hash like
+    Spark's (the running seed passes through). Other key types (float,
+    decimal, timestamp, binary) always go to Spark."""
+    bits = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+    def integral(v, t: T.DataType) -> bool:
+        b = bits.get(type(t))
+        return b is not None and type(v) is int and -(1 << b - 1) <= v < 1 << b - 1
+
+    if meta.get("layout", "hash") == "range":
+        # a NULL leading key has no bucket and never equi-matches
+        lead = [r[0] for r in rows if r[0] is not None]
+        if not all(integral(v, key_types[0]) for v in lead):
+            return None
+        step = int(meta["range_step"])
+        # Spark's `div` truncates toward zero; Python's // floors —
+        # they disagree on negative keys, which would probe the
+        # wrong directory.
+        return sorted({abs(v) // step * (1 if v >= 0 else -1) for v in lead})
+
+    num_buckets = int(meta["num_buckets"])
+    out = set()
+    for r in rows:
+        h = 42  # xxhash64's seed; each column's hash seeds the next
+        for v, t in zip(r, key_types):
+            if v is None:
+                continue
+            if isinstance(t, T.LongType) and integral(v, t):
+                data = struct.pack("<q", v)
+            elif integral(v, t) or (isinstance(t, T.BooleanType) and type(v) is bool):
+                data = struct.pack("<i", v)
+            elif isinstance(t, T.DateType) and type(v) is datetime.date:
+                data = struct.pack("<i", (v - datetime.date(1970, 1, 1)).days)
+            elif t == T.StringType() and type(v) is str:
+                try:
+                    data = v.encode("utf-8")
+                except UnicodeEncodeError:  # lone surrogates
+                    return None
+            else:
+                return None
+            h = _xxh64(data, h)
+        # pmod of Spark's SIGNED long is Python's % on the signed value
+        out.add((h - (1 << 64) if h >> 63 else h) % num_buckets)
+    return sorted(out)
+
+
 def write_keyed_table(
     df: DataFrame,
     path: str,
@@ -661,8 +760,10 @@ def write_keyed_table(
     pick it when update batches are key-local (time-series backfills):
     compaction then rewrites only the few bucket dirs those deltas
     touch, each bucket covers one key interval so a compacted table
-    gives ``sources.manifest.read_pruned`` real key-range skipping, and
-    :func:`lookup_keys` computes bucket ids driver-side.
+    gives ``sources.manifest.read_pruned`` real key-range skipping.
+    On either layout :func:`lookup_keys` computes a literal key list's
+    bucket ids on the driver (the hash layout by replaying Spark's
+    ``xxhash64`` for integral, boolean, string and date keys).
     ``sort_cols`` orders rows WITHIN each bucket file (preserved by
     compaction and re-loads) so parquet row-group min/max prunes on the
     sort key inside every bucket — the MapFile sorted-index discipline
@@ -2063,7 +2164,9 @@ def upsert_keyed_table(
     schema evolves atomically before the delta commits, old files read
     through the evolved schema (new column NULL; widened column upcast
     at scan time), and compaction rewrites buckets with the evolved
-    schema as they are touched."""
+    schema as they are touched. Returns
+    :func:`apply_changes_keyed_table`'s result dict, whose counts can
+    over-count under task retry (see there)."""
     with _writer_lease(spark, path, lock_ttl_sec):
         return _apply_changes_locked(
             spark, path, updates, None, assume_unique, idempotency_key,
@@ -2083,7 +2186,9 @@ def delete_from_keyed_table(
     values) that readers honor and compaction makes physical — pending
     until then, with the same consequences as an upsert's. Columns
     other than the keys are ignored. Duplicate keys in a delete batch
-    are harmless, so uniqueness defaults off."""
+    are harmless, so uniqueness defaults off. Returns
+    :func:`apply_changes_keyed_table`'s result dict, whose counts can
+    over-count under task retry (see there)."""
     with _writer_lease(spark, path, lock_ttl_sec):
         meta = read_keyed_meta(spark, path)
         key_cols = meta["key_cols"]
@@ -2260,6 +2365,9 @@ def apply_changes_keyed_table(
     twice (including once as a delete and once as an upsert) is an
     error, not an order-dependent answer — same contract as the
     streaming ingest always had. Empty batches commit nothing.
+    Returns ``{"rows", "deletes", "upserts", "seq"}`` (plus
+    ``"delete"`` for a non-empty batch, ``"replayed"`` for a replay);
+    the three counts are exact unless a task ran twice (below).
 
     Validation rides the delta write (round 15): the key checks and
     counts come from an ``Observation`` read after the data lands in
@@ -2268,7 +2376,8 @@ def apply_changes_keyed_table(
     uncommitted dir is deleted, never visible, but its bytes were
     written. And the observed SUM counts (``n``, ``n_del`` → the
     returned ``rows``/``deletes``/``upserts``) can over-count when
-    speculative execution or task retries run a partition twice; the
+    speculative execution or task retries run a partition twice, so
+    treat them as upper bounds with ``spark.speculation`` on; the
     refusal checks read only ``max`` aggregates (``max_dup``,
     ``has_null``), which are retry-safe, so a retry can inflate a
     reported count but never wrongly accept or refuse a batch.
@@ -2466,13 +2575,23 @@ def lookup_keys(
     only the bucket DIRECTORIES those keys can live in.
 
     ``keys`` as a literal list (tuples for composite keys) computes the
-    bucket ids DRIVER-SIDE from the layout metadata — zero table-scan
-    jobs — and plans a scan of just those dirs with a key filter the
-    parquet reader pushes to row groups for single-column keys (pair
-    with ``sort_cols`` on the key for the full seek discipline);
+    bucket ids DRIVER-SIDE from the layout metadata, on either layout:
+    the range layout's ``div`` arithmetic, or the hash layout's
+    ``pmod(xxhash64(...), num_buckets)`` replayed in Python for byte,
+    short, int, long, boolean, string and date keys. Building such a
+    lookup runs no Spark job, and a single-column one builds no key
+    frame, so it starts no Python worker either. It plans a
+    scan of just those dirs with a key filter the parquet reader
+    pushes to row groups for single-column keys (pair with
+    ``sort_cols`` on the key for the full seek discipline);
     composite-key literals restrict via a broadcast semi-join instead
     (a 10k-branch OR-of-ANDs predicate blows up planning and never
-    pushes down — second-pass review). Capped at ``max_literal_keys``;
+    pushes down — second-pass review). Other key types (float,
+    decimal, timestamp, binary), and literals whose Python type is not
+    exactly the one the key type takes (``"42"`` or ``True`` for a
+    long key), get their bucket ids from one Spark job over the typed
+    key frame instead, whose ``createDataFrame`` refuses the
+    wrong-typed ones. Capped at ``max_literal_keys``;
     pass a DataFrame of keys past that — it runs as the
     broadcast-semi form (:func:`~..operators.joins.key_prefilter_join`
     physics), falling back to a shuffle semi-join past
@@ -2499,6 +2618,7 @@ def lookup_keys(
 
     key_df: DataFrame | None = None
     cond = None
+    buckets: list[int] | None = None
     if isinstance(keys, DataFrame):
         missing = [c for c in key_cols if c not in keys.columns]
         if missing:
@@ -2508,6 +2628,7 @@ def lookup_keys(
             .distinct()
             .localCheckpoint(eager=True)
         )
+        n_keys = key_df.count()
     else:
         rows = [(k,) if not isinstance(k, tuple) else k for k in keys]
         if not rows:
@@ -2519,23 +2640,20 @@ def lookup_keys(
             )
         if any(len(r) != len(key_cols) for r in rows):
             raise ValueError(f"each key needs {len(key_cols)} component(s): {key_cols}")
+        n_keys = len(rows)
+        buckets = _literal_buckets(meta, [key_types[c] for c in key_cols], rows)
+        if buckets is None or len(key_cols) > 1:
+            # composite keys restrict through a semi-join on key_df, and
+            # bucket ids the driver cannot compute come from a Spark job
+            # over it; createDataFrame's verifier refuses wrong-typed or
+            # out-of-range literals first, with a clear error
+            kschema = T.StructType([T.StructField(c, key_types[c], True) for c in key_cols])
+            key_df = spark.createDataFrame(rows, kschema)
         if len(key_cols) == 1:
-            # single-key literal: a typed isin pushes to row groups —
-            # keep it AND compute buckets without any Spark job where
-            # the layout math is plain arithmetic
+            # single-key literal: a typed isin pushes to row groups
             cond = F.col(key_cols[0]).isin([r[0] for r in rows])
-        kschema = T.StructType([T.StructField(c, key_types[c], True) for c in key_cols])
-        key_df = spark.createDataFrame(rows, kschema)
 
-    if meta.get("layout", "hash") == "range" and not isinstance(keys, DataFrame):
-        step = int(meta["range_step"])
-        # Spark's `div` truncates toward zero; Python's // floors —
-        # they disagree on negative keys, which would probe the
-        # wrong directory.
-        buckets = sorted(
-            {abs(int(r[0])) // step * (1 if int(r[0]) >= 0 else -1) for r in rows}
-        )
-    else:
+    if buckets is None:
         buckets = [
             int(r[BUCKET_COL])
             for r in key_df.select(_bucket_expr(meta).alias(BUCKET_COL)).distinct().collect()
@@ -2545,7 +2663,6 @@ def lookup_keys(
         def restrict(df: DataFrame) -> DataFrame:
             return df.filter(cond)
     else:
-        n_keys = key_df.count()
         probe = F.broadcast(key_df) if n_keys <= LOOKUP_BROADCAST_KEY_ROWS else key_df
 
         def restrict(df: DataFrame) -> DataFrame:

@@ -164,7 +164,10 @@ def ensure_managed_creatable(spark: SparkSession, table_name: str) -> None:
     db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
     name = parts[-1]
     try:
-        if spark.catalog.tableExists(name, db):
+        # the one-argument qualified form: tableExists(name, dbName=)
+        # is deprecated and warns on every call
+        quoted = ".".join("`" + part.replace("`", "``") + "`" for part in (db, name))
+        if spark.catalog.tableExists(quoted):
             return
         db_uri = spark.catalog.getDatabase(db).locationUri
     except AnalysisException:

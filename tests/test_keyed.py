@@ -609,7 +609,7 @@ def test_lookup_keys_prunes_directories_range_layout(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 3).alias("v")
     )
     write_keyed_table(df, path, ["k"], layout="range", range_step=10_000)
-    out = lookup_keys(spark, path, [-4_999, 12_345])
+    out = lookup_keys(spark, path, [-4_999, 12_345, None])  # NULL matches nothing
     assert {(r.k, r.v) for r in out.collect()} == {(-4_999, -14_997), (12_345, 37_035)}
     files = {
         r.f for r in out.select(F.input_file_name().alias("f")).distinct().collect()
@@ -644,6 +644,131 @@ def test_lookup_keys_casts_to_table_key_types(spark, tmp_path):
     assert {(r.k, r.v) for r in got.collect()} == {(42, 84), (999, 1998)}
     kdf = spark.createDataFrame([(42,)], "k long")  # deliberately long-typed
     assert [(r.k, r.v) for r in lookup_keys(spark, path, kdf).collect()] == [(42, 84)]
+
+
+def test_driver_bucket_ids_match_spark_xxhash64_property(spark):
+    """Driver-side hash-layout bucket ids equal Spark's
+    ``pmod(xxhash64(...), n)`` for every key type the driver answers:
+    byte/short/int/long at their extremes and negatives, booleans,
+    strings (empty, non-ASCII, around the 32-byte stripe), dates,
+    NULL components and composite keys, at several bucket counts."""
+    import datetime
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from hadoop_20_warehouse_fix_spark.sources.keyed import _literal_buckets
+
+    ddl = "b tinyint, s smallint, i int, l bigint, f boolean, t string, d date"
+    schema = spark.createDataFrame([], ddl).schema
+    names = schema.fieldNames()
+    nbs = (1, 2, 7, 16, 64, 1000)
+
+    def check(rows, cols):
+        want = spark.createDataFrame(rows, ddl).select(
+            *[F.pmod(F.xxhash64(*cols), F.lit(n)).cast("int") for n in nbs]
+        ).collect()
+        types = [schema[c].dataType for c in cols]
+        idx = [names.index(c) for c in cols]
+        for r, w in zip(rows, want):
+            key = tuple(r[i] for i in idx)
+            got = [_literal_buckets({"num_buckets": n}, types, [key]) for n in nbs]
+            assert got == [[b] for b in w], (cols, key)
+
+    # pinned edges, each column alone and all seven chained
+    day = datetime.date
+    edges = [
+        (-128, -32768, -(2**31), -(2**63), False, "", day(1, 1, 1)),
+        (127, 32767, 2**31 - 1, 2**63 - 1, True, "x" * 31, day(9999, 12, 31)),
+        (-1, -1, -1, -1, True, "y" * 32, day(1969, 12, 31)),
+        (0, 0, 0, 0, False, "z" * 33, day(1970, 1, 1)),
+        (None, None, None, None, None, None, None),
+        (5, None, 7, None, True, "日本語 😀 ünï" * 5, None),
+    ]
+    for c in names:
+        check(edges, [c])
+    check(edges, names)
+
+    comps = [
+        st.integers(-128, 127),
+        st.integers(-(2**15), 2**15 - 1),
+        st.integers(-(2**31), 2**31 - 1),
+        st.integers(-(2**63), 2**63 - 1),
+        st.booleans(),
+        st.text(max_size=70),
+        st.dates(),
+    ]
+    row = st.tuples(*[st.none() | s for s in comps])
+
+    @settings(max_examples=25, deadline=None, derandomize=True)
+    @given(
+        cols=st.lists(st.sampled_from(names), min_size=1, max_size=4, unique=True),
+        rows=st.lists(row, min_size=1, max_size=30),
+    )
+    def prop(cols, rows):
+        check(rows, cols)
+
+    prop()
+
+
+def test_lookup_keys_literal_build_runs_no_jobs(spark, keyed, tmp_path):
+    """A literal lookup on a hash layout computes its bucket ids on the
+    driver: building the lookup runs no Spark job, single or composite
+    key (the composite form also takes its key count from the list)."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import lookup_keys
+
+    out, n = count_jobs(spark, lambda: lookup_keys(spark, keyed, [42, 43, 99_999]))
+    assert n == 0
+    assert {(r.k, r.v) for r in out.collect()} == {(42, 84), (43, 86)}
+    path = str(tmp_path / "comp")
+    df = spark.range(1_000).select(
+        (F.col("id") % 10).alias("a"), (F.col("id") / 10).cast("long").alias("b"),
+        F.col("id").alias("v"),
+    )
+    write_keyed_table(df, path, ["a", "b"], num_buckets=8)
+    out, n = count_jobs(spark, lambda: lookup_keys(spark, path, [(3, 7), (9, 99), (1, 500)]))
+    assert n == 0
+    assert {(r.a, r.b, r.v) for r in out.collect()} == {(3, 7, 73), (9, 99, 999)}
+
+
+def test_lookup_keys_falls_back_for_keys_the_driver_cannot_hash(spark, tmp_path):
+    """Double and timestamp keys get their bucket ids from Spark, and
+    still find their rows; a wrong-typed literal still raises from
+    ``createDataFrame``'s verifier instead of probing some bucket."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    from hadoop_20_warehouse_fix_spark.sources.keyed import _literal_buckets, lookup_keys
+
+    path = str(tmp_path / "dbl")
+    df = spark.range(500).select(
+        (F.col("id") / 4).cast("double").alias("k"), F.col("id").alias("v")
+    )
+    write_keyed_table(df, path, ["k"], num_buckets=8)
+    assert _literal_buckets({"num_buckets": 8}, [T.DoubleType()], [(0.25,)]) is None
+    got = lookup_keys(spark, path, [0.25, 100.0, 1e9])
+    assert {(r.k, r.v) for r in got.collect()} == {(0.25, 1), (100.0, 400)}
+
+    path = str(tmp_path / "ts")
+    df = spark.range(500).select(
+        F.timestamp_seconds(F.col("id") * 3600).alias("k"), F.col("id").alias("v")
+    )
+    write_keyed_table(df, path, ["k"], num_buckets=8)
+    ts = df.filter("v = 7").first().k
+    assert isinstance(ts, datetime.datetime)
+    assert _literal_buckets({"num_buckets": 8}, [T.TimestampType()], [(ts,)]) is None
+    assert [r.v for r in lookup_keys(spark, path, [ts]).collect()] == [7]
+
+    long_keyed = str(tmp_path / "long")
+    write_keyed_table(
+        spark.range(100).select(F.col("id").alias("k"), F.col("id").alias("v")),
+        long_keyed, ["k"], num_buckets=4,
+    )
+    for bad in ("42", True, 2**63):
+        assert _literal_buckets({"num_buckets": 4}, [T.LongType()], [(bad,)]) is None
+        with pytest.raises((TypeError, ValueError)):
+            lookup_keys(spark, long_keyed, [bad])
 
 
 def test_manifest_refresh_crash_recovery(spark, tmp_path):
