@@ -440,14 +440,9 @@ def bpe_save_merges(spark, merges: list[tuple[str, str]], table: str) -> None:
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(merges)], "rank int, a string, b string"
     )
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # Orphan-proof create: a stranded warehouse directory from an
-    # interrupted earlier process would refuse with
-    # LOCATION_ALREADY_EXISTS (the catalog has no table to DROP).
-    from hadoop_20_warehouse_fix_spark.sources.writers import ensure_managed_creatable
+    from hadoop_20_warehouse_fix_spark.sources.writers import overwrite_table
 
-    ensure_managed_creatable(spark, table)
-    df.write.mode("overwrite").format("parquet").saveAsTable(table)
+    overwrite_table(df, table)  # orphan-proof managed create
 
 
 def bpe_load_merges(spark, table: str) -> list[tuple[str, str]]:

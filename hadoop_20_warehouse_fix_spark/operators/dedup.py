@@ -23,6 +23,7 @@ Scale design:
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -808,7 +809,7 @@ def minhash_state_write(
     token count × 8 B — an order under the corpus bytes, and the ONLY
     thing the next ingest reads."""
     from hadoop_20_warehouse_fix_spark.sources.writers import (
-        ensure_managed_creatable,
+        overwrite_table,
         write_bucketed,
     )
 
@@ -831,13 +832,7 @@ def minhash_state_write(
         [(n, num_hashes, bands, num_buckets)],
         "n int, num_hashes int, bands int, num_buckets int",
     )
-    spark.sql(f"DROP TABLE IF EXISTS {state_name}_meta")
-    w = meta.write.mode("overwrite").format("parquet")
-    if path:
-        w = w.option("path", f"{path}/meta")
-    else:
-        ensure_managed_creatable(spark, f"{state_name}_meta")
-    w.saveAsTable(f"{state_name}_meta")
+    overwrite_table(meta, f"{state_name}_meta", f"{path}/meta" if path else None)
     # A rebuild under a reused state name must not inherit the previous
     # state's tombstones (round-8 review) — dropped LAST, after every
     # new table landed, so a rebuild that fails partway leaves the
@@ -985,17 +980,11 @@ def _table_location(spark, table: str) -> str:
     return row[0].data_type
 
 
-def _fs_delete(spark, location: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(location)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-
-
-def _table_file_count(spark, table: str) -> int:
-    # distinct-then-count: input_file_name() is non-deterministic and
-    # Spark (correctly) refuses it inside an aggregate function.
-    return spark.table(table).select(F.input_file_name().alias("f")).distinct().count()
+def _data_file_count(fs, hpath) -> int:
+    """Non-hidden ``.parquet`` files directly under ``hpath``: one
+    listing, no Spark job."""
+    names = (st.getPath().getName() for st in fs.listStatus(hpath))
+    return sum(n.endswith(".parquet") and not n.startswith(("_", ".")) for n in names)
 
 
 def compact_bucketed_table(
@@ -1006,44 +995,37 @@ def compact_bucketed_table(
     tomb_ids: DataFrame | None = None,
     tomb_col: str = "id",
 ) -> tuple[int, int]:
-    """The shared bucketed-table compaction engine (round 8: factored
-    out of :func:`minhash_state_compact` so the IVF index state can
-    reuse it verbatim): rewrite ``table`` in one pass, repartitioned to
-    align shuffle partitions with bucket ids (one writer task per
-    bucket -> ~one file per bucket), filtering out ``tomb_ids`` (joined
-    on ``tomb_col``) — then swap into the catalog name via rename-aside
-    alternating between two stable locations. The rewrite keeps the
-    sorted-bucket layout because ``write_bucketed`` defaults
-    ``sortBy(bucket_cols)`` — the quantized-IVF vectors table relies on
-    that neighbor_id ordering for fetch-pushdown row-group pruning.
-    Returns (files_before, files_after). All crash-recovery and
-    location-ping-pong semantics as documented on
-    :func:`minhash_state_compact`."""
+    """The shared bucketed-table compaction engine behind every
+    persisted state's compact: rewrite ``table`` in one pass,
+    repartitioned so each bucket gets ~one file (one writer task per
+    bucket), filtering out ``tomb_ids`` (joined on ``tomb_col``). The
+    rewrite keeps the sorted-bucket layout (``write_bucketed`` defaults
+    ``sortBy(bucket_cols)``), which the quantized-IVF vectors table
+    relies on for fetch-pushdown row-group pruning.
+
+    Commit protocol (as in Hive, the metastore location is the commit
+    point): the rows go to a fresh sibling ``<parent>/<table>.<uuid>``
+    of the live location through the external name
+    ``<table>__compacting``, dropped at once (its files stay); then ONE
+    ``ALTER TABLE ... SET LOCATION`` flips ``table``, which keeps its
+    bucket spec and type and names a complete generation at every
+    instant; then the old location, read from the catalog, is deleted.
+    If the write or the flip raises, the new directory goes and the live
+    table is untouched. Returns (files_before, files_after) from
+    listings of the two locations."""
     from hadoop_20_warehouse_fix_spark.sources.writers import write_bucketed
 
-    before = _table_file_count(spark, table)
     loc = _table_location(spark, table)
-    # Alternate between TWO stable locations so repeated compactions
-    # ping-pong <base>__a <-> <base>__b instead of growing the path.
-    base = loc.rstrip("/")
-    while base.endswith("__compacting"):  # pre-round-7 legacy suffixes
-        base = base[: -len("__compacting")]
-    for suf in ("__a", "__b"):
-        if base.endswith(suf):
-            base = base[: -len(suf)]
-            break
-    tmp_loc = base + ("__b" if loc.rstrip("/").endswith("__a") else "__a")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    old = Path(loc)
+    new = Path(old.getParent(), f"{table}.{uuid.uuid4().hex}")
+    fs = old.getFileSystem(spark._jsc.hadoopConfiguration())
     tmp_t = f"{table}__compacting"
-    _fs_delete(spark, tmp_loc)  # leftovers from a crashed prior run
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_t}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}__old")
-    # Read the FILES, not the catalog table: the bucketed scan
-    # reports HashPartitioning on the bucket columns, so Catalyst
-    # elides the repartition as redundant and every scan partition
-    # writes its own per-bucket file — exactly the fragmentation
-    # being compacted. A plain path scan carries no partitioning
-    # claim; the repartition then aligns one shuffle partition per
-    # bucket (same murmur3 pmod), giving ~one output file each.
+    before = _data_file_count(fs, old)
+    # Read the FILES, not the catalog table: a bucketed scan claims
+    # HashPartitioning on the bucket columns, so Catalyst would elide the
+    # repartition and every scan partition would write its own file per
+    # bucket — the very fragmentation being compacted.
     rewritten = spark.read.parquet(loc)
     if tomb_ids is not None:
         rewritten = rewritten.join(
@@ -1051,22 +1033,19 @@ def compact_bucketed_table(
             tomb_col,
             "left_anti",
         )
-    write_bucketed(
-        rewritten.repartition(num_buckets, *bucket_cols),
-        tmp_t,
-        bucket_cols,
-        num_buckets=num_buckets,
-        path=tmp_loc,
-    )
-    # Rename-aside swap: the live data keeps a catalog name at every
-    # step, so a crash anywhere leaves state recoverable by rename
-    # (round-6 review: DROP-then-RENAME had a window where the state
-    # table vanished from the catalog with data stranded on disk).
-    spark.sql(f"ALTER TABLE {table} RENAME TO {table}__old")
-    spark.sql(f"ALTER TABLE {tmp_t} RENAME TO {table}")
-    spark.sql(f"DROP TABLE {table}__old")
-    _fs_delete(spark, loc)  # external drop leaves files; managed already gone
-    return (before, _table_file_count(spark, table))
+    literal = new.toString().replace("\\", "\\\\").replace("'", "\\'")
+    try:
+        out = rewritten.repartition(num_buckets, *bucket_cols)
+        write_bucketed(out, tmp_t, bucket_cols, num_buckets, path=new.toString())
+        spark.sql(f"DROP TABLE {tmp_t}")
+        spark.sql(f"ALTER TABLE {table} SET LOCATION '{literal}'")
+    except BaseException:
+        spark.sql(f"DROP TABLE IF EXISTS {tmp_t}")
+        if _table_location(spark, table) == loc:  # the flip did not land
+            fs.delete(new, True)
+        raise
+    fs.delete(old, True)
+    return (before, _data_file_count(fs, new))
 
 
 def minhash_state_compact(spark, state_name: str) -> dict[str, tuple[int, int]]:
@@ -1074,24 +1053,21 @@ def minhash_state_compact(spark, state_name: str) -> dict[str, tuple[int, int]]:
     #5): every daily ``minhash_state_append`` lays down one new file set
     per bucket, so after N ingests each bucket is N files — the
     many-small-files problem the reference solved with HAR
-    (``/root/reference/src/tools/org/apache/hadoop/tools/HadoopArchives.java``).
-    Each table is rewritten in ONE pass, repartitioned to align shuffle
-    partitions with bucket ids (one writer task per bucket → one file
-    per bucket), into the ALTERNATE of two stable locations
-    (``<base>__a`` / ``<base>__b`` — round-6 review: appending
-    ``__compacting`` each run grew the path forever), with tombstoned
-    rows (:func:`minhash_state_delete`) filtered out during the rewrite
-    — the physical-deletion point, after which the tombstone table is
-    cleared — then swapped into the catalog name via rename-aside: the live table is renamed to
-    ``<t>__old``, the fresh table renamed into ``<t>``, and only then is
-    the old table dropped and its files deleted. The swap is NOT atomic
-    (the metastore has no multi-statement transaction): a crash between
-    the two renames leaves ``<t>`` briefly absent, but BOTH copies of
-    the data survive on disk under catalog names (``<t>__old`` and the
-    fresh ``<t>__compacting``), so recovery is a rename, never a
-    rebuild. Bucket spec (from the meta table) is preserved, so probe
-    plans and the zero-exchange join physics are unchanged — pinned by
-    the probe-equality pytest.
+    (the reference's ``src/tools/org/apache/hadoop/tools/HadoopArchives.java``:
+    a rewrite, then a swap). Each table is rewritten in ONE pass,
+    repartitioned to align shuffle partitions with bucket ids (one
+    writer task per bucket → one file per bucket), into a fresh
+    generation directory beside the live one, with tombstoned rows
+    (:func:`minhash_state_delete`) filtered out during the rewrite —
+    the physical-deletion point, after which the tombstone table is
+    cleared — and committed by ONE ``ALTER TABLE … SET LOCATION``
+    per table (:func:`compact_bucketed_table`). Each table stays in
+    the catalog at every instant, naming either its old or its new
+    generation; a crash before a table's flip leaves that table on its
+    old generation, and a crash after it leaves at worst the old
+    directory behind. Bucket spec (from the meta table) is preserved,
+    so probe plans and the zero-exchange join physics are unchanged —
+    pinned by the probe-equality pytest.
 
     Returns {table: (files_before, files_after)} for the two data
     tables. NOTE: in-flight LAZY probe plans captured before the
@@ -1218,7 +1194,7 @@ def minhash_lsh_pairs_incremental(
 # whole media corpus. Same reference model: MapFile/BloomMapFile as
 # persistent probe-able state (/root/reference/src/core/org/apache/hadoop/
 # io/MapFile.java:49, BloomMapFile.java:45). Same machinery: bucketed band
-# tables, tombstones, rename-aside compaction — reused verbatim.
+# tables, tombstones, location-flip compaction — reused verbatim.
 # ---------------------------------------------------------------------------
 
 
@@ -1312,7 +1288,7 @@ def media_state_write(
     text state's ``threshold`` — they tighten candidate verification,
     not the stored format."""
     from hadoop_20_warehouse_fix_spark.sources.writers import (
-        ensure_managed_creatable,
+        overwrite_table,
         write_bucketed,
     )
 
@@ -1328,13 +1304,7 @@ def media_state_write(
         [(int(n_frames), float(min_flatness), bool(demux_av), int(num_buckets))],
         "n_frames int, min_flatness double, demux_av boolean, num_buckets int",
     )
-    spark.sql(f"DROP TABLE IF EXISTS {state_name}_meta")
-    w = meta.write.mode("overwrite").format("parquet")
-    if path:
-        w = w.option("path", f"{path}/meta")
-    else:
-        ensure_managed_creatable(spark, f"{state_name}_meta")
-    w.saveAsTable(f"{state_name}_meta")
+    overwrite_table(meta, f"{state_name}_meta", f"{path}/meta" if path else None)
     # Dropped LAST (round-8 review, as minhash_state_write): a rebuild
     # that fails partway leaves the still-live OLD state's tombstones
     # in force.

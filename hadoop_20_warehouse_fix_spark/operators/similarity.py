@@ -1208,7 +1208,7 @@ def ivf_state_write(
     Assignment is the vectorized Arrow path (``assign_cell_udf``) —
     the 100 TB corpus-pass form; the corpus is touched exactly once."""
     from hadoop_20_warehouse_fix_spark.sources.writers import (
-        ensure_managed_creatable,
+        overwrite_table,
         write_bucketed,
     )
 
@@ -1274,32 +1274,29 @@ def ivf_state_write(
         # vectors side table shadowing the new state
         spark.sql(f"DROP TABLE IF EXISTS {state_name}_vectors")
     if kind == "pq":
-        _save_pq_books(spark, state_name, books, path)
+        m, k, _ = books.shape
+        pq = spark.createDataFrame(
+            [
+                (mi, ci, [float(x) for x in books[mi, ci]])
+                for mi in range(m)
+                for ci in range(k)
+            ],
+            "mi int, ci int, cvec array<double>",
+        )
+        overwrite_table(pq, f"{state_name}_pq", f"{path}/pq" if path else None)
     else:
         spark.sql(f"DROP TABLE IF EXISTS {state_name}_pq")
     cb = spark.createDataFrame(
         [(int(cid), [float(x) for x in cv]) for cid, cv in cents],
         "cid long, cvec array<double>",
     )
-    spark.sql(f"DROP TABLE IF EXISTS {state_name}_codebook")
-    w = cb.write.mode("overwrite").format("parquet")
-    if path:
-        w = w.option("path", f"{path}/codebook")
-    else:
-        ensure_managed_creatable(spark, f"{state_name}_codebook")
-    w.saveAsTable(f"{state_name}_codebook")
+    overwrite_table(cb, f"{state_name}_codebook", f"{path}/codebook" if path else None)
     meta = spark.createDataFrame(
         [(len(cents), len(cents[0][1]), num_buckets, kind != "none", kind)],
         "n_centroids int, dim int, num_buckets int, quantized boolean,"
         " quant_kind string",
     )
-    spark.sql(f"DROP TABLE IF EXISTS {state_name}_meta")
-    w = meta.write.mode("overwrite").format("parquet")
-    if path:
-        w = w.option("path", f"{path}/meta")
-    else:
-        ensure_managed_creatable(spark, f"{state_name}_meta")
-    w.saveAsTable(f"{state_name}_meta")
+    overwrite_table(meta, f"{state_name}_meta", f"{path}/meta" if path else None)
     # A rebuild under a reused state name must not inherit the previous
     # index's tombstones (round-8 review: stale tombstones silently
     # suppressed — and the next compact physically deleted — valid
@@ -1364,25 +1361,6 @@ def _pq_lists(
         .filter(F.col("pq").isNotNull())
         .select("cell", "neighbor_id", "pq", "cn")
     )
-
-
-def _save_pq_books(spark, state_name: str, books: np.ndarray, path: str | None) -> None:
-    from hadoop_20_warehouse_fix_spark.sources.writers import ensure_managed_creatable
-
-    m, k, sub = books.shape
-    rows = [
-        (int(mi), int(ci), [float(x) for x in books[mi, ci]])
-        for mi in range(m)
-        for ci in range(k)
-    ]
-    df = spark.createDataFrame(rows, "mi int, ci int, cvec array<double>")
-    spark.sql(f"DROP TABLE IF EXISTS {state_name}_pq")
-    w = df.write.mode("overwrite").format("parquet")
-    if path:
-        w = w.option("path", f"{path}/pq")
-    else:
-        ensure_managed_creatable(spark, f"{state_name}_pq")
-    w.saveAsTable(f"{state_name}_pq")
 
 
 def _state_pq_books(spark, state_name: str) -> np.ndarray:
@@ -1691,11 +1669,11 @@ def ivf_state_delete(spark, state_name: str, ids) -> None:
 def ivf_state_compact(spark, state_name: str) -> dict[str, tuple[int, int]]:
     """Compact the lists table (per-append file sets -> ~one file per
     bucket), physically dropping tombstoned vectors — the shared state
-    compaction (``dedup._compact_state``: rename-aside swap,
-    alternating stable locations; see ``minhash_state_compact``). A
-    quantized state's full-vector side table compacts the same way
-    (bucketed + re-sorted by neighbor_id, tombstones physically
-    dropped)."""
+    compaction (``dedup._compact_state``: each table rewritten to a
+    fresh generation directory and committed by one catalog-location
+    flip; see ``minhash_state_compact``). A quantized state's
+    full-vector side table compacts the same way (bucketed + re-sorted
+    by neighbor_id, tombstones physically dropped)."""
     from hadoop_20_warehouse_fix_spark.operators.dedup import _compact_state
 
     _, kind = _state_meta(spark, state_name)

@@ -2657,6 +2657,7 @@ def lookup_keys(
         buckets = [
             int(r[BUCKET_COL])
             for r in key_df.select(_bucket_expr(meta).alias(BUCKET_COL)).distinct().collect()
+            if r[BUCKET_COL] is not None  # a NULL range key matches no row
         ]
 
     if cond is not None:

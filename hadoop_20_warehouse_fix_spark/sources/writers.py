@@ -179,6 +179,22 @@ def ensure_managed_creatable(spark: SparkSession, table_name: str) -> None:
     fs.delete(hpath, True)
 
 
+def overwrite_table(df: DataFrame, table_name: str, path: str | None = None) -> None:
+    """Replace catalog table ``table_name`` with ``df`` as plain Parquet:
+    EXTERNAL at ``path`` when given, else a managed table created
+    orphan-proof (:func:`ensure_managed_creatable`). The one writer for
+    a persisted state's small side tables (meta rows, IVF codebook, PQ
+    sub-codebooks)."""
+    spark = df.sparkSession
+    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
+    w = df.write.mode("overwrite").format("parquet")
+    if path is not None:
+        w = w.option("path", path)
+    else:
+        ensure_managed_creatable(spark, table_name)
+    w.saveAsTable(table_name)
+
+
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -51,9 +51,20 @@ def count_jobs(spark, fn):
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from hadoop_20_warehouse_fix_spark.session import build_session
 
-    spark = build_session(app_name="h20wf-tests", shuffle_partitions=8)
+    # managed tables and the embedded-Derby JDBC log land in per-run
+    # temporary directories, never in the working tree
+    warehouse = str(tmp_path_factory.mktemp("spark-warehouse"))
+    derby_home = str(tmp_path_factory.mktemp("derby"))
+    spark = build_session(
+        app_name="h20wf-tests",
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.sql.warehouse.dir": warehouse,
+            "spark.driver.extraJavaOptions": f"-Dderby.system.home={derby_home}",
+        },
+    )
     yield spark
     spark.stop()

@@ -3,6 +3,8 @@ exact variant (recall/precision), SimHash invariants."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,11 +16,16 @@ from hadoop_20_warehouse_fix_spark.operators.dedup import (
     simhash_pairs,
 )
 from hadoop_20_warehouse_fix_spark.plans.cache import cache_scope
-from tests.conftest import SF_CORRECT, cache_manager_empty
+from tests.conftest import SF_CORRECT, cache_manager_empty, count_jobs
 
 
 def _pairs(df):
     return {(r.id_a, r.id_b) for r in df.collect()}
+
+
+def _local(location: str) -> str:
+    """A catalog location URI as a local filesystem path."""
+    return location[len("file:") :] if location.startswith("file:") else location
 
 
 def test_minhash_lsh_recall_precision(spark):
@@ -1269,6 +1276,7 @@ def test_minhash_state_compact_preserves_probe_and_drops_files(spark, tmp_path):
     IDENTICAL before and after, and the data-file count strictly
     drops."""
     from hadoop_20_warehouse_fix_spark.operators.dedup import (
+        _table_location,
         minhash_lsh_pairs_incremental,
         minhash_state_append,
         minhash_state_compact,
@@ -1299,6 +1307,7 @@ def test_minhash_state_compact_preserves_probe_and_drops_files(spark, tmp_path):
             ).collect()
         }
         assert before, "self-copies must match the state"
+        loc0 = _table_location(spark, f"{state}_bands")
         report = minhash_state_compact(spark, state)
         for t, (n_before, n_after) in report.items():
             assert n_after < n_before, (t, report)
@@ -1315,17 +1324,19 @@ def test_minhash_state_compact_preserves_probe_and_drops_files(spark, tmp_path):
             probe.select((F.col("doc_id") + 1).alias("doc_id"), "text"),
             "doc_id", "text", state,
         )
-        # round-7: a SECOND compaction must ping-pong between the two
-        # stable locations (__a <-> __b), not grow the path, and still
-        # return identical probe results
-        from hadoop_20_warehouse_fix_spark.operators.dedup import _table_location
-
+        # a SECOND compaction flips to another fresh generation: every
+        # generation is a sibling of the original location (the path
+        # does not grow), the superseded one is deleted, and the probe
+        # results hold
         loc1 = _table_location(spark, f"{state}_bands")
         minhash_state_compact(spark, state)
         loc2 = _table_location(spark, f"{state}_bands")
-        assert loc1 != loc2
-        assert loc1.rstrip("/").endswith("__a") and loc2.rstrip("/").endswith("__b")
-        assert "__compacting" not in loc2
+        assert len({loc0, loc1, loc2}) == 3
+        assert {os.path.dirname(loc) for loc in (loc0, loc1, loc2)} == {
+            os.path.dirname(loc0)
+        }
+        assert not os.path.exists(_local(loc0)) and not os.path.exists(_local(loc1))
+        assert os.path.isdir(_local(loc2))
         again = {
             (r.id_a, r.id_b, r.jaccard)
             for r in minhash_lsh_pairs_incremental(
@@ -1338,6 +1349,148 @@ def test_minhash_state_compact_preserves_probe_and_drops_files(spark, tmp_path):
     finally:
         for t in (f"{state}_bands", f"{state}_shingles", f"{state}_meta"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+        spark.catalog.clearCache()
+
+
+def _small_state(spark, state: str, path: str) -> None:
+    """A 40-doc, 4-bucket minhash state with one appended batch (so each
+    table has files to compact) and one pending delete."""
+    from hadoop_20_warehouse_fix_spark.operators.dedup import (
+        minhash_state_append,
+        minhash_state_delete,
+        minhash_state_write,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon zeta token{i % 10} w{i}") for i in range(40)],
+        ["doc_id", "text"],
+    )
+    minhash_state_write(docs, "doc_id", "text", state, num_buckets=4, path=path)
+    minhash_state_append(
+        docs.select((F.col("doc_id") + 1000).alias("doc_id"), "text"), "doc_id", "text", state
+    )
+    minhash_state_delete(spark, state, [3, 1005])
+
+
+def _state_probe(spark, state: str) -> set:
+    from hadoop_20_warehouse_fix_spark.operators.dedup import minhash_lsh_pairs_incremental
+
+    probe = spark.createDataFrame(
+        [(900000 + i, f"alpha beta gamma delta epsilon zeta token{i} w{i}") for i in range(8)],
+        ["doc_id", "text"],
+    )
+    return {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in minhash_lsh_pairs_incremental(
+            probe, "doc_id", "text", state, threshold=0.5
+        ).collect()
+    }
+
+
+def test_state_compact_flip_failure_keeps_live_state(spark, tmp_path, monkeypatch):
+    """A compaction whose catalog flip (``ALTER TABLE ... SET
+    LOCATION``) raises after the new generation was written leaves
+    every table on its old location with every row, the probe
+    unchanged, the deletions pending, and no new directory or
+    temporary table behind; the next compaction then succeeds."""
+    from hadoop_20_warehouse_fix_spark.operators.dedup import (
+        _table_location,
+        minhash_state_compact,
+    )
+
+    state = "mh_state_flip_fail"
+    root = tmp_path / "state"
+    tables = [f"{state}_bands", f"{state}_shingles"]
+    try:
+        _small_state(spark, state, str(root))
+        want = _state_probe(spark, state)
+        assert want, "the probe must match some state docs"
+        locs = {t: _table_location(spark, t) for t in tables}
+        rows = {t: sorted(spark.table(t).collect()) for t in tables}
+        listing = sorted(os.listdir(root))
+
+        real_sql = spark.sql
+
+        def flaky_sql(query, *args, **kwargs):
+            if "SET LOCATION" in query:
+                raise RuntimeError("flip failed")
+            return real_sql(query, *args, **kwargs)
+
+        monkeypatch.setattr(spark, "sql", flaky_sql)
+        with pytest.raises(RuntimeError, match="flip failed"):
+            minhash_state_compact(spark, state)
+        monkeypatch.undo()
+
+        assert {t: _table_location(spark, t) for t in tables} == locs
+        assert {t: sorted(spark.table(t).collect()) for t in tables} == rows
+        assert _state_probe(spark, state) == want
+        assert sorted(os.listdir(root)) == listing  # the new generation is gone
+        for t in tables:
+            assert not spark.catalog.tableExists(f"{t}__compacting")
+        assert spark.catalog.tableExists(f"{state}_tombstones")
+        assert cache_manager_empty(spark)
+
+        minhash_state_compact(spark, state)
+        for t in tables:
+            assert _table_location(spark, t) != locs[t]
+            assert not os.path.exists(_local(locs[t]))
+            assert spark.table(t).filter(F.col("id").isin(3, 1005)).count() == 0
+        assert not spark.catalog.tableExists(f"{state}_tombstones")
+        assert _state_probe(spark, state) == want
+    finally:
+        for t in ("bands", "shingles", "meta", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
+        spark.catalog.clearCache()
+
+
+def test_state_compact_leaves_neighbouring_directories(spark, tmp_path):
+    """Compaction deletes only the location it read from the catalog
+    and the directory it created: a directory beside the state tables
+    named like an older build's alternate location (``bands__a``) and
+    an unrelated sibling both survive two compactions. The state's
+    directory name holds a quote, which the flip's SQL string literal
+    must escape."""
+    from hadoop_20_warehouse_fix_spark.operators.dedup import minhash_state_compact
+
+    state = "mh_state_sentinel"
+    root = tmp_path / "o'state"
+    try:
+        _small_state(spark, state, str(root))
+        keep = [root / "bands__a" / "keep.txt", root / "neighbour" / "keep.txt"]
+        for f in keep:
+            f.parent.mkdir()
+            f.write_text("keep")
+        minhash_state_compact(spark, state)
+        minhash_state_compact(spark, state)
+        assert [f.read_text() for f in keep] == ["keep", "keep"]
+    finally:
+        for t in ("bands", "shingles", "meta", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
+        spark.catalog.clearCache()
+
+
+def test_state_compact_file_counts_run_no_jobs(spark, tmp_path):
+    """``(files_before, files_after)`` come from listing the old and new
+    locations and equal the data files the tables read, so compacting
+    the 40-doc, 4-bucket two-table state runs at most 15 Spark jobs. An
+    ``input_file_name()`` count per table and side would add 12."""
+    from hadoop_20_warehouse_fix_spark.operators.dedup import minhash_state_compact
+
+    def files(t):
+        return spark.table(t).select(F.input_file_name()).distinct().count()
+
+    state = "mh_state_jobs"
+    tables = [f"{state}_bands", f"{state}_shingles"]
+    try:
+        _small_state(spark, state, str(tmp_path / "state"))
+        want_before = {t: files(t) for t in tables}
+        report, jobs = count_jobs(spark, lambda: minhash_state_compact(spark, state))
+        assert report == {t: (want_before[t], files(t)) for t in tables}
+        assert all(after <= 4 < before for before, after in report.values()), report
+        assert jobs <= 15, jobs
+    finally:
+        for t in ("bands", "shingles", "meta", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
         spark.catalog.clearCache()
 
 

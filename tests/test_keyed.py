@@ -628,6 +628,19 @@ def test_lookup_keys_prunes_directories_range_layout(spark, tmp_path):
     assert {(r.a, r.b, r.v) for r in got} == {(3, 7, 73), (9, 99, 999)}
 
 
+def test_lookup_keys_null_key_frame_range_layout(spark, tmp_path):
+    """A NULL key in a DataFrame key frame on a range layout has a NULL
+    bucket id; it matches no row (as on the hash layout) instead of
+    crashing the bucket-id collection, and the other keys still hit."""
+    from hadoop_20_warehouse_fix_spark.sources.keyed import lookup_keys
+
+    path = str(tmp_path / "tab")
+    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
+    write_keyed_table(df, path, ["k"], layout="range", range_step=10)
+    keys = spark.createDataFrame([(None,), (5,)], "k long")
+    assert [(r.k, r.v) for r in lookup_keys(spark, path, keys).collect()] == [(5, 15)]
+
+
 def test_lookup_keys_casts_to_table_key_types(spark, tmp_path):
     """Second-pass review pin: xxhash64 is TYPE-sensitive — an
     int-keyed table probed with long keys hashes to the wrong bucket

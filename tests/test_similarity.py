@@ -851,6 +851,92 @@ def test_ivf_sq8_state_lifecycle_probe_equals_rebuild(spark, tmp_path):
         spark.catalog.clearCache()
 
 
+def test_ivf_sq8_state_compact_second_flip_failure(spark, tmp_path, monkeypatch):
+    """An SQ8 state compacts two tables, each committed by its own
+    location flip. When the vectors flip raises, the lists table has
+    already flipped (tombstoned rows gone) while the vectors table stays
+    on its old location with every row and the tombstones stay pending,
+    so probes still equal the exact rebuild; the next compaction
+    finishes the job."""
+    import pytest
+
+    from hadoop_20_warehouse_fix_spark.operators.dedup import _table_location
+    from hadoop_20_warehouse_fix_spark.operators.similarity import (
+        ivf_state_compact,
+        ivf_state_delete,
+        ivf_state_probe,
+        ivf_state_write,
+        ivf_topk,
+    )
+
+    emb = spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet")
+    corpus = emb.filter(F.col("vec_id") >= 50)
+    queries = emb.filter(F.col("vec_id") < 10)
+    state = "ivf_sq8_flip"
+    lists, vectors = f"{state}_lists", f"{state}_vectors"
+
+    def probe():
+        return (
+            ivf_state_probe(queries, "vec_id", "embedding", state, k=5, nprobe=4)
+            .orderBy("query_id", "rank")
+            .collect()
+        )
+
+    try:
+        ivf_state_write(
+            corpus, "vec_id", "embedding", state,
+            n_centroids=16, codebook="sample_md5", num_buckets=4,
+            path=str(tmp_path / "sq8"), quantize=True,
+        )
+        cb = [
+            (int(r.cid), [float(x) for x in r.cvec])
+            for r in spark.table(f"{state}_codebook").collect()
+        ]
+        gone = [r.vec_id for r in corpus.select("vec_id").limit(20).collect()]
+        ivf_state_delete(spark, state, gone)
+        want = (
+            ivf_topk(
+                corpus.filter(~F.col("vec_id").isin(gone)), queries, k=5,
+                precomputed_codebook=cb,
+            )
+            .orderBy("query_id", "rank")
+            .collect()
+        )
+        assert probe() == want
+        locs = {t: _table_location(spark, t) for t in (lists, vectors)}
+        vector_rows = sorted(spark.table(vectors).collect())
+
+        real_sql = spark.sql
+
+        def flaky_sql(query, *args, **kwargs):
+            if query.startswith(f"ALTER TABLE {vectors} SET LOCATION"):
+                raise RuntimeError("flip failed")
+            return real_sql(query, *args, **kwargs)
+
+        monkeypatch.setattr(spark, "sql", flaky_sql)
+        with pytest.raises(RuntimeError, match="flip failed"):
+            ivf_state_compact(spark, state)
+        monkeypatch.undo()
+
+        assert _table_location(spark, lists) != locs[lists]
+        assert spark.table(lists).filter(F.col("neighbor_id").isin(gone)).count() == 0
+        assert _table_location(spark, vectors) == locs[vectors]
+        assert sorted(spark.table(vectors).collect()) == vector_rows
+        assert spark.catalog.tableExists(f"{state}_tombstones")
+        assert not spark.catalog.tableExists(f"{vectors}__compacting")
+        assert probe() == want
+
+        ivf_state_compact(spark, state)
+        assert _table_location(spark, vectors) != locs[vectors]
+        assert spark.table(vectors).filter(F.col("neighbor_id").isin(gone)).count() == 0
+        assert not spark.catalog.tableExists(f"{state}_tombstones")
+        assert probe() == want
+    finally:
+        for t in ("lists", "vectors", "codebook", "meta", "tombstones"):
+            spark.sql(f"DROP TABLE IF EXISTS {state}_{t}")
+        spark.catalog.clearCache()
+
+
 def test_ivf_state_probe_prunes_unprobed_buckets(spark, tmp_path):
     """The probe collects its batch's probed cells and pushes them into
     the bucketed lists scan as an IN filter, so unprobed buckets are

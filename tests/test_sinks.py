@@ -88,26 +88,23 @@ def test_compact_reduces_files(spark, tmp_path):
 def test_write_bucketed_no_shuffle_join(spark, tmp_path):
     # CompositeInputFormat physics: two tables bucketed+sorted on the join
     # key sort-merge-join WITHOUT an Exchange in the physical plan.
-    import shutil
-
-    for t in ("bt_a", "bt_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
     a = spark.range(1000).withColumn("va", F.col("id") * 2)
     b = spark.range(500).withColumn("vb", F.col("id") * 3)
-    write_bucketed(a, "bt_a", ["id"], num_buckets=4)
-    write_bucketed(b, "bt_b", ["id"], num_buckets=4)
     # Force the sort-merge path (tiny test tables would broadcast and
     # bypass bucketing; at warehouse scale SMJ is the default).
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        write_bucketed(a, "bt_a", ["id"], num_buckets=4)
+        write_bucketed(b, "bt_b", ["id"], num_buckets=4)
         joined = spark.table("bt_a").join(spark.table("bt_b"), "id")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert joined.count() == 500
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        for t in ("bt_a", "bt_b"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_write_bucketed_append_rejects_path(spark, tmp_path):
