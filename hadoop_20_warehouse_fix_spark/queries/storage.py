@@ -432,13 +432,13 @@ def keyed_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     2. MOR upsert: %10==3 gets acctbal+1           (delta seq 1)
     3. additive evolution (new ``score`` column)   (commit 2 — records
        seq 1 as pending; the evolving batch itself lands after)
-    4. compaction (folds seqs into the base, seq dirs retire to the
-       feed archive)                               (commit 3)
+    4. compaction (folds seqs into the base; the seq dirs stay where
+       they were written)                          (commit 3)
     5. upsert: %10==5 gets acctbal+2               (delta seq 3)
 
     Reading at_commit=2 must resolve the COMMIT-2 manifest's immutable
-    bucket dirs (kept by gc_generations), overlay delta seq 1 FROM THE
-    ARCHIVE (kept by retain_generations), present the evolved schema
+    bucket dirs and overlay its folded delta seq 1 (both kept by
+    gc_generations), present the evolved schema
     (score NULL everywhere — the evolving batch is post-commit), and
     show none of step 5. The oracle recomputes exactly that state from
     the source view. 100 TB: history costs only retained manifests +

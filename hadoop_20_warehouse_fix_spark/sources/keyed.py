@@ -36,11 +36,19 @@ inside it) at once. A delta dir counts only once its
 either the old manifest state or unreferenced garbage (moved-but-
 unpublished bucket dirs, unmarked seq dirs, ``_staging``) that the
 recovery sweep GCs — never a wrong answer and never a half-visible
-batch. Superseded dirs survive ``gc_generations`` further commits, so
-a reader that resolved a manifest an instant before a flip still finds
-every dir it lists. Engines that need multi-writer transactions layer
-a log on top (Delta/Iceberg); this is the bucket-granular storage
-those logs commit.
+batch. Engines that need multi-writer transactions layer a log on top
+(Delta/Iceberg); this is the bucket-granular storage those logs commit.
+
+Retention is one rule for bucket and delta dirs alike. A compaction
+leaves the seq dirs it folds where they were written and records the
+highest one (``folded_seq``) in the manifest it publishes; live reads
+see only seqs above ``max(delta_floor, folded_seq)``. After each flip
+the publish sweeps every dir that none of the newest
+``gc_generations`` + 1 manifests still reads — a bucket dir it lists,
+a seq dir pending under it or recorded in its ``pending_seqs``. So a
+reader that resolved a manifest an instant before a flip still finds
+every file it lists, and the change feed, time travel and the replay
+ledger all read folded batches in place for the same window.
 
 Object stores: no directory rename sits on a committed path — readers
 never resolve through dir presence, so S3-class stores, where rename
@@ -89,12 +97,6 @@ from pyspark.sql import types as T
 BUCKET_COL = "kb"
 _META = "_keyed_meta.json"
 _DELTA_DIR = "_delta"
-# Folded-but-retained delta generations (round 13): compaction moves
-# retired ``seq=N`` dirs under ``_feed_archive/gen=<max_seq>`` instead
-# of deleting them, so change-feed consumers slower than the compaction
-# cadence page through the missed batches instead of full-resyncing —
-# the Delta/Hudi retention knob re-expressed on plain directories.
-_FEED_ARCHIVE = "_feed_archive"
 _DEL_COL = "_del"
 _WRITER_LOCK = "_writer.lock"
 _COMMITS_DIR = "_commits"
@@ -847,11 +849,7 @@ def write_keyed_table(
             # committed writes when the flip crashed, deleting them
             # after let them override the NEW table's rows.
             _recover_unlocked(spark, path)
-            floor = max(
-                [s_ for s_, _ in _delta_seq_dirs(spark, path, existing)]
-                + [_read_seq_hwm(spark, path), existing.get("delta_floor", 0)]
-            )
-            meta["delta_floor"] = floor
+            meta["delta_floor"] = _seq_high(spark, path, existing)
         # The load lands in _staging and is published like any batch
         # (round 12): the root — and the writer lease inside it —
         # survives, where the old overwrite-to-root write deleted the
@@ -874,18 +872,13 @@ def write_keyed_table(
         cm = _current_commit(spark, path)
         prior = {int(b) for b in ((cm or {}).get("buckets") or {})}
         # buckets + meta (incl. delta_floor) flip in ONE manifest PUT;
-        # the old generation's deltas/hwm are only TOUCHED after the
-        # flip (floor already hides the deltas) — a crash on either
-        # side leaves a consistent generation
+        # the floor hides the old generation's deltas from live reads
+        # and the feed, and the publish's sweep retires their dirs once
+        # no retained manifest reads them
         _marker_publish(
             spark, path, staging, sorted(staged_ids | prior), meta=meta
         )
         _write_meta(spark, path, meta)
-        fs.delete(Path(f"{path}/{_DELTA_DIR}"), True)
-        # the archive is the OLD generation's feed history — a
-        # checkpointed consumer must resync after a re-load, not page
-        # through rows the new base never contained
-        fs.delete(Path(f"{path}/{_FEED_ARCHIVE}"), True)
         if meta.get("delta_floor"):
             _write_seq_hwm(spark, path, meta["delta_floor"])
 
@@ -902,44 +895,66 @@ def _write_layout(df: DataFrame, dest: str, n_parts: int, meta: dict) -> None:
     out.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(dest)
 
 
-def _delta_seq_dirs(
-    spark: SparkSession, path: str, meta: dict | None = None
+def _live_mark(meta: dict) -> int:
+    """Seqs at or below this are no pending delta of ``meta``'s commit:
+    a re-load or rollback retired them (``delta_floor``) or a
+    compaction folded them into the base (``folded_seq``)."""
+    return max(int(meta.get("delta_floor") or 0), int(meta.get("folded_seq") or 0))
+
+
+def _committed_seqs(
+    spark: SparkSession, path: str, above: int = 0
 ) -> list[tuple[int, str]]:
-    """Sorted (seq, dir) of COMMITTED MOR delta batches: a seq dir
-    counts only once its ``_COMMITTED`` marker (written last) exists —
-    an unmarked dir is a crashed or refused batch, invisible to every
-    reader and GC'd by the recovery sweep."""
-    if meta is None:
-        meta = read_keyed_meta(spark, path)
-    floor = int(meta.get("delta_floor") or 0)
-    fs, root, jvm = _fs(spark, f"{path}/{_DELTA_DIR}")
-    Path = jvm.org.apache.hadoop.fs.Path
+    """Sorted (seq, dir) of the COMMITTED delta batches above ``above``
+    still on disk: a seq dir counts only once its ``_COMMITTED`` marker
+    (written last) exists — an unmarked dir is a crashed or refused
+    batch, invisible to every reader and GC'd by the recovery sweep.
+    ONE glob for the markers themselves (their parent dirs are the
+    committed seq dirs) — a listStatus + per-dir exists probe costs
+    O(pending) py4j round trips on every append/read plan (round-12
+    fixed-cost audit)."""
+    fs, _, jvm = _fs(spark, path)
+    arr = fs.globStatus(
+        jvm.org.apache.hadoop.fs.Path(f"{path}/{_DELTA_DIR}/seq=*/{_COMMITTED_MARK}")
+    )
     out = []
-    # ONE glob for the markers themselves (their parent dirs are the
-    # committed seq dirs) — a listStatus + per-dir exists probe costs
-    # O(pending) py4j round trips on every append/read plan (round-12
-    # fixed-cost audit); globStatus answers in one.
-    arr = fs.globStatus(Path(f"{path}/{_DELTA_DIR}/seq=*/{_COMMITTED_MARK}"))
     for st in arr or []:
         seq_dir = st.getPath().getParent()
         seq = int(seq_dir.getName().split("=", 1)[1])
-        # delta_floor (round-12 second review): a re-load retires the
-        # old generation's deltas LOGICALLY in the same atomic flip that
-        # replaces the buckets — dirs at or below the floor are the old
-        # table's, whatever their physical state
-        if seq > floor:
+        if seq > above:
             out.append((seq, seq_dir.toUri().getPath()))
     return sorted(out)
 
 
-def _read_deltas(spark: SparkSession, path: str, meta: dict) -> DataFrame | None:
-    """All delta rows as data_cols + _del + kb (regular column) + _seq
-    (None if no deltas). The seq dirs are passed explicitly with
-    basePath so the hidden ``_delta`` root never hits Spark's
-    ignored-path check."""
-    dirs = _delta_seq_dirs(spark, path, meta)
-    if not dirs:
-        return None
+def _delta_seq_dirs(
+    spark: SparkSession, path: str, meta: dict | None = None
+) -> list[tuple[int, str]]:
+    """Sorted (seq, dir) of the PENDING delta batches of the commit
+    ``meta`` was resolved with (the live read's view): committed seqs
+    above :func:`_live_mark`. Folded and floored dirs a retained
+    manifest still reads stay on disk, but not in this view."""
+    if meta is None:
+        meta = read_keyed_meta(spark, path)
+    return _committed_seqs(spark, path, _live_mark(meta))
+
+
+def _seq_high(spark: SparkSession, path: str, meta: dict) -> int:
+    """The highest seq number the table has used — pending, recorded in
+    ``_seq.hwm`` or at or below :func:`_live_mark`. A new batch takes
+    the next one, and a re-load or rollback floors its deltas here, so
+    no seq number is reused while a retained dir may still carry it
+    (a crash between a compaction's flip and its hwm write leaves only
+    ``folded_seq`` recording the folded seqs)."""
+    live = _delta_seq_dirs(spark, path, meta)
+    return max(live[-1][0] if live else 0, _read_seq_hwm(spark, path), _live_mark(meta))
+
+
+def _scan_deltas(
+    spark: SparkSession, path: str, meta: dict, dirs: Sequence[str]
+) -> DataFrame:
+    """The rows of the given seq dirs as data_cols + _del + kb (regular
+    column) + _seq. The dirs are passed explicitly with basePath so the
+    hidden ``_delta`` root never hits Spark's ignored-path check."""
     schema = (
         T.StructType.fromJson(json.loads(meta["schema_json"]))
         .add(_DEL_COL, T.BooleanType())
@@ -951,8 +966,26 @@ def _read_deltas(spark: SparkSession, path: str, meta: dict) -> DataFrame | None
     # paying a mergeSchema footer pass or dropping the evolved column
     df = spark.read.schema(schema).option(
         "basePath", f"{path}/{_DELTA_DIR}"
-    ).parquet(*[d for _, d in dirs])
+    ).parquet(*dirs)
     return df.withColumnRenamed("seq", "_seq")
+
+
+def _read_deltas(
+    spark: SparkSession,
+    path: str,
+    meta: dict,
+    seq_dirs: list[tuple[int, str]] | None = None,
+) -> tuple[DataFrame, bool] | None:
+    """``(rows, broadcast_keys)`` of ``seq_dirs`` (default: the pending
+    deltas, :func:`_delta_seq_dirs`), or None when there are none.
+    ``broadcast_keys`` is whether their bytes on disk fit
+    :data:`DELTA_BROADCAST_BYTES`."""
+    if seq_dirs is None:
+        seq_dirs = _delta_seq_dirs(spark, path, meta)
+    if not seq_dirs:
+        return None
+    rows = _scan_deltas(spark, path, meta, [d for _, d in seq_dirs])
+    return rows, _delta_bytes(spark, path, seq_dirs) <= DELTA_BROADCAST_BYTES
 
 
 #: Above this many total delta bytes the broadcast resolution path
@@ -974,11 +1007,17 @@ _NULL_BUCKET_ERR = (
 )
 
 
-def _delta_bytes(spark: SparkSession, path: str) -> int:
-    fs, root, jvm = _fs(spark, f"{path}/{_DELTA_DIR}")
-    if not fs.exists(root):
-        return 0
-    return fs.getContentSummary(root).getLength()
+def _delta_bytes(
+    spark: SparkSession, path: str, seq_dirs: list[tuple[int, str]]
+) -> int:
+    """Bytes on disk of ``seq_dirs`` — one driver-side glob, no Spark
+    job on the read path."""
+    fs, _, jvm = _fs(spark, path)
+    names = ",".join(f"seq={s}" for s, _ in seq_dirs)
+    found = fs.globStatus(
+        jvm.org.apache.hadoop.fs.Path(f"{path}/{_DELTA_DIR}/{{{names}}}/*")
+    )
+    return sum(st.getLen() for st in found or [])
 
 
 def _resolve_winners(deltas: DataFrame, meta: dict, extra: Sequence[str]) -> DataFrame:
@@ -1028,23 +1067,25 @@ def read_keyed_table(
     reconstruct the table exactly as it stood at commit ``n``: the base
     is resolved through that commit's manifest (immutable versioned
     bucket dirs), and the MOR deltas pending at publish time — recorded
-    in the manifest as ``pending_seqs`` — are overlaid from wherever
-    they now live (still pending, or retired into the feed archive).
-    The readable history window is bounded by BOTH retention knobs:
-    ``gc_generations`` (how many predecessor manifests + their bucket
-    dirs survive) and compact's ``retain_generations`` (how many folded
-    delta generations stay readable); a read past either raises with
-    the knob named. The Delta/Iceberg ``VERSION AS OF``
-    re-expressed on plain directories."""
+    in the manifest as ``pending_seqs`` — are overlaid from their seq
+    dirs, folded since or not. One knob bounds the window:
+    ``gc_generations`` keeps a manifest, its bucket dirs and the seq
+    dirs it reads for that many further commits; a read past it raises
+    with the knob named. The Delta/Iceberg ``VERSION AS OF``
+    re-expressed on plain directories.
+
+    The frame reads the files its plan listed: they stay on disk until
+    ``gc_generations`` further commits land, so a compaction or re-load
+    between planning and ``collect()`` changes nothing it returns."""
     meta = read_keyed_meta(spark, path)
     if at_commit is not None:
         return _read_at_commit(spark, path, meta, int(at_commit))
     data_cols = meta["data_cols"]
     base = _base_df(spark, path, meta)
-    deltas = _read_deltas(spark, path, meta)
-    if deltas is None:
+    got = _read_deltas(spark, path, meta)
+    if got is None:
         return base.select(*data_cols)
-    bcast = _delta_bytes(spark, path) <= DELTA_BROADCAST_BYTES
+    deltas, bcast = got
     return _merged_view(base, deltas, meta, extra=[], broadcast_keys=bcast).select(*data_cols)
 
 
@@ -1073,52 +1114,20 @@ def _read_at_commit(
         )
     if not pending:
         return base.select(*data_cols)
-    # locate each recorded seq wherever it lives now: still pending,
-    # or retired into the feed archive by a later compaction
-    floor = int(meta_n.get("delta_floor") or 0)
-    where: dict[int, tuple[str, str]] = {}  # seq -> (dir, basePath)
-    for s, d in _delta_seq_dirs(spark, path, meta_n):
-        where[s] = (d, f"{path}/{_DELTA_DIR}")
-    for s, d, g in _archived_seq_dirs(spark, path):
-        if s > floor:
-            where.setdefault(s, (d, g))
-    missing = [s for s in pending if s not in where]
+    on_disk = dict(_committed_seqs(spark, path))
+    missing = [s for s in pending if s not in on_disk]
     if missing:
         raise ValueError(
-            f"{path!r}: commit {n}'s pending deltas {missing} were "
-            "compacted and aged out of the feed archive — raise "
-            "compact_keyed_table's retain_generations to keep deeper "
-            "time-travel history"
+            f"{path!r}: commit {n}'s pending deltas {missing} are gone — "
+            "compacted and retired with their generation; raise "
+            "write_keyed_table's gc_generations to keep deeper time-travel "
+            "history"
         )
-    fschema = (
-        T.StructType.fromJson(json.loads(meta_n["schema_json"]))
-        .add(_DEL_COL, T.BooleanType())
-        .add(BUCKET_COL, T.IntegerType())
-        .add("seq", T.LongType())
+    # same broadcast-vs-shuffle guard as the live read (round-14 ADVICE
+    # low): large pending deltas must not force an over-limit broadcast
+    deltas, bcast = _read_deltas(
+        spark, path, meta_n, [(s, on_disk[s]) for s in pending]
     )
-    by_base: dict[str, list[str]] = {}
-    for s in pending:
-        d, bp = where[s]
-        by_base.setdefault(bp, []).append(d)
-    parts = [
-        spark.read.schema(fschema).option("basePath", bp).parquet(*ds)
-        for bp, ds in sorted(by_base.items())
-    ]
-    deltas = parts[0]
-    for p in parts[1:]:
-        deltas = deltas.unionByName(p)
-    deltas = deltas.withColumnRenamed("seq", "_seq")
-    # same broadcast-vs-shuffle guard as the normal read path (round-14
-    # ADVICE low): a time-travel read of a commit with large pending
-    # deltas must not force an over-limit broadcast the live read
-    # would have routed to the shuffle anti-join
-    fs, _, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    pend_bytes = 0
-    for s in pending:
-        d, _bp = where[s]
-        pend_bytes += fs.getContentSummary(Path(d)).getLength()
-    bcast = pend_bytes <= DELTA_BROADCAST_BYTES
     return _merged_view(
         base, deltas, meta_n, extra=[], broadcast_keys=bcast
     ).select(*data_cols)
@@ -1129,8 +1138,7 @@ def _marker_publish(
     path: str,
     staging: str,
     touched: list[int],
-    meta: dict | None = None,
-    folds_deltas: bool = False,
+    meta: dict,
 ) -> dict:
     """Bucket publish: move each staged ``kb=<b>`` dir
     to an immutable versioned dir ``_b<b>.v<n>``, then PUT the next
@@ -1138,9 +1146,9 @@ def _marker_publish(
     the commit point; the moves before it are invisible (readers
     resolve ONLY through the manifest) and need no atomicity. After
     the flip, GC runs with ``gc_generations`` (table meta, default 1)
-    OF GRACE: a dir is deleted only when NO retained manifest
-    references it, and only manifests older than the newest
-    ``gc_generations`` predecessors are dropped — so a reader that
+    OF GRACE: only manifests older than the newest ``gc_generations``
+    predecessors are dropped, and a bucket or delta seq dir is deleted
+    only when NO retained manifest reads it — so a reader that
     resolved a retained manifest an instant before the flip still
     finds every dir it is about to list (the first draft deleted
     superseded dirs immediately while keeping the previous manifest,
@@ -1148,7 +1156,8 @@ def _marker_publish(
     grace a parameter (Delta/Hudi-style retention): a slow scan under
     a fast CDC ingest survives ``gc_generations`` commits instead of
     exactly one. A crash anywhere in the GC leaves garbage the
-    recovery sweep collects, never a wrong answer."""
+    recovery sweep or the next publish collects, never a wrong
+    answer."""
     cm = _current_commit(spark, path) or {"n": 0, "buckets": {}}
     n_new = int(cm["n"]) + 1
     fs, _, jvm = _fs(spark, path)
@@ -1168,15 +1177,11 @@ def _marker_publish(
             changed.append(dest)
         elif b in new_buckets:  # bucket emptied by this batch
             new_buckets.pop(b)
-    # pending MOR deltas as of THIS commit, for time-travel overlays:
-    # a compaction folds every pending delta into the base it publishes
-    # (records []); every other publish leaves them pending. Computed
-    # with the manifest's own meta so a re-load's delta_floor applies.
-    pending = (
-        []
-        if folds_deltas
-        else [s for s, _ in _delta_seq_dirs(spark, path, meta)]
-    )
+    # pending MOR deltas as of THIS commit, for time-travel overlays,
+    # computed with the manifest's own meta: a compaction's folded_seq
+    # and a re-load's delta_floor leave none
+    committed = _committed_seqs(spark, path)
+    pending = [s for s, _ in committed if s > _live_mark(meta)]
     # the PUT below is THE commit — last chance to notice a broken lease
     _fence_lease(spark, path)
     _write_commit(
@@ -1184,10 +1189,10 @@ def _marker_publish(
     )
     fs.delete(Path(staging), True)
     # graced GC: retain the newest gc_generations predecessor manifests
-    # and every dir any retained manifest references; drop the rest
-    gcg = max(1, int((meta or {}).get("gc_generations") or 1))
+    # and every dir any retained manifest reads; drop the rest
+    gcg = max(1, int(meta.get("gc_generations") or 1))
     retained_floor = n_new - gcg
-    keep = set(new_buckets.values()) | set(cm["buckets"].values())
+    retained = [{"buckets": new_buckets, "meta": meta, "pending_seqs": pending}, cm]
     croot = Path(f"{path}/{_COMMITS_DIR}")
     manifests = []
     for st in fs.listStatus(croot):
@@ -1198,7 +1203,16 @@ def _marker_publish(
         if retained_floor <= n_old < n_new - 1:  # retained beyond cm
             kept = _read_json_file(fs, mp, retries=2)
             if kept is not None:
-                keep |= set((kept.get("buckets") or {}).values())
+                retained.append(kept)
+    keep = {d for m in retained for d in (m.get("buckets") or {}).values()}
+    # a seq dir lives while a retained manifest reads it: pending above
+    # its mark, or recorded in its pending_seqs. Ascending, so a crash
+    # mid-sweep leaves the feed's on-disk seqs contiguous.
+    lo = min(_live_mark(m.get("meta") or {}) for m in retained)
+    needed = {int(s) for m in retained for s in m.get("pending_seqs") or []}
+    for s, d in committed:
+        if s <= lo and s not in needed:
+            fs.delete(Path(d), True)
     for n_old, mp in manifests:
         if n_old >= retained_floor:
             continue
@@ -1222,13 +1236,13 @@ def _recover_unlocked(spark: SparkSession, path: str) -> dict:
     bucket dirs NO retained manifest references (the GC grace keeps the
     previous manifest's dirs alive — the sweep honors the same rule),
     delta seq dirs without a ``_COMMITTED`` marker (crashed batches —
-    a COMMITTED dir is never GC'd here even when ``delta_floor`` hides
-    it from live reads: after a rollback the skipped generation's
-    floored deltas are still referenced by retained manifests'
-    ``pending_seqs`` and time-travel reads of those commits must keep
-    working, round-14 ADVICE), orphaned ``.{json}.tmp`` control-file
-    remnants, and ``_staging``. Returns ``{gc_buckets: [...],
-    gc_deltas: [...], staging_cleared: bool}``."""
+    a COMMITTED dir is never GC'd here, even when ``delta_floor`` or
+    ``folded_seq`` hides it from live reads: a retained manifest may
+    still read it — time travel of a rollback-skipped commit, round-14
+    ADVICE — and the publish sweep retires it by the one retention
+    rule), orphaned ``.{json}.tmp`` control-file remnants, and
+    ``_staging``. Returns ``{gc_buckets: [...], gc_deltas: [...],
+    staging_cleared: bool}``."""
     import re
 
     fs, root, jvm = _fs(spark, path)
@@ -1252,19 +1266,12 @@ def _recover_unlocked(spark: SparkSession, path: str) -> dict:
         if st.isDirectory() and pat.match(name) and name not in referenced:
             fs.delete(st.getPath(), True)
             gc_b.append(name)
-    # commit test = the _COMMITTED marker itself, FLOOR-FREE: the
-    # delta_floor filter in _delta_seq_dirs hides retired generations
-    # from live reads, but retired-yet-committed dirs are history, not
-    # garbage — GC'ing them broke time travel of rollback-skipped
-    # commits (round-14 ADVICE low). A committed dir no retained
-    # manifest needs ages out via compaction/feed-archive GC instead.
-    marked = {
-        int(st.getPath().getParent().getName().split("=", 1)[1])
-        for st in (
-            fs.globStatus(Path(f"{path}/{_DELTA_DIR}/seq=*/{_COMMITTED_MARK}"))
-            or []
-        )
-    }
+    # commit test = the _COMMITTED marker itself, FLOOR-FREE: retired
+    # yet committed dirs are history, not garbage — GC'ing them broke
+    # time travel of rollback-skipped commits (round-14 ADVICE low). A
+    # committed dir no retained manifest reads ages out in the publish
+    # sweep instead.
+    marked = {s for s, _ in _committed_seqs(spark, path)}
     for st in fs.globStatus(Path(f"{path}/{_DELTA_DIR}/seq=*")) or []:
         name = st.getPath().getName()
         if st.isDirectory() and int(name.split("=", 1)[1]) not in marked:
@@ -1337,11 +1344,7 @@ def rollback_keyed_table(
         n_new = int(cur["n"]) + 1
         # retire every delta committed since the target: floor at the
         # current high-water mark, in the SAME atomic manifest PUT
-        floor = max(
-            _read_seq_hwm(spark, path),
-            int(meta.get("delta_floor") or 0),
-            max((s for s, _ in _delta_seq_dirs(spark, path, meta)), default=0),
-        )
+        floor = _seq_high(spark, path, meta)
         meta_new = dict(target.get("meta") or meta)
         meta_new["delta_floor"] = floor
         meta_new["commit"] = "marker"
@@ -1823,17 +1826,18 @@ def _delta_ingest_keys(
     the very batch that crashed writing it). ``compact_every`` bounds
     the listing the same way it bounds the read tax.
 
-    Round 13: markers in the feed archive (``_feed_archive/gen=*``)
-    count too — a checkpointed stream restarting right after a
-    compaction used to replay its last committed batch undetected
-    (the ledger emptied with the fold); with ``retain_generations >= 1``
-    the ledger now survives one compaction cadence, closing that
-    window at the cost of one extra glob."""
+    Markers of folded batches count too, while their seq dirs are kept
+    (round 13): a checkpointed stream restarting right after a
+    compaction would otherwise replay its last committed batch
+    undetected. The ledger thus survives the ``gc_generations``
+    window; ``delta_floor`` still hides a re-loaded or rolled-back
+    generation's keys."""
     fs, _, jvm = _fs(spark, path)
     if meta is None:
         meta = read_keyed_meta(spark, path)
-    floor = int(meta.get("delta_floor") or 0)
-    committed = {seq for seq, _ in _delta_seq_dirs(spark, path, meta)}
+    committed = {
+        s for s, _ in _committed_seqs(spark, path, int(meta.get("delta_floor") or 0))
+    }
     out: dict[str, int] = {}
     prefix = f"{_INGEST_KEY}."
     arr = fs.globStatus(
@@ -1843,16 +1847,6 @@ def _delta_ingest_keys(
         p = st.getPath()
         seq = int(p.getParent().getName().split("=", 1)[1])
         if seq in committed:
-            out[p.getName()[len(prefix):]] = seq
-    arr = fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{path}/{_FEED_ARCHIVE}/gen=*/seq=*/{prefix}*"
-        )
-    )
-    for st in arr or []:
-        p = st.getPath()
-        seq = int(p.getParent().getName().split("=", 1)[1])
-        if seq > floor:  # archived dirs were committed by construction
             out[p.getName()[len(prefix):]] = seq
     return out
 
@@ -1880,8 +1874,9 @@ def _commit_delta(
     ``_COMMITTED`` is PUT LAST — the marker is the commit, and an
     uncommitted dir from a crash is simply overwritten when its seq is
     reused.
-    Numbering is monotonic across compactions (the ``_seq.hwm`` file),
-    so change-feed checkpoints never alias.
+    Numbering is monotonic across compactions (:func:`_seq_high`), so
+    change-feed checkpoints never alias and a retained dir is never
+    overwritten.
 
     ``post_write_check`` (round 15): callable run after the
     data write but BEFORE the commit point — the hook where write-fused
@@ -1891,15 +1886,7 @@ def _commit_delta(
     dir is deleted, the error propagates) or return False (empty batch:
     dir deleted, ``None`` returned — nothing committed). Returning
     True proceeds to the marker, and the committed seq is returned."""
-    seqs = _delta_seq_dirs(spark, path, meta)
-    next_seq = (
-        max(
-            seqs[-1][0] if seqs else 0,
-            _read_seq_hwm(spark, path),
-            int(meta.get("delta_floor") or 0),
-        )
-        + 1
-    )
+    next_seq = _seq_high(spark, path, meta) + 1
     fs, _, jvm = _fs(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
     dest = f"{path}/{_DELTA_DIR}/seq={next_seq}"
@@ -1933,60 +1920,6 @@ def _commit_delta(
     return next_seq
 
 
-def _archived_seq_dirs(
-    spark: SparkSession, path: str
-) -> list[tuple[int, str, str]]:
-    """Sorted (seq, dir, gen_base) of folded-but-retained delta batches
-    under ``_feed_archive/gen=*/seq=*``. Only COMMITTED dirs are ever
-    archived (compaction moves them from :func:`_delta_seq_dirs`'
-    output), so presence is trust enough. One glob."""
-    fs, _, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    out = []
-    arr = fs.globStatus(Path(f"{path}/{_FEED_ARCHIVE}/gen=*/seq=*"))
-    for st in arr or []:
-        if not st.isDirectory():
-            continue
-        p = st.getPath()
-        seq = int(p.getName().split("=", 1)[1])
-        out.append((seq, p.toUri().getPath(), p.getParent().toUri().getPath()))
-    return sorted(out)
-
-
-def _archive_and_gc_deltas(
-    spark: SparkSession,
-    path: str,
-    seq_dirs: list[tuple[int, str]],
-    max_seq: int,
-    retain_generations: int,
-) -> None:
-    """Retire this compaction's folded seq dirs: move them under
-    ``_feed_archive/gen=<max_seq>`` (``retain_generations > 0``) or
-    drop them outright (``0`` — the pre-round-13 behavior), then GC
-    archive generations beyond the newest ``retain_generations``.
-    Crash anywhere mid-move leaves a seq dir EITHER pending (re-folded
-    by the next compaction — value-idempotent, the documented seam)
-    OR archived (feed-readable) — never both, never lost."""
-    fs, _, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if retain_generations > 0 and seq_dirs:
-        gen_dir = f"{path}/{_FEED_ARCHIVE}/gen={max_seq}"
-        fs.delete(Path(gen_dir), True)  # idempotent re-run of this fold
-        fs.mkdirs(Path(gen_dir))
-        for s, d in seq_dirs:
-            if not fs.rename(Path(d), Path(f"{gen_dir}/seq={s}")):
-                raise IOError(f"feed-archive move failed for seq={s}")
-    if seq_dirs:
-        fs.delete(Path(f"{path}/{_DELTA_DIR}"), True)
-    # GC: keep the newest retain_generations gen dirs
-    gens = []
-    for st in fs.globStatus(Path(f"{path}/{_FEED_ARCHIVE}/gen=*")) or []:
-        if st.isDirectory():
-            gens.append(int(st.getPath().getName().split("=", 1)[1]))
-    for g in sorted(gens, reverse=True)[max(retain_generations, 0):]:
-        fs.delete(Path(f"{path}/{_FEED_ARCHIVE}/gen={g}"), True)
-
-
 def _live_buckets(spark: SparkSession, path: str, meta: dict) -> set[int]:
     """Bucket ids with live data, O(metadata): the manifest's keys."""
     cm = meta.get("_commit") or _current_commit(spark, path) or {}
@@ -1998,29 +1931,24 @@ def compact_keyed_table(
     path: str,
     refresh_manifest: bool = False,
     lock_ttl_sec: float = DEFAULT_LOCK_TTL_SEC,
-    retain_generations: int = 1,
     rewrite_all: bool = False,
 ) -> dict:
     """Fold pending MOR deltas into the base: resolve latest-seq-wins
-    over (base ∪ deltas) for ONLY the buckets the deltas touch, publish
-    those bucket dirs in one manifest PUT, then retire the delta dirs.
-    Idempotent across a crash between publish and delta removal —
-    re-applying the same deltas reproduces the same rows (overrides are
-    absolute values, tombstones delete already-absent keys).
+    over (base ∪ deltas) for ONLY the buckets the deltas touch, and
+    publish those bucket dirs in one manifest PUT that records the
+    highest folded seq (``folded_seq``) — from then on no live read
+    overlays the folded seqs. Their dirs stay where they were written:
+    a reader that planned before the flip still reads them, the change
+    feed, time travel and the replay ledger read them in place, and
+    the publish sweep retires them once ``gc_generations`` further
+    commits have landed (:func:`_marker_publish`). Idempotent across a
+    crash anywhere after the flip — the manifest alone decides which
+    seqs are pending.
     ``refresh_manifest=True`` additionally runs the incremental
     stats-manifest refresh over the rewritten files when the table
     carries a ``_stats_manifest`` (compaction is THE file-churn point
     of the MOR lifecycle; the refresh cost tracks the rewritten buckets
     — see ``sources.manifest``).
-
-    ``retain_generations`` (round 13, Delta/Hudi-style retention): the
-    folded seq dirs are kept feed-readable under
-    ``_feed_archive/gen=K`` for the newest N compaction generations —
-    a change-feed consumer whose checkpoint predates this compaction
-    pages through the archive instead of full-resyncing (at 100 TB a
-    resync is a full-table read). ``0`` restores the drop-on-fold
-    behavior. The archive is metadata-invisible to table reads: only
-    :func:`read_keyed_changes` looks at it.
 
     ``rewrite_all=True`` (round 14) rewrites EVERY live bucket, not
     just the delta-touched ones — the OPTIMIZE-style full pass that
@@ -2032,9 +1960,7 @@ def compact_keyed_table(
         # re-load could otherwise change the layout between the read
         # and the lease, and the compaction would bucket by stale meta.
         meta = read_keyed_meta(spark, path)
-        return _compact_locked(
-            spark, path, meta, refresh_manifest, retain_generations, rewrite_all
-        )
+        return _compact_locked(spark, path, meta, refresh_manifest, rewrite_all)
 
 
 def _compact_locked(
@@ -2042,21 +1968,13 @@ def _compact_locked(
     path: str,
     meta: dict,
     refresh_manifest: bool,
-    retain_generations: int = 1,
     rewrite_all: bool = False,
 ) -> dict:
     _recover_unlocked(spark, path)  # same pre-read sweep as every writer
-    deltas = _read_deltas(spark, path, meta)
-    if deltas is None and not rewrite_all:
-        # nothing to fold, but still honor the retention setting: a
-        # compact with a smaller retain_generations is how a
-        # consumer-less table sheds its feed archive (and its replay
-        # ledger) on demand
-        _archive_and_gc_deltas(spark, path, [], 0, retain_generations)
+    seq_dirs = _delta_seq_dirs(spark, path, meta)
+    if not seq_dirs and not rewrite_all:
         return {"touched_buckets": [], "deltas_folded": 0}
-    seq_dirs = _delta_seq_dirs(spark, path, meta) if deltas is not None else []
-    n_deltas = len(seq_dirs)
-    max_seq = max((s for s, _ in seq_dirs), default=0)
+    deltas, bcast = _read_deltas(spark, path, meta, seq_dirs) or (None, None)
     if deltas is not None:
         deltas = deltas.persist()
     try:
@@ -2071,7 +1989,6 @@ def _compact_locked(
         if rewrite_all:
             touched = sorted(set(touched) | _live_buckets(spark, path, meta))
         if not touched:
-            _archive_and_gc_deltas(spark, path, [], 0, retain_generations)
             return {"touched_buckets": [], "deltas_folded": 0}
         base = _base_df(spark, path, meta, buckets=touched).filter(
             F.col(BUCKET_COL).isin(touched)
@@ -2081,43 +1998,33 @@ def _compact_locked(
         # rewrite's 12.3 — a compaction slower than the rewrite it
         # amortizes is pointless); kb rides through as the write key.
         if deltas is not None:
-            bcast = _delta_bytes(spark, path) <= DELTA_BROADCAST_BYTES
             merged = _merged_view(
                 base, deltas, meta, extra=[BUCKET_COL], broadcast_keys=bcast
             )
         else:  # rewrite_all with no pending deltas: plain re-layout
             merged = base.select(*list(meta["data_cols"]) + [BUCKET_COL])
-        # rewrite_all + no feed retention = every file carrying a
-        # DROPPED column's bytes is about to be rewritten or deleted —
-        # clear the re-add guard in the same commit (round 14,
-        # drop_keyed_columns). With retention, archived deltas may
-        # still carry the bytes, so the guard stays.
-        if rewrite_all and retain_generations <= 0 and meta.get("dropped_cols"):
+        # a rewrite_all that finds no committed seq dir on disk rewrites
+        # or retires every file that may carry a DROPPED column's bytes
+        # — clear the re-add guard in the same commit (round 14,
+        # drop_keyed_columns). Any seq dir, folded or not, keeps it.
+        if rewrite_all and meta.get("dropped_cols") and not _committed_seqs(spark, path):
             meta = {k: v for k, v in meta.items() if k != "dropped_cols"}
+        if seq_dirs:
+            meta = {**meta, "folded_seq": seq_dirs[-1][0]}
         staging = f"{path}/_staging"
         fs, _, jvm = _fs(spark, staging)
         Path = jvm.org.apache.hadoop.fs.Path
         fs.delete(Path(staging), True)
         _write_layout(merged, staging, len(touched), meta)
-        # Deltas are dropped AFTER the manifest flip: a crash between
-        # the two re-applies the folded deltas on read, which is
-        # value-idempotent (overrides are absolute, tombstones delete
-        # already-absent keys) — the documented seam.
-        pub = _marker_publish(
-            spark, path, staging, touched, meta=meta, folds_deltas=True
-        )
+        pub = _marker_publish(spark, path, staging, touched, meta=meta)
         churned = [f"{path}/{d}" for d in pub["changed_dirs"]]
-        # hwm BEFORE retiring the dirs: a crash between the two leaves
-        # the dirs present and the hwm high — next commit skips a few
-        # seq numbers, which is harmless (monotonicity is the contract).
-        # Skipped when nothing folded (rewrite_all of a quiesced table)
-        # — writing 0 would LOWER the hwm and alias feed checkpoints.
+        # hwm after the flip: a crash between the two leaves it low, and
+        # the manifest's folded_seq keeps the next seq above the folded
+        # ones. Skipped when nothing folded (rewrite_all of a quiesced
+        # table) — writing 0 would LOWER the hwm and alias checkpoints.
         if seq_dirs:
-            _write_seq_hwm(spark, path, max_seq)
-        _archive_and_gc_deltas(
-            spark, path, seq_dirs, max_seq, retain_generations
-        )
-        out = {"touched_buckets": touched, "deltas_folded": n_deltas}
+            _write_seq_hwm(spark, path, seq_dirs[-1][0])
+        out = {"touched_buckets": touched, "deltas_folded": len(seq_dirs)}
         if refresh_manifest:
             from hadoop_20_warehouse_fix_spark.sources.manifest import (
                 MANIFEST_DIR,
@@ -2227,46 +2134,37 @@ def read_keyed_changes(
     change row in order (the audit-log form).
 
     Consumers checkpoint the max ``_seq`` they applied and pass it
-    back as ``since_seq``. The feed window is the UN-COMPACTED deltas:
-    :func:`compact_keyed_table` folds deltas into the base and retires
-    their seq dirs, so run consumers ahead of the compaction cadence
-    (``compact_every`` in the streaming ingest bounds both the read
-    tax and this window). Reading a ``since_seq`` newer than the
-    highest committed seq returns an empty frame; a ``since_seq``
-    older than the earliest available seq raises — those changes were
-    already folded and the consumer must re-sync from the base (the
-    same contract as Delta/Hudi incremental reads past retention).
+    back as ``since_seq``. The feed window is every committed batch
+    still on disk: pending ones, and folded ones until the publish
+    sweep retires them — ``gc_generations`` commits after the
+    compaction that folded them (``compact_every`` in the streaming
+    ingest sets the compaction cadence). Reading a ``since_seq`` newer
+    than the highest committed seq returns an empty frame; a
+    ``since_seq`` older than the earliest available seq raises — those
+    changes were already folded and retired, and the consumer must
+    re-sync from the base (the same contract as Delta/Hudi incremental
+    reads past retention). A re-load or rollback floors the feed at
+    its ``delta_floor``.
     Every upsert, delete and change batch is an append, so each one is
     in the feed. The same error covers a checkpoint older than a
     ``cow_seq`` recorded in the table meta: earlier versions of this
     module rewrote some range-layout batches in place, recorded the
     newest such batch's seq there, and never fed it.
 
-    Scale: one scan of O(pending delta) files; the resolve shuffle is
+    Scale: one scan of O(retained delta) files; the resolve shuffle is
     delta-sized. The base is never touched."""
     meta = read_keyed_meta(spark, path)
     key_cols, data_cols = meta["key_cols"], meta["data_cols"]
-    dirs = _delta_seq_dirs(spark, path, meta)
-    floor = int(meta.get("delta_floor") or 0)
-    # folded-but-retained generations (round 13): compaction keeps the
-    # newest `retain_generations` folds feed-readable under
-    # _feed_archive — a consumer slower than the compaction cadence
-    # pages through them instead of full-resyncing. floor-filtered for
-    # the same reason _delta_seq_dirs is: a re-load retires the old
-    # generation's history logically.
-    arch = [
-        (s, d, g) for s, d, g in _archived_seq_dirs(spark, path) if s > floor
-    ]
-    # seq numbering is monotonic across compactions (_seq.hwm), so the
-    # earliest AVAILABLE change is the first archived-or-pending dir —
-    # or hwm+1 when nothing remains. A checkpoint older than that
-    # points at changes already folded AND aged out of the archive:
-    # raise toward re-sync rather than silently skipping them.
-    avail = sorted({s for s, _ in dirs} | {s for s, _d, _g in arch})
+    dirs = _committed_seqs(spark, path, int(meta.get("delta_floor") or 0))
+    # seq numbering is monotonic across compactions, so the earliest
+    # AVAILABLE change is the first retained dir — or the next seq when
+    # nothing remains. A checkpoint older than that points at changes
+    # already folded AND retired: raise toward re-sync rather than
+    # silently skipping them.
     earliest = (
-        avail[0]
-        if avail
-        else max(_read_seq_hwm(spark, path), floor) + 1
+        dirs[0][0]
+        if dirs
+        else max(_read_seq_hwm(spark, path), _live_mark(meta)) + 1
     )
     # a batch an earlier version rewrote in place is a hole in the
     # feed: nothing at or before its recorded seq is a complete change set
@@ -2275,20 +2173,15 @@ def read_keyed_changes(
         raise ValueError(
             f"since_seq={since_seq} predates the earliest available delta "
             f"(seq={earliest}) — earlier changes were compacted into the "
-            "base (or rewritten in place) and aged out of "
-            "the feed archive; re-sync from "
-            "read_keyed_table and restart the feed from the current "
-            "high-water mark (raise compact's retain_generations to widen "
-            "the window)"
+            "base (or rewritten in place) and retired with their "
+            "generation; re-sync from read_keyed_table and restart the "
+            "feed from the current high-water mark (a table written with "
+            "a larger gc_generations keeps a wider window)"
         )
     want = [d for s, d in dirs if s > since_seq]
-    want_arch: dict[str, list[str]] = {}
-    for s, d, g in arch:
-        if s > since_seq:
-            want_arch.setdefault(g, []).append(d)
     op = F.when(F.col(_DEL_COL), F.lit("delete")).otherwise(F.lit("upsert"))
     non_key = [c for c in data_cols if c not in key_cols]
-    if not want and not want_arch:
+    if not want:
         sj = meta.get("schema_json")
         schema = T.StructType.fromJson(json.loads(sj)) if sj else None
         if schema is None:
@@ -2303,33 +2196,10 @@ def read_keyed_changes(
             F.lit("upsert").alias("_change_op"),
             F.lit(0).cast("long").alias("_seq"),
         ).limit(0)
-    fschema = (
-        T.StructType.fromJson(json.loads(meta["schema_json"]))
-        .add(_DEL_COL, T.BooleanType())
-        .add(BUCKET_COL, T.IntegerType())
-        .add("seq", T.LongType())
+    # evolution-safe explicit schema, same as the live read
+    feed = _scan_deltas(spark, path, meta, want).select(
+        *data_cols, op.alias("_change_op"), F.col("_seq").cast("long")
     )
-
-    def _read_batch(base: str, paths: list[str]) -> DataFrame:
-        return (
-            spark.read.schema(fschema)  # evolution-safe, same as _read_deltas
-            .option("basePath", base)
-            .parquet(*paths)
-            .withColumnRenamed("seq", "_seq")
-            .select(*data_cols, op.alias("_change_op"), F.col("_seq").cast("long"))
-        )
-
-    parts = []
-    # archived generations first (older seqs), pending after — the
-    # unresolved form stays seq-ordered per file-batch; resolve is
-    # order-free (max_by on _seq)
-    for g in sorted(want_arch, key=lambda b: int(b.rsplit("=", 1)[1])):
-        parts.append(_read_batch(g, want_arch[g]))
-    if want:
-        parts.append(_read_batch(f"{path}/{_DELTA_DIR}", want))
-    feed = parts[0]
-    for p in parts[1:]:
-        feed = feed.unionByName(p)
     if not resolve:
         return feed
     picked = non_key + ["_change_op", "_seq"]
@@ -2672,11 +2542,11 @@ def lookup_keys(
     base = _base_df(spark, path, meta, buckets=buckets).filter(
         F.col(BUCKET_COL).isin(buckets)
     )
-    deltas = _read_deltas(spark, path, meta)
-    if deltas is None:
+    got = _read_deltas(spark, path, meta)
+    if got is None:
         return restrict(base.select(*data_cols, BUCKET_COL)).select(*data_cols)
+    deltas, bcast = got
     deltas = restrict(deltas.filter(F.col(BUCKET_COL).isin(buckets)))
-    bcast = _delta_bytes(spark, path) <= DELTA_BROADCAST_BYTES
     return restrict(
         _merged_view(base, deltas, meta, extra=[], broadcast_keys=bcast)
     ).select(*data_cols)

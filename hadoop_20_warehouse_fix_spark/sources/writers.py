@@ -179,12 +179,27 @@ def ensure_managed_creatable(spark: SparkSession, table_name: str) -> None:
     fs.delete(hpath, True)
 
 
+def _check_table_path(path: str | None) -> None:
+    """Refuse an external table path Spark cannot write: it reads a
+    table location as a glob pattern, where a backslash is an escape
+    (``saveAsTable`` then fails with ``Illegal file pattern``, after
+    the old table is dropped)."""
+    if path is not None and "\\" in path:
+        raise ValueError(
+            f"table path {path!r} contains a backslash ('\\'), which Spark "
+            "reads as a glob escape in a table location — choose a path "
+            "without it"
+        )
+
+
 def overwrite_table(df: DataFrame, table_name: str, path: str | None = None) -> None:
     """Replace catalog table ``table_name`` with ``df`` as plain Parquet:
     EXTERNAL at ``path`` when given, else a managed table created
     orphan-proof (:func:`ensure_managed_creatable`). The one writer for
     a persisted state's small side tables (meta rows, IVF codebook, PQ
-    sub-codebooks)."""
+    sub-codebooks). A ``path`` with a backslash is refused before any
+    catalog change."""
+    _check_table_path(path)
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
     w = df.write.mode("overwrite").format("parquet")
@@ -215,7 +230,9 @@ def write_bucketed(
     ``mode="append"`` adds new bucket files to an EXISTING table (each
     append writes its own bucketed file set; readers merge per-bucket) —
     the incremental-state update path (MapFile-style probe-able state,
-    ``/root/reference/src/core/org/apache/hadoop/io/MapFile.java:521``)."""
+    the reference's ``src/core/org/apache/hadoop/io/MapFile.java:521``).
+    A ``path`` with a backslash is refused before any catalog change."""
+    _check_table_path(path)
     if mode == "overwrite":
         df.sparkSession.sql(f"DROP TABLE IF EXISTS {table_name}")
     elif path is not None:

@@ -349,11 +349,11 @@ def stream_keyed_upsert_ingest(
     replays a batch whose markers the compaction folded away — the
     replay re-appends, which is VALUE-idempotent (overrides are
     absolute, tombstones delete already-absent keys; pytest-pinned),
-    not physically no-op — NARROWED in round 13: ingest markers now
-    ride into compaction's ``_feed_archive``, so the ledger survives
-    ``retain_generations`` (default 1) compaction cadences and the
-    replay is physically detected there too. Same recovery model the
-    dedup ingest documents for its step-4/5 seam.
+    not physically no-op — NARROWED in round 13: ingest markers stay
+    in the folded seq dirs, which the table keeps for
+    ``gc_generations`` (default 1) further commits, so the replay is
+    physically detected there too. Same recovery model the dedup
+    ingest documents for its step-4/5 seam.
 
     One-time upgrade caveat (round-12 ADVICE): before round 12 the
     per-batch key was ``stream-{ns}-{id}-del``/``-ups`` (two appends

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from hadoop_20_warehouse_fix_spark.sources.keyed import (
     BUCKET_COL,
     _current_commit,
+    _delta_seq_dirs,
     compact_keyed_table,
     delete_from_keyed_table,
     read_keyed_meta,
@@ -239,7 +240,7 @@ def test_mor_delete_tombstone_then_compact_physical(spark, keyed):
     before = _bucket_files(spark, keyed)
     diag = compact_keyed_table(spark, keyed)
     assert diag["deltas_folded"] == 2 and diag["touched_buckets"]
-    assert not os.path.exists(f"{keyed}/_delta")
+    assert _delta_seq_dirs(spark, keyed) == []
     after_tab = read_keyed_table(spark, keyed)
     assert {tuple(r) for r in after_tab.collect()} == want_rows
     # tombstoned keys physically gone from the base scan
@@ -253,6 +254,22 @@ def test_mor_delete_tombstone_then_compact_physical(spark, keyed):
             assert after[b] == files, f"untouched bucket {b} rewritten by compact"
     # idempotence of the fold: a second compact is a no-op
     assert compact_keyed_table(spark, keyed) == {"touched_buckets": [], "deltas_folded": 0}
+
+
+def test_compaction_job_count(spark, keyed):
+    """A compaction of two pending deltas runs 8 Spark jobs, the second
+    one too, whose publish also sweeps the first one's folded dirs: the
+    folded-seq bookkeeping and the sweep are driver-side listings.
+    A rewrite_all with nothing pending runs 2."""
+    for i in range(2):
+        ups = _ups(spark, [(5 + i, -5, "m"), (20_001 + i, 1, "m")])
+        upsert_keyed_table(spark, keyed, ups)
+        upsert_keyed_table(spark, keyed, ups.withColumn("v", F.lit(-7).cast("long")))
+        out, n = count_jobs(spark, lambda: compact_keyed_table(spark, keyed))
+        assert (out["deltas_folded"], n) == (2, 8)
+    out, n = count_jobs(spark, lambda: compact_keyed_table(spark, keyed, rewrite_all=True))
+    assert (out["deltas_folded"], n) == (0, 2)
+    assert read_keyed_table(spark, keyed).filter("k in (5, 6)").count() == 2
 
 
 def test_pending_deltas_pick_mor_and_newest_write_wins(spark, ranged):
@@ -393,7 +410,7 @@ def test_cdc_compact_manifest_pruned_read_composition(spark, tmp_path):
         .parquet(landing)
     )
     stream_keyed_upsert_ingest(sdf, path, str(tmp_path / "ckpt"), op_col="op", compact_every=1)
-    assert not os.path.exists(f"{path}/_delta")  # compacted in-stream
+    assert _delta_seq_dirs(spark, path) == []  # compacted in-stream
 
     diag = refresh_file_stats_manifest(spark, path)
     # only bucket 3's dir was republished, so few files changed
@@ -445,15 +462,16 @@ def test_mor_idempotency_key_replay(spark, keyed):
     assert "replayed" not in d1 and d2["replayed"] and d2["seq"] == d1["seq"]
     assert read_keyed_table(spark, keyed).filter("k = 10").first().v == -10
     # round 13: the replay ledger SURVIVES a default compaction (the
-    # ingest markers ride into _feed_archive), so a post-compaction
+    # ingest markers stay in the folded seq dirs), so a post-compaction
     # replay is detected physically, not just value-idempotent
     compact_keyed_table(spark, keyed)
     d3 = upsert_keyed_table(spark, keyed, ups, idempotency_key="batch-7")
     assert d3.get("replayed") is True and d3["seq"] == d1["seq"]
     assert read_keyed_table(spark, keyed).filter("k = 10").first().v == -10
-    # with retention OFF the markers fold away and the replay lands as
-    # a NEW delta — value-idempotent (same rows), the pre-r13 seam
-    compact_keyed_table(spark, keyed, retain_generations=0)
+    # once a further publish retires the folded dirs (gc_generations=1)
+    # the markers go with them and the replay lands as a NEW delta —
+    # value-idempotent (same rows), the pre-r13 seam
+    compact_keyed_table(spark, keyed, rewrite_all=True)
     d4 = upsert_keyed_table(spark, keyed, ups, idempotency_key="batch-7")
     assert "replayed" not in d4
     assert read_keyed_table(spark, keyed).filter("k = 10").first().v == -10
@@ -947,7 +965,7 @@ def test_initial_load_keeps_root_and_replaces_state(spark, keyed):
     write_keyed_table(fresh, keyed, ["kk"], num_buckets=4)
     got = read_keyed_table(spark, keyed)
     assert got.columns == ["kk", "vv"] and got.count() == 100
-    assert not os.path.exists(os.path.join(keyed, "_delta")), "old deltas cleared"
+    assert _delta_seq_dirs(spark, keyed) == [], "old deltas retired"
     assert not os.path.exists(os.path.join(keyed, "_staging"))
 
 
@@ -1045,13 +1063,15 @@ def test_read_keyed_changes_feed(spark, keyed):
     head = read_keyed_changes(spark, keyed, since_seq=2)
     assert head.count() == 0 and "_change_op" in head.columns
 
-    # retention OFF (pre-r13 semantics): folding drops the history —
-    # seq numbering stays monotonic (the hwm file), a head checkpoint
-    # stays valid, a stale one raises toward re-sync instead of
-    # silently aliasing post-compaction batches. (With the default
-    # retain_generations=1 the archive would SERVE the stale
-    # checkpoint instead — pinned in tests/test_keyed_retention.py.)
-    compact_keyed_table(spark, keyed, retain_generations=0)
+    # a compaction keeps the folded batches feed-readable for
+    # gc_generations further commits (tests/test_keyed_retention.py);
+    # once a further publish retires them, seq numbering stays
+    # monotonic (the hwm file), a head checkpoint stays valid, and a
+    # stale one raises toward re-sync instead of silently aliasing
+    # post-compaction batches
+    compact_keyed_table(spark, keyed)
+    assert read_keyed_changes(spark, keyed, since_seq=0).count() == 3
+    compact_keyed_table(spark, keyed, rewrite_all=True)
     assert read_keyed_changes(spark, keyed, since_seq=2).count() == 0
     with pytest.raises(ValueError, match="compacted into the base"):
         read_keyed_changes(spark, keyed, since_seq=0)

@@ -44,7 +44,7 @@ def _base_parquets(path):
     out = []
     for root, _dirs, files in os.walk(path):
         b = os.path.basename(root)
-        if b.startswith(("_delta", "_commits", "_feed_archive", "_staging")):
+        if b.startswith(("_delta", "_commits", "_staging")):
             continue
         out.extend(
             (os.path.join(root, f), os.path.getmtime(os.path.join(root, f)))
@@ -110,7 +110,7 @@ def test_readd_guard_until_purged(spark):
                 assume_unique=True, evolve_schema=True,
             )
         # full purge: every live file rewritten without the column
-        K.compact_keyed_table(spark, path, rewrite_all=True, retain_generations=0)
+        K.compact_keyed_table(spark, path, rewrite_all=True)
         cm = K._current_commit(spark, path)
         for d in cm["buckets"].values():
             for f in os.listdir(os.path.join(path, d)):

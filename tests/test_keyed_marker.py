@@ -195,7 +195,7 @@ def test_marker_reload_replaces_table(spark, marker):
     write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     got = read_keyed_table(spark, marker)
     assert got.count() == 10
-    assert not os.path.exists(f"{marker}/_delta")
+    assert K._delta_seq_dirs(spark, marker) == []
     meta = K.read_keyed_meta(spark, marker)
     assert meta["num_buckets"] == 2 and meta["commit"] == "marker"
 

@@ -13,6 +13,7 @@ from hadoop_20_warehouse_fix_spark.sources.writers import (
     compact,
     multi_sink,
     null_sink,
+    overwrite_table,
     write_bucketed,
     write_kv_text,
     write_partitioned,
@@ -118,3 +119,37 @@ def test_write_bucketed_append_rejects_path(spark, tmp_path):
     with _pytest.raises(ValueError, match="append"):
         write_bucketed(df, "bt_nope", ["id"], num_buckets=4, path=str(tmp_path / "x"), mode="append")
     assert "bt_nope" not in [t.name for t in spark.catalog.listTables()]
+
+
+def test_backslash_table_path_refused_before_catalog_change(spark, tmp_path):
+    """Spark reads a table location as a glob pattern, so a backslash
+    in an external ``path`` used to fail deep inside ``saveAsTable``
+    with ``Illegal file pattern`` — after the live table was dropped.
+    Both writers now refuse it first, naming the character; the live
+    table, its location, its rows and the filesystem stay as they
+    were."""
+    import pytest as _pytest
+
+    live = str(tmp_path / "live")
+    bad = str(tmp_path / "o'state \\x")
+    df = spark.range(20).withColumn("v", F.col("id") * 2)
+    try:
+        for name, write in (
+            ("bs_bucketed", lambda p: write_bucketed(df, "bs_bucketed", ["id"], num_buckets=4, path=p)),
+            ("bs_plain", lambda p: overwrite_table(df, "bs_plain", path=p)),
+        ):
+            write(f"{live}_{name}")
+            loc = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").filter("col_name = 'Location'").first()
+            listing = sorted(os.listdir(tmp_path))
+            with _pytest.raises(ValueError, match=r"backslash \('\\'\)"):
+                write(bad)
+            assert spark.catalog.tableExists(name)
+            assert spark.sql(f"DESCRIBE TABLE EXTENDED {name}").filter(
+                "col_name = 'Location'"
+            ).first() == loc
+            assert spark.table(name).count() == 20
+            assert sorted(os.listdir(tmp_path)) == listing
+            assert not os.path.exists(bad)
+    finally:
+        for t in ("bs_bucketed", "bs_plain"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
